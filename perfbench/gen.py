@@ -5,7 +5,8 @@ committed sf0.01 fixture tables (``fixture/``) and a seed, with pyarrow,
 numpy and DuckDB only.  Each maker also returns the values the run's
 checks compare against, computed without the engine.  Results are cached
 per (workload, seed, fixture) under ``.cache/`` so generation never
-lands inside a timed region or in ``setup_s``.
+lands inside a timed region or in ``setup_s``; the gates' oracle
+digests, which no seed changes, are cached once per fixture.
 """
 
 from __future__ import annotations
@@ -26,13 +27,12 @@ from checks import frame_digest
 HERE = os.path.dirname(os.path.abspath(__file__))
 FIXTURE = os.path.join(HERE, "fixture")
 CACHE = os.path.join(HERE, ".cache")
-ORACLE_FILE = os.path.join(HERE, "oracles.json")
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
 # Bump when a maker changes what it writes: the cache key includes it.
-GEN_VERSION = 10
+GEN_VERSION = 11
 
 # convert: the byte-leg corpora are the seeded lineitem split, hardlinked
 # this many times (enough bytes that per-job fixed cost stays a minority
@@ -44,20 +44,19 @@ DRIFT_FILES = 2 * DRIFT_VARIANTS
 DRIFT_ROWS = 50
 CSV_PIECES = 6
 STREAM_TRIGGER_FILES = 2
-# corpus_x10: replication factor, held-out ingest batches x docs each.
-X10_FACTOR = 10
-INGEST_BATCHES = 2
-INGEST_BATCH_DOCS = 100
-WORKLOAD_IDS = {"convert": 1, "gates": 2, "corpus_x10": 3}
+WORKLOAD_IDS = {"convert": 1, "gates": 2}
 # gates: a fixed subset of the registered gates per family, small enough
 # that set-up, the checked warm-up pass and a timed pass fit one run.
-# llm covers the MinHash, text-statistics and branch-parallel paths
-# (semantic dedup and IVF run in corpus_x10); rel covers the q*, rel_*,
-# events_* and engine_* families.  The stream_* gates are left out: they
-# stage on /dev/shm, outside the directory a benchmark run may write to.
+# llm covers MinHash-LSH blocking, the text-statistics and
+# branch-parallel paths, and in similarity.py exact top-k, LSH-blocked
+# pairs and semantic dedup.  The ANN-tier gates (embed_ann_quantized,
+# embed_ann_bucketed, embed_ann_ivf_quantized, embed_ann_recall) add
+# 3-15 s a pass each and do not fit.  rel covers the q*, rel_*, events_*
+# and engine_* families.  The stream_* gates are left out: they stage on
+# /dev/shm, outside the directory a benchmark run may write to.
 LLM_GATES = [
     "dedup_minhash_family", "text_doc_scores", "text_df_assoc",
-    "dedup_exact_family", "text_chunk_docs",
+    "embed_exact", "dedup_semantic",
 ]
 REL_GATES = [
     "q1_pricing_summary", "q3_shipping_priority", "q18_large_orders",
@@ -66,10 +65,9 @@ REL_GATES = [
 GATES = LLM_GATES + REL_GATES
 
 
-def fixture_fingerprint(versioned: bool = True) -> str:
-    """Fingerprint of the fixture files, and of GEN_VERSION unless
-    ``versioned`` is false (oracle digests depend on content only)."""
-    h = hashlib.sha1(f"gen-v{GEN_VERSION}".encode() if versioned else b"")
+def fixture_fingerprint() -> str:
+    """Fingerprint of the fixture files and of GEN_VERSION."""
+    h = hashlib.sha1(f"gen-v{GEN_VERSION}".encode())
     for t in TABLES:
         with open(os.path.join(FIXTURE, f"{t}.parquet"), "rb") as f:
             h.update(f.read())
@@ -150,17 +148,17 @@ def replicate(files: list[str], dest: str, copies: int) -> int:
 
 def duck(dir_: str | None = None) -> duckdb.DuckDBPyConnection:
     """A DuckDB connection on UTC with a view per table found in
-    ``dir_`` (each table a directory of parquet parts)."""
+    ``dir_`` (each table a parquet file or a directory of parts)."""
     con = duckdb.connect()
     con.execute("SET TimeZone = 'UTC'")
     con.execute("SET enable_progress_bar = false")
     if dir_ is not None:
         for t in TABLES:
             p = os.path.join(dir_, f"{t}.parquet")
-            if os.path.isdir(p):
+            if os.path.exists(p):
+                src = f"{p}/*.parquet" if os.path.isdir(p) else p
                 con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{p}/*.parquet')"
+                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
                 )
     return con
 
@@ -287,154 +285,40 @@ def build_convert(out: str, rng: np.random.Generator) -> dict:
 # ---- gates -------------------------------------------------------------
 
 
-def oracle_digests(sqls: dict[str, str], tables_dir: str, scope: str) -> dict:
-    """Digest of each oracle query's DuckDB result over ``tables_dir``.
+def oracle_digests() -> dict:
+    """Each gate's DuckDB oracle digest over the fixture tables.
 
-    A seed changes only row order and file splits, never content, so a
-    digest depends on the SQL text, the fixture and the ``scope`` (which
-    derived table set) alone.  It is looked up under that key in the
-    committed ``oracles.json``, then in the local cache, and computed
-    with DuckDB only when neither has it (``python3 perfbench/gen.py``
-    records the local cache into ``oracles.json``)."""
-    known = {}
-    if os.path.exists(ORACLE_FILE):
-        with open(ORACLE_FILE) as f:
-            known = json.load(f)
-    local = os.path.join(CACHE, "oracles")
-    os.makedirs(local, exist_ok=True)
-    con, out = None, {}
-    for name, sql in sqls.items():
-        key = hashlib.sha1(
-            f"{scope}\0{fixture_fingerprint(versioned=False)}\0{sql}".encode()
-        ).hexdigest()[:20]
-        path = os.path.join(local, f"{key}.json")
-        if key in known:
-            out[name] = known[key]
-        elif os.path.exists(path):
-            with open(path) as f:
-                out[name] = json.load(f)
-        else:
-            con = con or duck(tables_dir)
-            out[name] = frame_digest(con.execute(sql).df())
-            with open(path, "w") as f:
-                json.dump(out[name], f)
-    return out
+    A seed changes only row order and file splits, never content, so the
+    digests are computed once per (fixture, oracle SQL) and shared by
+    every seed: computing them takes about 7 s on a 4-core host, a tenth
+    of a gates run, and each run of a sweep uses a new seed."""
+    sys_path_add_repo()
+    import streaming_parquet_spark.queries_ext  # noqa: F401
+    import streaming_parquet_spark.queries_tpch  # noqa: F401
+    from streaming_parquet_spark.queries import ORACLES
 
-
-def record_oracles() -> None:
-    """Build every workload's inputs for seed 0 and write all oracle
-    digests they needed to ``oracles.json``."""
-    for w in MAKERS:
-        cached(w, 0)
-    local = os.path.join(CACHE, "oracles")
-    keys = {}
-    for f in sorted(os.listdir(local)):
-        with open(os.path.join(local, f)) as fh:
-            keys[f[:-len(".json")]] = json.load(fh)
-    with open(ORACLE_FILE, "w") as f:
-        json.dump(keys, f, indent=1, sort_keys=True)
+    sqls = {g: ORACLES[g] for g in GATES}
+    key = hashlib.sha1(
+        (fixture_fingerprint() + json.dumps(sqls, sort_keys=True)).encode()
+    ).hexdigest()[:12]
+    path = os.path.join(CACHE, f"oracles-{key}.json")
+    if not os.path.exists(path):
+        con = duck(FIXTURE)
+        digests = {g: frame_digest(con.execute(q).df()) for g, q in sqls.items()}
+        os.makedirs(CACHE, exist_ok=True)
+        with open(f"{path}.tmp{os.getpid()}", "w") as f:
+            json.dump(digests, f, sort_keys=True)
+        os.rename(f"{path}.tmp{os.getpid()}", path)
+    with open(path) as f:
+        return json.load(f)
 
 
 def build_gates(out: str, rng: np.random.Generator) -> dict:
     """The fixture tables with their rows permuted and re-split into
     1-4 files each; content is unchanged, so every DuckDB oracle holds
     for any seed.  Expected values: each gate's oracle digest."""
-    sys_path_add_repo()
-    import streaming_parquet_spark.queries_ext  # noqa: F401
-    import streaming_parquet_spark.queries_tpch  # noqa: F401
-    from streaming_parquet_spark.queries import ORACLES
-
     write_tables(out, TABLES, rng)
-    sqls = {g: ORACLES[g] for g in GATES}
-    return {"oracle": oracle_digests(sqls, out, "fixture")}
-
-
-# ---- corpus_x10 --------------------------------------------------------
-
-
-def scale_corpus(docs: pa.Table, emb: pa.Table, factor: int):
-    """``bench._ensure_scale_dir``'s similarity-preserving replication,
-    in pyarrow: replica r > 0 suffixes every word with ``_r{r}`` (so it
-    repeats the original's near-dup structure internally and shares no
-    shingle with other replicas) and offsets the ids; embedding replicas
-    keep their vectors with offset ids."""
-    d_off = max(docs.column("doc_id").to_pylist()) + 1
-    e_off = max(emb.column("vec_id").to_pylist()) + 1
-    texts = docs.column("text").to_pylist()
-    d_parts, e_parts = [], []
-    for r in range(factor):
-        ids = pa.array(np.asarray(docs.column("doc_id")) + r * d_off)
-        d = docs.set_column(docs.schema.get_field_index("doc_id"), "doc_id", ids)
-        if r:
-            t = [" ".join(f"{w}_r{r}" for w in x.split(" ")) for x in texts]
-            d = d.set_column(d.schema.get_field_index("text"), "text", pa.array(t))
-        d_parts.append(d)
-        vids = pa.array(np.asarray(emb.column("vec_id")) + r * e_off)
-        e_parts.append(
-            emb.set_column(emb.schema.get_field_index("vec_id"), "vec_id", vids)
-        )
-    return pa.concat_tables(d_parts), pa.concat_tables(e_parts)
-
-
-def ivf_queries(emb: pa.Table) -> list[int]:
-    """The trained-IVF recipe's query ids (``vec_id % 997 == 0``)."""
-    return [v for v in emb.column("vec_id").to_pylist() if v % 997 == 0]
-
-
-def exact_topk(emb: pa.Table, queries: list[int], k: int) -> dict:
-    """Exact dot-product top-k per query (self excluded, ties by id),
-    the reference the approximate IVF result is checked against."""
-    ids = np.asarray(emb.column("vec_id"))
-    mat = np.asarray(emb.column("embedding").to_pylist(), dtype=np.float64)
-    out = {}
-    for q in queries:
-        sims = mat @ mat[int(np.nonzero(ids == q)[0][0])]
-        order = np.lexsort((ids, -sims))
-        top = [int(ids[i]) for i in order if ids[i] != q][:k]
-        out[str(q)] = top
-    return out
-
-
-def build_corpus_x10(out: str, rng: np.random.Generator) -> dict:
-    sys_path_add_repo()
-    import streaming_parquet_spark.queries_ext  # noqa: F401
-    from streaming_parquet_spark.operators.similarity import n_centroids_for
-    from streaming_parquet_spark.queries import ORACLES
-    from streaming_parquet_spark.queries_ext import _duck_semantic_dedup
-
-    docs, emb = scale_corpus(
-        read_fixture("documents"), read_fixture("embeddings"), X10_FACTOR
-    )
-    docs, emb = permuted(docs, rng), permuted(emb, rng)
-    write_split(docs, os.path.join(out, "documents.parquet"), 8, rng)
-    write_split(emb, os.path.join(out, "embeddings.parquet"), 8, rng)
-    # held-out ingest batches: seeded doc choice, the rest is the corpus
-    n_out = INGEST_BATCHES * INGEST_BATCH_DOCS
-    held = rng.permutation(docs.num_rows)[:n_out]
-    mask = np.zeros(docs.num_rows, dtype=bool)
-    mask[held] = True
-    corpus = docs.filter(pa.array(~mask))
-    write_split(corpus, os.path.join(out, "ingest", "corpus"), 4, rng)
-    for b in range(INGEST_BATCHES):
-        rows = held[b * INGEST_BATCH_DOCS:(b + 1) * INGEST_BATCH_DOCS]
-        pq.write_table(
-            docs.take(pa.array(np.sort(rows))),
-            os.path.join(out, "ingest", f"batch-{b}.parquet"),
-        )
-    k = n_centroids_for(emb.num_rows)
-    sqls = {
-        "dedup_minhash_family": ORACLES["dedup_minhash_family"],
-        "dedup_semantic_scaled_k80": _duck_semantic_dedup(0.4, k, 64),
-    }
-    return {
-        "docs": docs.num_rows,
-        "vecs": emb.num_rows,
-        "semantic_k": k,
-        "oracle": oracle_digests(sqls, out, f"x{X10_FACTOR}"),
-        "ivf_exact_top10": exact_topk(emb, ivf_queries(emb), 10),
-        "corpus_docs": corpus.num_rows,
-        "batches": INGEST_BATCHES,
-    }
+    return {"oracle": oracle_digests()}
 
 
 def sys_path_add_repo() -> None:
@@ -446,12 +330,4 @@ def sys_path_add_repo() -> None:
         sys.path.insert(0, root)
 
 
-MAKERS = {
-    "convert": build_convert,
-    "gates": build_gates,
-    "corpus_x10": build_corpus_x10,
-}
-
-
-if __name__ == "__main__":
-    record_oracles()
+MAKERS = {"convert": build_convert, "gates": build_gates}

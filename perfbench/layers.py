@@ -31,7 +31,6 @@ PER_LAYER: dict[str, tuple[str, str]] = {
     "streaming.batches": ("count", "lower"),
     "streaming.trigger_s": ("s", "lower"),
     "streaming.commit_s": ("s", "lower"),
-    "streaming.append_s": ("s", "lower"),
     "gate.llm.build_s": ("s", "lower"),
     "gate.llm.exec_s": ("s", "lower"),
     "gate.rel.build_s": ("s", "lower"),
@@ -58,13 +57,11 @@ PER_LAYER: dict[str, tuple[str, str]] = {
     "spark.spill_mb": ("MB", "lower"),
     "spark.busy_frac": ("ratio", "higher"),
     "cand.rows": ("count", "lower"),
-    "cand.useful_frac": ("ratio", "higher"),
     "ops_failed_frac": ("ratio", "lower"),
     "overhead.bulk_s": ("s", "lower"),
     "overhead.small_s": ("s", "lower"),
     "overhead.bulk_cpu_s": ("s", "lower"),
     "overhead.small_cpu_s": ("s", "lower"),
-    "overhead.peak_rss_mb": ("MB", "lower"),
 }
 
 # span name -> layer metric fed by the span's self time
@@ -78,7 +75,6 @@ SELF_TIME = {
     "write_parquet": "sinks.write_s",
     "write_csv": "sinks.write_s",
     "transcode_parquet": "sinks.transcode_s",
-    "shard_ingest_stream": "streaming.append_s",
 }
 
 
@@ -106,11 +102,9 @@ def per_layer(run, tracer, session: dict, overhead: dict) -> dict[str, dict]:
     wall = sum(o["s"] for o in run.ops if o["phase"] == "traced")
     if wall:
         v["spark.busy_frac"] = v["spark.run_s"] / (wall * 4)
-    if v["cand.rows"]:
-        v["cand.useful_frac"] = run.layer.get("cand.out_rows", 0.0) / v["cand.rows"]
     # totals become per-round figures; ratios and set-up times stay as is
     ratios = {"engine.passthrough_frac", "sinks.out_per_in", "concurrency.overlap",
-              "spark.busy_frac", "cand.useful_frac", "ops_failed_frac"}
+              "spark.busy_frac", "ops_failed_frac"}
     for k in v:
         if k not in ratios and not k.startswith(("session.", "overhead.")):
             v[k] /= rounds

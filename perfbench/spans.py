@@ -39,24 +39,14 @@ TARGETS = {
         ("streaming_parquet_spark.sinks.writers", "write_csv"),
         ("streaming_parquet_spark.sinks.writers", "transcode_parquet"),
     ],
-    "streaming": [
-        ("streaming_parquet_spark.streaming.shards", "shard_ingest_stream"),
-    ],
+    # the entry points the gates workload's llm family reaches; the ANN
+    # tiers, incremental LSH, exact-substring dedup and BPE run in no
+    # workload, so they are not wrapped
     "operators": [
         ("streaming_parquet_spark.operators.similarity", f)
-        for f in (
-            "cosine_topk", "ann_topk_lsh", "ivf_topk", "sq8_topk",
-            "ivf_sq8_topk", "pq_topk", "ivf_pq_topk", "similarity_pairs",
-            "semantic_dedup_drops", "fit_ivf_centroids",
-        )
+        for f in ("cosine_topk", "similarity_pairs", "semantic_dedup_drops")
     ] + [
-        ("streaming_parquet_spark.operators.dedup", f)
-        for f in (
-            "minhash_lsh_pairs", "incremental_lsh_pairs", "write_lsh_index",
-            "exact_substring_dedup",
-        )
-    ] + [
-        ("streaming_parquet_spark.operators.tokenize", "apply_bpe"),
+        ("streaming_parquet_spark.operators.dedup", "minhash_lsh_pairs"),
     ],
     "staging": [
         ("streaming_parquet_spark.operators.similarity", "_materialize"),

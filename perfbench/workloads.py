@@ -1,15 +1,12 @@
-"""The three workloads.  Each has a set-up (untimed warm-up included, so
-it lands in ``setup_s``), one timed *round* (a bulk family and a small
-family of ops, summed separately) and end-of-run checks.
+"""The workloads.  Each has a set-up (untimed warm-up included, so it
+lands in ``setup_s``) and one timed *round* (a bulk family and a small
+family of ops, summed separately); every op's output is checked.
 
 - ``convert``: bulk = the four byte legs (csv->csv, csv->parquet zstd,
   streaming csv->parquet, parquet->parquet passthrough), one sample
   each; small = the ``drift`` concat of small schema-drifting files.
 - ``gates``: bulk = the ``llm`` gate subset; small = the ``rel`` subset;
   each gate built and executed into the noop sink.
-- ``corpus_x10``: bulk = the two at-scale recipes plus the
-  ``dedup_minhash_family`` gate on the 10x corpus; small = one ingest
-  batch (probe + append wave), closed loop with one client.
 """
 
 from __future__ import annotations
@@ -17,8 +14,6 @@ from __future__ import annotations
 import os
 import shutil
 import time
-
-import numpy as np
 
 import gen
 from checks import diff, frame_digest
@@ -41,17 +36,8 @@ def _release(spark) -> None:
 
 
 class Workload:
-    """Defaults: one untimed warm-up pass, the same inputs for every
-    phase of a traced run, nothing left to check after the rounds."""
-
     warmup_passes = 1
     round_s: float  # nominal round length: --seconds / round_s rounds
-
-    def quotas(self, phases: int) -> list:
-        return [None] * phases
-
-    def finish(self, run) -> None:
-        pass
 
 
 class Convert(Workload):
@@ -91,7 +77,7 @@ class Convert(Workload):
         ]
         drift = os.path.join(src, e["drift_dir"])
         self.drift = (batch_run, lambda o: RunSpec(inputs=[drift], out=o, **batch))
-        self.round(run, None)  # the warm-up round
+        self.round(run)  # the warm-up round
 
     @staticmethod
     def _out_dir(run, name: str) -> str:
@@ -100,7 +86,7 @@ class Convert(Workload):
         os.makedirs(d)
         return d
 
-    def round(self, run, _quota) -> None:
+    def round(self, run) -> None:
         i0 = len(run.ops)
         for name, runner, spec, nbytes, rel, want in self.legs:
             d = self._out_dir(run, name)
@@ -151,7 +137,7 @@ class Gates(Workload):
             run.op(g, "checked", lambda g=g: QUERIES[g](spark, d).toPandas(),
                    lambda df, want=want: diff(frame_digest(df), want))
 
-    def round(self, run, _quota) -> None:
+    def round(self, run) -> None:
         spark, d = run.spark, run.inputs
         for family, gates, fig in (("bulk", gen.LLM_GATES, "gates_llm_s"),
                                    ("small", gen.REL_GATES, "gates_rel_s")):
@@ -173,214 +159,4 @@ class Gates(Workload):
             run.figure(fig, run.round_sum(family, i0))
 
 
-class CorpusX10(Workload):
-    round_s = 30.0
-    TABLE = "perfbench_lsh_index"
-    BUDGET = 1024
-
-    def setup(self, run) -> None:
-        from pyspark.sql import functions as F
-
-        from streaming_parquet_spark.functions.portable import (
-            ordered_words_expr, word_hashes_expr,
-        )
-        from streaming_parquet_spark.operators.dedup import (
-            incremental_lsh_pairs, write_lsh_index,
-        )
-        from streaming_parquet_spark.queries import QUERIES
-
-        spark = self.spark = run.spark
-        x10 = run.inputs
-        self.incremental_lsh_pairs = incremental_lsh_pairs
-        emb = spark.read.parquet(os.path.join(x10, "embeddings.parquet"))
-        gate = QUERIES["dedup_minhash_family"]
-        self.blocking = [
-            ("dedup_semantic_scaled_k80", self._semantic(emb, run.expect["semantic_k"]),
-             self._oracle_check(run, "dedup_semantic_scaled_k80")),
-            ("embed_ivf_trained_centroids",
-             self._trained_ivf(emb, run.expect["semantic_k"]), self._ivf_check(run)),
-            ("dedup_minhash_family", lambda: gate(spark, x10),
-             self._oracle_check(run, "dedup_minhash_family")),
-        ]
-
-        # ingest: LSH index + shard stream over the corpus minus held-out
-        self.vocab = spark.createDataFrame(
-            [(0, "<pad>"), (1, "<unk>")], "id int, piece string"
-        )
-        words = f"filter({ordered_words_expr('spark', 'text')}, w -> w != '')"
-        tok = F.expr(word_hashes_expr("spark", words)).alias("tok")
-        self.encode = lambda b: b.select("source", "doc_id", tok)
-        ing = os.path.join(x10, "ingest")
-        self.src = os.path.join(run.work, "ingest_src")
-        self.shards = os.path.join(run.work, "shards")
-        self.ckpt = os.path.join(run.work, "shards_ckpt")
-        shutil.copytree(os.path.join(ing, "corpus"), self.src)
-        self.batch_paths = [
-            os.path.join(ing, f"batch-{b}.parquet")
-            for b in range(run.expect["batches"])
-        ]
-        for s in ("_sets", "_bands"):
-            spark.sql(f"DROP TABLE IF EXISTS {self.TABLE}{s}")
-        corpus = spark.read.parquet(os.path.join(ing, "corpus"))
-        run.op("write_lsh_index", "warmup",
-               lambda: write_lsh_index(corpus, self.TABLE))
-        run.op("shard_ingest_build", "warmup", self._append)
-        run.op("probe@warm", "warmup", lambda: incremental_lsh_pairs(
-            corpus.limit(100), self.TABLE).toPandas())
-        self.results: dict[int, tuple] = {}
-
-    # The two at-scale recipes of bench._scale_smoke_scaled_ops, built
-    # here directly (that helper also fits a BPE table eagerly, which
-    # this workload does not use): blocking sized by n_centroids_for.
-    @staticmethod
-    def _semantic(emb, k: int):
-        from pyspark.sql import functions as F
-
-        from streaming_parquet_spark.operators.similarity import semantic_dedup_drops
-
-        return lambda: semantic_dedup_drops(
-            emb, emb.filter(F.col("vec_id") < k), threshold=0.4, dims=64
-        )
-
-    @staticmethod
-    def _trained_ivf(emb, k: int):
-        from pyspark.sql import functions as F
-
-        from streaming_parquet_spark.operators.similarity import (
-            fit_ivf_centroids, ivf_topk,
-        )
-
-        def build():
-            cents = fit_ivf_centroids(emb, n_centroids=k, sample_pct=20)
-            q = emb.filter(F.col("vec_id") % 997 == 0)
-            return ivf_topk(emb, q, k=10, n_centroids=k, n_probe=2, dims=64,
-                            centroids=cents)
-        return build
-
-    def quotas(self, phases: int) -> list:
-        per = len(self.batch_paths) // phases
-        return [list(range(i * per, (i + 1) * per)) for i in range(phases)]
-
-    def _append(self):
-        from streaming_parquet_spark.streaming.shards import shard_ingest_stream
-
-        return shard_ingest_stream(
-            self.spark, self.src, self.shards, self.ckpt, self.vocab,
-            self.encode, budget=self.BUDGET, ids_col="tok", part_col="source",
-        )
-
-    def round(self, run, quota) -> None:
-        i0 = len(run.ops)
-        for name, build, check in self.blocking:
-            _release(run.spark)
-            _, out = run.op(name, "bulk", lambda b=build: b().toPandas(), check)
-            run.count("cand.out_rows", 0 if out is None else len(out))
-        run.figure("x10_blocking_s", run.round_sum("bulk", i0))
-        for b in quota or []:
-            if b in self.results:
-                continue
-            path = self.batch_paths[b]
-            # the batch arrives: the client drops it into the stream source
-            shutil.copy(path, os.path.join(self.src, f"batch-{b}.parquet"))
-            _release(run.spark)
-
-            def batch(path=path):
-                pairs = self.incremental_lsh_pairs(
-                    run.spark.read.parquet(path), self.TABLE
-                ).toPandas()
-                return pairs, self._append()
-
-            idx = len(run.ops)
-            dt, res = run.op(f"ingest_batch{b}", "small", batch)
-            run.count("cand.out_rows", 0 if res is None else len(res[0]))
-            self.results[b] = (idx, res)
-            run.round_sum("small", idx)  # one batch is one round of `small`
-            run.figure("ingest_batch_p50_s", dt)
-
-    # ---- checks --------------------------------------------------------
-
-    @staticmethod
-    def _oracle_check(run, name: str):
-        want = run.expect["oracle"][name]
-        return lambda df: diff(frame_digest(df), want)
-
-    @staticmethod
-    def _ivf_check(run):
-        """The approximate top-10 against exact dot products computed
-        with numpy: every reported sim must be the pair's true dot
-        product (rounded to 4 places) and recall@10 at least 0.9."""
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(os.path.join(run.inputs, "embeddings.parquet"))
-        ids = np.asarray(tbl.column("vec_id"))
-        mat = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        row = {int(v): i for i, v in enumerate(ids)}
-        exact = run.expect["ivf_exact_top10"]
-
-        def check(df) -> str | None:
-            if sorted(str(q) for q in set(df["query_id"])) != sorted(exact):
-                return f"queries: got {sorted(set(df['query_id']))}"
-            for q, n, s in zip(df["query_id"], df["neighbor_id"], df["sim"]):
-                true = float(mat[row[int(q)]] @ mat[row[int(n)]])
-                if abs(true - s) > 2e-4:
-                    return f"sim({q},{n}) = {s}, exact {true:.6f}"
-            for q, top in exact.items():
-                got = set(df.loc[df["query_id"] == int(q), "neighbor_id"])
-                if len(got & set(top)) < 9:
-                    return f"recall@10 of query {q}: {len(got & set(top))}/10"
-            return None
-        return check
-
-    def finish(self, run) -> None:
-        """Probe identity and append-wave checks, charged to each batch."""
-        from pyspark.sql import functions as F
-
-        from streaming_parquet_spark.operators.dedup import minhash_lsh_pairs
-        from streaming_parquet_spark.operators.pipeline import pack_token_windows
-
-        if not self.results:
-            return
-        spark = run.spark
-        t0 = time.perf_counter()
-        batch_ids = {
-            b: set(spark.read.parquet(self.batch_paths[b]).toPandas()["doc_id"])
-            for b in range(len(self.batch_paths))
-        }
-        held = set().union(*batch_ids.values())
-        full = minhash_lsh_pairs(
-            spark.read.parquet(os.path.join(run.inputs, "documents.parquet"))
-        ).toPandas()
-        shards = spark.read.parquet(self.shards)
-        for b, (idx, res) in sorted(self.results.items()):
-            if run.ops[idx]["error"]:
-                continue
-            pairs, wave = res
-            mine = batch_ids[b]
-            want = set()
-            for a, c, j in zip(full["id_a"], full["id_b"], full["jaccard"]):
-                if a in mine and c not in held:
-                    want.add((int(a), int(c), float(j)))
-                elif c in mine and a not in held:
-                    want.add((int(c), int(a), float(j)))
-            got = {(int(a), int(c), float(j)) for a, c, j in zip(
-                pairs["new_id"], pairs["corpus_id"], pairs["jaccard"])}
-            err = None
-            if got != want:
-                err = (f"probe pairs differ from minhash_lsh_pairs cross pairs: "
-                       f"{len(got - want)} extra, {len(want - got)} missing")
-            else:
-                cols = ["source", "win", "ids", "n_tokens", "doc_starts"]
-                waved = shards.filter(F.col("shard").isin(wave.shards_written))
-                alone = pack_token_windows(
-                    self.encode(spark.read.parquet(self.batch_paths[b])), "tok",
-                    budget=self.BUDGET, order_col="doc_id", part_col="source",
-                )
-                err = diff(frame_digest(waved.select(cols).toPandas()),
-                           frame_digest(alone.select(cols).toPandas()))
-                if err:
-                    err = f"append wave windows differ from packing the batch alone: {err}"
-            run.ops[idx]["error"] = err
-        run.check_s += time.perf_counter() - t0
-
-
-WORKLOADS = {"convert": Convert, "gates": Gates, "corpus_x10": CorpusX10}
+WORKLOADS = {"convert": Convert, "gates": Gates}
