@@ -22,7 +22,7 @@ from streaming_parquet_spark.session import get_spark
 import streaming_parquet_spark.queries_ext  # noqa: F401
 import streaming_parquet_spark.queries_tpch  # noqa: F401
 from streaming_parquet_spark.queries import QUERIES
-from streaming_parquet_spark.operators.similarity import release_materialized
+from streaming_parquet_spark.staging import release_materialized
 
 
 def main() -> None:

@@ -5,7 +5,7 @@ application; actions are only sequential because driver code calls
 them sequentially (optimization guide §2.6 "Overlap independent
 jobs").  The merged family gates build N independent branch plans,
 and several branches run EAGER driver actions while being built —
-persist+count staging (`similarity._materialize`), iterative
+persist+count staging (`staging.stage`), iterative
 localCheckpoint rounds (connected components), streaming spin-ups,
 store writes.  Built serially, each such action pays its full fixed
 job latency while the rest of the cluster idles; built on a small
@@ -14,6 +14,8 @@ thread pool, the scheduler backfills those jobs onto idle cores.
 The result is unchanged: builders are deterministic plan
 constructors, their eager actions are idempotent stagings, and the
 returned DataFrames are combined by the caller exactly as before.
+A builder's stagings belong to the session scope (pool threads hold
+no ``staging.scope()``), released by ``release_materialized()``.
 This matters at every scale — on a cluster the staging jobs are
 bigger and the idle capacity during a straggler tail is worth more.
 """

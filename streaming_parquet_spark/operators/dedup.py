@@ -32,11 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from streaming_parquet_spark.operators.similarity import (
-    _materialize,
-    cap_blocks,
-    spread_input,
-)
+from streaming_parquet_spark.operators.similarity import cap_blocks
+from streaming_parquet_spark.staging import spread_input, stage
 from streaming_parquet_spark.functions.portable import (
     ascii_lower_expr,
     band_hash_expr,
@@ -166,13 +163,10 @@ def minhash_lsh_staging(
     df = spread_input(df)
     elems = basis_expr("spark", text_col, basis)
     hashed = word_hashes_expr("spark", elems)
-    base = _materialize(
+    base = stage(  # "bytes": input already spread_input'd
         df.select(F.col(id_col).alias("id"), F.expr(hashed).alias("wh")),
-        spread=False,  # input already spread_input'd
     )
-    exploded = _materialize(
-        _minhash_bands(base, num_hashes, bands), spread=False
-    )
+    exploded = stage(_minhash_bands(base, num_hashes, bands))
     staged = _LshStaging((base, exploded))
     staged.params = (id_col, text_col, num_hashes, bands, basis)
     return staged
@@ -212,7 +206,7 @@ def minhash_lsh_pairs(
     ``staged``: a :func:`minhash_lsh_staging` result for this corpus
     and banding — lets multiple searches (different thresholds/caps)
     share one staging pass.  The staging is materialized once either
-    way (see _materialize for the stats/broadcast win); without it the
+    way (see staging.stage for the stats/broadcast win); without it the
     shingling lineage would execute four times per search.
     """
     if staged is None:
@@ -222,7 +216,14 @@ def minhash_lsh_pairs(
     else:
         pinned = getattr(staged, "params", None)
         asked = (id_col, text_col, num_hashes, bands, basis)
-        if pinned is not None and pinned != asked:
+        if pinned is None:
+            raise ValueError(
+                "minhash_lsh_pairs: staged= carries no pinned "
+                "parameters — pass a minhash_lsh_staging(...) result, "
+                "not a bare (base, exploded) pair, so the probe can "
+                "check the staging matches it."
+            )
+        if pinned != asked:
             raise ValueError(
                 "minhash_lsh_pairs: staged= was built with "
                 f"(id_col, text_col, num_hashes, bands, basis)={pinned} "
@@ -324,12 +325,11 @@ def write_lsh_index(
     # derivation and the sets write (MinHash over the distinct set
     # equals MinHash over the multiset, so band hashes are
     # bit-identical to minhash_lsh_pairs').
-    sets = _materialize(
+    sets = stage(
         spread_input(corpus).select(
             F.col(id_col).alias("id"),
             F.array_distinct(F.expr(hashed)).alias("ws"),
         ),
-        spread=False,
     )
     # WRITE ORDER IS LOAD-BEARING: bands first, sets second, so a crash
     # between the two table appends leaves ids that are in bands but
@@ -445,11 +445,10 @@ def incremental_lsh_pairs(
     hashed = word_hashes_expr(
         "spark", basis_expr("spark", text_col, params["basis"])
     )
-    base_new = _materialize(
+    base_new = stage(
         spread_input(new_df).select(
             F.col(id_col).alias("id"), F.expr(hashed).alias("wh")
         ),
-        spread=False,
     )
     new_bands = _minhash_bands(
         base_new, params["num_hashes"], params["bands"]
@@ -565,13 +564,12 @@ def ngram_jaccard_pairs(
     sh = word_hashes_expr(
         "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
     )
-    base = _materialize(
+    base = stage(  # "bytes": input already spread_input'd
         df.select(
             F.col(id_col).alias("id"),
             *(block_cols or []),
             F.array_distinct(F.expr(sh)).alias("sh"),
         ),
-        spread=False,  # input already spread_input'd
     )
     if block_cols and max_block_rows is not None:
         base = cap_blocks(base, list(block_cols), max_block_rows)
@@ -664,25 +662,25 @@ def prefix_jaccard_pairs(
     # Materialized: the exploded (id, h) pairs feed BOTH the df
     # aggregate and the keyed rebuild join — without this the md5
     # shingling lineage executes twice (measured ~2x on the gate).
-    raw = _materialize(
+    raw = stage(  # "bytes": input already spread_input'd
         df.select(
             F.col(id_col).alias("id"),
             F.expr(f"array_distinct({sh})").alias("sh"),
         ),
-        spread=False,  # input already spread_input'd
     ).filter(F.expr("size(sh) > 0"))
     # ^ filter AFTER persist: pushed below the projection it would
     # inline the whole shingle pipeline a second time (no CSE across
     # a substituted alias), doubling the staging pass.
     ex = raw.select("id", F.explode("sh").alias("h"))
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # Explicit hash(id) repartition at the parallelism width before the
-    # persist: keeps the co-partitioning the verify join back on id
-    # reuses (a round-robin respread measured SLOWER — it destroys it)
-    # while pinning the cached width against cached-plan AQE coalescing,
-    # which would otherwise collapse this byte-tiny keyed-array staging
-    # to one partition and serialize the prefix/verify stages.
-    base = _materialize(
+    # width=("hash", "id"), an explicit hash(id) repartition at the
+    # parallelism width before the persist: keeps the co-partitioning
+    # the verify join back on id reuses (a round-robin respread
+    # measured SLOWER — it destroys it) while pinning the cached width
+    # against cached-plan AQE coalescing, which would otherwise collapse
+    # this byte-tiny keyed-array staging to one partition and serialize
+    # the prefix/verify stages.
+    base = stage(
         ex.join(dfreq, "h")
         .groupBy("id")
         .agg(
@@ -691,11 +689,8 @@ def prefix_jaccard_pairs(
                     F.expr("df * CAST(4294967296 AS BIGINT) + h")
                 )
             ).alias("sh")
-        )
-        .repartition(
-            ex.sparkSession.sparkContext.defaultParallelism, F.col("id")
         ),
-        spread=False,
+        width=("hash", "id"),
     )
     # prefix length L = |s| - ceil(t|s|) + 1, exact integers; pos is
     # the element's 1-based rank in the sorted array (keys are unique
@@ -782,12 +777,11 @@ def simhash_pairs(
     """Near-dup pairs by SimHash Hamming distance within blocks
     (bit_count(xor) — both engines have bit_count). ``max_block_rows``
     excludes over-full blocks (see ``similarity.cap_blocks``)."""
-    sh = _materialize(
+    sh = stage(  # "bytes": input already spread_input'd
         with_simhash(
             spread_input(df.select(id_col, text_col, *(block_cols or []))),
             text_col, bits, basis=basis,
         ).select(F.col(id_col).alias("id"), *(block_cols or []), "simhash"),
-        spread=False,  # input already spread_input'd
     )
     if block_cols and max_block_rows is not None:
         sh = cap_blocks(sh, list(block_cols), max_block_rows)
@@ -971,13 +965,12 @@ def containment_pairs(
     blocks = list(block_cols or [])
     # Materialized: the exploded (id, h) pairs feed the df aggregate AND
     # the keyed rebuild join (same staging as prefix_jaccard_pairs).
-    raw = _materialize(
+    raw = stage(  # "bytes": input already spread_input'd
         df.select(
             F.col(id_col).alias("id"),
             *blocks,
             F.array_distinct(F.expr(sh)).alias("sh"),
         ),
-        spread=False,  # input already spread_input'd
     ).filter(F.expr("size(sh) > 0"))
     # ^ filter after persist — see prefix_jaccard_pairs
     ex = raw.select("id", *blocks, F.explode("sh").alias("h"))
@@ -986,13 +979,14 @@ def containment_pairs(
     # ascending document frequency, and is a bijection on the corpus's
     # element set — so intersection sizes (and therefore containment)
     # over the keyed arrays equal those over the raw hashes.
-    # Explicit hash(id) repartition at the parallelism width before the
-    # persist: keeps the co-partitioning the verify join back on id
-    # reuses (a round-robin respread measured SLOWER — it destroys it)
-    # while pinning the cached width against cached-plan AQE coalescing,
-    # which would otherwise collapse this byte-tiny keyed-array staging
-    # to one partition and serialize the prefix/verify stages.
-    base = _materialize(
+    # width=("hash", "id"), an explicit hash(id) repartition at the
+    # parallelism width before the persist: keeps the co-partitioning
+    # the verify join back on id reuses (a round-robin respread
+    # measured SLOWER — it destroys it) while pinning the cached width
+    # against cached-plan AQE coalescing, which would otherwise collapse
+    # this byte-tiny keyed-array staging to one partition and serialize
+    # the prefix/verify stages.
+    base = stage(
         ex.join(dfreq, "h")
         .groupBy("id", *blocks)
         .agg(
@@ -1001,11 +995,8 @@ def containment_pairs(
                     F.expr("df * CAST(4294967296 AS BIGINT) + h")
                 )
             ).alias("sh")
-        )
-        .repartition(
-            ex.sparkSession.sparkContext.defaultParallelism, F.col("id")
         ),
-        spread=False,
+        width=("hash", "id"),
     )
     # minimum overlap under the prune threshold, pure integer arithmetic
     o_min = f"CAST(({p_num} * size(sh) + {p_den} - 1) DIV {p_den} AS INT)"
@@ -1169,11 +1160,10 @@ def exact_substring_dedup(
     deleted from both texts."""
     w = int(window_tokens)
     words = f"filter({ordered_words_expr('spark', text_col)}, x -> x != '')"
-    base = _materialize(
+    base = stage(
         spread_input(df).select(
             F.col(id_col).alias("id"), F.expr(words).alias("ws")
         ),
-        spread=False,
     )
     # (id, pos, window-hash) for every window start; docs shorter than
     # the window emit none and pass through untouched
@@ -1185,12 +1175,11 @@ def exact_substring_dedup(
     # this relation, and the windowed hashing is the dominant cost —
     # unpersisted it would run twice (the two exchanges are different
     # subtrees, so ReuseExchange cannot dedupe them).
-    wins = _materialize(
+    wins = stage(
         base.filter(F.expr(f"size(ws) >= {w}")).select(
             "id",
             F.posexplode(F.expr(win_hash)).alias("pos", "wh"),
         ),
-        spread=False,
     )
     # winner per duplicated hash = min (id, pos); every other
     # occurrence contributes a drop interval [pos, pos + w)

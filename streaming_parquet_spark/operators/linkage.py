@@ -55,7 +55,7 @@ def fuzzy_pairs(
     one latin-1 character, so the JVM's char-level routine walks bytes)
     — slightly heavier weights for multi-byte scripts, in exchange for
     a cross-engine-exact metric; the oracle gate runs this mode."""
-    from streaming_parquet_spark.operators.similarity import spread_input
+    from streaming_parquet_spark.staging import spread_input
 
     # A single-row-group parquet source scans as ONE task, which would
     # serialize every within-block DP onto one core; round-robin the

@@ -32,6 +32,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from streaming_parquet_spark.staging import scope, stage
+
 IMAGE_META_SCHEMA = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
@@ -1229,13 +1231,14 @@ def write_payload_store(
     # The manifest digest pass and the data write are two actions over
     # the SAME input: without a persist the caller's lineage (typically
     # mint_payload_refs + a dropDuplicates shuffle of the full payload
-    # bytes) executes twice. Persist around the pair — the second pass
+    # bytes) executes twice. Stage around the pair — the second pass
     # reads the materialized rows instead of re-minting and
     # re-shuffling every blob (guide §5: reuse + recompute cost both
     # favor the cache here; MEMORY_AND_DISK spills rather than OOMs at
-    # scale). Unpersisted before return, success or raise.
-    df = df.persist()
-    try:
+    # scale). Released before return, success or raise — unless the
+    # caller had cached ``df`` already: then the cache is the caller's.
+    with scope():
+        df = stage(df)
         mrows = [
             r.asDict()
             for r in payload_store_manifest(df, n, ref_col, payload_col)
@@ -1261,8 +1264,6 @@ def write_payload_store(
             .partitionBy("shard")
             .parquet(path)
         )
-    finally:
-        df.unpersist(blocking=False)
     manifest = _payload_manifest_frame(
         spark, mrows, wave, n, ref_col, payload_col
     )
@@ -2209,9 +2210,10 @@ def payload_ingest_stream(
     probe_state = {"have_store": contract0 is not None}
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            n_in = batch.count()
+        # the batch owns its stagings (write_payload_store's included)
+        with scope():
+            batch = stage(batch)
+            n_in = batch.staged_rows
             if n_in == 0:
                 result.batches.append(int(batch_id))
                 return
@@ -2258,8 +2260,6 @@ def payload_ingest_stream(
             result.blobs_landed += sum(
                 int(r["n_payloads"]) for r in man.collect()
             )
-        finally:
-            batch.unpersist()
 
     reader = (
         spark.readStream.schema(schema)

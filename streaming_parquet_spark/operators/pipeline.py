@@ -27,17 +27,7 @@ from streaming_parquet_spark.functions.portable import (
     hash_bucket_expr,
     round_to_col,
 )
-
-
-def with_hash_bucket(
-    df: DataFrame, id_col: str = "doc_id", buckets: int = 100,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Stable [0, buckets) bucket from an integer id (portable
-    arithmetic — see functions.portable.hash_bucket_expr)."""
-    return df.withColumn(
-        out_col, F.expr(hash_bucket_expr("spark", id_col, buckets))
-    )
+from streaming_parquet_spark.staging import stage
 
 
 def hash_sample(
@@ -1085,13 +1075,10 @@ def interleave_domains(
     # sampled, so two independent evaluations may shard differently and
     # silently misalign rank against offset). The persisted frame pins
     # ``p`` to one physical evaluation.
-    from streaming_parquet_spark.operators.similarity import _materialize
-
-    sharded = _materialize(
+    sharded = stage(
         base.repartitionByRange(n_shards, "grp", "id").withColumn(
             "p", F.spark_partition_id()
         ),
-        spread=False,
     )
     # local rank within (domain, shard) — bounded by the shard size,
     # never by the domain size
@@ -1279,7 +1266,7 @@ def dsir_weights(
     corpus with no extra shuffle. The corpus feature relation feeds
     BOTH the raw model fit and the scoring join; it is RECOMPUTED per
     consumer rather than persisted — A/B at sf0.1 measured the staged
-    variant (_materialize) at 3.3 s vs 2.4 s pipelined, the same
+    variant (staging.stage) at 3.3 s vs 2.4 s pipelined, the same
     persist-overhead-exceeds-recompute result as the IVF shared
     -assignment experiment (queries_ext.py, embed_ann_ivf_quantized
     note). At ingest scale the right form is a feature TABLE written

@@ -19,12 +19,6 @@ norms for the general case.
 
 from __future__ import annotations
 
-import os
-import re
-import threading
-import warnings
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from streaming_parquet_spark.functions.portable import (
@@ -32,6 +26,16 @@ from streaming_parquet_spark.functions.portable import (
     dot_expr,
     round_to_col,
 )
+from streaming_parquet_spark.staging import (
+    release_materialized,  # noqa: F401  re-export, see _materialize
+    spread_input,
+    stage,
+)
+
+#: The names staging had before ``staging.py``, kept as plain
+#: re-exports: ``bench.py`` imports ``release_materialized`` from here,
+#: and the benchmark's traced runs wrap both by object identity.
+_materialize = stage
 
 
 def _dot(a: str, b: str, dims: int | None = None) -> F.Column:
@@ -42,166 +46,6 @@ def _dot(a: str, b: str, dims: int | None = None) -> F.Column:
 
 def _norm(a: str, dims: int | None = None) -> F.Column:
     return F.sqrt(F.expr(dot_expr("spark", a, a, dims)))
-
-
-def _materialize(df: DataFrame, spread: bool = True) -> DataFrame:
-    """Eagerly materialize a (small) derived relation that feeds BOTH
-    sides of a self-join: computes signatures once instead of per join
-    branch, gives Catalyst exact size stats (so the build side
-    auto-broadcasts when it fits), and — with ``spread`` — round-robins
-    the rows across the cluster first so the probe side of the broadcast
-    join parallelizes even when the source was a single file split.
-    At 100 TB the same call is how you'd stage signatures before the
-    quadratic-per-block stage (or persist them to a table).
-
-    Implementation note: persist + count, NOT localCheckpoint.
-    localCheckpoint builds a LogicalRDD that eagerly copies the plan's
-    constraint set; with tens of aliased projection columns the alias
-    substitution closure in getAllValidConstraints is combinatorial —
-    a 16-column flattened-vector projection OOMed an 8 GiB driver
-    before any data moved. InMemoryRelation has no such step, and after
-    the eager count its stats carry the exact materialized size, so
-    auto-broadcast still sees real numbers."""
-    spark = df.sparkSession
-    if spread:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    df = df.persist()
-    df.count()
-    # Registry mutations are lock-guarded: gate branches may stage
-    # concurrently from driver threads (concurrency.parallel_branches),
-    # and an unguarded append+trim pair could pop a relation another
-    # thread just staged before its consumer ran.
-    with _PERSISTED_LOCK:
-        _PERSISTED.append((_GEN[0], df))
-        # A long-lived session (the driver's ~80-query sweep) calls the
-        # dedup/similarity operators repeatedly; keep only the most
-        # recent handful of staged relations cached and release the
-        # rest.  The consuming action for a prior operator has run by
-        # the time the next one stages (gates run one at a time), so
-        # non-blocking unpersist of old entries is safe — worst case a
-        # still-running plan recomputes.
-        while len(_PERSISTED) > _PERSIST_KEEP:
-            gen, old = _PERSISTED.pop(0)
-            if gen == _GEN[0]:
-                # Evicting a relation staged since the last
-                # release_materialized() — i.e. during the CURRENT gate
-                # build. Its consumer has likely not run yet, so this
-                # degrades to a silent full recompute: a gate staging
-                # more than _PERSIST_KEEP relations has outgrown the
-                # registry. Loud, so it shows up in logs/bench diffs
-                # instead of as an unexplained slowdown.
-                _SAME_GEN_EVICTIONS[0] += 1
-                warnings.warn(
-                    "similarity._materialize: evicting a relation "
-                    "staged during the current gate build "
-                    f"(_PERSIST_KEEP={_PERSIST_KEEP} exceeded); its "
-                    "consumers will recompute from lineage. Raise "
-                    "_PERSIST_KEEP to cover the widest gate.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            old.unpersist(blocking=False)
-    return df
-
-
-# _PERSIST_KEEP sizes to the widest gate's concurrent staging set
-# (dedup_lsh_recall stages 6 relations across its two pipelines): with
-# branch-parallel builds every one of them can be live at once, so the
-# trim floor must exceed that or a gate would evict its own staging
-# mid-build.
-_PERSISTED: list[tuple[int, DataFrame]] = []
-_PERSIST_KEEP = 8
-_PERSISTED_LOCK = threading.Lock()
-#: Generation counter: bumped by release_materialized() (the gate
-#: boundary — the bench and the oracle harness call it between
-#: queries). An eviction of a SAME-generation entry means one gate
-#: staged more than _PERSIST_KEEP relations and just evicted its own
-#: in-flight staging — counted + warned in _materialize.
-_GEN = [0]
-_SAME_GEN_EVICTIONS = [0]
-
-
-_SPREAD_MARK: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
-
-
-def spread_input(df: DataFrame, min_ratio: int = 2) -> DataFrame:
-    """Round-robin a SOURCE relation across the cluster when its scan
-    would yield pathologically few partitions — a single-row-group
-    parquet file is unsplittable, so every downstream per-row
-    computation (md5 shingling, 64-dim dot products, Arrow UDF
-    batches) would otherwise run inside ONE task no matter how many
-    cores exist. The repartition moves the narrow input columns once
-    (cheap — do it BEFORE the heavy projection, which then runs fully
-    parallel).
-
-    Conditional by design: the scan's task count is ESTIMATED from the
-    source file listing and sizes versus maxPartitionBytes — pure
-    driver-side metadata, no job. (NOT ``df.rdd.getNumPartitions()``:
-    under AQE that materializes the plan's query stages — i.e. runs
-    the query — just to ask the question.) A multi-file / large corpus
-    (any production layout — thousands of splits at 100 TB) estimates
-    >= cores/min_ratio tasks and is returned untouched; a derived
-    relation whose lineage already contains exchanges is parallel
-    regardless, and an extra round-robin of its (small) output is the
-    accepted cost of keeping the check metadata-only. Re-spreading is
-    suppressed for frames this function itself returned."""
-    if df in _SPREAD_MARK:
-        return df
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism or 1
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files:
-        return df
-    # A lineage that already contains a ROUND-ROBIN repartition into
-    # enough partitions (this function on an upstream frame — e.g. the
-    # shared table loader spreads the corpora — or an explicit user
-    # repartition(n)) is already parallel: a second round-robin would
-    # just chain another full exchange of the same rows (observed as
-    # back-to-back RoundRobinPartitioning stages in the embed_near_pairs
-    # plan). Matched precisely, not by bare substring: ``coalesce(n)``
-    # also prints as a Repartition node (shuffle=false) and a hash
-    # RepartitionByExpression on a low-cardinality key can CONCENTRATE
-    # rows — neither proves parallelism, so neither suppresses the
-    # spread. Driver-side analyzed-plan probe; no job runs.
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        for m in re.finditer(r"Repartition (\d+), true", plan):
-            if int(m.group(1)) * min_ratio >= cores:
-                return df
-    except Exception:
-        pass
-    try:
-        max_pb = int(
-            str(
-                spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728"
-                )
-            ).lower().rstrip("b")
-        )
-    except ValueError:
-        max_pb = 134217728
-    est = 0
-    for f in files:
-        path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            return df  # non-local source: trust its split planning
-        est += max(1, -(-size // max_pb))
-        if est * min_ratio >= cores:
-            return df
-    # ROUND-ROBIN, not hash-on-columns: a hash partitioning expression
-    # references its columns, which blocks column pruning from reaching
-    # the scan (a downstream 2-column projection would read the whole
-    # row). Round-robin references nothing — pruning passes through —
-    # and its determinism sort (sortBeforeRepartition) touches only the
-    # already-pruned projection of these deliberately small inputs.
-    out = df.repartition(cores)
-    _SPREAD_MARK.add(out)
-    return out
 
 
 def cap_blocks(
@@ -236,15 +80,6 @@ def cap_blocks(
         .select(*block_cols)
     )
     return df.join(keep, list(block_cols), "left_semi")
-
-
-def release_materialized() -> None:
-    """Unpersist every relation staged by ``_materialize`` — call when a
-    batch of similarity/dedup work is done and the session lives on."""
-    with _PERSISTED_LOCK:
-        _GEN[0] += 1
-        while _PERSISTED:
-            _PERSISTED.pop()[1].unpersist(blocking=False)
 
 
 def cosine_topk(
@@ -311,7 +146,7 @@ def similarity_pairs(
     near-identical-embedding pile makes one bucket quadratic no matter
     how well :func:`planes_for` sized the average).
 
-    The signature relation is materialized once (see _materialize) so
+    The signature relation is staged once (see ``staging.stage``) so
     the self-join does not recompute it per branch and the join strategy
     is chosen from exact stats.
 
@@ -338,7 +173,7 @@ def similarity_pairs(
             )
             for i in range(dims)
         ]
-        # spread=True (explicit repartition — AQE never coalesces it):
+        # width="cluster" (explicit repartition — AQE never coalesces it):
         # this staging feeds BOTH sides of the pairwise dot join with no
         # exchange in between, so the cached partition count IS the
         # quadratic stage's parallelism. spread_input alone does not
@@ -347,10 +182,11 @@ def similarity_pairs(
         # flattened staging then collapses under cached-plan AQE
         # coalescing, serializing the pair scoring (measured: the
         # semantic-dedup gate's exec tripled).
-        base = _materialize(
+        base = stage(
             spread_input(df.select(*cols)).select(
                 "id", *(["blk"] if block_col else []), *flat_cols
             ),
+            width="cluster",
         )
         if block_col and max_block_rows is not None:
             base = cap_blocks(base, ["blk"], max_block_rows)
@@ -383,14 +219,14 @@ def similarity_pairs(
                 "sim",
             )
         )
-    # spread=True for the same reason as the flattened branch above:
+    # width="cluster" for the same reason as the flattened branch above:
     # the staging feeds both sides of the pairwise join directly. No
     # inner spread_input here — unlike the flattened branch (whose
     # inner spread parallelizes the 64-way flatten projection), the
-    # projection is trivial, so the _materialize repartition alone
+    # projection is trivial, so the staging's repartition alone
     # guarantees width and a second round-robin would just chain an
     # identical exchange.
-    base = _materialize(df.select(*cols))
+    base = stage(df.select(*cols), width="cluster")
     if block_col and max_block_rows is not None:
         base = cap_blocks(base, ["blk"], max_block_rows)
     a, b = base.alias("a"), base.alias("b")
@@ -753,9 +589,7 @@ def incremental_semantic_pairs(
     spark = new_df.sparkSession
     dims = _ann_index_dims(spark, table)
     cents = read_ann_centroids(spark, table, id_col, vec_col)
-    batch = _materialize(
-        ivf_assign(new_df, cents, id_col, vec_col, dims), spread=False
-    )
+    batch = stage(ivf_assign(new_df, cents, id_col, vec_col, dims))
     postings = read_posting_lists(spark, f"{table}_postings")
     if max_block_rows is not None:
         # Prune to PROBED clusters before counting (broadcast semi-join
@@ -1526,16 +1360,16 @@ def ivf_pq_topk(
         # argmax (a broadcast NLJ over the corpus) executes twice. A
         # caller-supplied ``assigned`` (merged gates; the ingested
         # posting-list table at 100 TB) shares one build across tiers.
-        # spread=True (an EXPLICIT repartition, which AQE never
+        # width="cluster" (an EXPLICIT repartition, which AQE never
         # coalesces): the staged assignment feeds pq_encode's
         # compute-dense subspace scoring directly — no exchange in
         # between — so the cached partition count IS that stage's
-        # parallelism. With spread=False the post-shuffle staging is
+        # parallelism. With width="bytes" the post-shuffle staging is
         # byte-sized tiny and AQE's cached-plan coalescing collapses it
         # to one partition, serializing the encode (measured +1.3 s on
         # the ivf gate when the cached-plan coalescing flag landed).
-        assigned = _materialize(
-            ivf_assign(corpus, cents, id_col, vec_col, dims),
+        assigned = stage(
+            ivf_assign(corpus, cents, id_col, vec_col, dims), width="cluster"
         )
     codes = pq_encode(
         assigned.select(F.col("id").alias(id_col), F.col("v").alias(vec_col)),

@@ -106,35 +106,6 @@ def hll_estimate(
     )
 
 
-def hll_oracle_sql(
-    items_cte: str, group_col: str, hash_expr: str, p: int = 6
-) -> str:
-    """DuckDB SQL computing the same registers + estimate from a CTE
-    ``items`` (columns: ``group_col``, item hash via ``hash_expr``)."""
-    m = 1 << p
-    bits = 32 - p
-    maxrho = bits + 1
-    numer = repr(_HLL_ALPHA_64 * m * m * (1 << maxrho))
-    w = f"CAST(floor(h / {m}) AS BIGINT)"
-    return f"""
-    WITH {items_cte},
-    hashed AS (
-      SELECT {group_col} AS g, {hash_expr} AS h FROM items
-    ),
-    regs AS (
-      SELECT g, CAST(h % {m} AS INT) AS bucket,
-             MAX(CASE WHEN {w} = 0 THEN {maxrho}
-                 ELSE {bits} - length(bin({w})) + 1 END) AS rho
-      FROM hashed GROUP BY 1, 2
-    )
-    SELECT g AS {group_col},
-           floor(({numer} / (SUM((1::BIGINT << ({maxrho} - rho)))
-                 + ({m} - COUNT(*)) * (1::BIGINT << {maxrho}))) * 1e2 + 5e-1) / 1e2
-             AS hll_est
-    FROM regs GROUP BY 1
-    """
-
-
 def cms_counters(
     df: DataFrame,
     hash_col: str,

@@ -18,6 +18,7 @@ from streaming_parquet_spark.functions.portable import (
     word_hashes_expr,
     words_expr,
 )
+from streaming_parquet_spark.staging import stage
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language-ID (deterministic, oracle-reproducible).
@@ -200,7 +201,7 @@ def tfidf_topk(
         # extreme vocabulary scale (ADVICE r15): the forced hint builds
         # the broadcast by re-running the explode lineage and is capped
         # at 8 GB — a deployment whose distinct-term count approaches
-        # that should _materialize(dfreq) instead (exact stats, auto
+        # that should staging.stage(dfreq) instead (exact stats, auto
         # broadcast only when it fits). A/B'd here: the eager staging
         # costs +0.4 s per gate at fixture scale, so the hint stays.
         tf.join(F.broadcast(dfreq), "term")
@@ -264,19 +265,17 @@ def chi2_terms(
     Output: class_col, term, df_in (a), df_out (b), chi2 (4dp), rank.
     """
     from streaming_parquet_spark.functions.portable import words_expr
-    from streaming_parquet_spark.operators.similarity import _materialize
 
     # Materialized once: the (term, class) counts feed the term-total
     # aggregate AND the contingency join — two full corpus explodes
     # otherwise. vocab x classes rows, tiny at any corpus size.
-    tc = _materialize(
+    tc = stage(
         df.select(
             F.col(class_col).alias("cls"),
             F.explode(F.expr(words_expr("spark", text_col))).alias("term"),
         )
         .groupBy("term", "cls")
         .agg(F.count(F.lit(1)).alias("a")),
-        spread=False,
     )
     tdf = tc.groupBy("term").agg(F.sum("a").alias("tdf"))
     cls_n = df.groupBy(F.col(class_col).alias("cls")).agg(
@@ -366,12 +365,11 @@ def domain_similarity(
     Output: cls_a < cls_b, n_terms (shared vocab), cosine (4dp).
     """
     from streaming_parquet_spark.functions.portable import ordered_words_expr
-    from streaming_parquet_spark.operators.similarity import _materialize
 
     # Materialized once: the (class, term) counts feed the norms AND
     # both sides of the pair-dot self-join — three full corpus explodes
     # otherwise. vocab x classes rows, tiny at any corpus size.
-    tc = _materialize(
+    tc = stage(
         df.select(
             F.col(class_col).alias("cls"),
             # ordered (non-distinct) words: these are term-FREQUENCY
@@ -383,7 +381,6 @@ def domain_similarity(
         .groupBy("cls", "term")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count),
-        spread=False,
     )
     # double * bigint products: no int64 intermediate to wrap (the
     # r8 skew_report overflow class, fixed registry-wide in r9 —
@@ -561,8 +558,6 @@ def bigram_lm_score(
         ordered_words_expr,
     )
 
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     bigrams = bigrams_all_expr(
         "spark", ordered_words_expr("spark", text_col)
     )
@@ -573,12 +568,11 @@ def bigram_lm_score(
     b = df.select(
         F.col(id_col).alias("id"), F.explode(F.expr(bigrams)).alias("bg")
     )
-    uni = _materialize(
+    uni = stage(
         df.select(
             F.explode(F.expr(ordered_words_expr("spark", text_col)))
             .alias("w1")
         ).groupBy("w1").agg(F.count(F.lit(1)).alias("c1")),
-        spread=False,
     )
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     big = b.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
@@ -648,8 +642,6 @@ def sparse_cosine_topk(
     the index entirely (its weight was near-minimal anyway). On the
     synthetic fixture every term is corpus-wide, which is exactly that
     pathology; the gate query therefore also samples the corpus."""
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     t = tfidf_topk(df, k=topk_terms, text_col=text_col, id_col=id_col)
     if max_df is not None:
         t = t.filter(F.col("df") <= max_df)
@@ -659,14 +651,13 @@ def sparse_cosine_topk(
     # tfidf pipeline otherwise. This is the local analog of the stored
     # inverted index the docstring prescribes at 100 TB; topk_terms
     # bounds it at a few rows per document.
-    v = _materialize(
+    v = stage(
         t.crossJoin(F.broadcast(n_docs)).select(
             "id", "term",
             F.expr(
                 "CAST(tf * 10000 * (__n + 1) DIV (df + 1) AS BIGINT)"
             ).alias("wf"),
         ),
-        spread=False,
     )
     norms = v.groupBy("id").agg(
         F.sum(F.col("wf").cast("double") * F.col("wf")).alias("n2")
@@ -742,20 +733,17 @@ def novelty_scores(
         shingles_expr,
     )
 
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     sh = word_hashes_expr(
         "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
     )
     # Materialized once: the exploded shingle hashes feed the df
     # aggregate AND the join-back — two full md5-shingling passes over
     # the corpus otherwise (the hashing IS the expensive part).
-    ex = _materialize(
+    ex = stage(
         df.select(
             F.col(id_col).alias("id"),
             F.explode(F.array_distinct(F.expr(sh))).alias("h"),
         ),
-        spread=False,
     )
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     return (
@@ -837,8 +825,6 @@ def cooccurrence_topk(
     the hottest L^2 contributors carry the least signal.
 
     Output: wa < wb, n_ab, n_a, n_b, lift (4dp), rank."""
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     words = F.expr(
         f"array_distinct(filter(split(trim({text_col}), ' +'),"
         f" w -> w <> ''))"
@@ -846,9 +832,8 @@ def cooccurrence_topk(
     # Materialized once: the exploded distinct words feed BOTH sides of
     # the per-doc pair self-join AND the frequency aggregate — three
     # full corpus explodes otherwise.
-    ex = _materialize(
+    ex = stage(
         df.select(F.col(id_col).alias("id"), F.explode(words).alias("w")),
-        spread=False,
     )
     dfreq = ex.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     if max_df is not None:
@@ -1242,13 +1227,11 @@ def batch_drift(
         round_to_col,
     )
 
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     # Materialized once: the (batch, term) counts feed the filtered
     # batch vectors AND the corpus totals (which are themselves read
     # twice) — three full corpus explodes otherwise. vocab x batches
     # rows, tiny at any corpus size.
-    tc_all = _materialize(
+    tc_all = stage(
         df.select(
             F.col(batch_col).alias("b"),
             F.explode(
@@ -1257,7 +1240,6 @@ def batch_drift(
         )
         .groupBy("b", "term")
         .agg(F.count(F.lit(1)).alias("n")),
-        spread=False,
     )
     # corpus totals BEFORE the min_count filter (docstring); cn (a
     # plain sum of counts) stays BIGINT — total tokens bound it well

@@ -62,9 +62,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # one task would run all of it; spread_input round-robins
             # the narrow rows first (no-op whenever the scan already
             # parallelizes, i.e. any production layout).
-            from streaming_parquet_spark.operators.similarity import (
-                spread_input,
-            )
+            from streaming_parquet_spark.staging import spread_input
 
             df = spread_input(df)
         _TABLE_CACHE[key] = df
@@ -480,7 +478,7 @@ def rel_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume INSIDE the scan stage, so on an unsplittable one-row-group
     input the whole partial aggregation would otherwise run in one
     task (no-op on any production multi-split layout)."""
-    from streaming_parquet_spark.operators.similarity import spread_input
+    from streaming_parquet_spark.staging import spread_input
 
     return (
         spread_input(

@@ -55,6 +55,7 @@ from streaming_parquet_spark.operators.text import (
     with_token_stats,
 )
 from streaming_parquet_spark.queries import _t, query
+from streaming_parquet_spark.staging import spread_input, stage
 
 # ---------------------------------------------------------------------------
 # dedup suite
@@ -103,13 +104,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint (order-sensitive, mod 2^31-1)."""
     return with_fingerprint(_t(spark, sf_dir, "documents")).select(
         "doc_id", "fingerprint"
-    )
-
-
-def _duck_minhash_cols(k: int) -> str:
-    wh = _duck_shingle_hashes()
-    return ", ".join(
-        f"{minhash_expr('duckdb', wh, i)} AS m{i}" for i in range(k)
     )
 
 
@@ -404,12 +398,11 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence between the two algorithms flips the value hash."""
     from streaming_parquet_spark.concurrency import parallel_branches
     from streaming_parquet_spark.operators.cluster import dedup_clusters
-    from streaming_parquet_spark.operators.similarity import _materialize
 
-    pairs = _materialize(minhash_lsh_pairs(
+    pairs = stage(minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=16, bands=8,
         jaccard_threshold=0.5,
-    ), spread=False)
+    ))
     # Both algorithms iterate eager localCheckpoint rounds over the
     # SAME materialized pair list; run the two loops on driver threads
     # so their per-round jobs overlap instead of paying each fixed job
@@ -4174,7 +4167,6 @@ def text_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_estimate,
         hll_registers,
     )
-    from streaming_parquet_spark.operators.similarity import _materialize
 
     # One corpus explode, fused: both outputs are functions of the
     # DISTINCT (source, word) set — exact_distinct counts it, and the
@@ -4183,14 +4175,13 @@ def text_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle countDistinct would have paid anyway), stage the
     # vocab-sized result, and the md5 hashing runs once per distinct
     # word instead of once per occurrence.
-    dw = _materialize(
+    dw = stage(
         _t(spark, sf_dir, "documents")
         .select(
             "source",
             F.explode(F.expr(words_expr("spark", "text"))).alias("word"),
         )
         .distinct(),
-        spread=False,
     )
     hashed = dw.select(
         "source", F.expr(hex_to_i32("md5(word)")).alias("h")
@@ -4499,8 +4490,6 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_probe,
     )
 
-    from streaming_parquet_spark.operators.similarity import _materialize
-
     # One corpus explode, fused: the CMS bucket is a function of the
     # word's hash alone, so counters built by SUMMING per-word
     # occurrence counts are counter-for-counter identical to counting
@@ -4509,7 +4498,7 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate is staged once and feeds both the counter build and
     # the top-20 candidate pick (min(h) per word degenerates to h:
     # one hash per word).
-    wch = _materialize(
+    wch = stage(
         _t(spark, sf_dir, "documents")
         .select(
             F.explode(
@@ -4519,7 +4508,6 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .select("word", "n", F.expr(hex_to_i32("md5(word)")).alias("h")),
-        spread=False,
     )
     counters = cms_counters(wch, "h", weight_col="n")
     cand = (
@@ -5166,7 +5154,6 @@ def embed_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_ann_recall_pq_floor): SQ8 per-query >= 0.7, mean >= 0.85;
     PQ (8-byte codes, more lossy) per-query >= 0.3, mean >= 0.5."""
     from streaming_parquet_spark.operators.similarity import (
-        _materialize,
         cosine_topk,
         ivf_pq_topk,
         ivf_sq8_topk,
@@ -5182,11 +5169,10 @@ def embed_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pq tier's assignment staging are independent — build the three
     # pipelines on driver threads so those jobs overlap (guide §2.6)
     exact, sq8_approx, pq_approx = parallel_branches(
-        lambda: _materialize(
+        lambda: stage(
             cosine_topk(emb, q, k=10, dims=64).select(
                 "query_id", "neighbor_id"
             ),
-            spread=False,
         ),
         lambda: ivf_sq8_topk(
             emb, q, k=10, n_centroids=8, n_probe=2, rerank=4, dims=64
@@ -6964,10 +6950,6 @@ def multimodal_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_media,
         sample_frames,
     )
-    from streaming_parquet_spark.operators.similarity import (
-        _materialize,
-        spread_input,
-    )
 
     # ONE Python pass over the payload bytes: the image_meta, decode
     # (resize digest + audio) and features branches previously ran four
@@ -6982,9 +6964,8 @@ def multimodal_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _ab(_t(spark, sf_dir, "documents"))
 
     def _stage_probe() -> DataFrame:
-        return _materialize(
+        return stage(
             probe_media(spread_input(d), width=32, height=24, dims=16),
-            spread=False,
         )
 
     def _img() -> DataFrame:

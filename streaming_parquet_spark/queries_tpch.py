@@ -1561,7 +1561,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     an Exchange.  Map-side partial aggregation would buy nothing here
     anyway (~1.1 lines per (order, supplier) at any scale), and the
     explicit repartition also parallelizes a single-split input, so no
-    spread_input round-robin pass is needed either — the r7 profile
+    staging.spread_input round-robin pass is needed either — the r7 profile
     measured the former spread + two agg exchanges as ~70% of the
     gate's time.  No persist, no second pass, no join back; the
     F-status order filter and the supplier+nation dimension both

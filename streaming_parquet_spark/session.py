@@ -50,7 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE size the output partitioning of CACHED plans too
         # (default false): the engine stages derived relations via
-        # persist+count (similarity._materialize), and with the default
+        # persist+count (staging.stage), and with the default
         # every vocab-sized staged aggregate keeps all
         # shuffle.partitions post-shuffle partitions — near-empty
         # partitions whose per-task fixed cost is pure overhead for

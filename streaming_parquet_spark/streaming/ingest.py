@@ -84,6 +84,7 @@ from streaming_parquet_spark.operators.similarity import (
     read_ann_centroids,
     similarity_pairs,
 )
+from streaming_parquet_spark.staging import scope, stage
 
 
 @dataclass
@@ -279,20 +280,19 @@ def _run_ingest(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         bspark = batch.sparkSession
-        # Cache the batch: the tally count, the within-batch pair
-        # search, and the probe all consume it — without the persist
-        # each would re-scan the batch's files.
-        batch = batch.persist()
-        # EVERYTHING after the first persist sits under one
-        # try/finally: a filter_fn/probe/count failure before the
-        # writes would otherwise leak up to three persisted frames,
-        # and Structured Streaming re-runs (and would re-leak) the
-        # failing batch on every stream restart.
-        filtered = rows = delta = None
-        try:
-            n_in = batch.count()
+        # The batch owns its stagings: the scope releases the frames
+        # staged here AND every operator staging below (the pair
+        # search's, the probe's) on any exit — a filter_fn/probe/count
+        # failure included, which Structured Streaming re-runs on
+        # every stream restart.
+        with scope():
+            # Stage the batch: the tally count, the within-batch pair
+            # search, and the probe all consume it — without the
+            # persist each would re-scan the batch's files.
+            batch = stage(batch)
+            n_in = batch.staged_rows
             n_filtered_batch = 0
-            # 0. quality pre-filter: persisted because the
+            # 0. quality pre-filter: staged because the
             #    filtered-count tally and the dedup stages below both
             #    consume it.  A deterministic filter keeps the replay
             #    analysis intact; a non-deterministic one cannot
@@ -301,12 +301,12 @@ def _run_ingest(
             #    points' documented contract.
             src = batch
             if prefilter_fn is not None:
-                filtered = prefilter_fn(batch).persist()
+                filtered = stage(prefilter_fn(batch))
                 # clamp: the filter_fn contract allows REWRITING rows,
                 # and a transform that emits more rows than it received
                 # (line-splitting) would otherwise tally negative
                 # rejections
-                n_filtered_batch = max(0, n_in - filtered.count())
+                n_filtered_batch = max(0, n_in - filtered.staged_rows)
                 src = filtered
             survivors = survivors_fn(src).withColumn(
                 "ingest_batch", F.lit(int(batch_id))
@@ -314,8 +314,8 @@ def _run_ingest(
             # Materialize ONCE per batch: steps 3 and 4 both consume
             # the survivor set, and the probe must not run twice
             # against an index step 4 is about to mutate.
-            rows = survivors.persist()
-            n = rows.count()
+            rows = stage(survivors)
+            n = rows.staged_rows
             if n:
                 # 3. corpus delta-append: only ids not in the corpus
                 #    AT ALL (replay-idempotent across partitions — a
@@ -328,11 +328,11 @@ def _run_ingest(
                 #    self-read — published files are immutable.
                 _ensure_corpus_table(bspark, rows, table)
                 existing = bspark.table(table).select(F.col(id_col))
-                # persist the delta: the corpus write consumes it, and
+                # stage the delta: the corpus write consumes it, and
                 # the monitor path (when enabled) counts and
                 # fingerprints the SAME rows the write published
-                delta = rows.join(existing, id_col, "left_anti").persist()
-                n_appended = delta.count()
+                delta = stage(rows.join(existing, id_col, "left_anti"))
+                n_appended = delta.staged_rows
                 signals = None
                 if monitor_table is not None and n_appended:
                     # BEFORE the write — see _monitor_signals on why a
@@ -366,14 +366,6 @@ def _run_ingest(
             result.rows_in += n_in
             result.rows_filtered += n_filtered_batch
             result.rows_kept += n
-        finally:
-            if delta is not None:
-                delta.unpersist()
-            if rows is not None:
-                rows.unpersist()
-            if filtered is not None:
-                filtered.unpersist()
-            batch.unpersist()
 
     reader = (
         spark.readStream.schema(schema)

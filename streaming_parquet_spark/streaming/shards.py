@@ -82,6 +82,7 @@ from streaming_parquet_spark.operators.pipeline import (
     pack_token_windows,
     token_shard_manifest,
 )
+from streaming_parquet_spark.staging import scope, stage
 
 #: Contract column names the streaming producer writes under — fixed
 #: (the wave derives them), unlike write_token_shards' free choice.
@@ -387,8 +388,6 @@ def shard_ingest_stream(
         _refuse_retired(shards_path, "shard_ingest_stream",
                         marker_store)
         bspark = batch.sparkSession
-        batch = batch.persist()
-        wins = None
 
         def done(n_rows: int) -> None:
             # tallies land LAST, on every successful exit path: a
@@ -399,14 +398,16 @@ def shard_ingest_stream(
             result.batches.append(batch_id)
             result.rows_in += n_rows
 
-        try:
-            n_in = batch.count()
+        # the batch owns its stagings: released on every exit path
+        with scope():
+            batch = stage(batch)
+            n_in = batch.staged_rows
             if n_in == 0:
                 done(0)
                 return
             # one wave = up to two consumers (manifest pass + data
-            # write) of an encode-UDF lineage: materialize once
-            wins = wave_windows(batch, batch_id).persist()
+            # write) of an encode-UDF lineage: stage once
+            wins = stage(wave_windows(batch, batch_id))
             existing = _try_contract(bspark, shards_path)
             # contract literals typed from the SIDECAR when one exists
             # (same stance as append_token_shards — sidecar literal
@@ -541,10 +542,6 @@ def shard_ingest_stream(
                 n for (n, _t, _a, _b2) in wave.values()
             )
             done(n_in)
-        finally:
-            if wins is not None:
-                wins.unpersist()
-            batch.unpersist()
 
     reader = (
         spark.readStream.schema(schema)

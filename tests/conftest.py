@@ -37,15 +37,11 @@ def sf_dir():
 
 @pytest.fixture(autouse=True)
 def _release_staged_relations():
-    """Gate boundary between tests: drop relations staged by
-    similarity._materialize, exactly as the bench/oracle harness does
-    between queries. Keeps the registry's same-generation eviction
-    warning meaningful (a single test staging > _PERSIST_KEEP relations
-    is the failure mode; consecutive tests rotating through it are not)
-    and stops one test's persists from skewing another's."""
+    """Gate boundary between tests: close the session scope (the
+    relations staging.stage staged outside any scope()), exactly as the
+    bench/oracle harness does between queries, so one test's stagings
+    neither stay cached nor skew another's."""
     yield
-    from streaming_parquet_spark.operators.similarity import (
-        release_materialized,
-    )
+    from streaming_parquet_spark.staging import release_materialized
 
     release_materialized()

@@ -1,7 +1,8 @@
-"""Focused gates for the r15 branch-parallel build machinery:
-concurrency.parallel_branches, the lock-guarded _materialize registry,
-and the shared minhash staging path (staged= must be bit-identical to
-the self-contained path)."""
+"""Focused gates for the branch-parallel build machinery:
+concurrency.parallel_branches, staging ownership (the session scope,
+thread-local scopes, and the three staging widths), and the shared
+minhash staging path (staged= must be bit-identical to the
+self-contained path)."""
 
 import pytest
 
@@ -58,9 +59,7 @@ def test_minhash_staged_pairs_identical_to_self_contained(spark, sf_dir):
         minhash_lsh_pairs,
         minhash_lsh_staging,
     )
-    from streaming_parquet_spark.operators.similarity import (
-        release_materialized,
-    )
+    from streaming_parquet_spark.staging import release_materialized
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     want_uncapped = sorted(
@@ -158,9 +157,7 @@ def test_minhash_staged_param_mismatch_raises(spark, sf_dir):
         minhash_lsh_pairs,
         minhash_lsh_staging,
     )
-    from streaming_parquet_spark.operators.similarity import (
-        release_materialized,
-    )
+    from streaming_parquet_spark.staging import release_materialized
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     staged = minhash_lsh_staging(docs, num_hashes=16, bands=8)
@@ -169,58 +166,116 @@ def test_minhash_staged_param_mismatch_raises(spark, sf_dir):
     assert exploded.columns == ["id", "band", "bh"]
     with pytest.raises(ValueError, match="staged= was built with"):
         minhash_lsh_pairs(docs, num_hashes=16, bands=4, staged=staged)
+    # a bare tuple pins nothing, so nothing could be checked: refused
+    with pytest.raises(ValueError, match="carries no pinned parameters"):
+        minhash_lsh_pairs(
+            docs, num_hashes=16, bands=8, staged=(base, exploded)
+        )
     release_materialized()
 
 
-def test_materialize_same_generation_eviction_warns(spark):
-    # A gate staging more than _PERSIST_KEEP relations evicts its own
-    # in-flight staging — that must warn + count, not degrade silently.
-    from streaming_parquet_spark.operators import similarity as sim
+def _cached(df) -> bool:
+    from pyspark import StorageLevel
 
-    sim.release_materialized()
-    before = sim._SAME_GEN_EVICTIONS[0]
-    with pytest.warns(RuntimeWarning, match="current gate build"):
-        for i in range(sim._PERSIST_KEEP + 1):
-            sim._materialize(spark.range(i, i + 5), spread=False)
-    assert sim._SAME_GEN_EVICTIONS[0] == before + 1
-    sim.release_materialized()
-    # Across a gate boundary (release bumps the generation) eviction of
-    # OLD entries stays silent.
-    import warnings as _w
-
-    for i in range(sim._PERSIST_KEEP):
-        sim._materialize(spark.range(i, i + 5), spread=False)
-    sim._GEN[0] += 1  # simulate the next gate without unpersisting
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        sim._materialize(spark.range(99, 104), spread=False)
-    assert sim._SAME_GEN_EVICTIONS[0] == before + 1
-    sim.release_materialized()
+    return df.storageLevel != StorageLevel.NONE
 
 
 def test_materialize_registry_concurrent_staging(spark):
-    # Concurrent _materialize calls from branch threads must never lose
-    # or double-release a staged relation (the lock-guarded registry).
-    from streaming_parquet_spark.operators import similarity as sim
+    # Stagings made on parallel_branches workers (threads that hold no
+    # scope) belong to the session scope: every one stays readable
+    # until release_materialized(), which releases them all — a lost
+    # registration would leave its frame cached.
+    import sys
 
-    sim.release_materialized()
+    from streaming_parquet_spark.staging import release_materialized, stage
 
-    def stage(i):
-        return sim._materialize(
+    release_materialized()
+
+    def build(i):
+        return stage(
             spark.range(i * 100, i * 100 + 10).withColumn(
                 "x", F.col("id") * 2
-            ),
-            spread=False,
+            )
         )
 
-    dfs = parallel_branches(*(lambda i=i: stage(i) for i in range(6)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        dfs = parallel_branches(*(lambda i=i: build(i) for i in range(6)))
+    finally:
+        sys.setswitchinterval(interval)
     for i, df in enumerate(dfs):
+        assert _cached(df)
         rows = df.collect()
         assert len(rows) == 10
         assert min(r["id"] for r in rows) == i * 100
-    with sim._PERSISTED_LOCK:
-        n = len(sim._PERSISTED)
-    assert n <= sim._PERSIST_KEEP
-    sim.release_materialized()
-    with sim._PERSISTED_LOCK:
-        assert not sim._PERSISTED
+    release_materialized()
+    assert not any(_cached(df) for df in dfs)
+
+
+def test_scope_releases_exactly_its_own_stagings(spark):
+    import threading
+
+    from streaming_parquet_spark.staging import (
+        release_materialized,
+        scope,
+        stage,
+    )
+
+    release_materialized()
+    before = stage(spark.range(0, 7))
+    with scope():
+        inner = stage(spark.range(0, 11))
+        assert _cached(inner) and _cached(before)
+    assert not _cached(inner)  # staged inside: released on exit
+    assert _cached(before)  # staged before the scope opened: not its own
+    with scope():
+        live = stage(spark.range(0, 13))
+        # closing the session scope from another thread leaves this
+        # thread's open scope alone (a running stream's batch)
+        t = threading.Thread(target=release_materialized)
+        t.start()
+        t.join(60)
+        assert not t.is_alive()
+        assert not _cached(before)
+        assert _cached(live)
+        assert live.staged_rows == live.count() == 13
+    assert not _cached(live)
+
+
+def test_stage_widths_pin_partitioning(spark):
+    # Under canChangeCachedPlanOutputPartitioning=true AQE may shrink a
+    # cached post-shuffle plan to its bytes; the explicit widths must
+    # keep defaultParallelism partitions (the ivf / semantic-dedup /
+    # prefix-family stagings depend on it), and "bytes" must add no
+    # repartition of its own.
+    from streaming_parquet_spark.staging import release_materialized, stage
+
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    ) == "true"
+    n = spark.sparkContext.defaultParallelism
+    # a few KB, produced by a shuffle on another key: the shape AQE
+    # coalesces, and one a hash on id must really repartition
+    tiny = (
+        spark.range(0, 400)
+        .groupBy((F.col("id") % 97).alias("g"))
+        .agg(F.min("id").alias("id"), F.count(F.lit(1)).alias("n"))
+    )
+
+    def cached_plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    cluster = stage(tiny, width="cluster")
+    hashed = stage(tiny.withColumn("k", F.lit(1)), width=("hash", "id"))
+    plain = stage(tiny.withColumn("k", F.lit(2)))
+    assert cluster.rdd.getNumPartitions() == n
+    assert hashed.rdd.getNumPartitions() == n
+    assert "RoundRobinPartitioning" in cached_plan(cluster)
+    assert "hashpartitioning(id" in cached_plan(hashed)
+    assert "RoundRobinPartitioning" not in cached_plan(plain)
+    assert "REPARTITION_BY_NUM" not in cached_plan(plain)
+    assert plain.rdd.getNumPartitions() < n
+    with pytest.raises(ValueError, match="width"):
+        stage(tiny, width="spread")
+    release_materialized()

@@ -631,6 +631,25 @@ def test_payload_store_roundtrip_and_verify(spark, tmp_path):
     assert v.count() == len(rows)
 
 
+def test_payload_store_leaves_a_caller_cache_cached(spark, tmp_path):
+    # write_payload_store stages its input around the manifest pass and
+    # the data write, and releases only what it staged: a frame the
+    # caller cached stays cached for the caller to release
+    from pyspark import StorageLevel
+
+    from streaming_parquet_spark.operators.multimodal import (
+        mint_payload_refs,
+        write_payload_store,
+    )
+
+    df = mint_payload_refs(_payloads(spark)).select("ref", "payload")
+    df = df.cache()
+    df.count()
+    write_payload_store(df, str(tmp_path / "store"), n_shards=2)
+    assert df.storageLevel != StorageLevel.NONE
+    df.unpersist()
+
+
 def test_payload_store_refuses_duplicate_and_null(spark, tmp_path):
     from streaming_parquet_spark.operators.multimodal import (
         mint_payload_refs,

@@ -748,20 +748,6 @@ def test_jsonl_inference_rejects_json_documents(tmp_path):
     assert [f.name for f in schema.fields] == ["a"]
 
 
-def test_materialize_cache_is_bounded(spark):
-    """_materialize keeps at most _PERSIST_KEEP relations cached and
-    release_materialized drains them (ADVICE r2 leak)."""
-    from streaming_parquet_spark.operators import similarity as S
-
-    S.release_materialized()
-    base = spark.range(10)
-    for i in range(S._PERSIST_KEEP + 3):
-        S._materialize(base.withColumn("i", F.lit(i)), spread=False)
-    assert len(S._PERSISTED) == S._PERSIST_KEEP
-    S.release_materialized()
-    assert not S._PERSISTED
-
-
 def test_repetition_stats_known_values(spark):
     """Hand-computed repetition stats on a constructed doc."""
     from streaming_parquet_spark.operators.text import with_repetition_stats
@@ -4706,6 +4692,7 @@ def test_exact_substring_dedup_property(spark):
     from streaming_parquet_spark.operators.dedup import (
         exact_substring_dedup,
     )
+    from streaming_parquet_spark.staging import scope
 
     word = st.sampled_from(["a", "b", "c"])
     doc = st.lists(word, min_size=0, max_size=14).map(" ".join)
@@ -4720,12 +4707,13 @@ def test_exact_substring_dedup_property(spark):
     def check(texts, w):
         docs = list(enumerate(texts))
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = {
-            r["doc_id"]: (
-                r["text_clean"], r["n_tokens"], r["n_dropped_tokens"]
-            )
-            for r in exact_substring_dedup(df, window_tokens=w).collect()
-        }
+        with scope():  # each example owns (and releases) its stagings
+            got = {
+                r["doc_id"]: (
+                    r["text_clean"], r["n_tokens"], r["n_dropped_tokens"]
+                )
+                for r in exact_substring_dedup(df, window_tokens=w).collect()
+            }
         assert got == _ess_reference(docs, w)
 
     check()

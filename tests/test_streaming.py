@@ -916,14 +916,18 @@ def test_ingest_filter_fn_reads_persisted_artifact(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_ingest_monitor_table_composes_and_replays_nothing(spark, tmp_path):
+def test_ingest_monitor_table_composes_and_replays_nothing(
+    spark, tmp_path, recwarn
+):
     """The in-loop observability leg (monitor_table=): a two-wave
     ingest leaves exactly one monitor row per corpus-growing batch,
     the XOR of the monitor fps (plus summed counts) reproduces the
     corpus fingerprint, drift_cosine is a sane (0, 1] unigram cosine
     under monitor_drift=True, and a fresh-checkpoint replay appends
     NOTHING to corpus or monitor — the structural exactly-once the
-    docstring promises."""
+    docstring promises.  Every relation a micro-batch stages (its own
+    and its operators') is released with the batch: the streams leave
+    the cached-RDD count where they found it, and warn about nothing."""
     import shutil
     from functools import reduce
 
@@ -961,6 +965,8 @@ def test_ingest_monitor_table_composes_and_replays_nothing(spark, tmp_path):
     spark.createDataFrame(
         [(10, words(0)), (11, words(1))], "doc_id long, text string"
     ).coalesce(1).write.mode("append").parquet(src)
+    cached_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    n_cached = cached_rdds().size()
     dedup_ingest_stream(
         spark, src, table, ckpt, monitor_table=mon, monitor_drift=True
     )
@@ -999,6 +1005,8 @@ def test_ingest_monitor_table_composes_and_replays_nothing(spark, tmp_path):
     )
     assert spark.table(mon).count() == 2
     assert spark.table(table).count() == 3
+    assert not [w for w in recwarn if issubclass(w.category, RuntimeWarning)]
+    assert cached_rdds().size() == n_cached
     for t in (table, f"{table}_lsh_sets", f"{table}_lsh_bands", mon):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
