@@ -182,9 +182,7 @@ def main() -> None:
     # charges whichever query runs first with the one-time JIT compile
     # of the shared expression machinery (measured: the first minhash
     # query pays ~7 s of C2 compilation the second pass doesn't).
-    from streaming_parquet_spark.operators.similarity import (
-        release_materialized,
-    )
+    from streaming_parquet_spark.staging import release_materialized
 
     timings: dict[str, float] = {}
     first_pass: dict[str, float] = {}

@@ -27,6 +27,7 @@ import threading
 from collections.abc import Callable
 from concurrent.futures import (
     FIRST_EXCEPTION,
+    Future,
     ThreadPoolExecutor,
     wait,
 )
@@ -72,9 +73,11 @@ def parallel_branches(*builders: Callable[[], Any]) -> list[Any]:
 
     Failure semantics: the first failing branch (in argument order)
     wins; the MOMENT any branch fails, queued-but-not-yet-started
-    sibling builders are cancelled so branches with on-disk side
-    effects (store writes, streaming spin-ups) cannot begin after the
-    gate has already failed, and the call WAITS for already-running
+    sibling builders are cancelled — from a done-callback, on the
+    failing branch's own worker before that worker takes its next
+    item — so branches with on-disk side effects (store writes,
+    streaming spin-ups) cannot begin after the gate has already
+    failed, and the call WAITS for already-running
     siblings to drain (Spark driver threads aren't interruptible
     mid-build) before re-raising — so a failed gate's side effects
     never interleave with whatever the caller does next.
@@ -101,25 +104,35 @@ def parallel_branches(*builders: Callable[[], Any]) -> list[Any]:
     except Exception:  # pragma: no cover - Connect-only signature drift
         wrapped = list(builders)
 
+    # No builder starts before every future carries the cancelling
+    # callback: a branch failing mid-submission would otherwise free
+    # its worker for a queued sibling before the callback exists.
+    armed = threading.Event()
+
     def _run(fn: Callable[[], Any]) -> Any:
+        armed.wait()
         _IN_POOL.active = True
         try:
             return fn()
         finally:
             _IN_POOL.active = False
 
-    futures = [_pool().submit(_run, w) for w in wrapped]
-    # Block until every future completes OR one fails — the wait
-    # returns at the first failure even while earlier-argument branches
-    # are still running, which is what lets the cancellation fire
-    # before a queued side-effecting sibling gets a freed slot.
+    def _cancel_siblings(f: Future) -> None:
+        if not f.cancelled() and f.exception() is not None:
+            for g in futures:
+                g.cancel()
+
+    try:
+        futures = [_pool().submit(_run, w) for w in wrapped]
+        for f in futures:
+            f.add_done_callback(_cancel_siblings)
+    finally:
+        armed.set()  # a failed submit must not strand the queued ones
     wait(futures, return_when=FIRST_EXCEPTION)
     if any(
         not f.cancelled() and f.done() and f.exception() is not None
         for f in futures
     ):
-        for g in futures:
-            g.cancel()
         wait(futures)  # drain running siblings before surfacing
         for f in futures:
             if not f.cancelled() and f.exception() is not None:

@@ -1,20 +1,32 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers (SURVEY.md §2.11):
-  * brute-force cosine top-k — the exactness baseline. Query set is
-    broadcast against the corpus; per-partition top-k via window rank.
-    Exact, one pass, no state; O(|corpus| * |queries|) — fine whenever
-    |queries| is small or the corpus is pre-filtered.
-  * LSH-bucketed ANN (random hyperplanes) — the 100 TB path: each vector
-    gets a b-bit signature from sign(dot(v, plane_i)); candidates share a
-    bucket (equi-join on the signature), then exact cosine re-ranks
-    candidates only. Planes are deterministic pseudo-random vectors
-    derived from the portable hash so the oracle can re-derive them.
+Every top-k tier is one skeleton (SURVEY.md §2.11): a candidate
+generator pairs each query with corpus rows, a scorer attaches a
+similarity, :func:`_top` keeps the k best per query (ties to the
+lowest id), and an optional exact re-rank re-scores that shortlist
+with the float dot and ranks it again::
 
-Dot products run as JVM higher-order functions (zip_with + aggregate)
-in double precision — no Python UDF, no collect. Embeddings in the
-fixtures are L2-normalized, so dot == cosine; `cosine=True` divides by
-norms for the general case.
+    candidates -> score -> _top -> [exact dot -> _top]
+
+The seven tiers are compositions of it:
+  * ``cosine_topk``  — all pairs (broadcast queries), exact dot. The
+    exactness baseline: O(|corpus| * |queries|), one pass, no state.
+  * ``ann_topk_lsh`` — pairs sharing a random-hyperplane bucket, exact
+    dot. Planes are pseudo-random vectors derived from the portable
+    hash, so the oracle re-derives them.
+  * ``ivf_topk``     — pairs in the query's ``n_probe`` nearest IVF
+    lists (:func:`_probes`), exact dot.
+  * ``sq8_topk``     — all pairs, int8 scalar-quantized dot.
+  * ``ivf_sq8_topk`` — IVF probe, int8 dot down to ``rerank * k``,
+    exact re-rank.
+  * ``pq_topk``      — all codes, product-quantization lookup-table dot
+    (:func:`_pq_lut`) down to ``rerank * k``, exact re-rank
+    (:func:`_pq_rerank`).
+  * ``ivf_pq_topk``  — IVF probe, PQ lookup-table dot, exact re-rank.
+
+Dot products run as JVM expressions in double precision — no Python
+UDF, no collect. Embeddings in the fixtures are L2-normalized, so dot
+== cosine; ``cosine=True`` divides by norms for the general case.
 """
 
 from __future__ import annotations
@@ -33,8 +45,10 @@ from streaming_parquet_spark.staging import (
 )
 
 #: The names staging had before ``staging.py``, kept as plain
-#: re-exports: ``bench.py`` imports ``release_materialized`` from here,
-#: and the benchmark's traced runs wrap both by object identity.
+#: re-exports only for ``perfbench/``: ``spans.py`` wraps both by module
+#: attribute in traced runs and ``workloads.py`` imports
+#: ``release_materialized`` from here. Everything else stages through
+#: ``streaming_parquet_spark.staging``.
 _materialize = stage
 
 
@@ -46,6 +60,63 @@ def _dot(a: str, b: str, dims: int | None = None) -> F.Column:
 
 def _norm(a: str, dims: int | None = None) -> F.Column:
     return F.sqrt(F.expr(dot_expr("spark", a, a, dims)))
+
+
+def _at(dialect: str, arr: str, pos: int) -> str:
+    """The 1-based element ``pos`` of array ``arr``: ``element_at`` in
+    Spark, a subscript in the DuckDB oracle dialect."""
+    return f"element_at({arr}, {pos})" if dialect == "spark" else f"{arr}[{pos}]"
+
+
+def _flat(v: str, dims: int, prefix: str = "") -> list[F.Column]:
+    """Vector column ``v`` as ``dims`` double columns ``{prefix}x{i}``.
+    One F.expr parse per column, not per-dim Column folds: 64 dims x
+    several Py4J-wrapped calls each is measurable DRIVER time per gate
+    build (see kmeans_step)."""
+    return [
+        F.expr(f"CAST({_at('spark', v, i + 1)} AS DOUBLE) AS {prefix}x{i}")
+        for i in range(dims)
+    ]
+
+
+def _flat_dot(a: str, b: str, dims: int) -> F.Column:
+    """Dot of two :func:`_flat` vectors given their column prefixes —
+    SQL ``+`` associates left, the same summation order as the array
+    dot, so the result is bit-identical to it."""
+    return F.expr(" + ".join(f"({a}{i} * {b}{i})" for i in range(dims)))
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The query side every tier ranks for: (query_id, qv)."""
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+
+
+def _top(
+    df: DataFrame, score: str, k: int, by: str, rank: str = "rank"
+) -> DataFrame:
+    """The ranking rule of every tier: number each query's rows by
+    ``score`` descending, ties to the lowest ``by``, and keep ranks
+    ``<= k``. The window is partitioned by query_id, so Spark plans a
+    WindowGroupLimit that keeps only k rows per partition before the
+    shuffle."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(by))
+    return df.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _neighbors(df: DataFrame, k: int, by: str) -> DataFrame:
+    """:func:`_top` on ``sim_raw``, projected to the tiers' output:
+    query_id, neighbor_id (from ``by``), sim (rounded 4dp), rank."""
+    return _top(df, "sim_raw", k, by).select(
+        "query_id",
+        # no self-alias: it would add a rename to the gate plans
+        by if by == "neighbor_id" else F.col(by).alias("neighbor_id"),
+        round_to_col("sim_raw", 4).alias("sim"),
+        "rank",
+    )
 
 
 def cap_blocks(
@@ -98,9 +169,7 @@ def cosine_topk(
     is partitioned by query_id, so WindowGroupLimit keeps only k rows per
     partition before the final shuffle.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _queries(queries, id_col, vec_col)
     # The probe side does all the dot-product work — spread it when the
     # source scan is unsplittable (no-op on production layouts).
     c = spread_input(
@@ -115,19 +184,7 @@ def cosine_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("sim_raw", sim)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_to_col("sim_raw", 4).alias("sim"),
-            "rank",
-        )
-    )
+    return _neighbors(scored, k, "neighbor_id")
 
 
 def similarity_pairs(
@@ -162,17 +219,6 @@ def similarity_pairs(
     if block_col:
         cols.append(F.col(block_col).alias("blk"))
     if dims is not None:
-        # One F.expr parse per column / one for the dot, not per-dim
-        # Column folds: 64 dims x several Py4J-wrapped calls each is
-        # measurable DRIVER time per gate build (see kmeans_step); the
-        # parsed expressions are identical (SQL + and * associate left,
-        # matching the former fold).
-        flat_cols = [
-            F.expr(
-                f"CAST(element_at(v, {i + 1}) AS DOUBLE) AS x{i}"
-            )
-            for i in range(dims)
-        ]
         # width="cluster" (explicit repartition — AQE never coalesces it):
         # this staging feeds BOTH sides of the pairwise dot join with no
         # exchange in between, so the cached partition count IS the
@@ -184,64 +230,47 @@ def similarity_pairs(
         # semantic-dedup gate's exec tripled).
         base = stage(
             spread_input(df.select(*cols)).select(
-                "id", *(["blk"] if block_col else []), *flat_cols
+                "id", *(["blk"] if block_col else []), *_flat("v", dims)
             ),
             width="cluster",
         )
-        if block_col and max_block_rows is not None:
-            base = cap_blocks(base, ["blk"], max_block_rows)
-        a, b = base.alias("a"), base.alias("b")
-        sim_raw = F.expr(
-            " + ".join(f"(a.x{i} * b.x{i})" for i in range(dims))
-        )
-        cond = F.col("a.id") < F.col("b.id")
-        if block_col:
-            cond = cond & (F.col("a.blk") == F.col("b.blk"))
-        # The 64-term sum is bound ONCE as a named column and every later
-        # reference (round, NaN guard, threshold) goes through the column,
-        # not the tree: with the sum inlined into the join condition and
-        # the round_to_col projection, the plan carried ~9 copies of the
-        # 256-node expression and its whole-stage-codegen unit took >1 s
-        # to compile — paid on every run whose generated class had been
-        # evicted from the codegen cache by the surrounding query sweep
-        # (the r5 bench regression). Catalyst's CollapseProject keeps the
-        # binding (it does not inline non-cheap aliases referenced more
-        # than once), so the generated source stays small and the dot is
-        # still evaluated once per candidate pair.
-        return (
-            a.join(b, cond)
-            .withColumn("sim_raw", sim_raw)
-            .withColumn("sim", round_to_col("sim_raw", 4))
-            .filter(F.col("sim") >= threshold)
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                "sim",
-            )
-        )
-    # width="cluster" for the same reason as the flattened branch above:
-    # the staging feeds both sides of the pairwise join directly. No
-    # inner spread_input here — unlike the flattened branch (whose
-    # inner spread parallelizes the 64-way flatten projection), the
-    # projection is trivial, so the staging's repartition alone
-    # guarantees width and a second round-robin would just chain an
-    # identical exchange.
-    base = stage(df.select(*cols), width="cluster")
+        sim_raw = _flat_dot("a.x", "b.x", dims)
+    else:
+        # width="cluster" for the same reason. No inner spread_input
+        # here — unlike the flattened branch (whose inner spread
+        # parallelizes the 64-way flatten projection), the projection is
+        # trivial, so the staging's repartition alone guarantees width
+        # and a second round-robin would just chain an identical
+        # exchange.
+        base = stage(df.select(*cols), width="cluster")
+        sim_raw = F.expr(dot_expr("spark", "a.v", "b.v"))
     if block_col and max_block_rows is not None:
         base = cap_blocks(base, ["blk"], max_block_rows)
     a, b = base.alias("a"), base.alias("b")
     cond = F.col("a.id") < F.col("b.id")
     if block_col:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    sim = F.expr(dot_expr("spark", "a.v", "b.v"))
+    # The dot is bound ONCE as a named column and every later reference
+    # (round, NaN guard, threshold) goes through the column, not the
+    # tree: with the 64-term sum inlined into the join condition and the
+    # round_to_col projection, the plan carried ~9 copies of the
+    # 256-node expression and its whole-stage-codegen unit took >1 s to
+    # compile — paid on every run whose generated class had been evicted
+    # from the codegen cache by the surrounding query sweep (the r5
+    # bench regression). Catalyst's CollapseProject keeps the binding
+    # (it does not inline non-cheap aliases referenced more than once),
+    # so the generated source stays small and the dot is still
+    # evaluated once per candidate pair.
     return (
         a.join(b, cond)
+        .withColumn("sim_raw", sim_raw)
+        .withColumn("sim", round_to_col("sim_raw", 4))
+        .filter(F.col("sim") >= threshold)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            round_to_col(sim, 4).alias("sim"),
+            "sim",
         )
-        .filter(F.col("sim") >= threshold)
     )
 
 
@@ -255,16 +284,11 @@ def _plane_component(plane: int, dim: int) -> str:
 def lsh_plane_dot(vec_col: str, plane: int, dims: int, dialect: str = "spark") -> str:
     """dot(vec, plane_p) as a portable expression (plane derived
     arithmetically, never materialized)."""
-    if dialect == "spark":
-        terms = " + ".join(
-            f"CAST(element_at({vec_col}, {d + 1}) AS DOUBLE) * {_plane_component(plane, d)}"
-            for d in range(dims)
-        )
-    else:
-        terms = " + ".join(
-            f"CAST({vec_col}[{d + 1}] AS DOUBLE) * {_plane_component(plane, d)}"
-            for d in range(dims)
-        )
+    terms = " + ".join(
+        f"CAST({_at(dialect, vec_col, d + 1)} AS DOUBLE)"
+        f" * {_plane_component(plane, d)}"
+        for d in range(dims)
+    )
     return f"({terms})"
 
 
@@ -612,37 +636,23 @@ def incremental_semantic_pairs(
         )
         postings = pruned.join(F.broadcast(ok), ["cluster"], "left_semi")
         batch = batch.join(F.broadcast(ok), ["cluster"], "left_semi")
-    if dims is not None:
-        def flat(df: DataFrame, side: str) -> DataFrame:
-            return df.select(
-                F.col("id").alias(f"{side}_id"),
-                F.col("cluster").alias(f"{side}_blk"),
-                *[
-                    F.expr(
-                        f"CAST(element_at(v, {i + 1}) AS DOUBLE)"
-                        f" AS {side}_x{i}"
-                    )
-                    for i in range(dims)
-                ],
-            )
-        c, n = flat(postings, "c"), flat(batch, "n")
-        sim_raw = F.expr(
-            " + ".join(f"(c_x{i} * n_x{i})" for i in range(dims))
+
+    def side(df: DataFrame, p: str) -> DataFrame:
+        vec = (
+            _flat("v", dims, f"{p}_") if dims is not None
+            else [F.col("v").alias(f"{p}_v")]
         )
-        joined = c.join(
-            F.broadcast(n), F.col("c_blk") == F.col("n_blk")
+        return df.select(
+            F.col("id").alias(f"{p}_id"), F.col("cluster").alias(f"{p}_blk"),
+            *vec,
         )
-    else:
-        c = postings.select(
-            F.col("id").alias("c_id"), F.col("cluster").alias("c_blk"),
-            F.col("v").alias("c_v"),
-        )
-        n = batch.select(
-            F.col("id").alias("n_id"), F.col("cluster").alias("n_blk"),
-            F.col("v").alias("n_v"),
-        )
-        sim_raw = F.expr(dot_expr("spark", "c_v", "n_v"))
-        joined = c.join(F.broadcast(n), F.col("c_blk") == F.col("n_blk"))
+
+    c, n = side(postings, "c"), side(batch, "n")
+    sim_raw = (
+        _flat_dot("c_x", "n_x", dims) if dims is not None
+        else F.expr(dot_expr("spark", "c_v", "n_v"))
+    )
+    joined = c.join(F.broadcast(n), F.col("c_blk") == F.col("n_blk"))
     # No id-inequality filter: a re-ingested identical id pairs with
     # its own indexed copy at sim 1.0, so incremental_semantic_dedup
     # treats exact re-ingest as a duplicate for free (the LSH index
@@ -687,6 +697,36 @@ def incremental_semantic_dedup(
     return new_df.join(matched, id_col, "left_anti")
 
 
+def _centroids(
+    corpus: DataFrame, centroids: DataFrame | None, n_centroids: int,
+    id_col: str,
+) -> DataFrame:
+    """``centroids``, or the deterministic training stand-in: the
+    corpus vectors with id below ``n_centroids`` (oracle-reproducible)."""
+    if centroids is not None:
+        return centroids
+    return corpus.filter(F.col(id_col) < n_centroids)
+
+
+def _probes(
+    q: DataFrame, cents: DataFrame, n_probe: int, id_col: str,
+    vec_col: str, dims: int | None, *keep: str,
+) -> DataFrame:
+    """IVF candidate generator: each query of ``q`` (query_id, qv, ...)
+    with its ``n_probe`` nearest centroids by dot affinity, ties to the
+    lowest centroid id, as (query_id, *keep, cluster). The centroids
+    broadcast into the query side."""
+    c = cents.select(
+        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v")
+    )
+    qaff = q.join(F.broadcast(c)).withColumn(
+        "aff", F.expr(dot_expr("spark", "qv", "cent_v", dims))
+    )
+    return _top(qaff, "aff", n_probe, "cent_id", rank="crank").select(
+        "query_id", *keep, F.col("cent_id").alias("cluster")
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -708,41 +748,15 @@ def ivf_topk(
     every other plan node stays identical. Search cost drops from
     O(|corpus|) to O(|corpus| * n_probe / n_centroids) per query.
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else corpus.filter(F.col(id_col) < n_centroids)
-    )
+    cents = _centroids(corpus, centroids, n_centroids, id_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col, dims)
-
-    c = cents.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    qaff = q.join(F.broadcast(c)).withColumn(
-        "aff", F.expr(dot_expr("spark", "qv", "cent_v", dims))
+    q = _queries(queries, id_col, vec_col)
+    probes = _probes(q, cents, n_probe, id_col, vec_col, dims, "qv")
+    cand = assigned.join(F.broadcast(probes), on="cluster").filter(
+        F.col("id") != F.col("query_id")
     )
-    wq = W.partitionBy("query_id").orderBy(F.col("aff").desc(), F.col("cent_id"))
-    probes = (
-        qaff.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "qv", F.col("cent_id").alias("cluster"))
-    )
-
-    cand = assigned.join(
-        F.broadcast(probes), on="cluster"
-    ).filter(F.col("id") != F.col("query_id"))
     sim = F.expr(dot_expr("spark", "qv", "v", dims))
-    w = W.partitionBy("query_id").orderBy(F.col("sim_raw").desc(), F.col("id"))
-    return (
-        cand.withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            round_to_col("sim_raw", 4).alias("sim"),
-            "rank",
-        )
-    )
+    return _neighbors(cand.withColumn("sim_raw", sim), k, "id")
 
 
 def ann_topk_lsh(
@@ -761,8 +775,7 @@ def ann_topk_lsh(
         "cv", planes, dims,
     )
     q = with_lsh_signature(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv", planes, dims,
+        _queries(queries, id_col, vec_col), "qv", planes, dims,
     )
     joined = c.join(
         F.broadcast(q),
@@ -770,13 +783,7 @@ def ann_topk_lsh(
         & (F.col("query_id") != F.col("neighbor_id")),
     )
     sim = F.expr(dot_expr("spark", "qv", "cv", dims))
-    w = W.partitionBy("query_id").orderBy(F.col("sim_raw").desc(), F.col("neighbor_id"))
-    return (
-        joined.withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", round_to_col("sim_raw", 4).alias("sim"), "rank")
-    )
+    return _neighbors(joined.withColumn("sim_raw", sim), k, "neighbor_id")
 
 
 def semantic_dedup_drops(
@@ -822,32 +829,15 @@ def sq8_quantize_exprs(vec_col: str, dims: int, dialect: str = "spark") -> tuple
     At 100 TB this is the memory lever for ANN: int8 vectors are 4x
     smaller than float32, and the quantized dot runs in exact integer
     arithmetic (64 products of |q| <= 127 cannot overflow BIGINT)."""
-    if dialect == "spark":
-        mx = "greatest(" + ", ".join(
-            f"abs(CAST(element_at({vec_col}, {i + 1}) AS DOUBLE))"
-            for i in range(dims)
-        ) + ")"
-        scale = f"({mx} / 127.0)"
-        quant = (
-            "array(" + ", ".join(
-                f"CAST(floor(CAST(element_at({vec_col}, {i + 1}) AS DOUBLE)"
-                f" / __sq8_scale + 5e-1) AS BIGINT)"
-                for i in range(dims)
-            ) + ")"
-        )
-        return scale, quant
-    mx = "greatest(" + ", ".join(
-        f"abs(CAST({vec_col}[{i + 1}] AS DOUBLE))" for i in range(dims)
-    ) + ")"
-    scale = f"({mx} / 127.0)"
-    quant = (
-        "[" + ", ".join(
-            f"CAST(floor(CAST({vec_col}[{i + 1}] AS DOUBLE)"
-            f" / __sq8_scale + 5e-1) AS BIGINT)"
-            for i in range(dims)
-        ) + "]"
+    comps = [
+        f"CAST({_at(dialect, vec_col, i + 1)} AS DOUBLE)" for i in range(dims)
+    ]
+    mx = "greatest(" + ", ".join(f"abs({x})" for x in comps) + ")"
+    codes = ", ".join(
+        f"CAST(floor({x} / __sq8_scale + 5e-1) AS BIGINT)" for x in comps
     )
-    return scale, quant
+    quant = f"array({codes})" if dialect == "spark" else f"[{codes}]"
+    return f"({mx} / 127.0)", quant
 
 
 def sq8_dot_expr(qa: str, qb: str, sa: str, sb: str, dims: int,
@@ -855,13 +845,10 @@ def sq8_dot_expr(qa: str, qb: str, sa: str, sb: str, dims: int,
     """Approximate dot from symmetric int8 codes: sa*sb*sum(qa_i*qb_i).
     The integer sum is exact in any order; the two scale multiplies are
     single FP ops — bit-identical across engines."""
-    if dialect == "spark":
-        s = " + ".join(
-            f"element_at({qa}, {i + 1}) * element_at({qb}, {i + 1})"
-            for i in range(dims)
-        )
-    else:
-        s = " + ".join(f"{qa}[{i + 1}] * {qb}[{i + 1}]" for i in range(dims))
+    s = " + ".join(
+        f"{_at(dialect, qa, i + 1)} * {_at(dialect, qb, i + 1)}"
+        for i in range(dims)
+    )
     return f"({sa} * {sb} * CAST(({s}) AS DOUBLE))"
 
 
@@ -927,59 +914,28 @@ def ivf_sq8_topk(
     ``centroids=`` (a ``fit_ivf_centroids`` result) swaps the stand-in
     for trained centroids — that path is gated by the pytest recall
     floor instead (KMeans is not bit-portable)."""
-    cents = (
-        centroids
-        if centroids is not None
-        else corpus.filter(F.col(id_col) < n_centroids)
-    )
+    cents = _centroids(corpus, centroids, n_centroids, id_col)
     if assigned is None:
         # ``assigned`` lets callers composing several quantization
         # tiers (the merged gates; at 100 TB the ingested posting-list
         # table) build the coarse assignment ONCE and share it.
         assigned = ivf_assign(corpus, cents, id_col, vec_col, dims)
     coded = with_sq8(assigned, "v", dims, "c_scale", "c_q")
-
-    c = cents.select(F.col(id_col).alias("cent_id"),
-                     F.col(vec_col).alias("cent_v"))
     q = with_sq8(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv")),
-        "qv", dims, "q_scale", "q_q",
+        _queries(queries, id_col, vec_col), "qv", dims, "q_scale", "q_q"
     )
-    qaff = q.join(F.broadcast(c)).withColumn(
-        "aff", F.expr(dot_expr("spark", "qv", "cent_v", dims))
+    probes = _probes(
+        q, cents, n_probe, id_col, vec_col, dims, "qv", "q_scale", "q_q"
     )
-    wq = W.partitionBy("query_id").orderBy(F.col("aff").desc(), F.col("cent_id"))
-    probes = (
-        qaff.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "qv", "q_scale", "q_q",
-                F.col("cent_id").alias("cluster"))
-    )
-
     cand = coded.join(F.broadcast(probes), on="cluster").filter(
         F.col("id") != F.col("query_id")
     )
     qsim = F.expr(sq8_dot_expr("q_q", "c_q", "q_scale", "c_scale", dims))
-    w1 = W.partitionBy("query_id").orderBy(F.col("qsim").desc(), F.col("id"))
-    shortlist = (
-        cand.withColumn("qsim", qsim)
-        .withColumn("qrank", F.row_number().over(w1))
-        .filter(F.col("qrank") <= rerank * k)
+    shortlist = _top(
+        cand.withColumn("qsim", qsim), "qsim", rerank * k, "id", rank="qrank"
     )
     sim = F.expr(dot_expr("spark", "qv", "v", dims))
-    w2 = W.partitionBy("query_id").orderBy(F.col("sim_raw").desc(), F.col("id"))
-    return (
-        shortlist.withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            round_to_col("sim_raw", 4).alias("sim"),
-            "rank",
-        )
-    )
+    return _neighbors(shortlist.withColumn("sim_raw", sim), k, "id")
 
 
 def sq8_topk(
@@ -1001,24 +957,13 @@ def sq8_topk(
         "cv", dims, "c_scale", "c_q",
     ).drop("cv")
     q = with_sq8(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv")),
-        "qv", dims, "q_scale", "q_q",
+        _queries(queries, id_col, vec_col), "qv", dims, "q_scale", "q_q"
     ).drop("qv")
     sim = F.expr(sq8_dot_expr("q_q", "c_q", "q_scale", "c_scale", dims))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            round_to_col("sim_raw", 4).alias("sim"), "rank",
-        )
-    )
+    scored = c.join(
+        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
+    ).withColumn("sim_raw", sim)
+    return _neighbors(scored, k, "neighbor_id")
 
 
 def kmeans_step(
@@ -1186,6 +1131,39 @@ def pq_encode(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
     )
 
 
+def _pq_lut(
+    queries: DataFrame, cb: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Per-query PQ lookup table (query_id, s, code, adc): the
+    exact-integer partial dot of each query subvector with each
+    codeword of its subspace — PQ_M x PQ_K rows per query."""
+    return (
+        _pq_subvectors(queries, id_col, vec_col, "query_id")
+        .join(F.broadcast(cb), "s")
+        .withColumn("adc", F.expr(_PQ_ADC))
+        .select("query_id", "s", F.col("c").alias("code"), "adc")
+    )
+
+
+def _pq_rerank(
+    scored: DataFrame, corpus: DataFrame, queries: DataFrame, k: int,
+    rerank: int, id_col: str, vec_col: str, dims: int,
+) -> DataFrame:
+    """Keep each query's ``rerank * k`` best lookup-table scores
+    (``adc_sim`` on (query_id, id) rows), then re-rank that shortlist
+    with the exact float dot."""
+    shortlist = _top(scored, "adc_sim", rerank * k, "id", rank="arank")
+    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("cv"))
+    q = _queries(queries, id_col, vec_col)
+    sim = F.expr(dot_expr("spark", "qv", "cv", dims))
+    return _neighbors(
+        shortlist.join(c, "id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("sim_raw", sim),
+        k, "id",
+    )
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1212,49 +1190,17 @@ def pq_topk(
     All ranking arithmetic is exact integers with explicit (score, id)
     tie rules, so the DuckDB oracle reproduces the approximate
     pipeline bit-for-bit."""
-    spark = corpus.sparkSession
-    cb = pq_codebook_df(spark)
+    cb = pq_codebook_df(corpus.sparkSession)
     codes = pq_encode(corpus, cb, id_col, vec_col)
-
-    qsub = _pq_subvectors(queries, id_col, vec_col, "query_id")
-    lut = (
-        qsub.join(F.broadcast(cb), "s")
-        .withColumn("adc", F.expr(_PQ_ADC))
-        .select("query_id", "s", F.col("c").alias("code"), "adc")
-    )
+    lut = _pq_lut(queries, cb, id_col, vec_col)
     scored = (
         codes.join(F.broadcast(lut), ["s", "code"])
         .filter(F.col("id") != F.col("query_id"))
         .groupBy("query_id", "id")
         .agg(F.sum("adc").alias("adc_sim"))
     )
-    w1 = W.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("id")
-    )
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(w1))
-        .filter(F.col("arank") <= rerank * k)
-    )
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("cv"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    sim = F.expr(dot_expr("spark", "qv", "cv", dims))
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("id")
-    )
-    return (
-        shortlist.join(c, "id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            round_to_col("sim_raw", 4).alias("sim"),
-            "rank",
-        )
+    return _pq_rerank(
+        scored, corpus, queries, k, rerank, id_col, vec_col, dims
     )
 
 
@@ -1347,13 +1293,8 @@ def ivf_pq_topk(
 
     All ranking arithmetic is exact integers with explicit tie rules —
     the DuckDB oracle replays the full approximate pipeline."""
-    spark = corpus.sparkSession
-    cb = pq_codebook_df(spark)
-    cents = (
-        centroids
-        if centroids is not None
-        else corpus.filter(F.col(id_col) < n_centroids)
-    )
+    cb = pq_codebook_df(corpus.sparkSession)
+    cents = _centroids(corpus, centroids, n_centroids, id_col)
     if assigned is None:
         # Materialized once: the assignment feeds BOTH the PQ encoding
         # and the cluster map below — without this the centroid-affinity
@@ -1376,29 +1317,9 @@ def ivf_pq_topk(
         cb, id_col, vec_col,
     )
     coded = codes.join(assigned.select("id", "cluster"), "id")
-
-    c = cents.select(F.col(id_col).alias("cent_id"),
-                     F.col(vec_col).alias("cent_v"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
-    qaff = q.join(F.broadcast(c)).withColumn(
-        "aff", F.expr(dot_expr("spark", "qv", "cent_v", dims))
-    )
-    wq = W.partitionBy("query_id").orderBy(
-        F.col("aff").desc(), F.col("cent_id")
-    )
-    probes = (
-        qaff.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", F.col("cent_id").alias("cluster"))
-    )
-
-    qsub = _pq_subvectors(queries, id_col, vec_col, "query_id")
-    lut = (
-        qsub.join(F.broadcast(cb), "s")
-        .withColumn("adc", F.expr(_PQ_ADC))
-        .select("query_id", "s", F.col("c").alias("code"), "adc")
-    )
+    q = _queries(queries, id_col, vec_col)
+    probes = _probes(q, cents, n_probe, id_col, vec_col, dims)
+    lut = _pq_lut(queries, cb, id_col, vec_col)
     scored = (
         coded.join(F.broadcast(probes), "cluster")
         .filter(F.col("id") != F.col("query_id"))
@@ -1406,28 +1327,6 @@ def ivf_pq_topk(
         .groupBy("query_id", "id")
         .agg(F.sum("adc").alias("adc_sim"))
     )
-    w1 = W.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("id")
-    )
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(w1))
-        .filter(F.col("arank") <= rerank * k)
-    )
-    cv = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("cv"))
-    sim = F.expr(dot_expr("spark", "qv", "cv", dims))
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("id")
-    )
-    return (
-        shortlist.join(cv, "id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            round_to_col("sim_raw", 4).alias("sim"),
-            "rank",
-        )
+    return _pq_rerank(
+        scored, corpus, queries, k, rerank, id_col, vec_col, dims
     )

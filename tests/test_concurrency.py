@@ -152,6 +152,54 @@ def test_parallel_branches_failure_cancels_queued_siblings():
     assert ran == []
 
 
+def test_parallel_branches_failing_worker_cannot_dequeue_sibling():
+    # The pool holds the failing branch and _POOL_WORKERS - 1 blockers,
+    # so the failing branch's freed worker is the one that would take
+    # the queued side-effecting sibling. A long switch interval keeps
+    # that worker on the interpreter until it blocks: the caller thread
+    # cannot cancel in between, so only cancellation on the failing
+    # worker itself keeps the sibling from running.
+    import sys
+    import threading
+
+    from streaming_parquet_spark import concurrency as cc
+
+    n = cc._POOL_WORKERS
+    # Start every pool thread first, so no submission waits on a start.
+    parallel_branches(*[lambda: threading.Event().wait(0.05)] * n)
+    started = threading.Barrier(n, timeout=20)
+    release = threading.Event()
+    ran = []
+
+    def blocker():
+        started.wait()
+        release.wait(20)
+        return "blocked"
+
+    def boom():
+        started.wait()
+        raise RuntimeError("gate failed")
+
+    def side_effect():
+        ran.append(1)
+        return "ran"
+
+    builders = [boom] + [blocker] * (n - 1) + [side_effect]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(0.5)
+    try:
+        releaser = threading.Timer(1.0, release.set)
+        releaser.start()
+        with pytest.raises(RuntimeError, match="gate failed"):
+            parallel_branches(*builders)
+    finally:
+        sys.setswitchinterval(old)
+        release.set()
+        releaser.join(5)
+    assert not releaser.is_alive()
+    assert ran == []
+
+
 def test_minhash_staged_param_mismatch_raises(spark, sf_dir):
     from streaming_parquet_spark.operators.dedup import (
         minhash_lsh_pairs,

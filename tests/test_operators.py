@@ -668,6 +668,57 @@ def test_ivf_sq8_compose_recall_and_rerank(spark):
     assert len(composed & ivf) / len(ivf) >= 0.8
 
 
+_TIERS = {
+    "cosine": lambda S, c, q, k: S.cosine_topk(c, q, k=k, dims=64),
+    "lsh": lambda S, c, q, k: S.ann_topk_lsh(c, q, k=k, planes=2, dims=64),
+    "ivf": lambda S, c, q, k: S.ivf_topk(
+        c, q, k=k, n_centroids=4, n_probe=2, dims=64),
+    "sq8": lambda S, c, q, k: S.sq8_topk(c, q, k=k, dims=64),
+    "ivf_sq8": lambda S, c, q, k: S.ivf_sq8_topk(
+        c, q, k=k, n_centroids=4, n_probe=2, rerank=2, dims=64),
+    "pq": lambda S, c, q, k: S.pq_topk(c, q, k=k, rerank=2),
+    "ivf_pq": lambda S, c, q, k: S.ivf_pq_topk(
+        c, q, k=k, n_centroids=4, n_probe=2, rerank=2),
+}
+
+
+@pytest.mark.parametrize("tier", sorted(_TIERS))
+def test_topk_tiers_share_the_ranking_contract(spark, tier):
+    """Every top-k tier emits (query_id, neighbor_id, sim, rank) with
+    ranks 1..n <= k per query, never the query itself, sim descending
+    and, among equal sim, ascending neighbor_id. The corpus holds each
+    of 16 sign vectors three times; components are +-1/8, so every dot
+    is an exact multiple of 1/32 and equal sims are true ties."""
+    import random
+
+    from streaming_parquet_spark.operators import similarity as S
+
+    rnd = random.Random(5)
+    base = [[rnd.choice((0.125, -0.125)) for _ in range(64)]
+            for _ in range(16)]
+    corpus = spark.createDataFrame(
+        [(i, base[i % 16]) for i in range(48)],
+        "vec_id bigint, embedding array<float>",
+    )
+    k = 5
+    out = _TIERS[tier](S, corpus, corpus.filter(F.col("vec_id") < 4), k)
+    assert out.columns == ["query_id", "neighbor_id", "sim", "rank"]
+    rows = sorted(out.collect(), key=lambda r: (r["query_id"], r["rank"]))
+    assert {r["query_id"] for r in rows} == {0, 1, 2, 3}
+    ties = 0
+    for qid in range(4):
+        got = [r for r in rows if r["query_id"] == qid]
+        assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
+        assert len(got) <= k
+        assert all(r["neighbor_id"] != qid for r in got)
+        for a, b in zip(got, got[1:]):
+            assert a["sim"] >= b["sim"], (tier, a, b)
+            if a["sim"] == b["sim"]:
+                ties += 1
+                assert a["neighbor_id"] < b["neighbor_id"], (tier, a, b)
+    assert ties, f"{tier}: the fixture produced no tie"
+
+
 def test_write_partitioned_jsonl(spark, sf_dir, tmp_path):
     """jsonl out-format must dispatch to DataFrameWriter.json (ADVICE r2:
     getattr(writer, 'jsonl') raised AttributeError)."""
