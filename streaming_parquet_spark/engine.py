@@ -515,7 +515,7 @@ class Engine:
         else:
             # csv out, all-parquet in: concat preserves row counts, so
             # input footers are exact.
-            rows = self._parquet_rows([f.path for f in files])
+            rows = self._input_rows([f.path for f in files])
         verified = None
         if spec.verify:
             wm = None
@@ -688,6 +688,15 @@ class Engine:
                     return None  # same Spark type, different Arrow type
         return pa.schema([canonical[name] for name in cols]), total_rows
 
+    def _input_rows(self, paths: list[str]) -> int:
+        """Exact row total of input parquet files: ``num_rows`` from the
+        schema probe's footer cache (``self._arrow_probe``); only the
+        files it lacks are opened."""
+        missing = [p for p in paths if p not in self._arrow_probe]
+        return sum(
+            self._arrow_probe[p][1] for p in paths if p in self._arrow_probe
+        ) + self._parquet_rows(missing)
+
     @staticmethod
     def _parquet_rows(paths: list[str]) -> int:
         """Exact row count from parquet footers (files or directories),
@@ -736,7 +745,9 @@ class Engine:
         """Rolling thresholds (cli.rs:70-77). Rows map exactly to
         ``maxRecordsPerFile``; bytes are approximated as
         roll_by_bytes / (input_bytes / input_rows) using parquet footer
-        row counts (no data scan) — documented approximation (SURVEY §7)."""
+        row counts (no data scan; the schema probe's cached counts, a
+        footer read only for a file it lacks) — documented
+        approximation (SURVEY §7)."""
         if spec.roll_by_rows:
             return int(spec.roll_by_rows)
         if not spec.roll_by_bytes:
@@ -746,9 +757,7 @@ class Engine:
         for f in files:
             if f.format is InputFormat.PARQUET:
                 try:
-                    import pyarrow.parquet as pq
-
-                    total_rows += pq.ParquetFile(f.path).metadata.num_rows
+                    total_rows += self._input_rows([f.path])
                     continue
                 except Exception:
                     pass

@@ -13,6 +13,43 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: worker entry point that keeps zip import caches across the tasks of a
+#: reused Python worker (see pyspark_graft_worker.py at the package root)
+WORKER_MODULE = "pyspark_graft_worker"
+
+
+def worker_conf(
+    master: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """``extra_conf`` plus ``spark.python.worker.module`` where ``master``
+    is local.
+
+    Only local masters get the hook: their Python workers are forked by a
+    JVM that inherits this process's environment, where ``get_spark``
+    puts the package root on ``PYTHONPATH``; a cluster's executors may
+    not have the module.  A value the caller passes in ``extra_conf``
+    wins."""
+    conf = {}
+    if master == "local" or master.startswith("local["):
+        conf["spark.python.worker.module"] = WORKER_MODULE
+    conf.update(extra_conf or {})
+    return conf
+
+
+def _jvm_sees(path: str) -> bool:
+    """Whether Python workers forked by this process's JVM will have
+    ``path`` on ``PYTHONPATH``: true for a JVM not launched yet (it
+    inherits ``os.environ``), else read from the running JVM."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is None:
+        return True
+    try:
+        env = SparkContext._jvm.System.getenv("PYTHONPATH") or ""
+    except Exception:
+        return False
+    return path in env.split(os.pathsep)
+
 
 def get_spark(
     app_name: str = "streaming_parquet_spark",
@@ -96,9 +133,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # a JVM launched before PYTHONPATH held the package root cannot
+    # import the worker module: leave the default worker there
+    conf = (
+        worker_conf(master, extra_conf)
+        if _jvm_sees(pkg_root)
+        else dict(extra_conf or {})
+    )
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -401,7 +401,19 @@ def transcode_parquet(
     count tracks cluster parallelism, so a million-file corpus is
     ~4x-cores bins of path lists. This is the documented
     mapPartitions-as-last-resort case: a vectorized file transcode is
-    not expressible through Spark's row-based writer."""
+    not expressible through Spark's row-based writer.
+
+    Per-task fixed cost: each bin is one Python task, and a reused
+    worker pays a fixed charge per task before ``_transcode_bin`` runs.
+    With the default ``pyspark.worker`` that charge was 0.18-0.25 CPU-s
+    (4-core host, CPython 3.11): ``importlib.invalidate_caches()`` made
+    each of the worker's 16 zip importers re-read its archive's whole
+    directory (``pyspark.zip``, py4j, the ``spark-core`` jar) — 87% of
+    the tasks' CPU in a 16-bin transcode moving 1.3 MB. Sessions built
+    by ``get_spark`` on a local master run the ``pyspark_graft_worker``
+    entry point, which re-reads an archive only when it changed, so the
+    charge is 0.015-0.021 CPU-s and a small transcode pays per byte
+    rather than per bin."""
     sc = spark.sparkContext
     if not files:
         raise ValueError("transcode_parquet: no input files")

@@ -346,6 +346,39 @@ def test_rolling_by_bytes_estimation(engine, tmp_path, sf_dir):
     assert res.output.files_written > 1  # rolled into multiple parts
 
 
+def test_parquet_to_csv_opens_each_input_footer_once(
+    engine, tmp_path, monkeypatch
+):
+    """The schema probe's footer sweep serves the whole run: the byte
+    roll estimate and the csv-out row count read ``num_rows`` from its
+    cache instead of re-opening every input footer."""
+    import collections
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"in{i}.parquet")
+        pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 7 + i))}), p)
+        paths.append(p)
+    opened = collections.Counter()
+    real = pq.ParquetFile
+
+    def counting(path, *a, **kw):
+        opened[os.path.abspath(str(path))] += 1
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    res = engine.run(
+        RunSpec(inputs=paths, out=str(tmp_path / "out.csv"),
+                roll_by_bytes=100, single_file=False)
+    )
+    assert res.rows == 7 + 8 + 9
+    assert res.output.files_written > 1  # the roll estimate was used
+    assert {p: opened[p] for p in paths} == {p: 1 for p in paths}
+
+
 def test_multiline_quoted_records(engine, tmp_path):
     """Quoted fields containing newlines (the reference's csv crate
     parses these natively; Spark needs multiLine=true)."""
