@@ -18,6 +18,18 @@ schemas*, not the number of files — with a million homogeneous parquet
 files the plan is a single scan node. Parquet schema probing reads only
 footers (pyarrow, no Spark job); CSV probing samples ``infer_rows`` rows
 per distinct header shape.
+
+An N-schema input is planned with the jobs and tasks one scan of the
+same files would need:
+
+  * reads reuse the footer probe: a parquet group whose probed schema is
+    the one Spark's reader would infer (``_probed_read_schema``) is read
+    with that schema, so no group pays a schema-inference job;
+  * a union of more than one read group is coalesced to the partition
+    count a single Spark file scan of all its files would get
+    (``scan_partitions``) — separate scans cannot pack small files
+    across the union, so without it a drifting corpus of small files
+    writes one task (and one output file) per schema group.
 """
 
 from __future__ import annotations
@@ -32,6 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from streaming_parquet_spark.plans.align import _effective_columns, concat_aligned
+from streaming_parquet_spark.plans.typesys import _FROM_SPARK
 from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sinks.writers import (
@@ -62,6 +75,61 @@ from streaming_parquet_spark.sources.readers import (
     read_text,
     TXT_SCHEMA,
 )
+
+#: Spark types a footer probe may hand to the parquet reader as its
+#: schema: the lattice's own, where the probe's Arrow mapping and
+#: Spark's parquet inference agree. Outside it they can disagree (a
+#: ``duration`` probes as DayTimeIntervalType but reads as LongType, an
+#: all-null column probes as NullType but reads as IntegerType), and a
+#: wrong read schema changes what the aligner casts.
+_READ_TYPES = frozenset(_FROM_SPARK) - {T.NullType}
+
+
+def _spark_hostile(t) -> bool:
+    """An Arrow type whose transcoded output Spark cannot read back, or
+    whose footer-probe mapping disagrees with Spark's reader: ns
+    timestamps (INT96 included — pyarrow renders it as timestamp[ns],
+    Spark reads it as a session-tz TIMESTAMP) and unsigned ints (Spark
+    reads UINT64 as DECIMAL(20,0)), anywhere in the nesting."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        return True
+    if pa.types.is_unsigned_integer(t):
+        return True
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return _spark_hostile(t.value_type)
+    if pa.types.is_struct(t):
+        return any(_spark_hostile(t.field(i).type) for i in range(t.num_fields))
+    if pa.types.is_map(t):
+        return _spark_hostile(t.key_type) or _spark_hostile(t.item_type)
+    return False
+
+
+def scan_partitions(
+    sizes: list[int], max_partition_bytes: int, open_cost: int, parallelism: int
+) -> int:
+    """Partitions one Spark file scan over files of these sizes gets,
+    every file splittable: Spark's ``FilePartition.maxSplitBytes``,
+    ``split = min(maxPartitionBytes, max(openCost, Σ(size + openCost)
+    / parallelism))``, then its ``getFilePartitions`` packing: files cut
+    into split-sized chunks, largest first, packed greedily with each
+    chunk charged ``openCost`` extra. The closed form
+    ``ceil(Σ(size + openCost) / split)`` can be one too many: 12 tiny
+    files on 4 cores whose total is not a multiple of 4 get 5 from it,
+    4 from Spark."""
+    total = sum(s + open_cost for s in sizes)
+    split = min(max_partition_bytes, max(open_cost, total // parallelism))
+    chunks = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)),
+        reverse=True,
+    )
+    parts, current = 1, 0
+    for c in chunks:
+        if current and current + c > split:
+            parts, current = parts + 1, 0
+        current += c + open_cost
+    return parts
 
 
 @dataclass
@@ -108,7 +176,7 @@ class Engine:
         self.spark = spark
         #: per-run parquet footer facts: path -> (arrow schema,
         #: num_rows); populated by the schema probe, consumed by the
-        #: passthrough gate and its row accounting
+        #: parquet read gate, the passthrough gate and row accounting
         self._arrow_probe: dict = {}
 
     # ---- plan construction -------------------------------------------
@@ -294,7 +362,9 @@ class Engine:
         self, spec: RunSpec, files: list[InputFile] | None = None,
         schemas: list[T.StructType] | None = None,
     ) -> tuple[DataFrame, UnifiedSchema, list[InputFile]]:
-        """Build the aligned UNION ALL DataFrame for a spec (lazy)."""
+        """Build the aligned UNION ALL DataFrame for a spec (lazy).
+        ``schemas``, when given, are this run's ``probe_schemas(files)``:
+        parquet groups may be read with them."""
         files = files if files is not None else self.discover(spec)
         if not files:
             raise ValueError("no input files discovered")
@@ -314,7 +384,10 @@ class Engine:
         dfs = []
         for (fmt, schema_json), paths in groups.items():
             if fmt is InputFormat.PARQUET:
-                dfs.append(read_parquet(self.spark, paths))
+                schema = T.StructType.fromJson(json.loads(schema_json))
+                dfs.append(read_parquet(
+                    self.spark, paths, self._probed_read_schema(paths, schema)
+                ))
             elif fmt is InputFormat.ORC:
                 dfs.append(read_orc(self.spark, paths))
             elif fmt is InputFormat.TXT:
@@ -346,7 +419,38 @@ class Engine:
                     read_csv(self.spark, paths, self._csv_opts(spec), schema=read_schema)
                 )
         df = concat_aligned(dfs, unified, include=spec.columns, exclude=spec.exclude)
+        if len(dfs) > 1:
+            df = df.coalesce(self._scan_partitions(files))
         return df, unified, files
+
+    def _probed_read_schema(
+        self, paths: list[str], schema: T.StructType
+    ) -> T.StructType | None:
+        """The probed ``schema`` of a parquet read group when it is the
+        schema Spark's reader would infer for it, else None (infer it):
+        every file has a footer probe, no Arrow field is
+        ``_spark_hostile``, and every field's Spark type is in
+        ``_READ_TYPES``."""
+        if any(type(fld.dataType) not in _READ_TYPES for fld in schema.fields):
+            return None
+        for p in paths:
+            probe = self._arrow_probe.get(p)
+            if probe is None or any(_spark_hostile(fld.type) for fld in probe[0]):
+                return None
+        return schema
+
+    def _scan_partitions(self, files: list[InputFile]) -> int:
+        """``scan_partitions`` for these files under the session's
+        file-scan settings."""
+        jss = self.spark._jsparkSession
+        conf = jss.sessionState().conf()
+        min_parts = conf.filesMinPartitionNum()
+        return scan_partitions(
+            [f.size for f in files],
+            conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(),
+            min_parts.get() if min_parts.isDefined() else jss.leafNodeDefaultParallelism(),
+        )
 
     # ---- entry points (SURVEY.md §3) ---------------------------------
 
@@ -600,8 +704,8 @@ class Engine:
           values, and worse, pyarrow re-encodes INT96 as INT64
           TIMESTAMP(NANOS), which Spark 4 refuses to read at all
           (PARQUET_TYPE_ILLEGAL). Because pyarrow renders INT96 as
-          timestamp[ns], the ns-unit disqualifier below covers it and
-          native ns timestamps with one check. Same story for unsigned
+          timestamp[ns], ``_spark_hostile``'s ns-unit check covers it
+          and native ns timestamps at once. Same story for unsigned
           ints (Spark reads UINT64 as DECIMAL(20,0) while the probe
           folds it into LongType). Any such type, anywhere in a gated
           column's nesting, disqualifies.
@@ -627,25 +731,6 @@ class Engine:
         import pyarrow.parquet as pq
 
         want = set(cols)
-
-        def _spark_hostile(t: pa.DataType) -> bool:
-            # Types whose transcoded output Spark cannot read back, or
-            # whose probe mapping disagrees with Spark's reader.
-            if pa.types.is_timestamp(t) and t.unit == "ns":
-                return True
-            if pa.types.is_unsigned_integer(t):
-                return True
-            if (
-                pa.types.is_list(t)
-                or pa.types.is_large_list(t)
-                or pa.types.is_fixed_size_list(t)
-            ):
-                return _spark_hostile(t.value_type)
-            if pa.types.is_struct(t):
-                return any(_spark_hostile(t.field(i).type) for i in range(t.num_fields))
-            if pa.types.is_map(t):
-                return _spark_hostile(t.key_type) or _spark_hostile(t.item_type)
-            return False
 
         def _probe(path: str):
             pf = pq.ParquetFile(path)

@@ -88,12 +88,15 @@ def concat_aligned(
     """UNION ALL of inputs after alignment — the reference's core operator
     (src/pipeline.rs:76-100): bag semantics, no dedup, fixed output schema.
 
-    Aligned frames share an identical schema, so ``unionByName`` is a
-    zero-shuffle plan: Spark unions the scans and keeps per-file read
-    parallelism (one task per file split) — the distributed analog of the
-    reference's N-readers-one-channel topology.
+    Aligned frames share an identical schema — the same columns in the
+    same order — so a positional ``union`` is exact and skips the
+    by-name resolution (a re-ordering ``Project`` per branch) that
+    ``unionByName`` would plan. The union is zero-shuffle: Spark unions
+    the scans and keeps per-file read parallelism (one task per file
+    split) — the distributed analog of the reference's
+    N-readers-one-channel topology.
     """
     if not dfs:
         raise ValueError("concat_aligned requires at least one input DataFrame")
     aligned = [align_dataframe(df, unified, include, exclude) for df in dfs]
-    return reduce(lambda a, b: a.unionByName(b), aligned)
+    return reduce(DataFrame.union, aligned)

@@ -378,12 +378,19 @@ def infer_csv_schema_prefix(
     )
 
 
-def read_parquet(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, paths: list[str] | str,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Parquet scan (parquet_in.rs:13-44): Spark's vectorized reader with
-    row-group pruning and predicate pushdown for free."""
+    row-group pruning and predicate pushdown for free. A ``schema``
+    skips the reader's schema inference (one Spark job reading a
+    footer); the caller vouches that it is the schema Spark would
+    infer."""
     if isinstance(paths, str):
         paths = [paths]
-    return spark.read.parquet(*paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def read_orc(spark: SparkSession, paths: list[str] | str) -> DataFrame:

@@ -26,6 +26,15 @@ stagings go to the session scope even when the caller of
 ``release_materialized()``.  Conversely, ``release_materialized()`` on
 one thread never touches a scope open on another (a running stream's
 batch keeps its stagings).
+
+The ``parallel_branches`` rule, then: a builder that must not outlive
+its caller's scope (a ``foreachBatch`` body's branches) opens its own
+``with scope():`` and returns only what it has counted or collected, or
+the caller releases the branch results itself.  Builders that run inline
+— a single builder, or a nested call on a pool thread — stage into the
+calling thread's scope like any other code.  No ingest loop calls
+``parallel_branches`` today; gates do, and the gate boundary's
+``release_materialized()`` closes what their branches staged.
 """
 
 from __future__ import annotations
