@@ -1,27 +1,36 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+prefix-filter Jaccard and containment.
 
 All fuzzy variants are built from the portable hash expressions in
 ``functions.portable`` so the DuckDB oracle can reproduce them bit-for-bit
 — and, more importantly, so the hot path is pure JVM expression code
 (transform/aggregate lambdas are Catalyst expressions, not Python UDFs).
 
-Scale design (100 TB):
-  * exact_dedup — hash partial-agg per partition, one shuffle on the
-    normalized key; or a window if the full row must be kept.
-  * minhash_lsh_pairs — the scale path for near-dup: candidates are
-    generated by an equi-join on (band, band_hash) — a shuffle join on a
-    compact key, never an O(n^2) cross join. With b bands of r rows,
-    P(candidate) ≈ 1-(1-j^r)^b; defaults (16 hashes, 4 bands of 4) catch
-    j >= ~0.6 pairs with high probability. Band buckets are naturally
-    skew-prone on boilerplate-heavy corpora — AQE skew-join spreads a
-    hot bucket's WORK, but the candidate count stays |bucket|^2, so the
-    real guard is `max_bucket_rows` (drop over-full buckets from the
-    pairwise stage; see similarity.cap_blocks) or raising `bands`' r.
-  * ngram_jaccard_pairs — exact pairwise Jaccard *within blocks* (never
-    unblocked at scale); used both standalone on small blocks and as the
-    verify stage after LSH candidate generation.
-  * simhash — one 32/64-bit signature per doc; near-dup = small Hamming
-    distance, joinable by rotating bit-bands if needed at scale.
+Every pair generator is the pair skeleton of ``similarity`` (its module
+docstring): stage the sides, optionally cap hot blocks, one blocked
+candidate join (``_pair_join``), verify, project. They differ in the
+candidate key and in where verification runs:
+
+  * exact_dedup — not a pair generator: hash partial-agg per partition,
+    one shuffle on the normalized key.
+  * minhash_lsh_pairs — candidates from an equi-join on (band,
+    band_hash) over (id, band, bh) only, verified by id
+    (``_verify_by_id``) on the 32-bit shingle-hash sets. With b bands of
+    r rows, P(candidate) ≈ 1-(1-j^r)^b. Band buckets are skew-prone on
+    boilerplate-heavy corpora — AQE skew-join spreads a hot bucket's
+    WORK, but the candidate count stays |bucket|^2, so the real guard is
+    ``max_bucket_rows`` (``similarity.cap_blocks``) or raising r.
+  * incremental_lsh_pairs — the same probe of a new batch against the
+    persisted index (``write_lsh_index``); its cap counts index and
+    batch together (``similarity._cap_probed``).
+  * ngram_jaccard_pairs — exact pairwise Jaccard within caller blocks,
+    scored on the join's own columns (never unblocked at scale).
+  * prefix_jaccard_pairs / containment_pairs — exact-recall prefix
+    filters (PPJoin family): candidates from an equi-join on a rarity-
+    ordered prefix element, position and length prunes in the join,
+    verified by id.
+  * simhash_pairs — one signature per doc; Hamming distance within
+    blocks, scored on the join's own columns.
 
 Reference parity note: the reference has no dedup of any kind (grep
 `dedup|distinct` over /root/reference/src: only input-path dedup,
@@ -32,7 +41,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from streaming_parquet_spark.operators.similarity import cap_blocks
+from streaming_parquet_spark.operators.similarity import (
+    _cap_probed,
+    _ceil_frac,
+    _elements,
+    _pair_join,
+    _rarity_keyed,
+    _shingle_sets,
+    _verify_by_id,
+    cap_blocks,
+)
 from streaming_parquet_spark.staging import spread_input, stage
 from streaming_parquet_spark.functions.portable import (
     ascii_lower_expr,
@@ -172,6 +190,11 @@ def minhash_lsh_staging(
     return staged
 
 
+def _rounded_jaccard() -> F.Column:
+    """The 4dp Jaccard of the verify sets ``wa`` / ``wb``."""
+    return round_to_col(F.expr(jaccard_expr("spark", "wa", "wb")), 4)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -234,34 +257,11 @@ def minhash_lsh_pairs(
     base, exploded = staged
     if max_bucket_rows is not None:
         exploded = cap_blocks(exploded, ["band", "bh"], max_bucket_rows)
-
-    cand = (
-        exploded.alias("a")
-        .join(
-            exploded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
     sets = base.select(F.col("id"), F.array_distinct("wh").alias("ws"))
-    verified = (
-        cand.join(sets.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sets.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col("sa.ws").alias("wa"),
-            F.col("sb.ws").alias("wb"),
-        )
-    )
-    j = F.expr(jaccard_expr("spark", "wa", "wb"))
-    return (
-        verified.withColumn("jaccard", round_to_col(j, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_by_id(
+        _pair_join(exploded, exploded, ["band", "bh"]), sets, sets,
+        "jaccard", _rounded_jaccard(),
+        F.col("jaccard") >= jaccard_threshold,
     )
 
 
@@ -459,57 +459,17 @@ def incremental_lsh_pairs(
     # DSIR and IVF shared-stage experiments).
     idx_bands = spark.table(f"{table}_bands")
     if max_bucket_rows is not None:
-        # Cap counts must NOT aggregate the whole index (that would
-        # shuffle O(index) (band, bh) keys per probe — exactly what the
-        # incremental path exists to avoid). A bucket absent from the
-        # batch can neither produce a candidate nor change a probed
-        # bucket's count, so prune the index to PROBED buckets first
-        # via a batch-sized broadcast semi-join; counts for every
-        # candidate-producing bucket are unchanged and the corpus side
-        # still never shuffles.
-        probed = new_bands.select("band", "bh").dropDuplicates()
-        idx_probed = idx_bands.join(
-            F.broadcast(probed), ["band", "bh"], "left_semi"
+        idx_bands, new_bands = _cap_probed(
+            idx_bands, new_bands, ["band", "bh"], max_bucket_rows
         )
-        ok = (
-            idx_probed.select("band", "bh")
-            .unionByName(new_bands.select("band", "bh"))
-            .groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("__block_n"))
-            .filter(F.col("__block_n") <= max_bucket_rows)
-            .select("band", "bh")
-        )
-        idx_bands = idx_probed.join(F.broadcast(ok), ["band", "bh"], "left_semi")
-        new_bands = new_bands.join(F.broadcast(ok), ["band", "bh"], "left_semi")
-    cand = (
-        idx_bands.alias("c")
-        .join(
-            F.broadcast(new_bands.alias("n")),
-            (F.col("c.band") == F.col("n.band"))
-            & (F.col("c.bh") == F.col("n.bh")),
-        )
-        .select(
-            F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id")
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    sets_new = base_new.select("id", F.array_distinct("wh").alias("ws"))
-    verified = (
-        cand.join(sets_new.alias("sn"), F.col("new_id") == F.col("sn.id"))
-        .join(
-            spark.table(f"{table}_sets").alias("sc"),
-            F.col("corpus_id") == F.col("sc.id"),
-        )
-        .select(
-            "new_id", "corpus_id",
-            F.col("sn.ws").alias("wa"), F.col("sc.ws").alias("wb"),
-        )
-    )
-    j = F.expr(jaccard_expr("spark", "wa", "wb"))
-    return (
-        verified.withColumn("jaccard", round_to_col(j, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    return _verify_by_id(
+        _pair_join(
+            F.broadcast(new_bands), idx_bands, ["band", "bh"], order=None
+        ),
+        base_new.select("id", F.array_distinct("wh").alias("ws")),
+        spark.table(f"{table}_sets"),
+        "jaccard", _rounded_jaccard(), F.col("jaccard") >= jaccard_threshold,
+        ids=("new_id", "corpus_id"),
     )
 
 
@@ -560,45 +520,33 @@ def ngram_jaccard_pairs(
     strings: bigint set-intersection is several times cheaper per pair
     and the oracle hashes identically, so results still match bit-exact.
     """
-    df = spread_input(df)
-    sh = word_hashes_expr(
-        "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
-    )
-    base = stage(  # "bytes": input already spread_input'd
-        df.select(
-            F.col(id_col).alias("id"),
-            *(block_cols or []),
-            F.array_distinct(F.expr(sh)).alias("sh"),
-        ),
-    )
-    if block_cols and max_block_rows is not None:
-        base = cap_blocks(base, list(block_cols), max_block_rows)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    for c in block_cols or []:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    blocks = list(block_cols or [])
+    base = _shingle_sets(df, id_col, text_col, n, blocks)
+    if blocks and max_block_rows is not None:
+        base = cap_blocks(base, blocks, max_block_rows)
+    j = F.expr(jaccard_expr("spark", "a.sh", "b.sh"))
     # Length filter from the similarity-join literature: J(a,b) >= t
     # forces min(|a|,|b|) >= t * max(|a|,|b|) (the intersection can't
     # exceed the smaller set, the union can't be smaller than the
     # larger). A cheap integer predicate inside the join skips the
     # set-intersection for every length-mismatched pair.
-    cond = cond & F.expr(
+    length = (
         f"least(size(a.sh), size(b.sh))"
         f" >= {threshold} * greatest(size(a.sh), size(b.sh))"
     )
-    j = F.expr(jaccard_expr("spark", "a.sh", "b.sh"))
     # Threshold on the RAW jaccard (a pure predicate — IEEE division is
     # correctly rounded, so fl(i/u) >= t is engine-independent); the
     # 4dp rounding is display-only. Filtering on the rounded value
     # would admit a borderline band [t-5e-5, t) that the prefix-filter
     # variant's prunes don't guarantee recall for, making the two
     # operators disagree at the same threshold.
-    out = a.join(b, cond & (j >= F.lit(threshold))).select(
+    return _pair_join(
+        base, base, blocks=blocks, prune=[length, j >= threshold]
+    ).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
         round_to_col(j, 4).alias("jaccard"),
     )
-    return out
 
 
 def prefix_jaccard_pairs(
@@ -654,100 +602,37 @@ def prefix_jaccard_pairs(
     wins.
 
     Output: id_a < id_b, jaccard (4dp, >= t)."""
-    t_expr = f"{threshold_num} / {threshold_den}"
-    df = spread_input(df)
-    sh = word_hashes_expr(
-        "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
-    )
+    tn, td = threshold_num, threshold_den
     # Materialized: the exploded (id, h) pairs feed BOTH the df
     # aggregate and the keyed rebuild join — without this the md5
     # shingling lineage executes twice (measured ~2x on the gate).
-    raw = stage(  # "bytes": input already spread_input'd
-        df.select(
-            F.col(id_col).alias("id"),
-            F.expr(f"array_distinct({sh})").alias("sh"),
-        ),
-    ).filter(F.expr("size(sh) > 0"))
-    # ^ filter AFTER persist: pushed below the projection it would
-    # inline the whole shingle pipeline a second time (no CSE across
-    # a substituted alias), doubling the staging pass.
-    ex = raw.select("id", F.explode("sh").alias("h"))
-    dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # width=("hash", "id"), an explicit hash(id) repartition at the
-    # parallelism width before the persist: keeps the co-partitioning
-    # the verify join back on id reuses (a round-robin respread
-    # measured SLOWER — it destroys it) while pinning the cached width
-    # against cached-plan AQE coalescing, which would otherwise collapse
-    # this byte-tiny keyed-array staging to one partition and serialize
-    # the prefix/verify stages.
-    base = stage(
-        ex.join(dfreq, "h")
-        .groupBy("id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.expr("df * CAST(4294967296 AS BIGINT) + h")
-                )
-            ).alias("sh")
-        ),
-        width=("hash", "id"),
-    )
-    # prefix length L = |s| - ceil(t|s|) + 1, exact integers; pos is
-    # the element's 1-based rank in the sorted array (keys are unique
-    # per array, so array_position is exact)
-    pref = base.select(
-        "id",
-        F.expr("size(sh)").alias("sz"),
-        F.posexplode(
-            F.expr(
-                f"slice(sh, 1, size(sh)"
-                f" - CAST(({threshold_num} * size(sh) + {threshold_den} - 1)"
-                f" DIV {threshold_den} AS INT) + 1)"
-            )
-        ).alias("pos0", "h"),
-    ).select("id", "sz", (F.col("pos0") + 1).alias("pos"), "h")
-    a, b = pref.alias("a"), pref.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.id") < F.col("b.id"))
-            # length filter inside the join: min >= t * max
-            & F.expr(
-                f"least(a.sz, b.sz) >= {t_expr} * greatest(a.sz, b.sz)"
-            )
-            # PPJoin position filter: for the pair's FIRST shared
-            # element (in global order) nothing earlier overlaps, so
-            # overlap <= 1 + min(elements after it on each side); a
-            # true pair always survives via that first-shared row,
-            # which the prefix lemma keeps inside both prefixes
-            & F.expr(
-                f"1 + least(a.sz - a.pos, b.sz - b.pos)"
-                f" >= ({threshold_num} * greatest(a.sz, b.sz)"
-                f" + {threshold_den} - 1) DIV {threshold_den}"
-            ),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = base.select(F.col("id"), F.col("sh").alias("wa"))
-    sb = base.select(F.col("id"), F.col("sh").alias("wb"))
-    j = F.expr(jaccard_expr("spark", "wa", "wb"))
+    base = _rarity_keyed(_shingle_sets(df, id_col, text_col, n, []), [])
+    pref = _elements(base, [], tn, td)
+    cand = _pair_join(pref, pref, ["h"], prune=[
+        # length filter inside the join: min >= t * max
+        f"least(a.sz, b.sz) >= {tn} / {td} * greatest(a.sz, b.sz)",
+        # PPJoin position filter: for the pair's FIRST shared element
+        # (in global order) nothing earlier overlaps, so overlap <= 1 +
+        # min(elements after it on each side); a true pair always
+        # survives via that first-shared row, which the prefix lemma
+        # keeps inside both prefixes
+        f"1 + least(a.sz - a.pos, b.sz - b.pos)"
+        f" >= {_ceil_frac(tn, td, 'greatest(a.sz, b.sz)')}",
+    ])
     # The threshold predicate is PURE INTEGER (td*|a∩b| >= tn*|a∪b|) —
     # exactly the rational J >= t the prefix/position/length prunes
     # guarantee recall for. Rounding is display-only: filtering on the
     # 4dp-rounded value would admit a borderline band [t-5e-5, t) whose
     # members survive pruning only data-dependently.
     keep = F.expr(
-        f"{threshold_den} * size(array_intersect(wa, wb))"
-        f" >= {threshold_num} * size(array_union(wa, wb))"
+        f"{td} * size(array_intersect(wa, wb))"
+        f" >= {tn} * size(array_union(wa, wb))"
     )
-    return (
-        cand.join(sa, F.col("id_a") == sa["id"]).drop("id")
-        .join(sb, F.col("id_b") == sb["id"]).drop("id")
-        .filter(keep)
-        .withColumn("jaccard", round_to_col(j, 4))
-        .select("id_a", "id_b", "jaccard")
+    return _verify_by_id(
+        cand,
+        base.select(F.col("id"), F.col("sh").alias("wa")),
+        base.select(F.col("id"), F.col("sh").alias("wb")),
+        "jaccard", _rounded_jaccard(), keep,
     )
 
 
@@ -777,21 +662,18 @@ def simhash_pairs(
     """Near-dup pairs by SimHash Hamming distance within blocks
     (bit_count(xor) — both engines have bit_count). ``max_block_rows``
     excludes over-full blocks (see ``similarity.cap_blocks``)."""
+    blocks = list(block_cols or [])
     sh = stage(  # "bytes": input already spread_input'd
         with_simhash(
-            spread_input(df.select(id_col, text_col, *(block_cols or []))),
+            spread_input(df.select(id_col, text_col, *blocks)),
             text_col, bits, basis=basis,
-        ).select(F.col(id_col).alias("id"), *(block_cols or []), "simhash"),
+        ).select(F.col(id_col).alias("id"), *blocks, "simhash"),
     )
-    if block_cols and max_block_rows is not None:
-        sh = cap_blocks(sh, list(block_cols), max_block_rows)
-    a, b = sh.alias("a"), sh.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    for c in block_cols or []:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    if blocks and max_block_rows is not None:
+        sh = cap_blocks(sh, blocks, max_block_rows)
     ham = F.expr("bit_count(a.simhash ^ b.simhash)")
     return (
-        a.join(b, cond)
+        _pair_join(sh, sh, blocks=blocks)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -958,92 +840,35 @@ def containment_pairs(
     # rational prune threshold: (t*1e5 - 10) / 1e5, exact integers
     p_num = int(round(threshold * 100000)) - 10
     p_den = 100000
-    df = spread_input(df)
-    sh = word_hashes_expr(
-        "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
-    )
     blocks = list(block_cols or [])
     # Materialized: the exploded (id, h) pairs feed the df aggregate AND
     # the keyed rebuild join (same staging as prefix_jaccard_pairs).
-    raw = stage(  # "bytes": input already spread_input'd
-        df.select(
-            F.col(id_col).alias("id"),
-            *blocks,
-            F.array_distinct(F.expr(sh)).alias("sh"),
-        ),
-    ).filter(F.expr("size(sh) > 0"))
-    # ^ filter after persist — see prefix_jaccard_pairs
-    ex = raw.select("id", *blocks, F.explode("sh").alias("h"))
-    dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # Rarity-keyed arrays: df(h)*2^32 + h is injective, sorts by
-    # ascending document frequency, and is a bijection on the corpus's
-    # element set — so intersection sizes (and therefore containment)
-    # over the keyed arrays equal those over the raw hashes.
-    # width=("hash", "id"), an explicit hash(id) repartition at the
-    # parallelism width before the persist: keeps the co-partitioning
-    # the verify join back on id reuses (a round-robin respread
-    # measured SLOWER — it destroys it) while pinning the cached width
-    # against cached-plan AQE coalescing, which would otherwise collapse
-    # this byte-tiny keyed-array staging to one partition and serialize
-    # the prefix/verify stages.
-    base = stage(
-        ex.join(dfreq, "h")
-        .groupBy("id", *blocks)
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.expr("df * CAST(4294967296 AS BIGINT) + h")
-                )
-            ).alias("sh")
-        ),
-        width=("hash", "id"),
-    )
+    base = _rarity_keyed(_shingle_sets(df, id_col, text_col, n, blocks), blocks)
+    # contained side: the prefix under the prune threshold (the first
+    # shared element of any qualifying pair lies inside it); containing
+    # side: the full inverted index (no prefix exists for b)
+    probe = _elements(base, blocks, p_num, p_den)
+    index = _elements(base, blocks)
     # minimum overlap under the prune threshold, pure integer arithmetic
-    o_min = f"CAST(({p_num} * size(sh) + {p_den} - 1) DIV {p_den} AS INT)"
-    # contained side: prefix of length |a| - o_min + 1 (the first shared
-    # element of any qualifying pair lies inside it)
-    probe = base.select(
-        "id",
-        *blocks,
-        F.expr("size(sh)").alias("sz"),
-        F.posexplode(F.expr(f"slice(sh, 1, size(sh) - {o_min} + 1)"))
-        .alias("pos0", "h"),
-    ).select("id", *blocks, "sz", (F.col("pos0") + 1).alias("pos"), "h")
-    # containing side: full inverted index (no prefix exists for b)
-    index = base.select(
-        "id",
-        *blocks,
-        F.expr("size(sh)").alias("sz"),
-        F.posexplode("sh").alias("pos0", "h"),
-    ).select("id", *blocks, "sz", (F.col("pos0") + 1).alias("pos"), "h")
-    a, b = probe.alias("a"), index.alias("b")
-    o_min_a = f"CAST(({p_num} * a.sz + {p_den} - 1) DIV {p_den} AS INT)"
-    cond = (F.col("a.h") == F.col("b.h")) & (F.col("a.id") != F.col("b.id"))
-    for c in blocks:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    # |a ∩ b| <= |b|, so o_min <= |b| — cheap integer prune
-    cond = cond & F.expr(f"b.sz >= {o_min_a}")
-    # position filter at the pair's first shared element
-    cond = cond & F.expr(f"1 + least(a.sz - a.pos, b.sz - b.pos) >= {o_min_a}")
-    cand = (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = base.select(F.col("id"), F.col("sh").alias("wa"))
-    sb = base.select(F.col("id"), F.col("sh").alias("wb"))
+    o_min_a = f"CAST({_ceil_frac(p_num, p_den, 'a.sz')} AS INT)"
+    cand = _pair_join(probe, index, ["h"], "!=", blocks, prune=[
+        # |a ∩ b| <= |b|, so o_min <= |b| — cheap integer prune
+        f"b.sz >= {o_min_a}",
+        # position filter at the pair's first shared element
+        f"1 + least(a.sz - a.pos, b.sz - b.pos) >= {o_min_a}",
+    ])
     contain = F.expr(
         "CAST(size(array_intersect(wa, wb)) AS DOUBLE) / size(wa)"
     )
-    return (
-        cand.join(sa, F.col("id_a") == sa["id"]).drop("id")
-        .join(sb, F.col("id_b") == sb["id"]).drop("id")
+    return _verify_by_id(
+        cand,
+        base.select(F.col("id"), F.col("sh").alias("wa")),
+        base.select(F.col("id"), F.col("sh").alias("wb")),
+        "containment", round_to_col(contain, 4),
         # semantic size prune at FULL threshold (mirrors the pairwise
         # form / oracle exactly — see docstring)
-        .filter(F.expr(f"size(wb) >= {threshold} * size(wa)"))
-        .withColumn("containment", round_to_col(contain, 4))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
+        F.expr(f"size(wb) >= {threshold} * size(wa)")
+        & (F.col("containment") >= threshold),
     )
 
 

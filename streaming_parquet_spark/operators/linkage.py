@@ -5,16 +5,18 @@ drift). Complements the shingle/minhash dedup family, which targets
 long documents; edit distance is the right metric for short keys
 (names, addresses, SKUs).
 
-Scale shape: NEVER the all-pairs O(n^2) join. Candidates come from an
-equi-join on a blocking key (prefix, length band, phonetic code —
-caller-supplied expression), so the quadratic term is bounded by the
-largest block; the Levenshtein evaluation is a JVM built-in running
-only on within-block pairs. At 100 TB, choose blocks like any other
-skew problem: multiple redundant blocking passes (prefix + suffix)
-catch pairs a single key misses, and a hard cap on block size (filter
-or salt oversized blocks) keeps the worst task bounded. Blocking is
-exact-recall only for pairs sharing the key — the standard
-precision/recall trade every linkage system documents.
+Scale shape: NEVER the all-pairs O(n^2) join. It is the pair skeleton
+of ``similarity`` (its module docstring): candidates come from one
+blocked join (``_pair_join``) on a caller-supplied blocking key (prefix,
+length band, phonetic code), so the quadratic term is bounded by the
+largest block, and ``max_block`` drops every block over that population
+(``cap_blocks``) so the worst task stays bounded. The Levenshtein runs
+as a JVM built-in only on within-block pairs, guarded by an id order
+and a length band. At 100 TB, choose blocks like any other skew
+problem: multiple redundant blocking passes (prefix + suffix) catch
+pairs a single key misses. Blocking is exact-recall only for pairs
+sharing the key — the standard precision/recall trade every linkage
+system documents.
 
 Reference parity: none (SURVEY §2.11 extension surface).
 """
@@ -22,6 +24,9 @@ Reference parity: none (SURVEY §2.11 extension surface).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from streaming_parquet_spark.operators.similarity import _pair_join, cap_blocks
+from streaming_parquet_spark.staging import spread_input
 
 
 def fuzzy_pairs(
@@ -55,8 +60,8 @@ def fuzzy_pairs(
     one latin-1 character, so the JVM's char-level routine walks bytes)
     — slightly heavier weights for multi-byte scripts, in exchange for
     a cross-engine-exact metric; the oracle gate runs this mode."""
-    from streaming_parquet_spark.staging import spread_input
-
+    if unit not in ("byte", "char"):
+        raise ValueError(f"unit must be 'char' or 'byte', got {unit!r}")
     # A single-row-group parquet source scans as ONE task, which would
     # serialize every within-block DP onto one core; round-robin the
     # narrow input first (metadata-only probe — no-op on any multi-split
@@ -65,13 +70,7 @@ def fuzzy_pairs(
         F.col(id_col), F.col(text_col), F.expr(block_expr).alias("__blk")
     )
     if max_block is not None:
-        sizes = side.groupBy("__blk").agg(
-            F.count(F.lit(1)).alias("__bn")
-        ).filter(F.col("__bn") <= max_block)
-        # no forced broadcast: the per-block size relation is one row
-        # per DISTINCT block and can itself be large; AQE broadcasts
-        # it when it fits
-        side = side.join(sizes.select("__blk"), "__blk", "left_semi")
+        side = cap_blocks(side, ["__blk"], max_block)
     # Precomputed length in the distance's own alphabet: a pair whose
     # lengths differ by more than ``max_dist`` cannot be within
     # ``max_dist`` edits (every length change costs one edit), so the
@@ -98,73 +97,43 @@ def fuzzy_pairs(
     # through the block-join shuffle (Spark does not deduplicate
     # identical-content attributes in an exchange); only the byte mode
     # needs a distinct hoisted latin-1 rendering.
-    lv_a = "__lv_a" if unit == "byte" else "text_a"
-    lv_b = "__lv_b" if unit == "byte" else "text_b"
-    a = side.select(
-        F.col(id_col).alias("id_a"),
-        F.col(text_col).alias("text_a"),
-        F.col("__len").alias("__len_a"),
-        *([F.col("__lv").alias("__lv_a")] if unit == "byte" else []),
-        "__blk",
-    )
-    b = side.select(
-        F.col(id_col).alias("id_b"),
-        F.col(text_col).alias("text_b"),
-        F.col("__len").alias("__len_b"),
-        *([F.col("__lv").alias("__lv_b")] if unit == "byte" else []),
-        "__blk",
-    )
-    # THRESHOLDED distance (levenshtein's 3-arg form, Spark >= 3.5):
-    # the banded DP is O(len * max_dist) per pair instead of O(len^2)
-    # and bails out the moment the band exceeds the bound, returning -1
-    # — the hot loop of a blocked linkage join is exactly this
-    # computation, and most candidate pairs are far apart. Kept pairs
-    # carry the exact distance, so results are identical to the
-    # unthresholded form (and to the oracle, which computes the full
-    # distance and filters). On Spark < 3.5 (the 3-arg overload's
-    # introduction) fall back to the 2-arg full DP + filter — same
-    # rows, just without the early bail-out.
-    thresholded = _has_thresholded_levenshtein()
-    if unit not in ("byte", "char"):
-        raise ValueError(f"unit must be 'char' or 'byte', got {unit!r}")
+    lv = "__lv" if unit == "byte" else "text"
 
-    def lev(x: str, y: str):
-        if thresholded:
-            return F.levenshtein(F.col(x), F.col(y), int(max_dist))
-        return F.levenshtein(F.col(x), F.col(y))
+    def named(p: str) -> DataFrame:
+        return side.select(
+            F.col(id_col).alias(f"id_{p}"),
+            F.col(text_col).alias(f"text_{p}"),
+            F.col("__len").alias(f"__len_{p}"),
+            *([F.col("__lv").alias(f"__lv_{p}")] if unit == "byte" else []),
+            "__blk",
+        )
+
+    # THRESHOLDED distance (levenshtein's 3-arg form): the banded DP is
+    # O(len * max_dist) per pair instead of O(len^2) and bails out the
+    # moment the band exceeds the bound, returning -1 — the hot loop of
+    # a blocked linkage join is exactly this computation, and most
+    # candidate pairs are far apart. Kept pairs carry the exact
+    # distance, so results are identical to the unthresholded form
+    # (and to the oracle, which computes the full distance and
+    # filters).
+    lev = F.levenshtein(F.col(f"{lv}_a"), F.col(f"{lv}_b"), int(max_dist))
     # The cheap predicates (id order, length band) are the CONDITION of
-    # a `when` guarding the Levenshtein, not free-standing filters:
-    # Catalyst folds post-join filters into the join condition and does
-    # not order conjuncts by cost, so as plain conjuncts the DP can land
+    # a `when` guarding the Levenshtein, not join conjuncts: Catalyst
+    # folds post-join filters into the join condition and does not
+    # order conjuncts by cost, so as plain conjuncts the DP can land
     # FIRST and run on every within-block ordered pair (observed: the
     # optimizer emitted `(band AND lev >= 0) AND id_a < id_b`, costing
     # ~2x on a fixture where the band prunes nothing). CaseWhen
     # guarantees the branch is evaluated only when the condition holds,
     # so the one-integer compares always short-circuit the DP,
-    # independent of conjunct placement.
+    # independent of conjunct placement. Hence no id order in the join.
     guard = (F.col("id_a") < F.col("id_b")) & (
         F.abs(F.col("__len_a") - F.col("__len_b")) <= int(max_dist)
     )
-    pairs = a.join(b, "__blk").withColumn(
-        "dist", F.when(guard, lev(lv_a, lv_b)).otherwise(F.lit(-1))
-    )
-    if thresholded:
+    return (
+        _pair_join(named("a"), named("b"), ["__blk"], order=None)
+        .withColumn("dist", F.when(guard, lev).otherwise(F.lit(-1)))
         # -1 == guard failed or distance exceeded max_dist
-        pairs = pairs.filter(F.col("dist") >= 0)
-    else:
-        pairs = pairs.filter(
-            (F.col("dist") >= 0) & (F.col("dist") <= int(max_dist))
-        )
-    return pairs.select("id_a", "id_b", "text_a", "text_b", "dist")
-
-
-def _has_thresholded_levenshtein() -> bool:
-    """True when the running Spark ships the 3-arg bounded levenshtein
-    (added in Spark 3.5)."""
-    import pyspark
-
-    try:
-        major, minor = pyspark.__version__.split(".")[:2]
-        return (int(major), int(minor)) >= (3, 5)
-    except (ValueError, AttributeError):
-        return True
+        .filter(F.col("dist") >= 0)
+        .select("id_a", "id_b", "text_a", "text_b", "dist")
+    )

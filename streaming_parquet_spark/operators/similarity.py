@@ -24,6 +24,31 @@ The seven tiers are compositions of it:
     (:func:`_pq_rerank`).
   * ``ivf_pq_topk``  — IVF probe, PQ lookup-table dot, exact re-rank.
 
+The pair generators — :func:`similarity_pairs` and
+:func:`incremental_semantic_pairs` here, the six in ``dedup`` and
+``fuzzy_pairs`` in ``linkage`` — share a second skeleton, a bounded
+candidate set per block, then verify::
+
+    stage sides -> [cap] -> _pair_join -> verify -> project
+
+  * :func:`_pair_join` — the blocked candidate join: equality on the
+    block (or candidate-key) columns, an id order (``<``; ``!=`` for a
+    directed measure; none between two populations) and the caller's
+    cheap prunes.
+  * the cap — :func:`cap_blocks` drops every block over a population
+    cap; :func:`_cap_probed` does the same for an incremental probe,
+    counting index and batch together.
+  * verify — either on the join's own columns (:func:`_dot_pairs` for
+    vectors; n-gram Jaccard, SimHash and edit distance likewise), or by
+    id when the sets are too wide to ship through every block
+    (:func:`_verify_by_id`: distinct id pairs, sets joined back, the
+    score bound once as a column).
+
+The text side stages its sets with :func:`_shingle_sets` and, for the
+prefix filters, :func:`_rarity_keyed` / :func:`_elements`. Each
+generator keeps its own threshold predicate, because each is pinned to
+its oracle's.
+
 Dot products run as JVM expressions in double precision — no Python
 UDF, no collect. Embeddings in the fixtures are L2-normalized, so dot
 == cosine; ``cosine=True`` divides by norms for the general case.
@@ -31,12 +56,19 @@ UDF, no collect. Embeddings in the fixtures are L2-normalized, so dot
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from streaming_parquet_spark.functions.portable import (
     MERSENNE31,
     dot_expr,
+    ordered_words_expr,
     round_to_col,
+    shingles_expr,
+    word_hashes_expr,
 )
 from streaming_parquet_spark.staging import (
     release_materialized,  # noqa: F401  re-export, see _materialize
@@ -144,13 +176,211 @@ def cap_blocks(
 
     NULL block keys never match an equi-join (here or in the downstream
     pairwise join), so NULL-keyed rows drop out either way."""
-    keep = (
-        df.groupBy(*block_cols)
+    keep = _blocks_within(df, block_cols, max_rows)
+    return df.join(keep, list(block_cols), "left_semi")
+
+
+def _blocks_within(df: DataFrame, on: list[str], max_rows: int) -> DataFrame:
+    """The distinct ``on`` keys of ``df`` whose population is at most
+    ``max_rows`` — the one hot-block rule of every capped pair stage."""
+    return (
+        df.groupBy(*on)
         .agg(F.count(F.lit(1)).alias("__block_n"))
         .filter(F.col("__block_n") <= max_rows)
-        .select(*block_cols)
+        .select(*on)
     )
-    return df.join(keep, list(block_cols), "left_semi")
+
+
+def _cap_probed(
+    index: DataFrame, batch: DataFrame, on: list[str], max_rows: int
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`cap_blocks` for an incremental probe: the cap counts the
+    COMBINED index ∪ batch population of each block (append-safe — it
+    matches capping the self-join over corpus ∪ batch), and returns the
+    (index, batch) pair with over-full blocks removed from both.
+
+    Only PROBED blocks are counted: the index is first pruned to the
+    batch's blocks by a batch-sized broadcast semi-join. A block the
+    batch never touches can neither produce a candidate nor change a
+    probed block's count, and aggregating it would cost an O(index) key
+    shuffle per probe (on a partitioned index the prune also lets
+    partition pruning cover the count)."""
+    probed = batch.select(*on).dropDuplicates()
+    index = index.join(F.broadcast(probed), on, "left_semi")
+    ok = _blocks_within(
+        index.select(*on).unionByName(batch.select(*on)), on, max_rows
+    )
+    return (
+        index.join(F.broadcast(ok), on, "left_semi"),
+        batch.join(F.broadcast(ok), on, "left_semi"),
+    )
+
+
+def _pair_join(
+    a: DataFrame,
+    b: DataFrame,
+    on: Sequence[str] = (),
+    order: str | None = "<",
+    blocks: Sequence[str] = (),
+    prune: Sequence[str | F.Column] = (),
+) -> DataFrame:
+    """The blocked candidate join of every pair generator: ``a`` and
+    ``b`` (aliased ``a`` / ``b``) equal on each candidate-key column
+    ``on``, then ``a.id {order} b.id`` (``<`` for symmetric pairs,
+    ``!=`` for directed ones, None when the ids come from two
+    populations), then equal on each caller ``blocks`` column, then the
+    caller's cheap prune predicates (Columns or SQL over ``a.*`` /
+    ``b.*``). The equalities become the join keys, so the quadratic
+    term is bounded by the largest block; the conjunct order fixes the
+    order of the null filters Spark infers from them."""
+    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on]
+    if order is not None:
+        cond.append(F.expr(f"a.id {order} b.id"))
+    cond += [F.col(f"a.{c}") == F.col(f"b.{c}") for c in blocks]
+    cond += [F.expr(p) if isinstance(p, str) else p for p in prune]
+    return a.alias("a").join(b.alias("b"), reduce(and_, cond))
+
+
+def _verify_by_id(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    name: str,
+    score: F.Column,
+    keep: F.Column,
+    ids: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Verify a :func:`_pair_join` by id: its distinct (``a.id``,
+    ``b.id``) pairs as ``ids``, each side's set joined back by id
+    (``sets_a`` / ``sets_b`` are (id, set) relations; the sets arrive as
+    ``wa`` / ``wb``), the score bound once as column ``name``, then the
+    caller's ``keep`` predicate, projected to (*ids, name).
+
+    The candidate join carries only ids (and block keys), never the
+    sets: a document sits in many blocks, and shipping its set through
+    every one of them would multiply the shuffle by that fan-out."""
+    ia, ib = ids
+
+    def payload(p: str, sets: DataFrame) -> F.Column:
+        col = F.col(f"s{p}.{sets.columns[1]}")
+        # no self-alias: it would add a rename to the gate plans
+        return col if sets.columns[1] == f"w{p}" else col.alias(f"w{p}")
+
+    return (
+        cand.select(F.col("a.id").alias(ia), F.col("b.id").alias(ib))
+        .dropDuplicates([ia, ib])
+        .join(sets_a.alias("sa"), F.col(ia) == F.col("sa.id"))
+        .join(sets_b.alias("sb"), F.col(ib) == F.col("sb.id"))
+        .select(ia, ib, payload("a", sets_a), payload("b", sets_b))
+        .withColumn(name, score)
+        .filter(keep)
+        .select(ia, ib, name)
+    )
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, blocks: list[str]
+) -> DataFrame:
+    """Stage (id, *blocks, sh): each document's distinct 32-bit word
+    ``n``-gram shingle hashes. Set operations on bigint hashes are
+    several times cheaper per pair than on shingle strings, and the
+    oracle hashes identically."""
+    sh = word_hashes_expr(
+        "spark", shingles_expr("spark", ordered_words_expr("spark", text_col), n)
+    )
+    return stage(  # "bytes": input already spread_input'd
+        spread_input(df).select(
+            F.col(id_col).alias("id"),
+            *blocks,
+            F.array_distinct(F.expr(sh)).alias("sh"),
+        ),
+    )
+
+
+def _rarity_keyed(raw: DataFrame, blocks: list[str]) -> DataFrame:
+    """Stage the :func:`_shingle_sets` ``raw`` as (id, *blocks, sh) with
+    every element re-keyed as df(h)*2^32 + h and sorted: the prefix
+    filters' global order, ASCENDING DOCUMENT FREQUENCY. The key is
+    injective and a bijection on the corpus's element set, so
+    intersection and union sizes over the keyed arrays equal those over
+    the raw hashes (exact while per-corpus df < 2^31). Empty sets drop.
+
+    width=("hash", "id"), an explicit hash(id) repartition at the
+    parallelism width before the persist: keeps the co-partitioning the
+    verify join back on id reuses (a round-robin respread measured
+    SLOWER — it destroys it) while pinning the cached width against
+    cached-plan AQE coalescing, which would otherwise collapse this
+    byte-tiny keyed-array staging to one partition and serialize the
+    prefix/verify stages."""
+    # filter AFTER the persist: pushed below the projection it would
+    # inline the whole shingle pipeline a second time (no CSE across a
+    # substituted alias), doubling the staging pass
+    ex = raw.filter(F.expr("size(sh) > 0")).select(
+        "id", *blocks, F.explode("sh").alias("h")
+    )
+    dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+    return stage(
+        ex.join(dfreq, "h")
+        .groupBy("id", *blocks)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.expr("df * CAST(4294967296 AS BIGINT) + h"))
+            ).alias("sh")
+        ),
+        width=("hash", "id"),
+    )
+
+
+def _ceil_frac(num: int, den: int, x: str) -> str:
+    """ceil(num * x / den) in pure integer arithmetic."""
+    return f"({num} * {x} + {den} - 1) DIV {den}"
+
+
+def _elements(
+    keyed: DataFrame, blocks: list[str], num: int | None = None,
+    den: int | None = None,
+) -> DataFrame:
+    """(id, *blocks, sz, pos, h): the elements of each
+    :func:`_rarity_keyed` set with their 1-based rank ``pos`` in the
+    global order and the set size ``sz``. With ``num``/``den`` only the
+    PREFIX of length |s| - ceil(num/den * |s|) + 1: any pair whose
+    overlap reaches ceil(num/den * |s|) shares an element inside it."""
+    arr = "sh" if num is None else (
+        f"slice(sh, 1, size(sh)"
+        f" - CAST({_ceil_frac(num, den, 'size(sh)')} AS INT) + 1)"
+    )
+    return keyed.select(
+        "id",
+        *blocks,
+        F.expr("size(sh)").alias("sz"),
+        F.posexplode(F.expr(arr)).alias("pos0", "h"),
+    ).select("id", *blocks, "sz", (F.col("pos0") + 1).alias("pos"), "h")
+
+
+def _dot_pairs(
+    joined: DataFrame, sim_raw: F.Column, threshold: float,
+    ids: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Score a :func:`_pair_join` of vector sides: (*ids, sim) for every
+    pair whose rounded dot reaches ``threshold``.
+
+    The dot is bound ONCE as the named column ``sim_raw`` and every
+    later reference (round, NaN guard, threshold) goes through the
+    column, not the tree: with the 64-term sum inlined into the join
+    condition and the round_to_col projection, the plan carried ~9
+    copies of the 256-node expression and its whole-stage-codegen unit
+    took >1 s to compile — paid on every run whose generated class had
+    been evicted from the codegen cache by the surrounding query sweep.
+    Catalyst's CollapseProject keeps the binding (it does not inline
+    non-cheap aliases referenced more than once), so the generated
+    source stays small and the dot is still evaluated once per
+    candidate pair."""
+    return (
+        joined.withColumn("sim_raw", sim_raw)
+        .withColumn("sim", round_to_col("sim_raw", 4))
+        .filter(F.col("sim") >= threshold)
+        .select(F.col("a.id").alias(ids[0]), F.col("b.id").alias(ids[1]), "sim")
+    )
 
 
 def cosine_topk(
@@ -244,33 +474,11 @@ def similarity_pairs(
         # exchange.
         base = stage(df.select(*cols), width="cluster")
         sim_raw = F.expr(dot_expr("spark", "a.v", "b.v"))
+    blocks = ["blk"] if block_col else []
     if block_col and max_block_rows is not None:
-        base = cap_blocks(base, ["blk"], max_block_rows)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    # The dot is bound ONCE as a named column and every later reference
-    # (round, NaN guard, threshold) goes through the column, not the
-    # tree: with the 64-term sum inlined into the join condition and the
-    # round_to_col projection, the plan carried ~9 copies of the
-    # 256-node expression and its whole-stage-codegen unit took >1 s to
-    # compile — paid on every run whose generated class had been evicted
-    # from the codegen cache by the surrounding query sweep (the r5
-    # bench regression). Catalyst's CollapseProject keeps the binding
-    # (it does not inline non-cheap aliases referenced more than once),
-    # so the generated source stays small and the dot is still
-    # evaluated once per candidate pair.
-    return (
-        a.join(b, cond)
-        .withColumn("sim_raw", sim_raw)
-        .withColumn("sim", round_to_col("sim_raw", 4))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            "sim",
-        )
+        base = cap_blocks(base, blocks, max_block_rows)
+    return _dot_pairs(
+        _pair_join(base, base, blocks=blocks), sim_raw, threshold
     )
 
 
@@ -616,59 +824,30 @@ def incremental_semantic_pairs(
     batch = stage(ivf_assign(new_df, cents, id_col, vec_col, dims))
     postings = read_posting_lists(spark, f"{table}_postings")
     if max_block_rows is not None:
-        # Prune to PROBED clusters before counting (broadcast semi-join
-        # on the partition column): clusters the batch never touches
-        # can neither produce candidates nor change a probed cluster's
-        # cap count, and pruning here lets partition pruning cover the
-        # cap aggregate too — otherwise the count would scan every
-        # posting-list partition per probe, defeating the layout. The
-        # uncapped path needs no explicit prune: the candidate join's
-        # broadcast handles it (DPP).
-        probed = batch.select("cluster").dropDuplicates()
-        pruned = postings.join(F.broadcast(probed), ["cluster"], "left_semi")
-        ok = (
-            pruned.select("cluster")
-            .unionByName(batch.select("cluster"))
-            .groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("__block_n"))
-            .filter(F.col("__block_n") <= max_block_rows)
-            .select("cluster")
-        )
-        postings = pruned.join(F.broadcast(ok), ["cluster"], "left_semi")
-        batch = batch.join(F.broadcast(ok), ["cluster"], "left_semi")
-
-    def side(df: DataFrame, p: str) -> DataFrame:
-        vec = (
-            _flat("v", dims, f"{p}_") if dims is not None
-            else [F.col("v").alias(f"{p}_v")]
-        )
-        return df.select(
-            F.col("id").alias(f"{p}_id"), F.col("cluster").alias(f"{p}_blk"),
-            *vec,
+        # The uncapped path needs no explicit prune to probed clusters:
+        # the candidate join's broadcast handles it (DPP).
+        postings, batch = _cap_probed(
+            postings, batch, ["cluster"], max_block_rows
         )
 
-    c, n = side(postings, "c"), side(batch, "n")
+    def side(df: DataFrame) -> DataFrame:
+        vec = _flat("v", dims) if dims is not None else ["v"]
+        return df.select("id", F.col("cluster").alias("blk"), *vec)
+
     sim_raw = (
-        _flat_dot("c_x", "n_x", dims) if dims is not None
-        else F.expr(dot_expr("spark", "c_v", "n_v"))
+        _flat_dot("a.x", "b.x", dims) if dims is not None
+        else F.expr(dot_expr("spark", "a.v", "b.v"))
     )
-    joined = c.join(F.broadcast(n), F.col("c_blk") == F.col("n_blk"))
-    # No id-inequality filter: a re-ingested identical id pairs with
-    # its own indexed copy at sim 1.0, so incremental_semantic_dedup
-    # treats exact re-ingest as a duplicate for free (the LSH index
-    # makes the same choice); on disjoint id populations this emits
-    # exactly the a.id<b.id cross pairs of the self-join.
-    return (
-        joined
-        .withColumn("sim_raw", sim_raw)
-        .withColumn("sim", round_to_col("sim_raw", 4))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("n_id").alias("new_id"),
-            F.col("c_id").alias("corpus_id"),
-            "sim",
-        )
+    # No id order: a re-ingested identical id pairs with its own
+    # indexed copy at sim 1.0, so incremental_semantic_dedup treats
+    # exact re-ingest as a duplicate for free (the LSH index makes the
+    # same choice); on disjoint id populations this emits exactly the
+    # a.id<b.id cross pairs of the self-join. The dot is symmetric term
+    # by term, so it is bit-identical to the self-join's.
+    joined = _pair_join(
+        F.broadcast(side(batch)), side(postings), ["blk"], order=None
     )
+    return _dot_pairs(joined, sim_raw, threshold, ("new_id", "corpus_id"))
 
 
 def incremental_semantic_dedup(

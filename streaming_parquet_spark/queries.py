@@ -23,6 +23,7 @@ driver-side collects anywhere.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 
@@ -83,6 +84,26 @@ def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
     return names
 
 
+def _read_nanos_as_long(spark: SparkSession, path: str) -> None:
+    """Turn on ``spark.sql.legacy.parquet.nanosAsLong`` when the parquet
+    file or dataset directory at ``path`` stores ``ts`` as
+    TIMESTAMP(NANOS), the one encoding Spark's reader rejects unless it
+    reads it as longs. One footer read (a directory's first data file
+    stands for the table), no Spark job; any other encoding leaves the
+    session conf as it is, so a later parquet read does not depend on
+    which gates ran first."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    files = ds.dataset(path, format="parquet").files
+    if not files:
+        return
+    schema = pq.ParquetFile(files[0]).schema
+    ts = schema.column(schema.names.index("ts")).logical_type
+    if json.loads(ts.to_json()).get("timeUnit") == "nanoseconds":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table reader, adaptive to the fixture's `ts` encoding.
 
@@ -93,7 +114,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     — or as TIMESTAMP(MICROS) without timezone, which Spark reads as
     TIMESTAMP_NTZ; cast that to the session-TZ type so every downstream
     window/interval op and the UTC DuckDB oracle agree on values."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _read_nanos_as_long(spark, os.path.join(sf_dir, "events.parquet"))
     df = _t(spark, sf_dir, "events")
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):

@@ -187,20 +187,6 @@ def _duck_lsh_oracle(
     """
 
 
-_DUCK_DEDUP_MINHASH_LSH = _duck_lsh_oracle(16, 8, 0.2)
-
-
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs over 3-gram shingles: band equi-join
-    candidates (16 hashes, 8 bands of 2 -> P(candidate|j=0.5) = 0.90) +
-    exact shingle-Jaccard verify at >= 0.2. The scale path for fuzzy
-    dedup — no cross join anywhere."""
-    return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), num_hashes=16, bands=8,
-        jaccard_threshold=0.2,
-    )
-
-
 def _duck_prefix_join_oracle(tn: int = 1, td: int = 2) -> str:
     j = jaccard_expr("duckdb", "sa.sh", "sb.sh")
     # global order = ascending document frequency via the injective
@@ -340,15 +326,6 @@ def _duck_simhash_pairs(bits: int, max_hamming: int) -> str:
 
 
 _DUCK_DEDUP_SIMHASH_PAIRS = _duck_simhash_pairs(32, 6)
-
-
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= 6 within lang
-    blocks (Spark `a ^ b` == DuckDB `xor(a, b)`)."""
-    return simhash_pairs(
-        _t(spark, sf_dir, "documents"), bits=32, max_hamming=6,
-        block_cols=["lang"],
-    )
 
 
 def _duck_clusters_oracle(lsh_inner: str) -> str:
@@ -6529,7 +6506,7 @@ def _duck_dedup_minhash_family() -> str:
            CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
            CAST(NULL AS DOUBLE), CAST(id_a AS DOUBLE),
            CAST(id_b AS DOUBLE), jaccard
-    FROM ({_DUCK_DEDUP_MINHASH_LSH})
+    FROM ({_duck_lsh_oracle(16, 8, 0.2)})
     UNION ALL
     SELECT 'pairs_capped' AS kind, CAST(NULL AS DOUBLE),
            CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from streaming_parquet_spark.functions.portable import round_to_col
 from pyspark.sql import types as T
 
-from streaming_parquet_spark.queries import _t, query
+from streaming_parquet_spark.queries import _read_nanos_as_long, _t, query
 
 
 def _ts(s: str) -> F.Column:
@@ -881,7 +881,7 @@ def stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         except OSError:
             _shutil.copy(src, staged)
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _read_nanos_as_long(spark, src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
     out_dir = _os.path.join(work, "landed")
@@ -1659,7 +1659,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
 
-    from streaming_parquet_spark.queries import _events
     from streaming_parquet_spark.streaming.operators import interval_join
 
     work = _stream_workdir("maw_stream_ij_", sf_dir)
@@ -1673,10 +1672,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         except OSError:
             _shutil.copy(src, staged)
 
-    # _events' conf side effect (nanosAsLong) must be set before the
-    # stream reads the fixture schema; the if/elif below replays the
-    # same ts normalization on the stream itself.
-    _events(spark, sf_dir)
+    # the fixture schema is read under _events' nanos rule; the if/elif
+    # below replays the same ts normalization on the stream itself
+    _read_nanos_as_long(spark, src)
     stream = (
         spark.readStream.schema(
             spark.read.parquet(src).schema

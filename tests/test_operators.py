@@ -719,6 +719,232 @@ def test_topk_tiers_share_the_ranking_contract(spark, tier):
     assert ties, f"{tier}: the fixture produced no tie"
 
 
+# The pair-generator fixture: per block, ``hot`` holds one block over
+# the cap _CAP (4 identical rows), ``ok`` one exactly at it (3 identical
+# rows), ``var`` rows of graded similarity. The incremental generators
+# probe a batch (_BATCH ids) against an index of the other rows, so the
+# combined population of each block is the same as in the self-join.
+_CAP = 3
+_HOT, _OK = (0, 1, 2, 3), (10, 11, 12)
+_BATCH = {2, 3, 12, 22}
+_DOCS = [(i, "hot", "cookie policy accept terms of service page now")
+         for i in _HOT]
+_DOCS += [(i, "ok", "the quick brown fox jumps over the lazy dog")
+          for i in _OK]
+_DOCS += [
+    (20, "var", "alpha beta gamma delta epsilon zeta eta theta"),
+    (21, "var", "alpha beta gamma delta epsilon zeta eta iota"),
+    (22, "var", "alpha beta gamma delta epsilon"),
+    (23, "var", "one two three four five six seven eight"),
+]
+# vectors over three disjoint 4-dim groups: hot, ok and var point into
+# one group each; every component is a multiple of 1/8, so each dot is
+# exact in double precision
+_VECS = [(i, "hot", [0.5] * 4 + [0.0] * 8) for i in _HOT]
+_VECS += [(i, "ok", [0.0] * 4 + [0.5] * 4 + [0.0] * 4) for i in _OK]
+_VECS += [
+    (20, "var", [0.0] * 8 + [0.5, 0.5, 0.5, 0.5]),
+    (21, "var", [0.0] * 8 + [0.5, 0.5, 0.5, 0.25]),
+    (22, "var", [0.0] * 8 + [0.5, 0.5, -0.5, 0.0]),
+    (23, "var", [0.0] * 8 + [0.5, 0.5, 0.5, 0.375]),
+]
+_NAMES = [(i, "hot", f"aaaa{i}") for i in _HOT]
+_NAMES += [(i, "ok", f"bbbb{i}") for i in _OK]
+_NAMES += [(20, "var", "cccc0"), (21, "var", "cccc00"),
+           (22, "var", "cccc123"), (23, "var", "cccc9")]
+
+
+def _round4(x):
+    import math
+
+    return math.floor(x * 1e4 + 0.5) / 1e4
+
+
+def _shingle_set(text, n=3):
+    w = text.split()
+    return {tuple(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+
+def _jaccard(a, b):
+    sa, sb = _shingle_set(_DOC_TEXT[a]), _shingle_set(_DOC_TEXT[b])
+    return len(sa & sb) / len(sa | sb)
+
+
+def _levenshtein(x, y):
+    prev = list(range(len(y) + 1))
+    for i, cx in enumerate(x, 1):
+        cur = [i]
+        for j, cy in enumerate(y, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (cx != cy)))
+        prev = cur
+    return prev[-1]
+
+
+_DOC_TEXT = {i: t for i, _, t in _DOCS}
+_VEC = {i: v for i, _, v in _VECS}
+_NAME = {i: t for i, _, t in _NAMES}
+
+
+def _dot(a, b):
+    return sum(x * y for x, y in zip(_VEC[a], _VEC[b]))
+
+
+def _frame(spark, rows, cols, ids=None):
+    df = spark.createDataFrame(rows, cols)
+    if ids is None:
+        return df
+    key = cols.split()[0]
+    return df.filter(F.col(key).isin(sorted(ids)))
+
+
+_DOC_COLS = "doc_id bigint, blk string, text string"
+_VEC_COLS = "vec_id bigint, blk string, embedding array<float>"
+_ALL_IDS = {r[0] for r in _DOCS}
+
+
+def _lsh_index(spark, cap):
+    from streaming_parquet_spark.operators import dedup as D
+
+    D.write_lsh_index(
+        _frame(spark, _DOCS, _DOC_COLS, _ALL_IDS - _BATCH),
+        "maw_pair_contract_lsh", num_hashes=16, bands=8,
+    )
+    return D.incremental_lsh_pairs(
+        _frame(spark, _DOCS, _DOC_COLS, _BATCH), "maw_pair_contract_lsh",
+        jaccard_threshold=0.5, max_bucket_rows=cap,
+    )
+
+
+def _ann_index(spark, cap):
+    from streaming_parquet_spark.operators import similarity as S
+
+    cents = spark.createDataFrame(
+        [(0, _VEC[0]), (1, _VEC[10]), (2, _VEC[20])],
+        "vec_id bigint, embedding array<float>",
+    )
+    S.write_ann_index(
+        _frame(spark, _VECS, _VEC_COLS, _ALL_IDS - _BATCH),
+        "maw_pair_contract_ann", centroids=cents, dims=12,
+    )
+    return S.incremental_semantic_pairs(
+        _frame(spark, _VECS, _VEC_COLS, _BATCH), "maw_pair_contract_ann",
+        threshold=0.8, max_block_rows=cap,
+    )
+
+
+def _dedup(name, **kw):
+    def run(spark, cap):
+        from streaming_parquet_spark.operators import dedup as D
+
+        capped = {} if cap is None else {
+            "max_bucket_rows" if name == "minhash_lsh_pairs"
+            else "max_block_rows": cap
+        }
+        return getattr(D, name)(
+            _frame(spark, _DOCS, _DOC_COLS), **kw, **capped
+        )
+    return run
+
+
+def _similarity(spark, cap):
+    from streaming_parquet_spark.operators.similarity import similarity_pairs
+
+    return similarity_pairs(
+        _frame(spark, _VECS, _VEC_COLS), threshold=0.8, block_col="blk",
+        dims=12, max_block_rows=cap,
+    )
+
+
+def _fuzzy(spark, cap):
+    from streaming_parquet_spark.operators.linkage import fuzzy_pairs
+
+    return fuzzy_pairs(
+        _frame(spark, _NAMES, "id bigint, blk string, name string"),
+        "id", "name", "substr(name, 1, 4)", max_dist=1, max_block=cap,
+    ).select("id_a", "id_b", "dist")
+
+
+# generator -> (run(spark, cap), id order, "does the row meet the
+# threshold?", capped); ``order`` is "<", "!=" or "batch" (new_id from
+# _BATCH, corpus_id from the index)
+_PAIRS = {
+    "minhash_lsh_pairs": (
+        _dedup("minhash_lsh_pairs", jaccard_threshold=0.5), "<",
+        lambda a, b, s: s >= 0.5 and s == _round4(_jaccard(a, b)), True),
+    "incremental_lsh_pairs": (
+        _lsh_index, "batch",
+        lambda a, b, s: s >= 0.5 and s == _round4(_jaccard(a, b)), True),
+    "ngram_jaccard_pairs": (
+        _dedup("ngram_jaccard_pairs", block_cols=["blk"], threshold=0.5),
+        "<", lambda a, b, s: _jaccard(a, b) >= 0.5
+        and s == _round4(_jaccard(a, b)), True),
+    "prefix_jaccard_pairs": (
+        _dedup("prefix_jaccard_pairs", threshold_num=1, threshold_den=2),
+        "<", lambda a, b, s: 2 * len(_shingle_set(_DOC_TEXT[a])
+                                     & _shingle_set(_DOC_TEXT[b]))
+        >= len(_shingle_set(_DOC_TEXT[a]) | _shingle_set(_DOC_TEXT[b]))
+        and s == _round4(_jaccard(a, b)), False),
+    "simhash_pairs": (
+        _dedup("simhash_pairs", block_cols=["blk"], max_hamming=3), "<",
+        lambda a, b, s: 0 <= s <= 3, True),
+    "containment_pairs": (
+        _dedup("containment_pairs", block_cols=["blk"], threshold=0.8),
+        "!=", lambda a, b, s: s >= 0.8 and s == _round4(
+            len(_shingle_set(_DOC_TEXT[a]) & _shingle_set(_DOC_TEXT[b]))
+            / len(_shingle_set(_DOC_TEXT[a]))), False),
+    "fuzzy_pairs": (
+        _fuzzy, "<",
+        lambda a, b, s: s == _levenshtein(_NAME[a], _NAME[b]) <= 1, True),
+    "similarity_pairs": (
+        _similarity, "<",
+        lambda a, b, s: s >= 0.8 and s == _round4(_dot(a, b)), True),
+    "incremental_semantic_pairs": (
+        _ann_index, "batch",
+        lambda a, b, s: s >= 0.8 and s == _round4(_dot(a, b)), True),
+}
+
+
+@pytest.mark.parametrize("generator", sorted(_PAIRS))
+def test_pair_generators_share_the_contract(spark, generator):
+    """Every pair generator emits (id, id, score) rows with no self
+    pair, ids in its order (id_a < id_b; id_a != id_b for the directed
+    containment; for the incremental probes new_id from the batch and
+    corpus_id from the index), and only rows that meet its threshold,
+    re-scored here in Python. Under a block cap, a block over the cap
+    contributes no pair and a block exactly at the cap keeps them all
+    (for the probes the cap counts the index and the batch together)."""
+    run, order, holds, capped = _PAIRS[generator]
+    try:
+        rows = [tuple(r) for r in run(spark, None).collect()]
+        assert rows and len(set(rows)) == len(rows)
+        for a, b, s in rows:
+            assert a != b, (generator, a, b)
+            if order == "<":
+                assert a < b, (generator, a, b)
+            elif order == "batch":
+                assert a in _BATCH and b in _ALL_IDS - _BATCH, (a, b)
+            assert holds(a, b, s), (generator, a, b, s)
+        if not capped:
+            return
+
+        def block(ids):
+            if order == "batch":
+                return {(a, b) for a in ids if a in _BATCH
+                        for b in ids if b not in _BATCH}
+            return {(a, b) for a in ids for b in ids if a < b}
+
+        got = {(a, b) for a, b, _ in run(spark, _CAP).collect()}
+        assert not got & block(_HOT), generator
+        assert block(_OK) <= got, generator
+        assert block(_OK) <= {(a, b) for a, b, _ in rows}
+    finally:
+        for t in ("maw_pair_contract_lsh_sets", "maw_pair_contract_lsh_bands",
+                  "maw_pair_contract_ann_centroids",
+                  "maw_pair_contract_ann_postings"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_write_partitioned_jsonl(spark, sf_dir, tmp_path):
     """jsonl out-format must dispatch to DataFrameWriter.json (ADVICE r2:
     getattr(writer, 'jsonl') raised AttributeError)."""

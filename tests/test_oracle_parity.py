@@ -210,3 +210,71 @@ def test_time_oracles_are_tz_independent(name, spark, sf_dir):
     sdf = QUERIES[name](spark, sf_dir).toPandas()
     odf = con.execute(ORACLES[name]).df()
     assert _normalize(sdf) == _normalize(odf)
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.mark.parametrize("prior", [None, "false"])
+def test_events_gates_leave_nanos_as_long_alone(spark, sf_dir, prior):
+    """Building the gates that read the events fixture (through
+    ``queries._events`` or either stream builder's reader) leaves
+    ``nanosAsLong`` at its prior value when ``ts`` is not
+    TIMESTAMP(NANOS), so a later parquet read in the same session does
+    not depend on which gates ran before it."""
+    saved = spark.conf.get(_NANOS_AS_LONG, None)
+    try:
+        if prior is None:
+            spark.conf.unset(_NANOS_AS_LONG)
+        else:
+            spark.conf.set(_NANOS_AS_LONG, prior)
+        for name in ("events_json_extract", "stream_ingest_counts",
+                     "stream_interval_join"):
+            QUERIES[name](spark, sf_dir)
+            assert spark.conf.get(_NANOS_AS_LONG, None) == prior, name
+    finally:
+        if saved is None:
+            spark.conf.unset(_NANOS_AS_LONG)
+        else:
+            spark.conf.set(_NANOS_AS_LONG, saved)
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_events_reader_sets_nanos_as_long_only_for_nanos(
+    spark, tmp_path, layout, unit
+):
+    """``_events`` reads an events file or a multi-file dataset
+    directory whose ``ts`` is TIMESTAMP(MICROS) or TIMESTAMP(NANOS): the
+    footer check turns ``nanosAsLong`` on for nanos only, and both read
+    as the same microsecond timestamps (nanos floored)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streaming_parquet_spark.queries import _events
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    ts = ns if unit == "ns" else [v // 1000 for v in ns]
+    tables = [
+        pa.table({"event_id": [i + 1], "ts": pa.array([v], pa.timestamp(unit))})
+        for i, v in enumerate(ts)
+    ]
+    path = tmp_path / "events.parquet"
+    if layout == "file":
+        pq.write_table(pa.concat_tables(tables), str(path))
+    else:
+        path.mkdir()
+        for i, t in enumerate(tables):
+            pq.write_table(t, str(path / f"part-{i:04d}.parquet"))
+    saved = spark.conf.get(_NANOS_AS_LONG, None)
+    try:
+        spark.conf.set(_NANOS_AS_LONG, "false")
+        df = _events(spark, str(tmp_path))
+        assert spark.conf.get(_NANOS_AS_LONG) == str(unit == "ns").lower()
+        got = df.selectExpr("unix_micros(ts)").orderBy("event_id").collect()
+        assert [r[0] for r in got] == [v // 1000 for v in ns]
+    finally:
+        if saved is None:
+            spark.conf.unset(_NANOS_AS_LONG)
+        else:
+            spark.conf.set(_NANOS_AS_LONG, saved)
