@@ -12,6 +12,14 @@ The Spark-native rendering of the reference's pipeline
   * the sink is either single-file (CLI parity) or rolling/parallel
     (the 100 TB path).
 
+Formats are looked up, not branched on: each input group opens through
+``sources.readers.read_input`` (the configuration ``StreamEngine`` opens
+its file streams with), the output goes through the ``write_<format>``
+function of ``sinks.writers.SINK_FORMATS`` (the table the stream sink
+takes its options from), and --verify re-reads it through
+``sinks.writers.read_back``. So one RunSpec gives the same output
+through either engine.
+
 Scale notes: inputs with IDENTICAL schemas are read as one multi-path
 DataFrame, so the union width is bounded by the number of *distinct
 schemas*, not the number of files — with a million homogeneous parquet
@@ -49,13 +57,11 @@ from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sinks.writers import (
     SinkResult,
+    read_back,
+    spec_sink_args,
     transcode_parquet,
-    write_csv,
-    write_jsonl,
-    write_orc,
-    write_parquet,
-    write_text,
     write_partitioned,
+    writer_for,
 )
 from streaming_parquet_spark.sources.discover import (
     DiscoveryConfig,
@@ -64,16 +70,14 @@ from streaming_parquet_spark.sources.discover import (
     discover_inputs,
 )
 from streaming_parquet_spark.sources.readers import (
-    CsvOptions,
+    SELF_DESCRIBING,
+    TXT_SCHEMA,
+    _read_prefix,
     infer_csv_schema_prefix,
     infer_csv_schemas_per_file,
     infer_jsonl_schema_prefix,
-    read_csv,
-    read_jsonl,
-    read_orc,
-    read_parquet,
-    read_text,
-    TXT_SCHEMA,
+    python_encoding,
+    read_input,
 )
 
 #: Spark types a footer probe may hand to the parquet reader as its
@@ -85,12 +89,40 @@ from streaming_parquet_spark.sources.readers import (
 _READ_TYPES = frozenset(_FROM_SPARK) - {T.NullType}
 
 
+def _as_spark_reads(t):
+    """Arrow type ``t`` with every unsigned int replaced by the type
+    Spark's parquet reader gives it (uint8 -> short, uint16 -> int,
+    uint32 -> long, uint64 -> decimal(20,0)), anywhere in the nesting:
+    ``from_arrow_schema`` rejects unsigned types."""
+    import pyarrow as pa
+
+    def field(f):
+        return f.with_type(_as_spark_reads(f.type))
+
+    if pa.types.is_unsigned_integer(t):
+        return {8: pa.int16(), 16: pa.int32(), 32: pa.int64()}.get(
+            t.bit_width, pa.decimal128(20, 0)
+        )
+    if pa.types.is_list(t):
+        return pa.list_(field(t.value_field))
+    if pa.types.is_large_list(t):
+        return pa.large_list(field(t.value_field))
+    if pa.types.is_fixed_size_list(t):
+        return pa.list_(field(t.value_field), t.list_size)
+    if pa.types.is_struct(t):
+        return pa.struct([field(t.field(i)) for i in range(t.num_fields)])
+    if pa.types.is_map(t):
+        return pa.map_(field(t.key_field), field(t.item_field))
+    return t
+
+
 def _spark_hostile(t) -> bool:
     """An Arrow type whose transcoded output Spark cannot read back, or
     whose footer-probe mapping disagrees with Spark's reader: ns
     timestamps (INT96 included — pyarrow renders it as timestamp[ns],
-    Spark reads it as a session-tz TIMESTAMP) and unsigned ints (Spark
-    reads UINT64 as DECIMAL(20,0)), anywhere in the nesting."""
+    Spark reads it as a session-tz TIMESTAMP) and unsigned ints (the
+    probe reads them the way Spark does, ``_as_spark_reads``, but a
+    transcode would write them unsigned), anywhere in the nesting."""
     import pyarrow as pa
 
     if pa.types.is_timestamp(t) and t.unit == "ns":
@@ -200,6 +232,8 @@ class Engine:
             # probe_schemas clears it. INT96 needs no separate
             # tracking: pyarrow renders it as timestamp[ns], which the
             # gate's hostile-type walk disqualifies.
+            import pyarrow as pa
+
             pf = pq.ParquetFile(path)
             arrow = pf.schema_arrow
             self._arrow_probe[path] = (arrow, pf.metadata.num_rows)
@@ -210,7 +244,10 @@ class Engine:
             # tz-adjusted columns still probe as TimestampType and take
             # the casting plan. Unification is unaffected: both types
             # fold into the same DATETIME kind.
-            return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+            return from_arrow_schema(
+                pa.schema([f.with_type(_as_spark_reads(f.type)) for f in arrow]),
+                prefer_timestamp_ntz=True,
+            )
         except Exception:
             return self.spark.read.parquet(path).schema
 
@@ -230,14 +267,10 @@ class Engine:
         would give every file a unique garbage key and explode the
         one-job-per-header-group inference into one job per file."""
         import csv as _csv
-        import io
 
-        from streaming_parquet_spark.sources.readers import _read_prefix
-
-        enc = {"utf8": "utf-8-sig", "utf-8": "utf-8-sig", "latin1": "cp1252"}.get(
-            spec.encoding.lower(), spec.encoding
+        text = _read_prefix(path, 64 << 10).decode(
+            python_encoding(spec.encoding), errors="replace"
         )
-        text = _read_prefix(path, 64 << 10).decode(enc, errors="replace")
         first = next(
             _csv.reader(
                 io.StringIO(text), delimiter=spec.delimiter,
@@ -266,97 +299,48 @@ class Engine:
         # here so a later run never reads a stale footer's facts
         self._arrow_probe = {}
 
+        # Driver-side probes, zero Spark jobs, on one thread pool:
+        # parquet/ORC footers; JSONL always sampled (a record stream has
+        # no header to batch an exact Spark job by); CSV sampled under
+        # --infer-rows (the reference default); raw text has a fixed
+        # (value: Utf8) schema.
+        exact_csv = not (spec.infer_rows and spec.infer_rows > 0)
+        probes = {
+            InputFormat.PARQUET: self._probe_parquet_schema,
+            InputFormat.ORC: self._probe_orc_schema,
+            InputFormat.JSONL: lambda p: infer_jsonl_schema_prefix(
+                p, spec.infer_rows or 1000, encoding=spec.encoding
+            ),
+            InputFormat.CSV: lambda p: infer_csv_schema_prefix(p, spec),
+            InputFormat.TXT: lambda p: TXT_SCHEMA,
+        }
         out: list[T.StructType | None] = [None] * len(files)
-
-        pq_idx = [i for i, f in enumerate(files) if f.format is InputFormat.PARQUET]
-        if pq_idx:
-            with ThreadPoolExecutor(max_workers=min(32, len(pq_idx))) as pool:
-                for i, schema in zip(
-                    pq_idx,
-                    pool.map(
-                        lambda i: self._probe_parquet_schema(files[i].path), pq_idx
-                    ),
-                ):
+        sampled = [
+            i for i, f in enumerate(files)
+            if not (exact_csv and f.format is InputFormat.CSV)
+        ]
+        if sampled:
+            with ThreadPoolExecutor(max_workers=min(32, len(sampled))) as pool:
+                for i, schema in zip(sampled, pool.map(
+                    lambda i: probes[files[i].format](files[i].path), sampled
+                )):
                     out[i] = schema
-
-        orc_idx = [i for i, f in enumerate(files) if f.format is InputFormat.ORC]
-        if orc_idx:
-            with ThreadPoolExecutor(max_workers=min(32, len(orc_idx))) as pool:
-                for i, schema in zip(
-                    orc_idx,
-                    pool.map(
-                        lambda i: self._probe_orc_schema(files[i].path), orc_idx
-                    ),
-                ):
-                    out[i] = schema
-
-        for i, f in enumerate(files):
-            # raw text: fixed (value: Utf8) schema — nothing to probe
-            if f.format is InputFormat.TXT:
-                out[i] = TXT_SCHEMA
-
-        jl_idx = [i for i, f in enumerate(files) if f.format is InputFormat.JSONL]
-        if jl_idx:
-            # JSONL: always sampled prefix inference (driver-side, zero
-            # jobs) — a JSON record stream has no header to group by, so
-            # the exact-mode Spark path has no per-header batching to
-            # exploit; the prefix probe reads <= infer_rows records.
-            n_rows = spec.infer_rows if spec.infer_rows else 1000
-            with ThreadPoolExecutor(max_workers=min(32, len(jl_idx))) as pool:
-                for i, schema in zip(
-                    jl_idx,
-                    pool.map(
-                        lambda i: infer_jsonl_schema_prefix(
-                            files[i].path, n_rows, encoding=spec.encoding
-                        ),
-                        jl_idx,
-                    ),
-                ):
-                    out[i] = schema
-
-        csv_idx = [i for i, f in enumerate(files) if f.format is InputFormat.CSV]
-        if not csv_idx:
-            return out  # type: ignore[return-value]
-
-        opts = self._csv_opts(spec)
-        if spec.infer_rows and spec.infer_rows > 0:
-            # Sampled inference (--infer-rows, the reference default):
-            # driver-side prefix reads, zero Spark jobs, thread pool.
-            with ThreadPoolExecutor(max_workers=min(32, len(csv_idx))) as pool:
-                for i, schema in zip(
-                    csv_idx,
-                    pool.map(
-                        lambda i: infer_csv_schema_prefix(files[i].path, opts),
-                        csv_idx,
-                    ),
-                ):
-                    out[i] = schema
+        if not exact_csv:
             return out  # type: ignore[return-value]
 
         # Exact full-file inference: one Spark job per distinct header.
         csv_groups: dict[object, list[int]] = {}
-        for i in csv_idx:
-            csv_groups.setdefault(
-                self._csv_header_key(files[i].path, spec), []
-            ).append(i)
+        for i, f in enumerate(files):
+            if f.format is InputFormat.CSV:
+                csv_groups.setdefault(
+                    self._csv_header_key(f.path, spec), []
+                ).append(i)
         for idxs in csv_groups.values():
             paths = [files[i].path for i in idxs]
-            schemas = infer_csv_schemas_per_file(self.spark, paths, opts)
+            schemas = infer_csv_schemas_per_file(self.spark, paths, spec)
             for i in idxs:
                 out[i] = schemas[files[i].path]
         return out  # type: ignore[return-value]
-
-    @staticmethod
-    def _csv_opts(spec: RunSpec) -> CsvOptions:
-        return CsvOptions(
-            delimiter=spec.delimiter,
-            quote=spec.quote,
-            headers=spec.headers,
-            encoding=spec.encoding,
-            na_values=spec.na_values,
-            infer_rows=spec.infer_rows,
-            multiline=spec.multiline,
-        )
 
     def dataframe(
         self, spec: RunSpec, files: list[InputFile] | None = None,
@@ -383,41 +367,10 @@ class Engine:
 
         dfs = []
         for (fmt, schema_json), paths in groups.items():
-            if fmt is InputFormat.PARQUET:
-                schema = T.StructType.fromJson(json.loads(schema_json))
-                dfs.append(read_parquet(
-                    self.spark, paths, self._probed_read_schema(paths, schema)
-                ))
-            elif fmt is InputFormat.ORC:
-                dfs.append(read_orc(self.spark, paths))
-            elif fmt is InputFormat.TXT:
-                dfs.append(read_text(self.spark, paths))
-            elif fmt is InputFormat.JSONL:
-                schema = T.StructType.fromJson(json.loads(schema_json))
-                dfs.append(
-                    read_jsonl(self.spark, paths, schema, encoding=spec.encoding)
-                )
-            else:
-                schema = T.StructType.fromJson(json.loads(schema_json))
-                # The CSV scan can't materialize NullType (probe result
-                # for valueless columns) — read those as string; every
-                # value is null, and the aligner casts to the unified
-                # type anyway.
-                read_schema = T.StructType(
-                    [
-                        T.StructField(
-                            fld.name,
-                            T.StringType()
-                            if isinstance(fld.dataType, T.NullType)
-                            else fld.dataType,
-                            fld.nullable,
-                        )
-                        for fld in schema.fields
-                    ]
-                )
-                dfs.append(
-                    read_csv(self.spark, paths, self._csv_opts(spec), schema=read_schema)
-                )
+            schema = T.StructType.fromJson(json.loads(schema_json))
+            if fmt in SELF_DESCRIBING:
+                schema = self._probed_read_schema(paths, schema)
+            dfs.append(read_input(self.spark.read, fmt, schema, spec, paths))
         df = concat_aligned(dfs, unified, include=spec.columns, exclude=spec.exclude)
         if len(dfs) > 1:
             df = df.coalesce(self._scan_partitions(files))
@@ -426,10 +379,10 @@ class Engine:
     def _probed_read_schema(
         self, paths: list[str], schema: T.StructType
     ) -> T.StructType | None:
-        """The probed ``schema`` of a parquet read group when it is the
-        schema Spark's reader would infer for it, else None (infer it):
-        every file has a footer probe, no Arrow field is
-        ``_spark_hostile``, and every field's Spark type is in
+        """The probed ``schema`` of a parquet or ORC read group when it
+        is the schema Spark's reader would infer for it, else None
+        (infer it): every file has a parquet footer probe, no Arrow
+        field is ``_spark_hostile``, and every field's Spark type is in
         ``_READ_TYPES``."""
         if any(type(fld.dataType) not in _READ_TYPES for fld in schema.fields):
             return None
@@ -560,57 +513,19 @@ class Engine:
             observed = observed.observe(
                 content_obs, *self._checksum_aggs(observed)
             )
+        args = spec_sink_args(spec)
         if spec.partition_by:
+            args["compression"] = (
+                spec.compression if spec.compression != "none" else "snappy"
+            )
             sink = write_partitioned(
-                observed,
-                spec.out,
-                spec.partition_by,
-                out_format=fmt,
-                compression=spec.compression
-                if spec.compression != "none"
-                else "snappy",
-                delimiter=spec.delimiter,
-                max_records_per_file=max_records,
-            )
-        elif fmt == "parquet":
-            sink = write_parquet(
-                observed,
-                spec.out,
-                compression=spec.compression,
-                zstd_level=spec.zstd_level,
-                single_file=spec.single_file,
-                max_records_per_file=max_records,
-            )
-        elif fmt == "jsonl":
-            sink = write_jsonl(
-                observed,
-                spec.out,
-                single_file=spec.single_file,
-                max_records_per_file=max_records,
-            )
-        elif fmt == "orc":
-            sink = write_orc(
-                observed,
-                spec.out,
-                compression=spec.compression,
-                single_file=spec.single_file,
-                max_records_per_file=max_records,
-            )
-        elif fmt == "text":
-            sink = write_text(
-                observed,
-                spec.out,
-                single_file=spec.single_file,
-                max_records_per_file=max_records,
+                observed, spec.out, spec.partition_by, out_format=fmt,
+                max_records_per_file=max_records, **args,
             )
         else:
-            sink = write_csv(
-                observed,
-                spec.out,
-                delimiter=spec.delimiter,
-                quote=spec.quote,
-                single_file=spec.single_file,
-                max_records_per_file=max_records,
+            sink = writer_for(fmt)(
+                observed, spec.out, single_file=spec.single_file,
+                max_records_per_file=max_records, **args,
             )
         if obs is not None:
             rows = int(obs.get["rows"])
@@ -719,37 +634,17 @@ class Engine:
           falls back to Catalyst, which unifies losslessly by
           construction.
 
-        Zero extra I/O in the normal path: the schema probe's single
-        footer sweep already cached (arrow schema, INT96 roots,
-        num_rows) per file (``self._arrow_probe``); only files whose
-        pyarrow probe fell back to the Spark reader re-read here (a
-        thread-pooled footer read each), and any file unreadable that
-        way disqualifies."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        Zero extra I/O: the schema probe's single footer sweep already
+        cached (arrow schema, num_rows) per file (``self._arrow_probe``)
+        before any Spark-type mapping could fail, so a file lacks an
+        entry only when pyarrow could not open it — and that
+        disqualifies (the Spark plan reports the unreadable file)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         want = set(cols)
-
-        def _probe(path: str):
-            pf = pq.ParquetFile(path)
-            return pf.schema_arrow, pf.metadata.num_rows
-
         cached = [self._arrow_probe.get(f.path) for f in files]
-        missing = [i for i, c in enumerate(cached) if c is None]
-        if missing:
-            try:
-                with ThreadPoolExecutor(
-                    max_workers=min(32, len(missing))
-                ) as pool:
-                    fresh = list(
-                        pool.map(lambda i: _probe(files[i].path), missing)
-                    )
-            except Exception:
-                return None  # unreadable footer: let Spark report it
-            for i, c in zip(missing, fresh):
-                cached[i] = c
+        if any(c is None for c in cached):
+            return None
         canonical: dict[str, pa.Field] = {}
         total_rows = 0
         for arrow, n_rows in cached:
@@ -851,32 +746,6 @@ class Engine:
         bytes_per_row = max(1, total_bytes // max(1, total_rows))
         return max(1, int(spec.roll_by_bytes // bytes_per_row))
 
-    def _read_back(self, spec: RunSpec, sink: SinkResult, schema=None):
-        """Re-open the just-written output. With ``schema`` (content
-        verify) text formats parse back to the written types, so the
-        canonical rendering agrees between the pre-write plan and the
-        round-tripped bytes."""
-        fmt = spec.resolve_out_format()
-        if fmt == "parquet":
-            return self.spark.read.parquet(*sink.paths)
-        if fmt == "jsonl":
-            r = self.spark.read
-            if schema is not None:
-                r = r.schema(schema)
-            return r.json(sink.paths)
-        if fmt == "orc":
-            return self.spark.read.orc(sink.paths)
-        if fmt == "text":
-            return self.spark.read.text(sink.paths)
-        r = (
-            self.spark.read.option("header", "true")
-            .option("sep", spec.delimiter)
-            .option("quote", spec.quote)
-        )
-        if schema is not None:
-            r = r.schema(schema)
-        return r.csv(sink.paths)
-
     @staticmethod
     def _checksum_aggs(df) -> tuple:
         """The (n, crc) aggregate pair over a canonical row rendering —
@@ -930,7 +799,8 @@ class Engine:
         reconcile the canonical-row checksum OBSERVED during the write
         pass (``written_metrics``) against the round-tripped bytes
         (did my bytes survive?)."""
+        fmt = spec.resolve_out_format()
         if spec.verify_mode == "content" and written_metrics is not None:
-            back = self._read_back(spec, sink, schema=schema)
+            back = read_back(self.spark, fmt, spec, sink.paths, schema=schema)
             return written_metrics == self._content_checksum(back)
-        return self._read_back(spec, sink).count() == expected_rows
+        return read_back(self.spark, fmt, spec, sink.paths).count() == expected_rows

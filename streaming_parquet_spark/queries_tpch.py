@@ -846,6 +846,37 @@ def _stream_workdir(prefix: str, sf_dir: str) -> str:
     return work
 
 
+def _stage_events(sf_dir: str, work: str) -> tuple[str, str]:
+    """Give a file-stream source a directory of its own holding the
+    events table: ``<work>/src`` gets a hard link (a copy across
+    filesystems) of every data file of ``<sf_dir>/events.parquet``, a
+    single file or a dataset directory. Files staged by an earlier
+    invocation stay, so a rerun resumes. Returns (the table's path,
+    the staged directory)."""
+    import shutil as _shutil
+
+    import pyarrow.dataset as ds
+
+    src = os.path.join(sf_dir, "events.parquet")
+    src_dir = os.path.join(work, "src")
+    os.makedirs(src_dir, exist_ok=True)
+    if os.path.isdir(src):
+        files = {
+            os.path.relpath(p, src).replace(os.sep, "-"): p
+            for p in ds.dataset(src, format="parquet").files
+        }
+    else:
+        files = {"events.parquet": src}
+    for name, path in files.items():
+        staged = os.path.join(src_dir, name)
+        if not os.path.exists(staged):
+            try:
+                os.link(path, staged)
+            except OSError:
+                _shutil.copy(path, staged)
+    return src, src_dir
+
+
 @query(
     "stream_ingest_counts",
     """
@@ -865,21 +896,12 @@ def stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: file-stream source with maxFilesPerTrigger batches a 100 TB
     backlog incrementally; the sink commit log makes reruns exactly-once."""
     import os as _os
-    import shutil as _shutil
 
     # Deterministic workdir: a re-invocation resumes the checkpointed
     # stream (exactly-once rerun) instead of re-staging; cleanup is
     # registered once at interpreter exit by _stream_workdir.
     work = _stream_workdir("maw_stream_q_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-    src = _os.path.join(sf_dir, "events.parquet")
-    staged = _os.path.join(src_dir, "events.parquet")
-    if not _os.path.exists(staged):
-        try:  # hardlink (same fs) to give the file-stream source a dir
-            _os.link(src, staged)
-        except OSError:
-            _shutil.copy(src, staged)
+    src, src_dir = _stage_events(sf_dir, work)
 
     _read_nanos_as_long(spark, src)
     schema = spark.read.parquet(src).schema
@@ -1657,20 +1679,11 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     history. Money aggregates as integer cents — exact under any
     partitioning. See streaming.operators.interval_join."""
     import os as _os
-    import shutil as _shutil
 
     from streaming_parquet_spark.streaming.operators import interval_join
 
     work = _stream_workdir("maw_stream_ij_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-    src = _os.path.join(sf_dir, "events.parquet")
-    staged = _os.path.join(src_dir, "events.parquet")
-    if not _os.path.exists(staged):
-        try:
-            _os.link(src, staged)
-        except OSError:
-            _shutil.copy(src, staged)
+    src, src_dir = _stage_events(sf_dir, work)
 
     # the fixture schema is read under _events' nanos rule; the if/elif
     # below replays the same ts normalization on the stream itself
@@ -1947,20 +1960,11 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched rows land in the sink and aggregate batch-side. Money as
     integer cents."""
     import os as _os
-    import shutil as _shutil
 
     from streaming_parquet_spark.queries import _events
 
     work = _stream_workdir("maw_stream_dim_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-    src = _os.path.join(sf_dir, "events.parquet")
-    staged = _os.path.join(src_dir, "events.parquet")
-    if not _os.path.exists(staged):
-        try:
-            _os.link(src, staged)
-        except OSError:
-            _shutil.copy(src, staged)
+    src, src_dir = _stage_events(sf_dir, work)
 
     e = _events(spark, sf_dir)
     stream = spark.readStream.schema(

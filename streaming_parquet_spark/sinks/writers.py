@@ -1,4 +1,4 @@
-"""Sinks: CSV and Parquet writers.
+"""Sinks: one table of output formats behind every writer.
 
 Reimplements the reference's writer contracts
 (CSV: /root/reference/src/writer_csv.rs:38-127 — configurable
@@ -6,7 +6,15 @@ delimiter/quote, null -> na_string, header written once, truncating
 create; Parquet: /root/reference/src/writer_parquet.rs:42-101 —
 statistics on, compression none/snappy/gzip/zstd(level), 128 MB
 row-group target) plus the declared-but-unwired rolling outputs
-(--roll-by-bytes/--roll-by-rows, src/cli.rs:70-77).
+(--roll-by-bytes/--roll-by-rows, src/cli.rs:70-77), and extends them to
+JSONL, ORC and raw text.
+
+``SINK_FORMATS`` holds each format's Spark source name, codec table,
+part-file extension and text one-column rule; ``sink_options`` turns
+the sink arguments into the format's writer options. The batch
+``write_<format>`` functions, ``write_partitioned``, the stream sink of
+``StreamEngine.run`` and the verify read-back (``read_back``) all take
+them from there.
 
 Single-file mode reproduces the CLI ergonomics (one output file with one
 header) via ``coalesce(1)`` + part-file rename — a real semantic choice
@@ -22,9 +30,13 @@ import glob
 import os
 import shutil
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+
+if TYPE_CHECKING:
+    from streaming_parquet_spark.runspec import RunSpec
 
 
 @dataclass
@@ -38,6 +50,7 @@ class SinkResult:
     via: str = "spark"
 
 
+# --compression -> Spark codec (cli.rs:158-164); ORC spells DEFLATE zlib
 _PARQUET_CODECS = {
     "none": "none",
     "uncompressed": "none",
@@ -45,23 +58,131 @@ _PARQUET_CODECS = {
     "gzip": "gzip",
     "zstd": "zstd",
 }
+_ORC_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "zlib": "zlib", "gzip": "zlib", "zstd": "zstd", "lz4": "lz4",
+}
+# text output path suffix -> Spark codec (extension: the reference
+# writes plaintext only)
+_TEXT_CODECS = {".gz": "gzip", ".bz2": "bzip2"}
 
 
-def _text_codec(out_path: str) -> str | None:
-    """Spark compression codec implied by a text output's extension."""
-    lower = out_path.lower()
-    if lower.endswith(".gz"):
-        return "gzip"
-    if lower.endswith(".bz2"):
-        return "bzip2"
-    return None
+def _codec_suffix(out_path: str) -> str:
+    """The ``_TEXT_CODECS`` suffix ``out_path`` ends in, or ''."""
+    low = out_path.lower()
+    return next((s for s in _TEXT_CODECS if low.endswith(s)), "")
+
+
+@dataclass(frozen=True)
+class SinkFormat:
+    """What every sink of one output format needs to know about it."""
+
+    source: str                            # Spark data source name
+    ext: str                               # part-file extension
+    # --compression -> codec; None: a text format, compressed by the
+    # .gz/.bz2 suffix of its output path instead
+    codecs: dict[str, str] | None = None
+    # Spark's text sink: exactly one string column
+    one_column: bool = False
+    # rows parse back from text, so a read-back takes the written schema
+    parses: bool = False
+
+
+SINK_FORMATS = {
+    "parquet": SinkFormat("parquet", ".parquet", _PARQUET_CODECS),
+    "orc": SinkFormat("orc", ".orc", _ORC_CODECS),
+    "csv": SinkFormat("csv", ".csv", parses=True),
+    "jsonl": SinkFormat("json", ".json", parses=True),
+    "text": SinkFormat("text", ".txt", one_column=True),
+}
+
+
+def sink_options(
+    fmt: str,
+    out_path: str,
+    compression: str = "none",
+    zstd_level: int = 3,
+    delimiter: str = ",",
+    quote: str = '"',
+) -> dict:
+    """Writer options of output format ``fmt``: its codec, then its own
+    options. Parquet: stats on by default in Spark's writer, the
+    reference's 128 MB row-group target via ``parquet.block.size``, the
+    zstd level when zstd is selected (honored by parquet-mr). CSV:
+    writer_csv.rs:38-127 (delimiter, quote, null -> '', header once per
+    file — even under --no-headers: its synthetic ``col_1..col_N`` names,
+    csv_in.rs:68-78, are part of the output). An unknown format or codec
+    is a ValueError."""
+    sink = SINK_FORMATS.get(fmt)
+    if sink is None:
+        raise ValueError(f"unsupported out format: {fmt}")
+    if sink.codecs is None:
+        codec = _TEXT_CODECS.get(_codec_suffix(out_path))
+    else:
+        codec = sink.codecs.get(compression.lower())
+        if codec is None:
+            raise ValueError(f"unsupported compression: {compression}")
+    opts: dict = {"compression": codec} if codec else {}
+    if fmt == "parquet":
+        opts["parquet.block.size"] = 128 * 1024 * 1024
+        if codec == "zstd":
+            opts["parquet.compression.codec.zstd.level"] = zstd_level
+    elif fmt == "csv":
+        opts.update(sep=delimiter, quote=quote, nullValue="", header="true")
+    return opts
+
+
+def spec_sink_args(spec: RunSpec) -> dict:
+    """The ``sink_options`` arguments a RunSpec sets."""
+    return dict(compression=spec.compression, zstd_level=spec.zstd_level,
+                delimiter=spec.delimiter, quote=spec.quote)
+
+
+def _text_value_column(df: DataFrame, keys: list[str] = ()) -> DataFrame:
+    """The (value: string) column every text sink writes, after the
+    partition ``keys``: Spark's text sink takes exactly one column, and
+    a multi-column frame has no defensible line rendering, so fail
+    loudly instead of silently joining columns. Cast, null -> '' — and a
+    per-row raise_error on embedded newlines, because a line-oriented
+    format cannot represent them (a silent write would split one record
+    into several; CSV/JSONL escape)."""
+    rest = [c for c in df.columns if c not in keys]
+    if len(rest) != 1:
+        besides = " besides the partition keys" if keys else ""
+        raise ValueError(
+            f"text output requires exactly one column{besides}, got {rest};"
+            " project with --columns or write CSV/JSONL instead"
+        )
+    v = F.coalesce(df[rest[0]].cast("string"), F.lit(""))
+    value = F.when(
+        v.contains("\n") | v.contains("\r"),
+        F.raise_error(
+            F.lit(
+                "text sink cannot represent embedded newlines; "
+                "write CSV or JSONL instead"
+            )
+        ).cast("string"),
+    ).otherwise(v).alias("value")
+    return df.select(*keys, value)
+
+
+def sink_frame(
+    df: DataFrame, fmt: str, out_path: str, keys: list[str] = (), **args
+) -> tuple[DataFrame, str, dict]:
+    """(the frame to write, its Spark source name, its writer options)
+    for output format ``fmt``: what every sink of that format writes.
+    ``args`` are ``sink_options``' arguments."""
+    opts = sink_options(fmt, out_path, **args)
+    sink = SINK_FORMATS[fmt]
+    if sink.one_column:
+        df = _text_value_column(df, keys)
+    return df, sink.source, opts
 
 
 def _finalize_single_file(tmp_dir: str, out_path: str, ext: str) -> SinkResult:
     parts = sorted(glob.glob(os.path.join(tmp_dir, f"part-*{ext}*")))
     if not parts:  # e.g. empty frame still emits a part file; guard anyway
         parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*")))
-    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     if os.path.exists(out_path):
         os.remove(out_path)  # truncating create (writer_csv.rs:40-44)
     shutil.move(parts[0], out_path)
@@ -78,14 +199,8 @@ def _finalize_rolling(tmp_dir: str, out_path: str, ext: str) -> SinkResult:
     # half the suffix. Strip the codec suffix first, THEN one splitext
     # — out_path may spell a format alias (.jsonl.gz, .tsv.gz) that
     # differs from the canonical ``ext`` (.json.gz, .csv.gz).
-    base = out_path
-    low = out_path.lower()
-    for codec_ext in (".gz", ".bz2"):
-        if low.endswith(codec_ext):
-            base = out_path[: -len(codec_ext)]
-            break
+    base = out_path[: len(out_path) - len(_codec_suffix(out_path))]
     stem = os.path.splitext(base)[0]
-    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     outs, total = [], 0
     for i, part in enumerate(parts):
         dest = f"{stem}-{i:04d}{ext}"
@@ -99,43 +214,96 @@ def _finalize_rolling(tmp_dir: str, out_path: str, ext: str) -> SinkResult:
 
 
 def _tmp_out_dir(out_path: str) -> str:
-    parent = os.path.dirname(os.path.abspath(out_path)) or "."
+    """A fresh temp dir beside ``out_path``, its directory created."""
+    parent = os.path.dirname(os.path.abspath(out_path))
+    os.makedirs(parent, exist_ok=True)
     return tempfile.mkdtemp(prefix=".maw_out_", dir=parent)
 
 
-def write_csv(
+def _write(
     df: DataFrame,
     out_path: str,
-    delimiter: str = ",",
-    quote: str = '"',
-    na_string: str = "",
-    header: bool = True,
-    single_file: bool = True,
-    max_records_per_file: int | None = None,
+    fmt: str,
+    single_file: bool,
+    max_records_per_file: int | None,
+    args: dict,
 ) -> SinkResult:
-    """CSV sink (writer_csv.rs:38-127 semantics). An ``out_path``
-    ending in ``.gz``/``.bz2`` compresses with that codec (extension:
-    the reference writes plaintext only)."""
+    """The one batch write: coalesce when single-file, the format's
+    options, row rolling, a temp dir next to ``out_path``, then the
+    part files renamed into place. A roll threshold overrides
+    single-file ergonomics (finalizing a rolled multi-part tmp as ONE
+    file would silently keep only the first part)."""
+    df, source, opts = sink_frame(df, fmt, out_path, **args)
+    single = single_file and max_records_per_file is None
     writer = (
-        df.coalesce(1) if single_file and max_records_per_file is None else df
-    ).write.mode("overwrite")
-    writer = (
-        writer.option("sep", delimiter)
-        .option("quote", quote)
-        .option("nullValue", na_string)
-        .option("header", str(header).lower())
+        (df.coalesce(1) if single else df).write.mode("overwrite")
+        .format(source).options(**opts)
     )
-    codec = _text_codec(out_path)
-    if codec:
-        writer = writer.option("compression", codec)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     tmp = _tmp_out_dir(out_path)
-    writer.csv(tmp)
-    ext = ".csv" + {"gzip": ".gz", "bzip2": ".bz2"}.get(codec, "")
-    if single_file and max_records_per_file is None:
+    writer.save(tmp)
+    sink = SINK_FORMATS[fmt]
+    ext = sink.ext + (_codec_suffix(out_path) if sink.codecs is None else "")
+    if single:
         return _finalize_single_file(tmp, out_path, ext)
     return _finalize_rolling(tmp, out_path, ext)
+
+
+def writer_for(fmt: str):
+    """The ``write_<fmt>`` function of output format ``fmt``, looked up
+    in this module's namespace at call time (so a caller reaches the
+    function the name holds now, e.g. perfbench's span wrappers).
+    Their ``args`` are ``sink_options``' arguments (compression,
+    zstd_level, delimiter, quote)."""
+    if fmt not in SINK_FORMATS:
+        raise ValueError(f"unsupported out format: {fmt}")
+    return globals()[f"write_{fmt}"]
+
+
+def write_parquet(
+    df: DataFrame, out_path: str, single_file: bool = True,
+    max_records_per_file: int | None = None, **args,
+) -> SinkResult:
+    """Parquet sink (writer_parquet.rs:42-101 semantics)."""
+    return _write(df, out_path, "parquet", single_file, max_records_per_file, args)
+
+
+def write_csv(
+    df: DataFrame, out_path: str, single_file: bool = True,
+    max_records_per_file: int | None = None, **args,
+) -> SinkResult:
+    """CSV sink (writer_csv.rs:38-127 semantics). An ``out_path``
+    ending in ``.gz``/``.bz2`` compresses with that codec."""
+    return _write(df, out_path, "csv", single_file, max_records_per_file, args)
+
+
+def write_orc(
+    df: DataFrame, out_path: str, single_file: bool = True,
+    max_records_per_file: int | None = None, **args,
+) -> SinkResult:
+    """ORC sink (extension); gzip maps to zlib (ORC's DEFLATE)."""
+    return _write(df, out_path, "orc", single_file, max_records_per_file, args)
+
+
+def write_jsonl(
+    df: DataFrame, out_path: str, single_file: bool = True,
+    max_records_per_file: int | None = None, **args,
+) -> SinkResult:
+    """JSONL sink (extension): one JSON object per line, nulls omitted
+    per JSON convention (ignoreNullFields default); ``.gz``/``.bz2``
+    output paths compress."""
+    return _write(df, out_path, "jsonl", single_file, max_records_per_file, args)
+
+
+def write_text(
+    df: DataFrame, out_path: str, single_file: bool = True,
+    max_records_per_file: int | None = None, **args,
+) -> SinkResult:
+    """Raw-text sink (extension): one line per record of the frame's
+    ONE column, cast to string, nulls as empty lines (see
+    ``_text_value_column``); ``.gz``/``.bz2`` output paths compress."""
+    return _write(df, out_path, "text", single_file, max_records_per_file, args)
 
 
 def write_partitioned(
@@ -144,47 +312,27 @@ def write_partitioned(
     partition_by: list[str],
     out_format: str = "parquet",
     compression: str = "snappy",
-    delimiter: str = ",",
-    header: bool = True,
     max_records_per_file: int | None = None,
+    **args,
 ) -> SinkResult:
     """Hive-style partitioned directory write — the 100 TB extension of
     the flat sinks: downstream scans prune partitions on the partition
     columns for free, and writers parallelize per partition. (The
     reference has no partitioned output; this is an extension in the
-    spirit of --roll-by-*, SURVEY §2.8.)"""
-    # Engine out-formats don't map 1:1 onto DataFrameWriter method
-    # names (jsonl -> .json); dispatch explicitly so an unknown format
-    # is a ValueError here, not an AttributeError mid-write.
-    methods = {"parquet": "parquet", "csv": "csv", "jsonl": "json",
-               "orc": "orc", "text": "text"}
-    method = methods.get(out_format)
-    if method is None:
+    spirit of --roll-by-*, SURVEY §2.8.) A text sink keeps one data
+    column besides the partition keys."""
+    if out_format not in SINK_FORMATS:
         raise ValueError(f"unsupported partitioned out format: {out_format}")
-    if out_format == "text":
-        # one data column besides the partition keys (Spark's text
-        # sink contract), with the write_text newline guard
-        rest = [c for c in df.columns if c not in partition_by]
-        if len(rest) != 1:
-            raise ValueError(
-                "partitioned text output requires exactly one column"
-                f" besides the partition keys, got {rest}"
-            )
-        df = df.select(*partition_by, _text_value_expr(df, rest[0]))
-    writer = df.write.mode("overwrite").partitionBy(*partition_by)
-    if out_format == "parquet":
-        codec = _PARQUET_CODECS.get(compression.lower())
-        if codec is None:
-            raise ValueError(f"unsupported compression: {compression}")
-        writer = writer.option("compression", codec)
-    elif out_format == "csv":
-        writer = (
-            writer.option("sep", delimiter)
-            .option("header", str(header).lower())
-        )
+    df, source, opts = sink_frame(
+        df, out_format, out_dir, partition_by, compression=compression, **args
+    )
+    writer = (
+        df.write.mode("overwrite").partitionBy(*partition_by)
+        .format(source).options(**opts)
+    )
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    getattr(writer, method)(out_dir)
+    writer.save(out_dir)
     total, count = 0, 0
     for root, _dirs, files in os.walk(out_dir):
         for f in files:
@@ -194,6 +342,22 @@ def write_partitioned(
                 total += os.path.getsize(os.path.join(root, f))
                 count += 1
     return SinkResult(paths=[out_dir], bytes_written=total, files_written=count)
+
+
+def read_back(
+    spark, fmt: str, spec: RunSpec, paths: list[str], schema=None
+) -> DataFrame:
+    """Re-open output written in format ``fmt`` under ``spec`` — the
+    files of a batch write or a stream sink's directory — with the
+    options it was written with. With ``schema`` (content verify) text
+    rows parse back to the written types, so the canonical rendering
+    agrees between the pre-write plan and the round-tripped bytes."""
+    opts = sink_options(fmt, "", **spec_sink_args(spec))
+    sink = SINK_FORMATS[fmt]
+    reader = spark.read.format(sink.source).options(**opts)
+    if schema is not None and sink.parses:
+        reader = reader.schema(schema)
+    return reader.load(paths)
 
 
 def write_bucketed(
@@ -216,9 +380,7 @@ def write_bucketed(
     one); bucket metadata lives in the catalog, so readers must load via
     ``spark.table(table)``.
     """
-    codec = _PARQUET_CODECS.get(compression.lower())
-    if codec is None:
-        raise ValueError(f"unsupported compression: {compression}")
+    codec = sink_options("parquet", table, compression=compression)["compression"]
     writer = (
         df.write.mode("overwrite")
         .format("parquet")
@@ -243,41 +405,7 @@ def write_bucketed(
     return SinkResult(paths=[table], bytes_written=total, files_written=count)
 
 
-def write_parquet(
-    df: DataFrame,
-    out_path: str,
-    compression: str = "none",
-    zstd_level: int = 3,
-    single_file: bool = True,
-    max_records_per_file: int | None = None,
-    row_group_mb: int = 128,
-) -> SinkResult:
-    """Parquet sink (writer_parquet.rs:42-101 semantics): stats on by
-    default in Spark's writer, V2-capable, codec map cli.rs:158-164,
-    128 MB row-group target via ``parquet.block.size``."""
-    codec = _PARQUET_CODECS.get(compression.lower())
-    if codec is None:
-        raise ValueError(f"unsupported compression: {compression}")
-    writer = (
-        df.coalesce(1) if single_file and max_records_per_file is None else df
-    ).write.mode("overwrite")
-    writer = (
-        writer.option("compression", codec)
-        .option("parquet.block.size", row_group_mb * 1024 * 1024)
-    )
-    if codec == "zstd":
-        # Honored by parquet-mr when zstd is selected.
-        writer = writer.option("parquet.compression.codec.zstd.level", zstd_level)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    tmp = _tmp_out_dir(out_path)
-    writer.parquet(tmp)
-    if single_file and max_records_per_file is None:
-        return _finalize_single_file(tmp, out_path, ".parquet")
-    return _finalize_rolling(tmp, out_path, ".parquet")
 
-
-# Spark codec name (values of _PARQUET_CODECS) -> pyarrow codec name.
 _ARROW_CODECS = {"none": "NONE", "snappy": "SNAPPY", "gzip": "GZIP",
                  "zstd": "ZSTD"}
 
@@ -358,7 +486,7 @@ def _transcode_bin(
             # writer's own block-size bound (the reference's 128 MB
             # target, writer_parquet.rs:35) — a same-codec copy keeps
             # the source grouping the way its arrow2 path does; there
-            # is deliberately no row_group_mb knob here.
+            # is deliberately no row-group size knob here.
     _close()
     return files, total_rows, total_bytes
 
@@ -437,12 +565,13 @@ def transcode_parquet(
             loads[b] += size
         bins = [b for b in bins if b]
 
+    codec = sink_options("parquet", out_path, compression=compression)["compression"]
     tmp = _tmp_out_dir(out_path)
     tasks = list(enumerate(bins))
 
     def _run(task: tuple[int, list[str]]) -> tuple[int, int, int]:
         return _transcode_bin(
-            task[0], task[1], tmp, compression, zstd_level, columns,
+            task[0], task[1], tmp, codec, zstd_level, columns,
             arrow_schema, max_records_per_file,
         )
 
@@ -455,7 +584,7 @@ def transcode_parquet(
         pq.write_table(
             arrow_schema.empty_table(),
             os.path.join(tmp, "part-00000-0000.parquet"),
-            compression=_ARROW_CODECS[compression],
+            compression=_ARROW_CODECS[codec],
         )
     if single_file:
         sink = _finalize_single_file(tmp, out_path, ".parquet")
@@ -463,116 +592,3 @@ def transcode_parquet(
         sink = _finalize_rolling(tmp, out_path, ".parquet")
     sink.via = "columnar-passthrough"
     return sink
-
-
-_ORC_CODECS = {
-    "none": "none", "uncompressed": "none", "snappy": "snappy",
-    "zlib": "zlib", "gzip": "zlib", "zstd": "zstd", "lz4": "lz4",
-}
-
-
-def write_orc(
-    df: DataFrame,
-    out_path: str,
-    compression: str = "none",
-    single_file: bool = True,
-    max_records_per_file: int | None = None,
-) -> SinkResult:
-    """ORC sink (extension): same single-file / rolling contract as the
-    Parquet sink; gzip maps to zlib (ORC's DEFLATE codec name)."""
-    codec = _ORC_CODECS.get(compression.lower())
-    if codec is None:
-        raise ValueError(f"unsupported compression: {compression}")
-    writer = (
-        df.coalesce(1) if single_file and max_records_per_file is None else df
-    ).write.mode("overwrite").option("compression", codec)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    tmp = _tmp_out_dir(out_path)
-    writer.orc(tmp)
-    if single_file and max_records_per_file is None:
-        return _finalize_single_file(tmp, out_path, ".orc")
-    return _finalize_rolling(tmp, out_path, ".orc")
-
-
-def _text_value_expr(df: DataFrame, col: str):
-    """The (value: string) expression every text sink writes: cast,
-    null -> '' — and a per-row raise_error on embedded newlines,
-    because a line-oriented format cannot represent them (a silent
-    write would split one record into several; CSV/JSONL escape)."""
-    from pyspark.sql import functions as F
-
-    v = F.coalesce(df[col].cast("string"), F.lit(""))
-    return F.when(
-        v.contains("\n") | v.contains("\r"),
-        F.raise_error(
-            F.lit(
-                "text sink cannot represent embedded newlines; "
-                "write CSV or JSONL instead"
-            )
-        ).cast("string"),
-    ).otherwise(v).alias("value")
-
-
-def _text_value_column(df: DataFrame, col: str) -> DataFrame:
-    return df.select(_text_value_expr(df, col))
-
-
-def write_text(
-    df: DataFrame,
-    out_path: str,
-    single_file: bool = True,
-    max_records_per_file: int | None = None,
-) -> SinkResult:
-    """Raw-text sink (extension): one line per record. Requires exactly
-    ONE column (Spark's text sink contract) — a multi-column frame has
-    no defensible line rendering, so fail loudly instead of silently
-    joining columns. The column is cast to string; nulls write as empty
-    lines (cast preserves null -> Spark writes ''). Same single-file /
-    rolling contract as the CSV sink; ``.gz``/``.bz2`` paths compress."""
-    if len(df.columns) != 1:
-        raise ValueError(
-            f"text output requires exactly one column, got {df.columns};"
-            " project with --columns or write CSV/JSONL instead"
-        )
-    one = _text_value_column(df, df.columns[0])
-    writer = (
-        one.coalesce(1) if single_file and max_records_per_file is None else one
-    ).write.mode("overwrite")
-    codec = _text_codec(out_path)
-    if codec:
-        writer = writer.option("compression", codec)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    tmp = _tmp_out_dir(out_path)
-    writer.text(tmp)
-    ext = ".txt" + {"gzip": ".gz", "bzip2": ".bz2"}.get(codec, "")
-    if single_file and max_records_per_file is None:
-        return _finalize_single_file(tmp, out_path, ext)
-    return _finalize_rolling(tmp, out_path, ext)
-
-
-def write_jsonl(
-    df: DataFrame,
-    out_path: str,
-    single_file: bool = True,
-    max_records_per_file: int | None = None,
-) -> SinkResult:
-    """JSONL sink (extension beyond the reference's CSV/Parquet writer
-    pair): one JSON object per line, nulls omitted per JSON convention
-    (ignoreNullFields default). Same single-file / rolling contract as
-    the CSV sink; ``.gz``/``.bz2`` output paths compress."""
-    writer = (
-        df.coalesce(1) if single_file and max_records_per_file is None else df
-    ).write.mode("overwrite")
-    codec = _text_codec(out_path)
-    if codec:
-        writer = writer.option("compression", codec)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    tmp = _tmp_out_dir(out_path)
-    writer.json(tmp)
-    ext = ".json" + {"gzip": ".gz", "bzip2": ".bz2"}.get(codec, "")
-    if single_file and max_records_per_file is None:
-        return _finalize_single_file(tmp, out_path, ext)
-    return _finalize_rolling(tmp, out_path, ext)

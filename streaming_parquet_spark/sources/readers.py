@@ -1,100 +1,125 @@
-"""Format-specific DataFrame readers mirroring the reference's reader
-option surfaces (CSV: /root/reference/src/csv_in.rs:45-232; Parquet:
-/root/reference/src/parquet_in.rs:13-44).
+"""Input formats: the driver-side schema probes and the one reader
+configuration both engines open their inputs through.
 
-Each reader returns a lazily-planned DataFrame; Spark handles batching,
-vectorized parsing, and per-file-split parallelism natively (the analog
-of the reference's 64k-row batched readers on blocking threads).
+``read_input`` configures a ``DataFrameReader`` (the batch ``Engine``)
+or a ``DataStreamReader`` (the resumable ``StreamEngine``) the same way:
+Spark source name, the CSV/JSONL options of the reference's reader
+surfaces (CSV: /root/reference/src/csv_in.rs:45-232; Parquet:
+/root/reference/src/parquet_in.rs:13-44), the probed schema and the
+extra NA sentinels. Spark handles batching, vectorized parsing and
+per-file-split parallelism natively (the analog of the reference's
+64k-row batched readers on blocking threads).
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from streaming_parquet_spark.sources.discover import InputFormat
+
+if TYPE_CHECKING:
+    from streaming_parquet_spark.runspec import RunSpec
 
 
 # Default NA sentinels (reference src/cli.rs:41-43: "NA,null,\\N").
 DEFAULT_NA_VALUES = ("NA", "null", "\\N")
 
-_ENCODINGS = {"utf8": "UTF-8", "utf-8": "UTF-8", "latin1": "ISO-8859-1"}
+#: --encoding spelling -> (Spark charset, Python codec of the driver-side
+#: probes). The reference reads latin1 via WINDOWS_1252 decode with BOM
+#: strip (csv_in.rs:80-84,156-168).
+_ENCODINGS = {
+    "utf8": ("UTF-8", "utf-8-sig"),
+    "utf-8": ("UTF-8", "utf-8-sig"),
+    "latin1": ("ISO-8859-1", "cp1252"),
+}
 
 
-@dataclass
-class CsvOptions:
-    """CSV reader options (reference src/cli.rs:25-43,66-68).
-
-    The reference reads latin1 via WINDOWS_1252 decode with BOM strip
-    (csv_in.rs:80-84,156-168) — Spark's `encoding` option covers both.
-    Ragged rows are padded with nulls (csv_in.rs:136-139) — Spark
-    PERMISSIVE mode default. Multiple NA sentinels are applied post-read
-    (Spark's `nullValue` takes a single value).
-    """
-
-    delimiter: str = ","
-    quote: str = '"'
-    headers: bool = True                 # --no-headers inverts
-    encoding: str = "utf8"
-    na_values: tuple[str, ...] = DEFAULT_NA_VALUES
-    infer_rows: int = 1000               # --infer-rows schema-inference sample
-    infer_schema: bool = True
-    # Quoted fields containing newlines (the reference's csv crate parses
-    # them natively). Spark's default line-splittable reader breaks such
-    # records; multiline=True handles them at the cost of one task per
-    # file (files become non-splittable) — enable only when the data
-    # needs it.
-    multiline: bool = False
+def spark_encoding(encoding: str) -> str:
+    return _ENCODINGS.get(encoding.lower(), (encoding,))[0]
 
 
-def read_csv(
-    spark: SparkSession,
+def python_encoding(encoding: str) -> str:
+    return _ENCODINGS.get(encoding.lower(), (None, encoding))[1]
+
+
+#: Spark data source of each input format
+_SOURCES = {
+    InputFormat.CSV: "csv",
+    InputFormat.PARQUET: "parquet",
+    InputFormat.JSONL: "json",
+    InputFormat.ORC: "orc",
+    InputFormat.TXT: "text",
+}
+
+#: formats whose files carry their own schema, so a batch read may leave
+#: it to Spark's inference instead of the probe
+SELF_DESCRIBING = frozenset({InputFormat.PARQUET, InputFormat.ORC})
+
+
+def _reader_options(fmt: InputFormat, spec: RunSpec) -> dict[str, str]:
+    """Reader options of one input format under ``spec``.
+
+    CSV (reference src/cli.rs:25-43): ragged rows pad with nulls
+    (csv_in.rs:136-139, Spark's PERMISSIVE mode); Spark's ``nullValue``
+    takes one sentinel, ``read_input`` maps the rest post-read. Quoted
+    fields containing newlines need ``multiline`` (one task per file:
+    multiLine files are not splittable). JSONL: PERMISSIVE pads missing
+    keys / malformed records with nulls; Spark's line reader needs an
+    explicit ``lineSep`` under any charset but UTF-8, and a field
+    declared StringType reads back as its literal JSON text (the Utf8
+    degrade of nested values). ``.gz``/``.bz2`` text inputs decompress
+    transparently in every text source, by extension."""
+    enc = spark_encoding(spec.encoding)
+    if fmt is InputFormat.CSV:
+        return {
+            "sep": spec.delimiter,
+            "quote": spec.quote,
+            "header": str(spec.headers).lower(),
+            "encoding": enc,
+            "mode": "PERMISSIVE",
+            "multiLine": str(spec.multiline).lower(),
+            "nullValue": spec.na_values[0] if spec.na_values else "",
+        }
+    if fmt is InputFormat.JSONL:
+        opts = {"mode": "PERMISSIVE", "encoding": enc}
+        if enc != "UTF-8":
+            opts["lineSep"] = "\n"
+        return opts
+    return {}
+
+
+def read_input(
+    reader, fmt: InputFormat, schema: T.StructType | None, spec: RunSpec,
     paths: list[str] | str,
-    opts: CsvOptions | None = None,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Read CSV with the reference's option semantics.
+    """Open ``paths`` of one input format through ``reader`` —
+    ``spark.read`` (a list of paths) or ``spark.readStream`` (one
+    directory or glob) — the same way for both engines.
 
-    With ``headers=False``, columns are named ``col_1..col_N``
-    (csv_in.rs:68-78 synthesizes the same names). Values matching any NA
-    sentinel become null before type coercion, mirroring csv_in.rs:129-135
-    where sentinel checks precede parsing.
-    """
-    opts = opts or CsvOptions()
-    if isinstance(paths, str):
-        paths = [paths]
-
-    reader = (
-        spark.read.option("sep", opts.delimiter)
-        .option("quote", opts.quote)
-        .option("header", str(opts.headers).lower())
-        .option("encoding", _ENCODINGS.get(opts.encoding.lower(), opts.encoding))
-        .option("mode", "PERMISSIVE")
-        .option("multiLine", str(opts.multiline).lower())
-        .option("samplingRatio", "1.0")
-    )
-    # Spark accepts one nullValue natively; the rest are mapped post-read.
-    primary_na = opts.na_values[0] if opts.na_values else ""
-    reader = reader.option("nullValue", primary_na)
-
+    ``schema`` is the probed one; None leaves it to Spark's inference.
+    The scan can't materialize NullType (the probe's result for a
+    valueless column), so such columns read as string: every value is
+    null, and the aligner casts to the unified type anyway. CSV nulls
+    out the extra NA sentinels after the read, mirroring csv_in.rs:129-
+    135 where sentinel checks precede parsing; ORC/JSONL carry typed
+    nulls natively."""
     if schema is not None:
-        df = reader.schema(schema).csv(paths)
-    elif opts.infer_schema:
-        # Read as strings first so extra NA sentinels null out *before*
-        # type inference (parity with csv_in.rs ordering), then re-infer.
-        raw = reader.option("inferSchema", "false").csv(paths)
-        raw = _apply_na_sentinels(raw, opts.na_values[1:])
-        df = _infer_string_columns(raw, opts.infer_rows)
-        if not opts.headers:
-            df = df.toDF(*[f"col_{i + 1}" for i in range(len(df.columns))])
-        return df
-    else:
-        df = reader.option("inferSchema", "false").csv(paths)
-
-    if not opts.headers:
-        df = df.toDF(*[f"col_{i + 1}" for i in range(len(df.columns))])
-    return _apply_na_sentinels(df, opts.na_values[1:])
+        reader = reader.schema(T.StructType([
+            T.StructField(
+                f.name,
+                T.StringType() if isinstance(f.dataType, T.NullType) else f.dataType,
+                f.nullable,
+            )
+            for f in schema.fields
+        ]))
+    df = reader.format(_SOURCES[fmt]).options(**_reader_options(fmt, spec)).load(paths)
+    if fmt is InputFormat.CSV:
+        df = _apply_na_sentinels(df, spec.na_values[1:])
+    return df
 
 
 def _apply_na_sentinels(df: DataFrame, extra_na: tuple[str, ...]) -> DataFrame:
@@ -114,59 +139,8 @@ def _apply_na_sentinels(df: DataFrame, extra_na: tuple[str, ...]) -> DataFrame:
     return df.select(*exprs)
 
 
-def _infer_string_columns(df: DataFrame, sample_rows: int) -> DataFrame:
-    """Per-column type inference over a sample: try i64 -> f64 -> bool,
-    else string — the reference's parse-probe order (csv_in.rs:171-232),
-    where any unparseable value makes the whole column Utf8.
-
-    Runs one small Spark job over ``sample_rows`` rows (the reference
-    samples --infer-rows=1000 by default), then applies lattice casts to
-    the full lazy plan.
-    """
-    sample = df.limit(sample_rows)
-    checks = []
-    for name in df.columns:
-        c = F.col(name)
-        nn = c.isNotNull()
-        checks.extend(
-            [
-                F.max(F.when(nn & c.try_cast("long").isNull(), 1).otherwise(0)).alias(
-                    f"{name}__not_i64"
-                ),
-                F.max(
-                    F.when(nn & c.try_cast("double").isNull(), 1).otherwise(0)
-                ).alias(f"{name}__not_f64"),
-                F.max(
-                    F.when(
-                        nn & ~F.lower(c).isin("true", "false"), 1
-                    ).otherwise(0)
-                ).alias(f"{name}__not_bool"),
-                F.max(F.when(nn, 1).otherwise(0)).alias(f"{name}__any"),
-            ]
-        )
-    row = sample.agg(*checks).collect()[0].asDict()
-
-    exprs = []
-    for name in df.columns:
-        if not row[f"{name}__any"]:
-            target = None  # all-null column stays string (unknown)
-        elif not row[f"{name}__not_i64"]:
-            target = "long"
-        elif not row[f"{name}__not_f64"]:
-            target = "double"
-        elif not row[f"{name}__not_bool"]:
-            target = "boolean"
-        else:
-            target = None
-        c = F.col(name)
-        exprs.append(c.try_cast(target).alias(name) if target else c)
-    return df.select(*exprs)
-
-
 def infer_csv_schemas_per_file(
-    spark: SparkSession,
-    paths: list[str],
-    opts: CsvOptions | None = None,
+    spark: SparkSession, paths: list[str], spec: RunSpec,
 ) -> dict[str, T.StructType]:
     """Per-file CSV schema inference in ONE Spark job for a group of
     files sharing a header.
@@ -184,22 +158,11 @@ def infer_csv_schemas_per_file(
     (infer_rows=0) mode; the sampled default uses driver-side prefix
     reads instead (infer_csv_schema_prefix).
     """
-    opts = opts or CsvOptions()
-    reader = (
-        spark.read.option("sep", opts.delimiter)
-        .option("quote", opts.quote)
-        .option("header", str(opts.headers).lower())
-        .option("encoding", _ENCODINGS.get(opts.encoding.lower(), opts.encoding))
-        .option("mode", "PERMISSIVE")
-        .option("multiLine", str(opts.multiline).lower())
-        .option("nullValue", opts.na_values[0] if opts.na_values else "")
-        .option("inferSchema", "false")
-    )
-    raw = reader.csv(list(paths))
-    raw = _apply_na_sentinels(raw, opts.na_values[1:])
+    # no schema: every column reads as string (inferSchema is off)
+    raw = read_input(spark.read, InputFormat.CSV, None, spec, list(paths))
     names = (
         raw.columns
-        if opts.headers
+        if spec.headers
         else [f"col_{i + 1}" for i in range(len(raw.columns))]
     )
 
@@ -295,13 +258,11 @@ def _read_prefix(path: str, max_bytes: int) -> bytes:
 
 
 def infer_csv_schema_prefix(
-    path: str,
-    opts: CsvOptions | None = None,
-    max_bytes: int = 8 << 20,
+    path: str, spec: RunSpec, max_bytes: int = 8 << 20,
 ) -> T.StructType:
     """Sampled per-file CSV inference, driver-side — the reference's
     ``--infer-rows`` contract (cli.rs:66-68: sample N rows, default
-    1000). Reads at most ``opts.infer_rows`` rows / ``max_bytes`` bytes
+    1000). Reads at most ``spec.infer_rows`` rows / ``max_bytes`` bytes
     of the file prefix with Python's csv module (quote/multiline-correct)
     and probes i64 -> f64 -> bool -> utf8 per column (csv_in.rs:171-232).
 
@@ -318,25 +279,21 @@ def infer_csv_schema_prefix(
     if _I64_RE is None:
         _I64_RE = re.compile(r"[+-]?\d+\Z")
 
-    opts = opts or CsvOptions()
-    enc = {"utf8": "utf-8-sig", "utf-8": "utf-8-sig", "latin1": "cp1252"}.get(
-        opts.encoding.lower(), opts.encoding
-    )
-    na = set(opts.na_values)
+    na = set(spec.na_values)
 
     blob = _read_prefix(path, max_bytes)
-    text = blob.decode(enc, errors="replace")
+    text = blob.decode(python_encoding(spec.encoding), errors="replace")
     # Drop a trailing partial line unless we read the whole file.
     if len(blob) == max_bytes and "\n" in text:
         text = text[: text.rfind("\n")]
 
     reader = _csv.reader(
-        io.StringIO(text), delimiter=opts.delimiter, quotechar=opts.quote
+        io.StringIO(text), delimiter=spec.delimiter, quotechar=spec.quote
     )
     first = next(reader, None)
     if first is None:
         return T.StructType()
-    if opts.headers:
+    if spec.headers:
         names = list(first)
         data_iter = reader
     else:
@@ -350,7 +307,7 @@ def infer_csv_schema_prefix(
 
     ncols = len(names)
     masks: list[int | None] = [None] * ncols
-    limit = opts.infer_rows if opts.infer_rows and opts.infer_rows > 0 else 10**9
+    limit = spec.infer_rows if spec.infer_rows and spec.infer_rows > 0 else 10**9
     seen = 0
     i64_min, i64_max = -(2**63), 2**63 - 1
     for row in data_iter:
@@ -378,50 +335,11 @@ def infer_csv_schema_prefix(
     )
 
 
-def read_parquet(
-    spark: SparkSession, paths: list[str] | str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Parquet scan (parquet_in.rs:13-44): Spark's vectorized reader with
-    row-group pruning and predicate pushdown for free. A ``schema``
-    skips the reader's schema inference (one Spark job reading a
-    footer); the caller vouches that it is the schema Spark would
-    infer."""
-    if isinstance(paths, str):
-        paths = [paths]
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*paths)
-
-
-def read_orc(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """ORC scan (extension): Spark's vectorized ORC reader — stripe
-    pruning and predicate pushdown, same free lunch as Parquet.
-
-    Unlike ``DataFrameReader.parquet(*paths)``, the ``orc`` reader's
-    signature is ``orc(path_or_list, mergeSchema=..., ...)`` — star-
-    expanding a path list binds extra paths to keyword slots (a
-    NumberFormatException deep in the JVM), so always pass the list."""
-    if isinstance(paths, str):
-        paths = [paths]
-    return spark.read.orc(paths)
-
-
-#: fixed schema of a raw-text scan — one Utf8 line per record
+#: fixed schema of a raw-text scan — one Utf8 line per record, so the
+#: column unifies with anything under the widening lattice. UTF-8 only:
+#: Spark's text source has no encoding option (ingest other charsets as
+#: single-column CSV with --encoding).
 TXT_SCHEMA = T.StructType([T.StructField("value", T.StringType(), True)])
-
-
-def read_text(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Raw line-per-record text scan (extension): training corpora
-    frequently arrive as plain ``.txt`` dumps. Fixed single-column
-    schema (``value: string``) — no inference needed, and the column
-    unifies with anything under the widening lattice. ``.gz``/``.bz2``
-    paths decompress transparently (Spark's text source, by extension).
-    UTF-8 only: the JVM text source has no encoding option; re-encode
-    exotic corpora upstream or ingest them as single-column CSV with
-    ``--encoding``."""
-    if isinstance(paths, str):
-        paths = [paths]
-    return spark.read.text(paths)
 
 
 # ---------------------------------------------------------------------------
@@ -448,11 +366,8 @@ def infer_jsonl_schema_prefix(
     missing from some records are simply nullable."""
     import json as _json
 
-    enc = {"utf8": "utf-8-sig", "utf-8": "utf-8-sig", "latin1": "cp1252"}.get(
-        encoding.lower(), encoding
-    )
     blob = _read_prefix(path, max_bytes)
-    text = blob.decode(enc, errors="replace")
+    text = blob.decode(python_encoding(encoding), errors="replace")
     if len(blob) == max_bytes and "\n" in text:
         text = text[: text.rfind("\n")]
 
@@ -518,38 +433,3 @@ def infer_jsonl_schema_prefix(
     return T.StructType(
         [T.StructField(k, _type_from_mask(masks[k]), True) for k in order]
     )
-
-
-def read_jsonl(
-    spark: SparkSession,
-    paths: list[str] | str,
-    schema: T.StructType | None = None,
-    encoding: str = "utf8",
-) -> DataFrame:
-    """Newline-delimited JSON scan. With an explicit schema (the engine
-    path), struct/array-valued fields declared StringType come back as
-    their literal JSON text — the Utf8 degrade the unified lattice
-    expects. PERMISSIVE mode pads missing keys / malformed records with
-    nulls, mirroring the CSV ragged-row contract."""
-    if isinstance(paths, str):
-        paths = [paths]
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("encoding", _ENCODINGS.get(encoding.lower(), encoding))
-    )
-    if schema is not None:
-        # NullType columns (key never had a value) can't be scanned.
-        read_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name,
-                    T.StringType()
-                    if isinstance(f.dataType, T.NullType)
-                    else f.dataType,
-                    f.nullable,
-                )
-                for f in schema.fields
-            ]
-        )
-        return reader.schema(read_schema).json(paths)
-    return reader.json(paths)

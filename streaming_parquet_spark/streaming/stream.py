@@ -15,6 +15,13 @@ The reference's operational machinery maps 1:1 onto Structured Streaming
   * progress/throughput metrics (src/progress.rs:6-61) ->
     ``StreamingQuery.lastProgress`` re-shaped into the same fields.
 
+The stream is the batch query run incrementally: its file sources open
+through the same ``sources.readers.read_input`` as ``Engine.dataframe``
+and its sink takes source name, codec, options and the text one-column
+guard from the batch sinks' ``SINK_FORMATS``, so a RunSpec writes the
+same output through either engine (``tests/test_streaming.py::
+test_stream_matches_batch``).
+
 Scale: the same topology runs unchanged on a 1000-executor cluster — the
 file source lists + assigns splits to executors, the parquet sink commits
 atomically per micro-batch, and a crashed driver resumes from the
@@ -30,15 +37,18 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
 from streaming_parquet_spark.engine import Engine
 from streaming_parquet_spark.plans.align import align_dataframe
 from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
-from streaming_parquet_spark.sources.discover import InputFormat
-from streaming_parquet_spark.sources.readers import _apply_na_sentinels
+from streaming_parquet_spark.sinks.writers import (
+    read_back,
+    sink_frame,
+    spec_sink_args,
+)
+from streaming_parquet_spark.sources.readers import read_input
 
 # Ceiling on the auto-sized trigger (concurrency * cores): bounds batch
 # latency and failure-replay granularity on large clusters while leaving
@@ -113,24 +123,9 @@ class _ProgressTally(StreamingQueryListener):
             time.sleep(0.05)
 
 
-def _readable_schema(schema: T.StructType) -> T.StructType:
-    """Scans can't materialize NullType (the probe result for valueless
-    columns) — read as string, values are null either way."""
-    return T.StructType(
-        [
-            T.StructField(
-                f.name,
-                T.StringType() if isinstance(f.dataType, T.NullType) else f.dataType,
-                f.nullable,
-            )
-            for f in schema.fields
-        ]
-    )
-
-
 class StreamEngine:
     """Run a RunSpec as a resumable stream: file source -> align/union ->
-    parquet (or csv) sink with checkpointing."""
+    file sink (any output format) with checkpointing."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -157,25 +152,6 @@ class StreamEngine:
 
         streams: list[DataFrame] = []
         for (fmt, _sjson), (paths, schema) in groups.items():
-            schema = _readable_schema(schema)
-            if fmt is InputFormat.PARQUET:
-                reader = self.spark.readStream.schema(schema).format("parquet")
-            elif fmt is InputFormat.ORC:
-                reader = self.spark.readStream.schema(schema).format("orc")
-            elif fmt is InputFormat.JSONL:
-                reader = self.spark.readStream.schema(schema).format("json")
-            elif fmt is InputFormat.TXT:
-                reader = self.spark.readStream.schema(schema).format("text")
-            else:
-                reader = (
-                    self.spark.readStream.schema(schema)
-                    .format("csv")
-                    .option("sep", spec.delimiter)
-                    .option("quote", spec.quote)
-                    .option("header", str(spec.headers).lower())
-                    .option("multiLine", str(spec.multiline).lower())
-                    .option("nullValue", spec.na_values[0] if spec.na_values else "")
-                )
             # Micro-batch sizing: the reference's --concurrency is
             # per-worker pipelining depth (bounded mpsc(8) per task,
             # src/pipeline.rs:76-193); on Spark every core is a worker,
@@ -196,7 +172,7 @@ class StreamEngine:
             # spec.trigger_files, when set, is the LITERAL per-trigger
             # bound — the reference's exact knob semantics, opt-in
             # (divergence documented in SURVEY §2 M7).
-            reader = reader.option(
+            reader = self.spark.readStream.option(
                 "maxFilesPerTrigger",
                 per_trigger_files(
                     spec, self.spark.sparkContext.defaultParallelism or 1
@@ -215,14 +191,8 @@ class StreamEngine:
                 pattern = os.path.join(
                     parent, "{" + ",".join(sorted(names)) + "}"
                 )
-                stream = reader.load(pattern)
-                if fmt is InputFormat.CSV:
-                    # Parity with the batch reader: Spark's nullValue
-                    # takes one sentinel; the rest null out post-read
-                    # (cli.rs:41-43). CSV only — ORC/JSONL carry typed
-                    # nulls natively.
-                    stream = _apply_na_sentinels(stream, spec.na_values[1:])
-                streams.append(stream)
+                # the file stream source needs the probed schema
+                streams.append(read_input(reader, fmt, schema, spec, pattern))
         return streams, unified
 
     def dataframe(self, spec: RunSpec) -> DataFrame:
@@ -242,20 +212,7 @@ class StreamEngine:
         if not os.path.exists(out_dir):
             return 0
         try:
-            if fmt == "parquet":
-                return self.spark.read.parquet(out_dir).count()
-            if fmt == "orc":
-                return self.spark.read.orc(out_dir).count()
-            if fmt == "jsonl":
-                return self.spark.read.json(out_dir).count()
-            if fmt == "text":
-                return self.spark.read.text(out_dir).count()
-            return (
-                self.spark.read.option("header", str(spec.headers).lower())
-                .option("sep", spec.delimiter)
-                .csv(out_dir)
-                .count()
-            )
+            return read_back(self.spark, fmt, spec, [out_dir]).count()
         except Exception:
             return 0
 
@@ -281,46 +238,17 @@ class StreamEngine:
 
         df = self.dataframe(spec)
         fmt = spec.resolve_out_format() if spec.out else "parquet"
-        # Engine out-formats don't map 1:1 onto Spark sink names
-        # (jsonl -> json); dispatch explicitly, same as the batch sinks.
-        sink_format = {"parquet": "parquet", "csv": "csv",
-                       "jsonl": "json", "orc": "orc", "text": "text"}.get(fmt)
-        if sink_format is None:
-            raise ValueError(f"unsupported streaming out format: {fmt}")
-        if fmt == "text":
-            # Spark's text sink takes exactly one string column — same
-            # loud contract (and embedded-newline guard) as the batch
-            # write_text sink.
-            if len(df.columns) != 1:
-                raise ValueError(
-                    f"text output requires exactly one column, got "
-                    f"{df.columns}; project with --columns or write "
-                    "CSV/JSONL instead"
-                )
-            from streaming_parquet_spark.sinks.writers import (
-                _text_value_column,
-            )
-
-            df = _text_value_column(df, df.columns[0])
+        # the batch sinks' format table: source name, codec, options and
+        # the text sink's one-column guard
+        df, source, opts = sink_frame(df, fmt, out_dir, **spec_sink_args(spec))
         writer = (
-            df.writeStream.format(sink_format)
+            df.writeStream.format(source)
+            .options(**opts)
             .option("path", out_dir)
             .option("checkpointLocation", checkpoint)
             .outputMode("append")
             .trigger(availableNow=True)
         )
-        if fmt == "parquet":
-            codec = {"none": "none", "snappy": "snappy", "gzip": "gzip",
-                     "zstd": "zstd"}.get(spec.compression.lower(), "snappy")
-            writer = writer.option("compression", codec)
-        elif fmt == "orc":
-            codec = {"none": "none", "snappy": "snappy", "gzip": "zlib",
-                     "zstd": "zstd"}.get(spec.compression.lower(), "none")
-            writer = writer.option("compression", codec)
-        elif fmt == "csv":
-            writer = writer.option("header", str(spec.headers).lower()).option(
-                "sep", spec.delimiter
-            )
 
         pre_total = self._sink_count(out_dir, fmt, spec) if spec.verify else 0
 

@@ -745,3 +745,23 @@ def test_partitioned_txt_output(spark, engine, tmp_path):
     assert langs == ["lang=de", "lang=en"]
     en = spark.read.text(_os.path.join(out, "lang=en")).collect()
     assert sorted(r["value"] for r in en) == ["hello", "world"]
+
+
+def test_codec_spelling_and_missing_out_dir(engine, tmp_path):
+    """--compression goes through the parquet codec table on every
+    parquet path, the columnar passthrough included (any spelling the
+    table knows), and a sink creates a missing output directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3]}), src)
+    res = engine.run(RunSpec(inputs=[src], out=str(tmp_path / "new" / "o.parquet"),
+                             compression="ZSTD"))
+    assert res.output.via == "columnar-passthrough"
+    meta = pq.ParquetFile(res.output.paths[0]).metadata
+    assert meta.row_group(0).column(0).compression == "ZSTD"
+    res = engine.run(RunSpec(inputs=[src], out=str(tmp_path / "other" / "o.csv")))
+    assert res.rows == 3
+    with open(res.output.paths[0]) as fh:
+        assert fh.read().split() == ["id", "1", "2", "3"]

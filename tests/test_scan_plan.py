@@ -17,8 +17,12 @@ import pytest
 
 from streaming_parquet_spark.engine import Engine, scan_partitions
 from streaming_parquet_spark.runspec import RunSpec
-from streaming_parquet_spark.sources.discover import DiscoveryConfig, discover_inputs
-from streaming_parquet_spark.sources.readers import read_parquet
+from streaming_parquet_spark.sources.discover import (
+    DiscoveryConfig,
+    InputFormat,
+    discover_inputs,
+)
+from streaming_parquet_spark.sources.readers import read_input
 
 MB = 1 << 20
 _TS = [dt.datetime(2024, 1, 1, h, 30) for h in (1, 2, 3)] + [None]
@@ -71,6 +75,11 @@ def _files(paths):
 
 def _collect(df):
     return sorted(map(tuple, df.collect()), key=repr)
+
+
+def read_parquet(spark, paths, schema):
+    """A parquet read group opened the way ``Engine.dataframe`` opens it."""
+    return read_input(spark.read, InputFormat.PARQUET, schema, RunSpec(), paths)
 
 
 def _assert_same(df, want):
@@ -311,3 +320,40 @@ def test_scan_partitions_matches_spark_file_scan(spark, tmp_path):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def _newest_job(spark) -> int:
+    """Id of the newest job in the status store (-1: none yet), after
+    draining the listener bus that feeds it."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_unsigned_probes_launch_no_jobs(engine, spark, tmp_path):
+    """Unsigned ints probe from the footer, mapped the way Spark's
+    parquet reader maps them (anywhere in the nesting), so
+    ``probe_schemas`` launches no Spark job for them and each probed
+    schema is the one Spark infers."""
+    tables = {
+        "small": pa.table({"a": pa.array([1, None], pa.uint8()),
+                           "b": pa.array([2, 3], pa.uint16())}),
+        "wide": pa.table({"c": pa.array([2**31 + 1, None], pa.uint32()),
+                          "d": pa.array([2**63 + 5, 1], pa.uint64())}),
+        "nested": pa.table({
+            "l": pa.array([[2**63 + 5], None], pa.list_(pa.uint64())),
+            "s": pa.array([{"x": 1}, None], pa.struct([("x", pa.uint8())])),
+            "m": pa.array([[("k", 7)], []], pa.map_(pa.string(), pa.uint32())),
+        }),
+    }
+    paths = []
+    for name, tbl in tables.items():
+        paths.append(str(tmp_path / f"{name}.parquet"))
+        pq.write_table(tbl, paths[-1])
+    files = _files(paths)
+    before = _newest_job(spark)
+    schemas = engine.probe_schemas(files, RunSpec(inputs=paths, out="unused.parquet"))
+    assert _newest_job(spark) == before
+    for f, schema in zip(files, schemas):
+        assert schema == spark.read.parquet(f.path).schema

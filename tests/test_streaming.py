@@ -1817,3 +1817,119 @@ def test_dedup_ingest_continuous_then_available_now(spark, tmp_path):
     }
     for suffix in ("", "_lsh_sets", "_lsh_bands"):
         spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+
+
+# Batch/stream agreement: one RunSpec through Engine.run and through
+# StreamEngine.run must leave the same output. Each case names what it
+# compares: the decoded rows, the first line of the written files, the
+# per-column-chunk codec, or the ValueError the run raises.
+_AGREEMENT_CASES = {
+    # cp1252 bytes decoded as latin1 (the reference's WINDOWS_1252)
+    "latin1_csv": ("in.csv", "name,v\ncaf\xe9,1\n".encode("cp1252"),
+                   dict(encoding="latin1"), "out.parquet", "rows"),
+    "parquet_uncompressed": ("in.csv", b"a,b\n1,x\n2,y\n",
+                             dict(compression="uncompressed"),
+                             "out.parquet", "codec"),
+    "orc_zlib": ("in.csv", b"a,b\n1,x\n2,y\n", dict(compression="zlib"),
+                 "out.orc", "codec"),
+    # the csv sink writes its synthetic header even under --no-headers
+    "csv_no_headers": ("in.csv", b"1,aa\n2,bb\n", dict(headers=False),
+                       "out.csv", "header"),
+    "unknown_codec": ("in.csv", b"a,b\n1,x\n", dict(compression="brotli"),
+                      "out.parquet", "error"),
+    # a quoted delimiter must be re-quoted with the spec's quote char
+    "csv_quote_char": ("in.csv", b"a,b\n'x,y',1\n", dict(quote="'"),
+                       "out.csv", "rows"),
+    "latin1_jsonl": ("in.jsonl", '{"name": "caf\xe9"}\n'.encode("cp1252"),
+                     dict(encoding="latin1"), "out.parquet", "rows"),
+}
+
+
+def _agreement_observe(spark, kind, out_dir, spec):
+    import glob
+
+    files = sorted(
+        p for p in glob.glob(os.path.join(out_dir, "**", "*"), recursive=True)
+        if os.path.isfile(p) and "_spark_metadata" not in p
+        and not os.path.basename(p).startswith((".", "_"))
+    )
+    assert files, f"no output under {out_dir}"
+    if kind == "codec":
+        if files[0].endswith(".orc"):
+            import pyarrow.orc as po
+
+            return {po.ORCFile(p).compression for p in files}
+        import pyarrow.parquet as pq
+
+        return {
+            pq.ParquetFile(p).metadata.row_group(g).column(c).compression
+            for p in files
+            for g in range(pq.ParquetFile(p).metadata.num_row_groups)
+            for c in range(pq.ParquetFile(p).metadata.num_columns)
+        }
+    if kind == "header":
+        with open(files[0], encoding="utf-8") as fh:
+            return fh.readline().rstrip("\n")
+    if files[0].endswith(".parquet"):
+        back = spark.read.parquet(*files)
+    else:
+        back = (spark.read.option("header", "true").option("quote", spec.quote)
+                .option("sep", spec.delimiter).csv(files))
+    return sorted(tuple(r) for r in back.collect())
+
+
+@pytest.mark.parametrize("case", sorted(_AGREEMENT_CASES))
+def test_stream_matches_batch(streamer, spark, tmp_path, case):
+    """The same RunSpec gives the same output through the batch engine
+    and the resumable stream engine: both look each format up in the
+    one reader table and the one sink table."""
+    from streaming_parquet_spark.engine import Engine
+
+    name, data, kwargs, out_name, kind = _AGREEMENT_CASES[case]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / name).write_bytes(data)
+
+    def observe(engine_run, leg):
+        out_dir = tmp_path / leg
+        out_dir.mkdir()
+        spec = RunSpec(inputs=[str(src)], out=str(out_dir / out_name),
+                       state=str(tmp_path / f"{leg}_ckpt"), **kwargs)
+        try:
+            engine_run(spec)
+        except ValueError as exc:
+            if kind == "error":
+                return str(exc)
+            raise
+        assert kind != "error", f"{leg} run raised nothing"
+        return _agreement_observe(spark, kind, str(out_dir), spec)
+
+    batch = observe(Engine(spark).run, "batch")
+    stream = observe(streamer.run, "stream")
+    assert stream == batch
+
+
+def test_stream_ingest_counts_reads_an_events_directory(spark, sf_dir, tmp_path):
+    """The streaming gates stage every data file of the events table,
+    so an ``events.parquet`` dataset directory lands the same rows as
+    the single file."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import streaming_parquet_spark.queries_tpch  # noqa: F401
+    from streaming_parquet_spark.queries import QUERIES
+
+    split = tmp_path / "sf"
+    shutil.copytree(sf_dir, split)
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    os.remove(split / "events.parquet")
+    (split / "events.parquet").mkdir()
+    half = events.num_rows // 2
+    pq.write_table(events.slice(0, half), split / "events.parquet" / "part-0000.parquet")
+    pq.write_table(events.slice(half), split / "events.parquet" / "part-0001.parquet")
+
+    def counts(d):
+        return sorted(map(tuple, QUERIES["stream_ingest_counts"](spark, d).collect()))
+
+    assert counts(str(split)) == counts(sf_dir)
