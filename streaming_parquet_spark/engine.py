@@ -382,13 +382,18 @@ class Engine:
         """The probed ``schema`` of a parquet or ORC read group when it
         is the schema Spark's reader would infer for it, else None
         (infer it): every file has a parquet footer probe, no Arrow
-        field is ``_spark_hostile``, and every field's Spark type is in
-        ``_READ_TYPES``."""
+        field is ``_spark_hostile`` once unsigned ints take the types
+        Spark reads them as (``_as_spark_reads``), and every field's
+        Spark type is in ``_READ_TYPES`` (uint64's decimal is not, so
+        it still infers). The passthrough gate keeps the raw test: a
+        transcode would write an unsigned column unsigned."""
         if any(type(fld.dataType) not in _READ_TYPES for fld in schema.fields):
             return None
         for p in paths:
             probe = self._arrow_probe.get(p)
-            if probe is None or any(_spark_hostile(fld.type) for fld in probe[0]):
+            if probe is None or any(
+                _spark_hostile(_as_spark_reads(fld.type)) for fld in probe[0]
+            ):
                 return None
         return schema
 

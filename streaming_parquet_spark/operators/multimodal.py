@@ -2151,8 +2151,12 @@ def payload_ingest_stream(
 
     from streaming_parquet_spark.operators.pipeline import (
         ManifestAbsent,
-        _refuse_continuous_cold_start,
         _refuse_retired,
+    )
+    from streaming_parquet_spark.sources.readers import error_condition
+    from streaming_parquet_spark.streaming.stream import (
+        parquet_file_stream,
+        run_stream,
     )
 
     # refuse a retired store at run START (even a no-op resume): same
@@ -2161,24 +2165,11 @@ def payload_ingest_stream(
     # marker_store: probe through the same plane the catalog writes.
     _refuse_retired(store_path, "payload_ingest_stream", marker_store)
     result = PayloadIngestResult()
-    try:
-        schema = (
-            spark.read.option("pathGlobFilter", "*.parquet")
-            .parquet(source_dir)
-            .schema
-        )
-    except AnalysisException as exc:
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if not (
-            "UNABLE_TO_INFER_SCHEMA" in marker
-            or "PATH_NOT_FOUND" in marker
-        ):
-            raise
-        _refuse_continuous_cold_start(
-            trigger_interval, source_dir, "payload_ingest_stream"
-        )
+    stream = parquet_file_stream(
+        spark, source_dir, "payload_ingest_stream",
+        max_files_per_trigger, trigger_interval,
+    )
+    if stream is None:
         return result  # cold start: nothing delivered yet
 
     # ONE store probe per run, at CALL time (r14 advisory killed the
@@ -2234,11 +2225,7 @@ def payload_ingest_stream(
                         marker_store=marker_store,
                     )
                 except AnalysisException as exc:
-                    wmarker = (
-                        getattr(exc, "getCondition", exc.getErrorClass)()
-                        or ""
-                    ) + " " + str(exc)
-                    if "ALREADY_EXISTS" not in wmarker:
+                    if "ALREADY_EXISTS" not in error_condition(exc):
                         raise
                     # bootstrap crashed between its data and sidecar
                     # legs on a previous run — repair, don't wedge
@@ -2261,23 +2248,11 @@ def payload_ingest_stream(
                 int(r["n_payloads"]) for r in man.collect()
             )
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(source_dir)
     writer = (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
     )
-    if trigger_interval is None:
-        writer.trigger(availableNow=True).start().awaitTermination()
-    else:
-        result.query = writer.trigger(
-            processingTime=str(trigger_interval)
-        ).start()
+    query = run_stream(writer, trigger_interval)
+    if trigger_interval is not None:
+        result.query = query
     return result

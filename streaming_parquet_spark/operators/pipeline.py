@@ -27,6 +27,10 @@ from streaming_parquet_spark.functions.portable import (
     hash_bucket_expr,
     round_to_col,
 )
+from streaming_parquet_spark.sources.readers import (
+    error_condition,
+    read_parquet_or_none,
+)
 from streaming_parquet_spark.staging import stage
 
 
@@ -1339,8 +1343,8 @@ def verify_shards(
     failure) RAISES from the scan.  The previous per-shard driver
     loop's catch-all reported both as "missing, 0 docs", hiding
     corruption behind the absence answer; only the narrow
-    empty/missing-path classes are caught now (the same two
-    ``streaming.ingest`` treats as a cold start).  A shard present on
+    empty/missing-path classes are caught now
+    (``sources.readers.read_parquet_or_none``).  A shard present on
     disk but absent from the manifest also surfaces (promised nulls
     -> 0, ok = false): stray data is an integrity failure too.
 
@@ -1356,8 +1360,6 @@ def verify_shards(
     copying it.  ``shard_type``: the shard key's SQL type (int for
     hash-planned doc shards; the token shards' part key is a string
     column)."""
-    from pyspark.errors import AnalysisException
-
     # the whole point is verifying files that may have JUST been
     # (re)written — drop any cached listing for the path first, or a
     # prior read of the same location serves stale file names
@@ -1376,21 +1378,10 @@ def verify_shards(
         f"shard {shard_type}, n_docs_observed bigint,"
         " fp_a_observed bigint, fp_b_observed bigint"
     )
-    try:
-        scanned = spark.read.parquet(path)
-    except AnalysisException as exc:
+    scanned = read_parquet_or_none(spark.read, path)
+    if scanned is None:
         # an entirely absent / empty output root: every shard is
-        # missing, which the join below reports per row.  Anything
-        # else (permissions, a file where a dir was expected) must
-        # surface — same narrow classes as streaming.ingest's
-        # cold-start guard.
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if not (
-            "UNABLE_TO_INFER_SCHEMA" in marker or "PATH_NOT_FOUND" in marker
-        ):
-            raise
+        # missing, which the join below reports per row
         observed = spark.createDataFrame([], obs_schema)
     else:
         if prepare is not None:
@@ -1748,9 +1739,7 @@ def _manifest_frame(spark, path: str, caller: str) -> DataFrame:
     try:
         return spark.read.parquet(mpath)
     except AnalysisException as exc:
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
+        marker = error_condition(exc)
         if "PATH_NOT_FOUND" in marker:
             raise ManifestAbsent(
                 f"{caller}: {path!r} has no _manifest sidecar "
@@ -2766,28 +2755,6 @@ def _mint_reader_state(identity: dict, cursor) -> dict:
     )
     state["cursor"] = cursor
     return state
-
-
-def _refuse_continuous_cold_start(
-    trigger_interval, source_dir: str, caller: str
-) -> None:
-    """Shared refusal for the three ingest loops' continuous mode
-    (``trigger_interval=``) against an empty/absent source: a file
-    stream needs an inferable schema to START, so a service launched
-    before the first delivery would return ``query=None`` and never
-    ingest anything — a silent permanent no-op.  availableNow keeps
-    its clean cold-start return (zero batches IS the right answer for
-    drain-and-stop).  One definition so the rule cannot drift between
-    the loops (r15 review pass 2); call it from the cold-start branch
-    of the schema probe."""
-    if trigger_interval is not None:
-        raise ValueError(
-            f"{caller}: continuous mode (trigger_interval=) needs an "
-            f"inferable source schema, but {source_dir!r} is empty or "
-            f"absent — deliver the first files (or start availableNow, "
-            f"which treats this as a clean cold start) and launch the "
-            f"service then"
-        )
 
 
 def _check_payload_pin(payload_store, state, with_state,

@@ -115,7 +115,14 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ; cast that to the session-TZ type so every downstream
     window/interval op and the UTC DuckDB oracle agree on values."""
     _read_nanos_as_long(spark, os.path.join(sf_dir, "events.parquet"))
-    df = _t(spark, sf_dir, "events")
+    return _normalize_ts(_t(spark, sf_dir, "events"))
+
+
+def _normalize_ts(df: DataFrame) -> DataFrame:
+    """``df`` (a batch or streaming read of the events table) with
+    ``ts`` as a session-TZ TIMESTAMP: longs read under the nanos rule
+    floor-convert to microseconds, TIMESTAMP_NTZ casts, and a
+    TIMESTAMP column is left as it is."""
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -22,9 +22,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from streaming_parquet_spark.functions.portable import round_to_col
-from pyspark.sql import types as T
 
-from streaming_parquet_spark.queries import _read_nanos_as_long, _t, query
+from streaming_parquet_spark.queries import (
+    _normalize_ts,
+    _read_nanos_as_long,
+    _t,
+    query,
+)
 
 
 def _ts(s: str) -> F.Column:
@@ -846,16 +850,19 @@ def _stream_workdir(prefix: str, sf_dir: str) -> str:
     return work
 
 
-def _stage_events(sf_dir: str, work: str) -> tuple[str, str]:
-    """Give a file-stream source a directory of its own holding the
-    events table: ``<work>/src`` gets a hard link (a copy across
-    filesystems) of every data file of ``<sf_dir>/events.parquet``, a
-    single file or a dataset directory. Files staged by an earlier
-    invocation stay, so a rerun resumes. Returns (the table's path,
-    the staged directory)."""
+def _events_stream(
+    spark: SparkSession, sf_dir: str, work: str, caller: str
+) -> DataFrame:
+    """A file stream over the events table, read under ``_events``'
+    nanos rule from a directory of its own: ``<work>/src`` gets a hard
+    link (a copy across filesystems) of every data file of
+    ``<sf_dir>/events.parquet``, a single file or a dataset directory.
+    Files staged by an earlier invocation stay, so a rerun resumes."""
     import shutil as _shutil
 
     import pyarrow.dataset as ds
+
+    from streaming_parquet_spark.streaming.stream import parquet_file_stream
 
     src = os.path.join(sf_dir, "events.parquet")
     src_dir = os.path.join(work, "src")
@@ -874,7 +881,76 @@ def _stage_events(sf_dir: str, work: str) -> tuple[str, str]:
                 os.link(path, staged)
             except OSError:
                 _shutil.copy(path, staged)
-    return src, src_dir
+    _read_nanos_as_long(spark, src)
+    return parquet_file_stream(spark, src_dir, caller)
+
+
+def _batch_stream(
+    spark: SparkSession, work: str, frames: list[DataFrame]
+) -> DataFrame:
+    """A file stream that replays ``frames`` one micro-batch each, in
+    order: frame i lands as the single file ``<work>/src/batch<i>.parquet``
+    with an mtime i minutes past a fixed epoch, and the source admits
+    one file per trigger, oldest first. Files staged by an earlier
+    invocation stay (the Spark writes are skipped), so a rerun resumes
+    its checkpoint."""
+    import shutil as _shutil
+
+    src_dir = os.path.join(work, "src")
+    os.makedirs(src_dir, exist_ok=True)
+    if not os.path.exists(os.path.join(src_dir, f"batch{len(frames) - 1}.parquet")):
+        base = 1_700_000_000  # fixed past epoch; only ordering matters
+        for i, df in enumerate(frames):
+            stage = os.path.join(work, f"stage{i}")
+            df.coalesce(1).write.mode("overwrite").parquet(stage)
+            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+            dst = os.path.join(src_dir, f"batch{i}.parquet")
+            _shutil.copy(os.path.join(stage, part), dst)
+            os.utime(dst, (base + i * 60, base + i * 60))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
+def _drain(spark: SparkSession, writer, work: str) -> None:
+    """Run the streaming ``writer`` under ``availableNow`` with its
+    checkpoint at ``<work>/ckpt``: a rerun over the same ``work``
+    resumes it, and a drain still running after 300 s stops and raises
+    ``TimeoutError`` instead of leaving a partial sink behind.
+
+    The stream runs with 8 shuffle partitions: a state store
+    instantiates one provider per shuffle partition per micro-batch,
+    so at gate volume the session's width is pure commit-log overhead
+    (~100 state dirs for 200k rows at 32). The width is baked into the
+    checkpoint at first start, so a resume sees the same; a stream
+    without a shuffle ignores it."""
+    from streaming_parquet_spark.streaming.stream import run_stream
+
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        run_stream(
+            writer.option("checkpointLocation", os.path.join(work, "ckpt")),
+            timeout_sec=300,
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+def _land(frame: DataFrame, work: str) -> DataFrame:
+    """Drain the streaming ``frame`` into the parquet sink
+    ``<work>/landed`` (``_drain``) and read back what landed."""
+    spark = frame.sparkSession
+    out_dir = os.path.join(work, "landed")
+    _drain(
+        spark,
+        frame.writeStream.format("parquet").option("path", out_dir)
+        .outputMode("append"),
+        work,
+    )
+    return spark.read.parquet(out_dir)
 
 
 @query(
@@ -895,35 +971,12 @@ def stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle. Proves the streaming path loses/duplicates nothing.
     Scale: file-stream source with maxFilesPerTrigger batches a 100 TB
     backlog incrementally; the sink commit log makes reruns exactly-once."""
-    import os as _os
-
     # Deterministic workdir: a re-invocation resumes the checkpointed
     # stream (exactly-once rerun) instead of re-staging; cleanup is
     # registered once at interpreter exit by _stream_workdir.
     work = _stream_workdir("maw_stream_q_", sf_dir)
-    src, src_dir = _stage_events(sf_dir, work)
-
-    _read_nanos_as_long(spark, src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    out_dir = _os.path.join(work, "landed")
-    (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", _os.path.join(work, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    landed = spark.read.parquet(out_dir)
-    ts_type = landed.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):  # legacy nanos-as-long fixture
-        landed = landed.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        landed = landed.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _events_stream(spark, sf_dir, work, "stream_ingest_counts")
+    landed = _normalize_ts(_land(stream, work))
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("first_ts"),
@@ -1002,70 +1055,26 @@ def stream_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: dropDuplicatesWithinWatermark state is bounded by the
     watermark horizon (streaming/operators.py:streaming_dedup); the
     file-stream source batches any backlog via maxFilesPerTrigger."""
-    import os as _os
-    import shutil as _shutil
-
     from streaming_parquet_spark.queries import _events
 
     # Deterministic workdir: a re-invocation skips batch staging (three
     # Spark write jobs) and resumes the checkpointed stream; cleanup is
     # registered once at interpreter exit by _stream_workdir.
     work = _stream_workdir("maw_stream_late_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-
     e = _events(spark, sf_dir).select("event_id", "ts", "event_type")
-    if not _os.path.exists(_os.path.join(src_dir, "batch2.parquet")):
-        t1, t2 = _ts("2024-01-05"), _ts("2024-01-05 12:00:00")
-        b1 = e.filter(F.col("ts") < t1)
-        retries = (
-            b1.filter(F.col("event_id") % 5 == 0)
-            .withColumn("ts", F.col("ts") + F.expr("INTERVAL 36 HOURS"))
-        )
-        b2 = e.filter((F.col("ts") >= t1) & (F.col("ts") < t2))
-        b3 = e.filter(F.col("ts") >= t2).unionByName(retries)
-
-        base = 1_700_000_000  # fixed past epoch; only ordering matters
-        for i, df in enumerate((b1, b2, b3)):
-            stage = _os.path.join(work, f"stage{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in _os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(src_dir, f"batch{i}.parquet")
-            _shutil.copy(_os.path.join(stage, part), dst)
-            _os.utime(dst, (base + i * 60, base + i * 60))
-
-    schema = e.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    t1, t2 = _ts("2024-01-05"), _ts("2024-01-05 12:00:00")
+    b1 = e.filter(F.col("ts") < t1)
+    retries = (
+        b1.filter(F.col("event_id") % 5 == 0)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 36 HOURS"))
     )
+    b2 = e.filter((F.col("ts") >= t1) & (F.col("ts") < t2))
+    b3 = e.filter(F.col("ts") >= t2).unionByName(retries)
+    stream = _batch_stream(spark, work, [b1, b2, b3])
     deduped = stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out_dir = _os.path.join(work, "landed")
-    # The dedup state store instantiates one provider per shuffle
-    # partition per micro-batch; at gate volume 32 partitions are pure
-    # commit-log overhead (~100 state dirs for 200k rows). Pin the
-    # stream's state partitioning to 8 — baked into the checkpoint at
-    # first start, so the narrower width is also what a resume sees.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    landed = spark.read.parquet(out_dir)
+    landed = _land(deduped, work)
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("event_id").alias("n_keys"),
@@ -1678,30 +1687,12 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds ~(watermark + interval) of stream volume instead of the full
     history. Money aggregates as integer cents — exact under any
     partitioning. See streaming.operators.interval_join."""
-    import os as _os
-
     from streaming_parquet_spark.streaming.operators import interval_join
 
     work = _stream_workdir("maw_stream_ij_", sf_dir)
-    src, src_dir = _stage_events(sf_dir, work)
-
-    # the fixture schema is read under _events' nanos rule; the if/elif
-    # below replays the same ts normalization on the stream itself
-    _read_nanos_as_long(spark, src)
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).parquet(src_dir)
+    stream = _normalize_ts(
+        _events_stream(spark, sf_dir, work, "stream_interval_join")
     )
-    from pyspark.sql import types as T
-
-    if isinstance(stream.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(stream.schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
     clicks = stream.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("cts")
     )
@@ -1714,23 +1705,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks, purch, key="user_id", left_ts="cts", right_ts="pts",
         upper="1 HOUR", watermark="1 hour",
     )
-
-    out_dir = _os.path.join(work, "landed")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    landed = spark.read.parquet(out_dir)
+    landed = _land(joined, work)
     return landed.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum("cents").cast("bigint").alias("sum_cents"),
@@ -1781,57 +1756,18 @@ def stream_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     session — emission is watermark-independent by design (NoTimeout),
     so the equivalence is exact. See
     streaming.operators.stateful_sessions."""
-    import os as _os
-    import shutil as _shutil
-
     from streaming_parquet_spark.queries import _events
     from streaming_parquet_spark.streaming.operators import (
         stateful_sessions,
     )
 
     work = _stream_workdir("maw_stream_sess_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-
     e = _events(spark, sf_dir).select("user_id", "ts", "value")
-    if not _os.path.exists(_os.path.join(src_dir, "batch1.parquet")):
-        t1 = _ts("2024-01-16")
-        base = 1_700_000_000
-        for i, df in enumerate(
-            (e.filter(F.col("ts") < t1), e.filter(F.col("ts") >= t1))
-        ):
-            stage = _os.path.join(work, f"stage{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in _os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(src_dir, f"batch{i}.parquet")
-            _shutil.copy(_os.path.join(stage, part), dst)
-            _os.utime(dst, (base + i * 60, base + i * 60))
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    t1 = _ts("2024-01-16")
+    stream = _batch_stream(
+        spark, work, [e.filter(F.col("ts") < t1), e.filter(F.col("ts") >= t1)]
     )
-    sessions = stateful_sessions(stream, gap_hours=24)
-
-    out_dir = _os.path.join(work, "landed")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    landed = spark.read.parquet(out_dir)
+    landed = _land(stateful_sessions(stream, gap_hours=24), work)
     return landed.select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
@@ -1878,35 +1814,13 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is bounded by (watermark / window) x |keys| live
     windows; the append sink emits each window exactly once."""
-    import os as _os
-    import shutil as _shutil
-
     from streaming_parquet_spark.queries import _events
 
     work = _stream_workdir("maw_stream_win_", sf_dir)
-    src_dir = _os.path.join(work, "src")
-    _os.makedirs(src_dir, exist_ok=True)
-
     e = _events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    if not _os.path.exists(_os.path.join(src_dir, "batch1.parquet")):
-        t1 = _ts("2024-01-16")
-        base = 1_700_000_000
-        for i, df in enumerate(
-            (e.filter(F.col("ts") < t1), e.filter(F.col("ts") >= t1))
-        ):
-            stage = _os.path.join(work, f"stage{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in _os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(src_dir, f"batch{i}.parquet")
-            _shutil.copy(_os.path.join(stage, part), dst)
-            _os.utime(dst, (base + i * 60, base + i * 60))
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    t1 = _ts("2024-01-16")
+    stream = _batch_stream(
+        spark, work, [e.filter(F.col("ts") < t1), e.filter(F.col("ts") >= t1)]
     )
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -1916,22 +1830,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_to_col(F.sum("value"), 2).alias("total_value"),
         )
     )
-    out_dir = _os.path.join(work, "landed")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    landed = spark.read.parquet(out_dir)
+    landed = _land(agg, work)
     return landed.select(
         F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
@@ -1959,26 +1858,10 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming's documented stream-static semantics); the
     enriched rows land in the sink and aggregate batch-side. Money as
     integer cents."""
-    import os as _os
-
-    from streaming_parquet_spark.queries import _events
-
     work = _stream_workdir("maw_stream_dim_", sf_dir)
-    src, src_dir = _stage_events(sf_dir, work)
-
-    e = _events(spark, sf_dir)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src_dir)
-    from pyspark.sql import types as T
-
-    if isinstance(stream.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(stream.schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
+    stream = _normalize_ts(
+        _events_stream(spark, sf_dir, work, "stream_static_join")
+    )
     dim = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     enriched = (
         stream.withColumn("cents", F.floor(F.col("value") * 100).cast("long"))
@@ -1986,17 +1869,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dim), F.col("nk") == F.col("n_nationkey"))
         .select("n_name", "cents")
     )
-    out_dir = _os.path.join(work, "landed")
-    (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", _os.path.join(work, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    landed = spark.read.parquet(out_dir)
+    landed = _land(enriched, work)
     return landed.groupBy("n_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum("cents").cast("bigint").alias("sum_cents"),
@@ -2040,32 +1913,17 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_parquet_spark.queries import _events
 
     work = _stream_workdir("maw_stream_ups_", sf_dir)
-    src_dir = _os.path.join(work, "src")
     table_root = _os.path.join(work, "table")
-    _os.makedirs(src_dir, exist_ok=True)
     _os.makedirs(table_root, exist_ok=True)
 
     e = _events(spark, sf_dir).select(
         "user_id", "event_type", "ts", "event_id",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    if not _os.path.exists(_os.path.join(src_dir, "half1.parquet")):
-        import shutil as _shutil
-
-        mid = _ts("2024-01-16")
-        base = 1_700_000_000
-        for i, df in enumerate(
-            (e.filter(F.col("ts") < mid), e.filter(F.col("ts") >= mid))
-        ):
-            stage = _os.path.join(work, f"stage{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in _os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(src_dir, f"half{i}.parquet")
-            _shutil.copy(_os.path.join(stage, part), dst)
-            _os.utime(dst, (base + i * 60, base + i * 60))
-
+    mid = _ts("2024-01-16")
+    stream = _batch_stream(
+        spark, work, [e.filter(F.col("ts") < mid), e.filter(F.col("ts") >= mid)]
+    )
     keys = ["user_id", "event_type"]
 
     def _versions() -> list[int]:
@@ -2096,24 +1954,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(table_root, f"v_{epoch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(300)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
+    _drain(spark, stream.writeStream.foreachBatch(merge), work)
     latest = spark.read.parquet(
         _os.path.join(table_root, f"v_{_versions()[-1]}")
     )

@@ -122,6 +122,30 @@ def read_input(
     return df
 
 
+def error_condition(exc) -> str:
+    """A Spark error's condition name followed by its message: the
+    text to test for a condition such as ``PATH_NOT_FOUND`` (the
+    message keeps the name where the condition field is empty)."""
+    return (getattr(exc, "getCondition", exc.getErrorClass)() or "") + " " + str(exc)
+
+
+def read_parquet_or_none(reader, *paths: str) -> DataFrame | None:
+    """``reader.parquet(*paths)``, or None when there is nothing to
+    read: a path that does not exist (``PATH_NOT_FOUND``) or holds no
+    parquet (``UNABLE_TO_INFER_SCHEMA``). Every other analysis error
+    (permissions, a corrupt footer, a file where a directory belongs)
+    raises."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return reader.parquet(*paths)
+    except AnalysisException as exc:
+        cond = error_condition(exc)
+        if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
+            return None
+        raise
+
+
 def _apply_na_sentinels(df: DataFrame, extra_na: tuple[str, ...]) -> DataFrame:
     """Null out remaining NA sentinels on string columns (cli.rs:41-43)."""
     if not extra_na:

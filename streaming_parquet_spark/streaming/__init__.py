@@ -1,7 +1,10 @@
 """Structured Streaming path: resumable file-source -> Parquet-sink runs
 (the project north star: 'Structured Streaming + Parquet sink'), plus
 streaming operators (watermarked windows, session windows, streaming
-dedup) and the deduplicated-ingest loop (streaming.ingest)."""
+dedup) and the exactly-once producer loops (streaming.ingest,
+streaming.shards). Every stream opens its parquet file source through
+``stream.parquet_file_stream`` and starts its query through
+``stream.run_stream``."""
 
 from streaming_parquet_spark.streaming.ingest import (
     IngestResult,

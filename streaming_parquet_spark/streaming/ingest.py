@@ -85,6 +85,10 @@ from streaming_parquet_spark.operators.similarity import (
     similarity_pairs,
 )
 from streaming_parquet_spark.staging import scope, stage
+from streaming_parquet_spark.streaming.stream import (
+    parquet_file_stream,
+    run_stream,
+)
 
 
 @dataclass
@@ -245,38 +249,13 @@ def _run_ingest(
     fingerprint + optional drift — see :func:`_append_monitor_row`);
     replayed batches have empty deltas and log nothing, so monitor
     rows inherit the loop's exactly-once property."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        # same glob as the stream below: a README or writer temp file
-        # beside the data must not fail the schema probe
-        schema = (
-            spark.read.option("pathGlobFilter", "*.parquet")
-            .parquet(source_dir)
-            .schema
-        )
-    except AnalysisException as exc:
-        # an empty / not-yet-populated source: zero batches is the
-        # correct cold-start answer, not an inference error — the
-        # producer may simply not have delivered yet. Anything other
-        # than empty/missing (permissions, corrupt footers, a typo'd
-        # path raising a different class) must still surface.
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if not (
-            "UNABLE_TO_INFER_SCHEMA" in marker or "PATH_NOT_FOUND" in marker
-        ):
-            raise
-        from streaming_parquet_spark.operators.pipeline import (
-            _refuse_continuous_cold_start,
-        )
-
-        _refuse_continuous_cold_start(
-            trigger_interval, source_dir, f"ingest loop for {table!r}"
-        )
-        return IngestResult()
+    stream = parquet_file_stream(
+        spark, source_dir, f"ingest loop for {table!r}",
+        max_files_per_trigger, trigger_interval,
+    )
     result = IngestResult()
+    if stream is None:  # cold start: nothing delivered yet
+        return result
 
     def process(batch: DataFrame, batch_id: int) -> None:
         bspark = batch.sparkSession
@@ -367,29 +346,19 @@ def _run_ingest(
             result.rows_filtered += n_filtered_batch
             result.rows_kept += n
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
     writer = (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
     )
+    query = run_stream(writer, trigger_interval)
     if trigger_interval is not None:
         # the M1 continuous shape: the loop keeps draining new files
         # every interval until the caller stops the returned query.
         # The caller owns the post-stop table refresh below (the run
         # has not ended when we return) — refresh_ingest_tables(...)
         # packages it.
-        result.query = writer.trigger(
-            processingTime=str(trigger_interval)
-        ).start()
+        result.query = query
         return result
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
     # foreachBatch runs in a CLONED SparkSession; its appends refresh
     # the clone's table-relation cache, not the caller's. Without this
     # refresh the caller's next spark.table() serves a STALE file

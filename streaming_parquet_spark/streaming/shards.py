@@ -82,7 +82,12 @@ from streaming_parquet_spark.operators.pipeline import (
     pack_token_windows,
     token_shard_manifest,
 )
+from streaming_parquet_spark.sources.readers import read_parquet_or_none
 from streaming_parquet_spark.staging import scope, stage
+from streaming_parquet_spark.streaming.stream import (
+    parquet_file_stream,
+    run_stream,
+)
 
 #: Contract column names the streaming producer writes under — fixed
 #: (the wave derives them), unlike write_token_shards' free choice.
@@ -115,17 +120,11 @@ def _try_contract(bspark: SparkSession, path: str):
     """(sidecar, contract) when ``path`` has a readable ``_manifest``,
     None when the sidecar is absent (first write, or the data-no-
     sidecar crash window); every other failure propagates."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        sidecar = bspark.read.parquet(os.path.join(path, "_manifest"))
-    except AnalysisException as exc:
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if "PATH_NOT_FOUND" in marker or "UNABLE_TO_INFER_SCHEMA" in marker:
-            return None
-        raise
+    sidecar = read_parquet_or_none(
+        bspark.read, os.path.join(path, "_manifest")
+    )
+    if sidecar is None:
+        return None
     return sidecar, _single_contract(
         sidecar, repr(path), "shard_ingest_stream"
     )
@@ -148,8 +147,6 @@ def _disk_wave_manifest(
     silently double the wave.  If the escaping helper ever moves,
     the fallback is the escaping-agnostic whole-set scan + column
     filter — correct, just O(total shards) in listing."""
-    from pyspark.errors import AnalysisException
-
     jvm = bspark._jvm
     try:
         esc = (
@@ -159,33 +156,29 @@ def _disk_wave_manifest(
         dirnames = [f"{_SHARD}={esc(k)}" for k in keys]
     except Exception:
         dirnames = None
-    try:
-        if dirnames is None:
-            # fallback: full-set scan, prune on the shard COLUMN
-            scanned = bspark.read.parquet(path).where(
-                F.col(_SHARD).isin(keys)
-            )
-        else:
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(bspark._jsc.hadoopConfiguration())
-            dirs = [
-                f"{path}/{d}"
-                for d in dirnames
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"))
-            ]
-            if not dirs:
-                return {}
-            scanned = bspark.read.option("basePath", path).parquet(*dirs)
-        got = token_shard_manifest(
-            scanned, _SHARD, _WIN, _IDS, _NTOK, _STARTS
-        ).collect()
-    except AnalysisException as exc:
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if "PATH_NOT_FOUND" in marker or "UNABLE_TO_INFER_SCHEMA" in marker:
+    if dirnames is None:
+        # fallback: full-set scan, prune on the shard COLUMN
+        scanned = read_parquet_or_none(bspark.read, path)
+        if scanned is not None:
+            scanned = scanned.where(F.col(_SHARD).isin(keys))
+    else:
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(bspark._jsc.hadoopConfiguration())
+        dirs = [
+            f"{path}/{d}"
+            for d in dirnames
+            if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"))
+        ]
+        if not dirs:
             return {}
-        raise
+        scanned = read_parquet_or_none(
+            bspark.read.option("basePath", path), *dirs
+        )
+    if scanned is None:
+        return {}
+    got = token_shard_manifest(
+        scanned, _SHARD, _WIN, _IDS, _NTOK, _STARTS
+    ).collect()
     return {
         r["shard"]: (r["n_windows"], r["n_tokens"], r["fp_a"], r["fp_b"])
         for r in got
@@ -282,8 +275,6 @@ def shard_ingest_stream(
     anything writes.  Labels are deliberately NOT stored: recompute
     ``with_causal_labels`` at read time (one stateless array
     transform) instead of shipping a second budget-wide column."""
-    from pyspark.errors import AnalysisException
-
     from streaming_parquet_spark.operators.pipeline import (
         _refuse_retired,
     )
@@ -292,31 +283,11 @@ def shard_ingest_stream(
     # a producer pointed at a retired set is misconfigured and must
     # hear it now, not on whichever future trigger first has data)
     _refuse_retired(shards_path, "shard_ingest_stream", marker_store)
-    try:
-        # same glob as the stream below: a README or writer temp file
-        # beside the data must not fail the schema probe
-        schema = (
-            spark.read.option("pathGlobFilter", "*.parquet")
-            .parquet(source_dir)
-            .schema
-        )
-    except AnalysisException as exc:
-        # cold start: an empty / not-yet-delivered source means zero
-        # batches, same stance as the ingest loops
-        marker = (
-            getattr(exc, "getCondition", exc.getErrorClass)() or ""
-        ) + " " + str(exc)
-        if not (
-            "UNABLE_TO_INFER_SCHEMA" in marker or "PATH_NOT_FOUND" in marker
-        ):
-            raise
-        from streaming_parquet_spark.operators.pipeline import (
-            _refuse_continuous_cold_start,
-        )
-
-        _refuse_continuous_cold_start(
-            trigger_interval, source_dir, "shard_ingest_stream"
-        )
+    stream = parquet_file_stream(
+        spark, source_dir, "shard_ingest_stream",
+        max_files_per_trigger, trigger_interval,
+    )
+    if stream is None:  # cold start: nothing delivered yet
         return ShardIngestResult()
     if part_col in (_SHARD, _WIN, _IDS, _NTOK, _STARTS):
         raise ValueError(
@@ -543,25 +514,13 @@ def shard_ingest_stream(
             )
             done(n_in)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = reader.parquet(source_dir)
     writer = (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
     )
+    query = run_stream(writer, trigger_interval)
     if trigger_interval is not None:
-        result.query = writer.trigger(
-            processingTime=str(trigger_interval)
-        ).start()
-        return result
-    writer.trigger(availableNow=True).start().awaitTermination()
+        result.query = query
     return result
 
 

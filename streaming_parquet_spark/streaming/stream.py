@@ -22,6 +22,16 @@ guard from the batch sinks' ``SINK_FORMATS``, so a RunSpec writes the
 same output through either engine (``tests/test_streaming.py::
 test_stream_matches_batch``).
 
+Every stream in the package has one lifecycle, kept here:
+``parquet_file_stream`` opens a checkpointable parquet file source
+(the schema probe, the cold-start rule, ``maxFilesPerTrigger``) and
+``run_stream`` runs a configured writer, either draining it under
+``availableNow`` (a timeout stops the query and raises) or starting a
+live ``processingTime`` query. ``StreamEngine.run``, the three
+exactly-once producer loops (``streaming.ingest``, ``streaming.shards``,
+``operators.multimodal.payload_ingest_stream``) and the ``stream_*``
+gates all start their queries through them.
+
 Scale: the same topology runs unchanged on a 1000-executor cluster — the
 file source lists + assigns splits to executors, the parquet sink commits
 atomically per micro-batch, and a crashed driver resumes from the
@@ -48,7 +58,10 @@ from streaming_parquet_spark.sinks.writers import (
     sink_frame,
     spec_sink_args,
 )
-from streaming_parquet_spark.sources.readers import read_input
+from streaming_parquet_spark.sources.readers import (
+    read_input,
+    read_parquet_or_none,
+)
 
 # Ceiling on the auto-sized trigger (concurrency * cores): bounds batch
 # latency and failure-replay granularity on large clusters while leaving
@@ -65,6 +78,78 @@ def per_trigger_files(spec: RunSpec, cores: int) -> int:
     if spec.trigger_files is not None:
         return max(1, int(spec.trigger_files))
     return min(max(1, spec.concurrency) * max(1, cores), MAX_TRIGGER_FILES)
+
+
+def parquet_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    caller: str,
+    max_files_per_trigger: int | None = None,
+    trigger_interval: str | None = None,
+) -> DataFrame | None:
+    """A file stream over the ``*.parquet`` files of ``source_dir``
+    under their probed schema, admitting at most
+    ``max_files_per_trigger`` files a micro-batch (None: no bound), or
+    None when the source is empty or absent.
+
+    The glob keeps a README or a writer's temp file beside the data
+    out of both the probe and the stream. A source with nothing to
+    probe is a clean cold start for a drain (zero batches is the right
+    answer; the producer may not have delivered yet), but continuous
+    mode (``trigger_interval`` set) refuses it: a file stream needs a
+    schema to start, so a service launched before the first delivery
+    would return no query and never ingest anything. A bound below 1
+    refuses here, before any query starts: Spark would reject it only
+    after ``start()``, inside the query."""
+    if max_files_per_trigger is not None and int(max_files_per_trigger) < 1:
+        raise ValueError(
+            f"{caller}: max_files_per_trigger={max_files_per_trigger!r} "
+            f"must be at least 1 (None admits every available file)"
+        )
+    probe = read_parquet_or_none(
+        spark.read.option("pathGlobFilter", "*.parquet"), source_dir
+    )
+    if probe is None:
+        if trigger_interval is not None:
+            raise ValueError(
+                f"{caller}: continuous mode (trigger_interval=) needs an "
+                f"inferable source schema, but {source_dir!r} is empty or "
+                f"absent — deliver the first files (or start availableNow, "
+                f"which treats this as a clean cold start) and launch the "
+                f"service then"
+            )
+        return None
+    reader = spark.readStream.schema(probe.schema).option(
+        "pathGlobFilter", "*.parquet"
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return reader.parquet(source_dir)
+
+
+def run_stream(writer, trigger_interval: str | None = None,
+               timeout_sec: float | None = None):
+    """Start ``writer`` (a configured ``DataStreamWriter``) and return
+    its query.
+
+    With ``trigger_interval`` (a duration such as ``"5 seconds"``) the
+    query runs on a ``processingTime`` trigger and is returned live;
+    the caller stops it. Otherwise it drains every available file
+    under ``availableNow`` and is returned terminated; a drain still
+    running after ``timeout_sec`` (None: no limit) is stopped and
+    raises ``TimeoutError``, so no caller reads a partly landed sink
+    while the query keeps writing to it."""
+    if trigger_interval is not None:
+        return writer.trigger(processingTime=str(trigger_interval)).start()
+    query = writer.trigger(availableNow=True).start()
+    # awaitTermination returns None without a timeout, False on one
+    if query.awaitTermination(timeout_sec) is False:
+        query.stop()
+        raise TimeoutError(
+            f"stream {query.name or query.id} did not drain within "
+            f"{timeout_sec} s; the query was stopped"
+        )
+    return query
 
 
 @dataclass
@@ -228,7 +313,9 @@ class StreamEngine:
         rerunning with the same state dir skips already-processed files
         (--resume semantics, state.rs:89-102). Uses Trigger.AvailableNow:
         drains everything then stops — the batch-CLI ergonomics with
-        streaming exactly-once guarantees.
+        streaming exactly-once guarantees. A drain still running after
+        ``timeout_sec`` is stopped and raises ``TimeoutError``
+        (``run_stream``); a rerun on the same state dir resumes it.
         """
         if out_dir is None:
             if not spec.out:
@@ -247,7 +334,6 @@ class StreamEngine:
             .option("path", out_dir)
             .option("checkpointLocation", checkpoint)
             .outputMode("append")
-            .trigger(availableNow=True)
         )
 
         pre_total = self._sink_count(out_dir, fmt, spec) if spec.verify else 0
@@ -256,11 +342,8 @@ class StreamEngine:
         self.spark.streams.addListener(tally)
         t0 = time.time()
         try:
-            query = writer.start()
+            query = run_stream(writer, timeout_sec=timeout_sec)
             qid = str(query.id)
-            query.awaitTermination(timeout_sec)
-            if query.isActive:
-                query.stop()
             tally.drain(qid)
         finally:
             self.spark.streams.removeListener(tally)

@@ -609,28 +609,6 @@ def test_torn_bootstrap_repair(spark, tmp_path, monkeypatch):
         payload_ingest_stream(spark, src, store2, ck2, n_shards=2)
 
 
-def test_continuous_mode_refuses_empty_source(spark, tmp_path):
-    """Continuous mode (trigger_interval=) against a not-yet-delivered
-    source refuses by name instead of returning query=None and never
-    ingesting anything (r15 review); availableNow keeps the clean
-    cold-start return."""
-    from streaming_parquet_spark.operators.multimodal import (
-        payload_ingest_stream,
-    )
-
-    src = str(tmp_path / "empty_src")
-    store = str(tmp_path / "store")
-    with pytest.raises(ValueError, match="inferable source"):
-        payload_ingest_stream(
-            spark, src, store, str(tmp_path / "ck"), n_shards=2,
-            trigger_interval="1 seconds",
-        )
-    r = payload_ingest_stream(
-        spark, src, store, str(tmp_path / "ck"), n_shards=2
-    )
-    assert r.batches == [] and r.query is None
-
-
 def test_promote_racing_producer_wave(spark, tmp_path, monkeypatch):
     """The promote swap's producer fences (r15 review pass 2): a wave
     landing during the compaction refuses BEFORE publish (successor

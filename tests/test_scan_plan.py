@@ -357,3 +357,35 @@ def test_unsigned_probes_launch_no_jobs(engine, spark, tmp_path):
     assert _newest_job(spark) == before
     for f, schema in zip(files, schemas):
         assert schema == spark.read.parquet(f.path).schema
+
+
+def test_unsigned_group_reads_with_the_probed_schema(engine, spark, tmp_path):
+    """Two files of uint8/uint16/uint32/string probe as the schema
+    Spark's reader infers (smallint/int/bigint/string), so the group
+    reads with it: ``Engine.dataframe`` launches no Spark job, and the
+    rows equal the inferred read's. A uint64 column (read as
+    decimal(20,0), outside the lattice) still leaves the schema to
+    inference."""
+    d = tmp_path / "in"
+    d.mkdir()
+    for i, lo in enumerate((1, 7)):
+        pq.write_table(pa.table({
+            "a": pa.array([lo, None, 255], pa.uint8()),
+            "b": pa.array([lo, 65535, None], pa.uint16()),
+            "c": pa.array([None, 2**32 - lo, lo], pa.uint32()),
+            "s": pa.array([f"r{lo}", None, "é"]),
+        }), d / f"f{i}.parquet")
+    spec = RunSpec(inputs=[str(d)], out="unused.parquet")
+    before = _newest_job(spark)
+    df, _unified, files = engine.dataframe(spec)
+    assert _newest_job(spark) == before
+    paths = [f.path for f in files]
+    inferred = spark.read.parquet(*paths)
+    probed = engine.probe_schemas(files, spec)[0]
+    assert engine._probed_read_schema(paths, probed) == inferred.schema
+    assert inferred.schema.simpleString() == "struct<a:smallint,b:int,c:bigint,s:string>"
+    assert _collect(df) == _collect(inferred)
+
+    u64 = str(tmp_path / "u64.parquet")
+    pq.write_table(pa.table({"d": pa.array([2**63 + 5, 1], pa.uint64())}), u64)
+    assert _read_schema(engine, [u64]) is None

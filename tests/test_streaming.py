@@ -1933,3 +1933,94 @@ def test_stream_ingest_counts_reads_an_events_directory(spark, sf_dir, tmp_path)
         return sorted(map(tuple, QUERIES["stream_ingest_counts"](spark, d).collect()))
 
     assert counts(str(split)) == counts(sf_dir)
+
+
+# ---------------------------------------------------------------- #
+# one stream lifecycle: parquet_file_stream + run_stream            #
+# ---------------------------------------------------------------- #
+
+def test_run_stream_timeout_stops_and_raises(spark, tmp_path):
+    """An availableNow drain still running at its timeout is stopped
+    and raises, instead of leaving the query writing into a sink the
+    caller is about to read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streaming_parquet_spark.streaming.stream import (
+        parquet_file_stream,
+        run_stream,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(40):
+        pq.write_table(pa.table({"k": [i]}), src / f"f{i:03d}.parquet")
+    stream = parquet_file_stream(spark, str(src), "test", max_files_per_trigger=1)
+    writer = (
+        stream.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(TimeoutError, match="did not drain"):
+        run_stream(writer, timeout_sec=0.5)
+    assert spark.streams.active == []
+
+
+def _run_producer(loop, spark, tmp_path, src, **kw):
+    """One call of an exactly-once producer loop over ``src`` with the
+    smallest arguments it accepts; the checkpoint is ``tmp_path/ckpt``."""
+    ckpt = str(tmp_path / "ckpt")
+    if loop == "dedup_ingest_stream":
+        from streaming_parquet_spark.streaming.ingest import dedup_ingest_stream
+
+        return dedup_ingest_stream(spark, src, "maw_producer_contract", ckpt, **kw)
+    if loop == "shard_ingest_stream":
+        from streaming_parquet_spark.streaming.shards import shard_ingest_stream
+
+        return shard_ingest_stream(
+            spark, src, str(tmp_path / "shards"), ckpt, _shard_vocab(spark),
+            _shard_encode, budget=64, part_col="split", eos_id=1, **kw,
+        )
+    from streaming_parquet_spark.operators.multimodal import payload_ingest_stream
+
+    return payload_ingest_stream(
+        spark, src, str(tmp_path / "store"), ckpt, n_shards=2, **kw
+    )
+
+
+@pytest.mark.parametrize(
+    "loop", ["dedup_ingest_stream", "shard_ingest_stream", "payload_ingest_stream"]
+)
+def test_producer_source_contract(spark, tmp_path, loop):
+    """The three producer loops open their source by one rule
+    (``streaming.stream.parquet_file_stream``): an absent source is a
+    clean cold start under availableNow and a refusal in continuous
+    mode (a service that could never ingest), and a per-trigger bound
+    below 1 refuses before any query starts (Spark would reject it only
+    inside the started query; the payload loop used to read 0 as no
+    bound)."""
+    if loop == "dedup_ingest_stream":
+        from streaming_parquet_spark.operators.dedup import write_lsh_index
+
+        for suffix in ("", "_lsh_sets", "_lsh_bands"):
+            spark.sql(f"DROP TABLE IF EXISTS maw_producer_contract{suffix}")
+        write_lsh_index(
+            spark.createDataFrame([], "doc_id long, text string"),
+            "maw_producer_contract_lsh", num_hashes=16, bands=8,
+        )
+    absent = str(tmp_path / "absent_src")
+    r = _run_producer(loop, spark, tmp_path, absent)
+    assert r.batches == [] and r.rows_in == 0 and r.query is None
+    with pytest.raises(ValueError, match="inferable source"):
+        _run_producer(loop, spark, tmp_path, absent, trigger_interval="1 seconds")
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "train", "alpha bravo carol", b"\x00\x01")],
+        "doc_id long, split string, text string, payload binary",
+    ).write.parquet(src)
+    with pytest.raises(ValueError, match="max_files_per_trigger=0"):
+        _run_producer(loop, spark, tmp_path, src, max_files_per_trigger=0)
+    assert not os.path.exists(tmp_path / "ckpt")  # no query started
+    for suffix in ("", "_lsh_sets", "_lsh_bands"):
+        spark.sql(f"DROP TABLE IF EXISTS maw_producer_contract{suffix}")
