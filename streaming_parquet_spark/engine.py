@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from streaming_parquet_spark.plans.align import _effective_columns, concat_aligned
-from streaming_parquet_spark.plans.typesys import _FROM_SPARK
+from streaming_parquet_spark.plans.typesys import _FROM_SPARK, quote_ident
 from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sinks.writers import (
@@ -520,9 +520,6 @@ class Engine:
             )
         args = spec_sink_args(spec)
         if spec.partition_by:
-            args["compression"] = (
-                spec.compression if spec.compression != "none" else "snappy"
-            )
             sink = write_partitioned(
                 observed, spec.out, spec.partition_by, out_format=fmt,
                 max_records_per_file=max_records, **args,
@@ -765,7 +762,7 @@ class Engine:
         32-bit sum still detects any single-row corruption and all but
         ~2^-32 of multi-row ones."""
         cols = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00\x00NULL"))
+            F.coalesce(F.col(quote_ident(c)).cast("string"), F.lit("\x00\x00NULL"))
             for c in sorted(df.columns)
         ]
         row = F.concat_ws("\x1f", *cols)

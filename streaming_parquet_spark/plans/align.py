@@ -7,10 +7,17 @@ apply include/exclude filters (coercion.rs:44-56), resolve renames
 (coercion.rs:102-204 — parse-with-null-on-failure semantics), or fill an
 all-null typed column when the input lacks the field (coercion.rs:206-230).
 
-Spark-first: alignment is a single ``select`` of cast/lit expressions, so
-Catalyst sees a plain projection — column pruning and scan pushdown stay
-intact, and the whole align+union plan is codegen'd with zero Python in
-the hot path.
+Spark-first: alignment is a single projection, so Catalyst sees a plain
+``Project`` — column pruning and scan pushdown stay intact, and the whole
+align+union plan is codegen'd with zero Python in the hot path. The
+projection is built as ONE list of SQL expressions applied by one
+``selectExpr`` call: every Column-API call is a Py4J round trip (several
+under PySpark 4.1, which also records its Python call site), so a
+Column-per-column build cost ~33 gateway round trips per column, and a
+wide drifting corpus paid it once per read group. The select list costs
+about one per column, and parses to the same Cast and Literal nodes.
+Names go through ``quote_ident``, so a dot or a backtick in a column
+name stays part of the name.
 
 ``try_cast`` is used for coercions: the reference's parse-based coercion
 turns unparseable values into nulls (coercion.rs:116-154), which matches
@@ -22,9 +29,10 @@ from __future__ import annotations
 from functools import reduce
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from streaming_parquet_spark.plans.typesys import quote_ident
 from streaming_parquet_spark.plans.unify import UnifiedSchema
 
 
@@ -57,7 +65,7 @@ def align_dataframe(
     for c in df.columns:
         source_for[unified.unified_name(c)] = c
 
-    exprs: list[Column] = []
+    exprs: list[str] = []
     for name in _effective_columns(unified, include, exclude):
         target = unified.type_mapping[name].to_spark_type()
         if isinstance(target, T.NullType):
@@ -69,14 +77,14 @@ def align_dataframe(
         if name in source_for:
             src = source_for[name]
             if df.schema[src].dataType == target:
-                expr = F.col(src)
+                expr = quote_ident(src)
             else:
-                expr = F.col(src).try_cast(target)
+                expr = f"try_cast({quote_ident(src)} AS {target.simpleString()})"
         else:
             # Missing column -> typed all-null (coercion.rs:206-230)
-            expr = F.lit(None).cast(target)
-        exprs.append(expr.alias(name))
-    return df.select(*exprs)
+            expr = f"CAST(NULL AS {target.simpleString()})"
+        exprs.append(f"{expr} AS {quote_ident(name)}")
+    return df.selectExpr(*exprs)
 
 
 def concat_aligned(

@@ -20,6 +20,10 @@ Rules (deterministic, commutative):
 Spark types outside the closed lattice (decimal, nested, map, ...) degrade
 to Utf8 on ingestion, mirroring schema.rs:38 ("default to string for
 unknown types").
+
+``quote_ident`` and ``sql_string`` are the one place column names and
+values become SQL text (the align and NA-sentinel select lists); a type
+is spelled by Spark's own ``DataType.simpleString()``.
 """
 
 from __future__ import annotations
@@ -100,6 +104,22 @@ _TO_SPARK: dict[TypeKind, T.DataType] = {
     TypeKind.DATETIME: T.TimestampNTZType(),
     TypeKind.BINARY: T.BinaryType(),
 }
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as one SQL identifier: backtick-quoted, inner backticks
+    doubled, so a dot, space, quote or keyword in a column name never
+    reads as a nested field, an alias or syntax."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a SQL string literal of the default parser
+    (``spark.sql.parser.escapedStringLiterals`` off), which reads ``\\``
+    as an escape: backslashes and single quotes are escaped, so the
+    sentinel ``\\N`` round-trips."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
 
 _INT_RANK = {TypeKind.I8: 1, TypeKind.I16: 2, TypeKind.I32: 3, TypeKind.I64: 4}
 _NUMERIC = set(_INT_RANK) | {TypeKind.F32, TypeKind.F64}

@@ -9,6 +9,16 @@ surfaces (CSV: /root/reference/src/csv_in.rs:45-232; Parquet:
 extra NA sentinels. Spark handles batching, vectorized parsing and
 per-file-split parallelism natively (the analog of the reference's
 64k-row batched readers on blocking threads).
+
+The sentinel mapping of a CSV read group is one SQL select list applied
+by one ``selectExpr`` call, like ``plans.align.align_dataframe``'s
+projection (which Catalyst's CollapseProject merges it with): built one
+Column at a time it cost ~39 Py4J round trips per column, paid once per
+read group on the driver. It stays a projection of its own, not part of
+the alignment, because the exact CSV inference
+(``infer_csv_schemas_per_file``) reads through ``read_input`` and must
+see the mapped strings. Names and sentinels reach the SQL text only
+through ``plans.typesys.quote_ident`` and ``sql_string``.
 """
 
 from __future__ import annotations
@@ -19,6 +29,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from streaming_parquet_spark.plans.typesys import quote_ident, sql_string
 from streaming_parquet_spark.sources.discover import InputFormat
 
 if TYPE_CHECKING:
@@ -147,20 +158,19 @@ def read_parquet_or_none(reader, *paths: str) -> DataFrame | None:
 
 
 def _apply_na_sentinels(df: DataFrame, extra_na: tuple[str, ...]) -> DataFrame:
-    """Null out remaining NA sentinels on string columns (cli.rs:41-43)."""
+    """Null out remaining NA sentinels on string columns (cli.rs:41-43),
+    as one SQL select list (see the module docstring)."""
     if not extra_na:
         return df
-    na_list = list(extra_na)
+    na_list = ", ".join(sql_string(v) for v in extra_na)
     exprs = []
     for f_ in df.schema.fields:
+        c = quote_ident(f_.name)
         if isinstance(f_.dataType, T.StringType):
-            c = F.col(f_.name)
-            exprs.append(
-                F.when(c.isin(na_list), F.lit(None)).otherwise(c).alias(f_.name)
-            )
+            exprs.append(f"CASE WHEN {c} IN ({na_list}) THEN NULL ELSE {c} END AS {c}")
         else:
-            exprs.append(F.col(f_.name))
-    return df.select(*exprs)
+            exprs.append(c)
+    return df.selectExpr(*exprs)
 
 
 def infer_csv_schemas_per_file(
@@ -197,12 +207,12 @@ def infer_csv_schemas_per_file(
     # 4-aggregates-per-column design whose redundant try_casts made the
     # probe ~20x slower than the plain data scan.
     checks = []
-    for col in raw.columns:
+    for col in map(quote_ident, raw.columns):
         mask = (
-            f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS INT)"
-            f" WHEN try_cast(`{col}` AS BIGINT) IS NOT NULL THEN 3"
-            f" WHEN try_cast(`{col}` AS DOUBLE) IS NOT NULL THEN 2"
-            f" WHEN lower(`{col}`) IN ('true', 'false') THEN 4"
+            f"CASE WHEN {col} IS NULL THEN CAST(NULL AS INT)"
+            f" WHEN try_cast({col} AS BIGINT) IS NOT NULL THEN 3"
+            f" WHEN try_cast({col} AS DOUBLE) IS NOT NULL THEN 2"
+            f" WHEN lower({col}) IN ('true', 'false') THEN 4"
             f" ELSE 0 END"
         )
         checks.append(F.expr(f"bit_and({mask})"))

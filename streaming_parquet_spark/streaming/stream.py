@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 from streaming_parquet_spark.engine import Engine
-from streaming_parquet_spark.plans.align import align_dataframe
+from streaming_parquet_spark.plans.align import concat_aligned
 from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sinks.writers import (
@@ -281,16 +281,12 @@ class StreamEngine:
         return streams, unified
 
     def dataframe(self, spec: RunSpec) -> DataFrame:
-        """The streaming align+UNION ALL DataFrame (unbounded)."""
+        """The streaming align+UNION ALL DataFrame (unbounded), built by
+        the batch engine's ``concat_aligned``."""
         streams, unified = self._streaming_sources(spec)
-        aligned = [
-            align_dataframe(s, unified, include=spec.columns, exclude=spec.exclude)
-            for s in streams
-        ]
-        out = aligned[0]
-        for other in aligned[1:]:
-            out = out.unionByName(other)
-        return out
+        return concat_aligned(
+            streams, unified, include=spec.columns, exclude=spec.exclude
+        )
 
     def _sink_count(self, out_dir: str, fmt: str, spec: RunSpec) -> int:
         """Rows currently committed in the file sink (0 if none yet)."""

@@ -765,3 +765,114 @@ def test_codec_spelling_and_missing_out_dir(engine, tmp_path):
     assert res.rows == 3
     with open(res.output.paths[0]) as fh:
         assert fh.read().split() == ["id", "1", "2", "3"]
+
+
+@pytest.mark.parametrize(
+    "name", ["x.y", "a b", "a`b", "it's", "select"],
+    ids=["dot", "space", "backtick", "quote", "keyword"],
+)
+def test_awkward_column_names(spark, engine, tmp_path, name):
+    """A column name is one identifier on every convert path: a dot, a
+    space, a backtick, a quote or a SQL keyword in it never reads as a
+    nested field or as syntax — through alignment (an i64/f64 pair of
+    groups widens, so one group casts), the NA sentinels, exact
+    inference, content verify and the stream engine."""
+    import csv as _csv
+
+    from streaming_parquet_spark.streaming.stream import StreamEngine
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for fname, rows in (("f1.csv", [["1", "a"], ["NA", "null"]]),
+                        ("f2.csv", [["2.5", "\\N"]])):
+        with open(src / fname, "w", newline="") as fh:
+            _csv.writer(fh).writerows([[name, "z"], *rows])
+    want = {(1.0, "a"), (None, None), (2.5, None)}
+
+    def got(df):
+        return {(r[name], r["z"]) for r in df.collect()}
+
+    parquet_out = str(tmp_path / "o.parquet")
+    for out, infer_rows in ((parquet_out, 1000), (str(tmp_path / "exact.parquet"), 0)):
+        res = engine.run(RunSpec(inputs=[str(src)], out=out, infer_rows=infer_rows,
+                                 verify=True, verify_mode="content"))
+        assert res.verified is True
+        assert got(spark.read.parquet(out)) == want
+
+    csv_out = str(tmp_path / "o.csv")
+    res = engine.run(RunSpec(inputs=[parquet_out], out=csv_out,
+                             verify=True, verify_mode="content"))
+    assert res.output.via != "columnar-passthrough" and res.verified is True
+    back = spark.read.options(header="true", inferSchema="true").csv(csv_out)
+    assert got(back) == want
+
+    stream_out = str(tmp_path / "stream_out")
+    res = StreamEngine(spark).run(
+        RunSpec(inputs=[str(src)], out=stream_out, out_format="parquet",
+                state=str(tmp_path / "ckpt"), verify=True),
+    )
+    assert res.rows == 3 and res.verified is True
+    assert got(spark.read.parquet(stream_out)) == want
+
+
+def test_group_projection_round_trips_flat_per_column(spark, monkeypatch):
+    """Building a read group's alignment or NA-sentinel projection
+    crosses the Py4J gateway about once per column (one SQL select
+    list), not once per Column-API call (~35 per column)."""
+    import py4j.clientserver as cs
+    from pyspark.sql import types as T
+
+    from streaming_parquet_spark.plans.align import align_dataframe
+    from streaming_parquet_spark.plans.unify import unify_schemas
+    from streaming_parquet_spark.sources.readers import _apply_na_sentinels
+
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+
+    def cost(build):
+        calls[0] = 0
+        build()
+        return calls[0]
+
+    def costs(width):
+        ints = T.StructType([T.StructField(f"c{i}", T.IntegerType()) for i in range(width)])
+        wide = T.StructType([T.StructField(f"c{i}", T.DoubleType()) for i in range(width)]
+                            + [T.StructField("extra", T.StringType())])
+        strs = T.StructType([T.StructField(f"s{i}", T.StringType()) for i in range(width)])
+        df, sdf = spark.createDataFrame([], ints), spark.createDataFrame([], strs)
+        unified = unify_schemas([ints, wide])
+        df.schema, sdf.schema  # resolve the schemas outside the count
+        return (cost(lambda: align_dataframe(df, unified)),
+                cost(lambda: _apply_na_sentinels(sdf, ("null", "\\N"))))
+
+    (align5, na5), (align50, na50) = costs(5), costs(50)
+    assert align50 <= align5 + 2 * 45, (align5, align50)
+    assert na50 <= na5 + 2 * 45, (na5, na50)
+
+
+def test_partitioned_parquet_honours_compression_none(engine, tmp_path):
+    """--compression none reaches a partitioned parquet sink: its column
+    chunks are written UNCOMPRESSED, not snappy."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    (tmp_path / "in.csv").write_text("lang,n\nen,1\nde,2\nen,3\n")
+    out = str(tmp_path / "part_out")
+    res = engine.run(RunSpec(inputs=[str(tmp_path / "in.csv")], out=out,
+                             out_format="parquet", compression="none",
+                             partition_by=["lang"]))
+    assert res.rows == 3
+    parts = glob.glob(os.path.join(out, "lang=*", "*.parquet"))
+    assert parts
+    for p in parts:
+        meta = pq.ParquetFile(p).metadata
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert meta.row_group(g).column(c).compression == "UNCOMPRESSED"

@@ -8,6 +8,8 @@ from pyspark.sql import types as T
 from streaming_parquet_spark.plans.typesys import (
     TypeKind,
     WidenError,
+    quote_ident,
+    sql_string,
     widen_types,
     widen_spark_types,
 )
@@ -97,6 +99,13 @@ def test_stringify_does_not_cover_non_string_conflicts():
 def test_spark_type_round_trip():
     for kind in TypeKind:
         assert TypeKind.from_spark_type(kind.to_spark_type()) is kind
+
+
+def test_sql_text_quoting():
+    assert quote_ident("x.y") == "`x.y`"
+    assert quote_ident("a`b") == "`a``b`"
+    assert sql_string("\\N") == "'\\\\N'"
+    assert sql_string("it's") == "'it\\'s'"
 
 
 def test_unknown_spark_types_degrade_to_utf8():
