@@ -2,15 +2,16 @@
 ``compact_token_shards`` defers to (its docstring: "swap paths
 atomically at the catalog/symlink layer above" — this is that layer).
 
-A catalog ROOT holds numbered GENERATIONS, each an ordinary
-token-shard set (``operators.pipeline.write_token_shards`` /
-``streaming.shards.shard_ingest_stream`` target), plus a ``_catalog/``
-directory of single-file commit markers:
+A catalog ROOT holds numbered GENERATIONS of one data plane — each an
+ordinary token-shard set (``operators.pipeline.write_token_shards`` /
+``streaming.shards.shard_ingest_stream`` target) or a binary payload
+store (``operators.multimodal.write_payload_store``) — plus a
+``_catalog/`` directory of single-file commit markers:
 
     root/
       _catalog/claim-00000001         <- allocation markers (exclusive)
       _catalog/commit-00000001.json   <- publish markers (atomic put)
-      gen-00000001/                   <- a token-shard set
+      gen-00000001/                   <- a shard set or payload store
       gen-00000001/_retired           <- retire marker (refuses appends)
       gen-00000002/
 
@@ -23,11 +24,10 @@ The swap protocol readers and producers rely on:
   path, leaving the publish marker to arbitrate over mixed data.
 
 * **Publish is a single-file put, after verification.**
-  :func:`publish_generation` refuses unless
-  ``verify_token_shards(gen)`` reports every shard ok, then creates
-  ``commit-N.json`` EXCLUSIVELY (the store's atomic put-if-absent —
-  fails if the marker exists, so two racing publishers cannot both
-  win).  A
+  :func:`publish_generation` refuses unless every shard verifies
+  against its sidecar, then creates ``commit-N.json`` EXCLUSIVELY
+  (the store's atomic put-if-absent — fails if the marker exists, so
+  two racing publishers cannot both win).  A
   generation with data but no marker is invisible to readers: a
   reader mid-swap resolves either the old marker or the new one,
   never a half-written set — the same data-then-promise ordering as
@@ -44,15 +44,26 @@ The swap protocol readers and producers rely on:
   (the way ``shard_snapshot`` pins keys) finish their epoch before
   the files disappear.  Dropping the CURRENT generation refuses.
 * **Promotion composes the pieces.** :func:`promote_compaction` =
-  compact current -> next, verify, publish, retire old — the
-  "compact -> verify -> swap -> retire" sequence the r10 verdict
-  asked for, as one call.
+  compact current -> next, prove the content preserved, verify,
+  publish, retire old, as one call.  Fences on the source's producer
+  appends keep a racing wave from being lost: one landing before the
+  publish refuses the promotion, one landing between the publish and
+  the retirement is rescued into the successor.
+* **One protocol, two planes.** Publish, promote and audit are
+  written once (``_publish``, ``_promote``, ``_audit``) over a table
+  of planes, ``_PLANES``, whose entries supply only what differs:
+  the sidecar contract read, the verification, the content
+  fingerprint, the marker fields, the compaction and its source pin,
+  the producer units the fences compare, and the rescue step.  The
+  token verbs (:func:`publish_generation`, :func:`promote_compaction`)
+  and the payload verbs (:func:`publish_payload_generation`,
+  :func:`promote_payload_compaction`) are bindings of one plane;
+  :func:`audit_generation` dispatches on the marker's ``plane``.
 
 At 100 TB: every catalog operation is marker-sized (one JSON file, a
-directory listing of a few dozen markers) except the verification
-inside publish, which is the same one partition-discovered scan
-``verify_token_shards`` always costs — paid once per publish, i.e.
-once per compaction or bulk load, never per read.
+directory listing of a few dozen markers) except the verification and
+fingerprint scans inside publish and audit — paid once per publish,
+i.e. once per compaction or bulk load, or per audit, never per read.
 
 The marker plane is a pluggable seam (:class:`MarkerStore`): the
 swap protocol performs exactly three storage primitives — atomic
@@ -84,8 +95,14 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, functions as F
+
+# the operators look the catalog up at call time, never at import
+from streaming_parquet_spark.operators import multimodal as M, pipeline as P
 
 _GEN_RE = re.compile(r"^gen-(\d{8})$")
 _COMMIT_RE = re.compile(r"^commit-(\d{8})\.json$")
@@ -482,6 +499,457 @@ def _require_committed_pin(
     return gen
 
 
+# --- The generation protocol: one body per verb over a plane table -----
+#
+# The marker plane above is plane-agnostic by construction, and so are
+# the three verbs that touch data: _publish, _promote and _audit are
+# written once over a _Plane entry of _PLANES, which supplies only what
+# differs between token-shard sets (operators.pipeline) and binary
+# payload stores (operators.multimodal).  The public verbs are thin
+# bindings of one plane.  The plane steps look every operator up on its
+# module at call time, so the modules' functions stay patchable.  A
+# marker records its plane; markers written before the stamp carry none
+# and are token markers.  Cross-plane misuse refuses at the contract
+# read: a token sidecar lacks the payload contract columns and vice
+# versa.
+
+
+@dataclass(frozen=True)
+class _Plane:
+    """What the generation protocol needs to know about one data
+    plane: every step the shared verb bodies cannot share."""
+
+    name: str           # the marker's ``plane`` stamp
+    publish_verb: str   # the public verbs, named in every refusal
+    promote_verb: str
+    # (spark, path, caller) -> (sidecar, contract, totals) in one read;
+    # absent, empty, mixed and foreign-format sets refuse by name
+    contract: Callable
+    # (spark, path) -> one row per shard with ``ok``: data vs sidecar
+    verify: Callable
+    # (spark, path, contract, totals) -> {fp_a, fp_b, *fp_keys}: the
+    # identity-free content fingerprint a marker records
+    content: Callable
+    contract_keys: tuple  # marker fields fixed at publish
+    total_keys: tuple     # marker totals: the floor appends grow past
+    fp_keys: tuple        # the totals the content fingerprint carries
+    # (spark, src, dst, **opts) -> (src fp, manifest, dst fp): compact
+    # into the successor, with the source pin the proof compares
+    compact: Callable
+    unit_cols: tuple      # sidecar columns naming one producer append
+    # (spark, src, dst, stranded units, store) -> None: append units
+    # stranded in the retired source into the successor
+    rescue: Callable
+
+
+def _token_sidecar(spark, path: str, caller: str):
+    # ONE sidecar collect carries the contract and the totals
+    sidecar, rows, contract = P._sidecar_snapshot(spark, path, caller)
+    totals = {
+        "n_shards": len(rows),
+        "n_windows": sum(r["n_windows"] for r in rows),
+        "n_tokens": sum(r["n_tokens"] for r in rows),
+    }
+    return sidecar, contract, totals
+
+
+def _token_compact(
+    spark, src: str, dst: str, n_shards=None, shard_tokens=None,
+    shard_prefix: str = "compact-",
+):
+    src_fp = P.shard_set_content_fp(spark, src)
+    manifest = P.compact_token_shards(
+        spark, src, dst,
+        n_shards=n_shards, shard_tokens=shard_tokens,
+        shard_prefix=shard_prefix,
+    )
+    return src_fp, manifest, P.shard_set_content_fp(spark, dst)
+
+
+def _token_rescue(spark, src: str, dst: str, stranded: set, store) -> None:
+    # the stranded shards' data files and sidecar rows move unchanged
+    # (same shard keys, same window identities), so the source's
+    # per-shard promise carries over and verifies in the successor
+    caller = "promote_compaction"
+    sidecar, contract = P._read_shard_contract(spark, src, caller)
+    keys = sorted(str(k) for (k,) in stranded)
+    clash = sorted(set(keys) & {
+        str(r["shard"])
+        for r in P._manifest_frame(spark, dst, caller)
+        .select("shard").collect()
+    })
+    if clash:
+        raise ValueError(
+            f"{caller}: stranded shard(s) {clash[:5]} of the retired "
+            f"{src!r} share keys with its successor {dst!r} — they "
+            f"stay in the retired source; append them to the current "
+            f"generation under fresh keys before dropping it"
+        )
+    sc = contract["shard_col"]
+    (
+        P._pinned_key_filter(spark.read.parquet(src), sc, keys)
+        .write.mode("append").partitionBy(sc).parquet(dst)
+    )
+    P._pinned_key_filter(sidecar, "shard", keys).write.mode(
+        "append"
+    ).parquet(os.path.join(dst, "_manifest"))
+
+
+def _payload_sidecar(spark, path: str, caller: str):
+    sidecar, contract = M._payload_contract(spark, path, caller)
+    contract = {**contract, "n_shards": int(contract["n_shards"])}
+    # the sidecar fold is the manifest-sized content fingerprint
+    return sidecar, contract, M.payload_set_content_fp(sidecar)
+
+
+def _payload_compact(
+    spark, src: str, dst: str, windows: DataFrame,
+    spans_col: str = "spans", n_shards=None,
+):
+    # the KEPT subset is pinned through the same definition of "kept"
+    # the compaction writes, so the proof and the write agree on which
+    # blobs count
+    kept, contract = M._kept_payloads(spark, src, windows, spans_col)
+    n = int(contract["n_shards"]) if n_shards is None else int(n_shards)
+    try:
+        src_fp = M.payload_set_content_fp(
+            M.payload_store_manifest(
+                kept, n, contract["ref_col"], contract["payload_col"]
+            )
+        )
+    except ValueError as exc:
+        if "empty manifest" not in str(exc):
+            raise
+        raise ValueError(
+            f"promote_payload_compaction: the windows reference no "
+            f"blob in {src!r} — refusing to promote an empty successor "
+            f"(wrong store/windows pairing, or every blob is an "
+            f"orphan; retire + drop instead)"
+        ) from None
+    manifest = M.compact_payload_store(
+        spark, src, dst, windows, spans_col, n_shards=n
+    )
+    return src_fp, manifest, M.payload_set_content_fp(manifest)
+
+
+def _payload_rescue(spark, src: str, dst: str, stranded: set, store) -> None:
+    # content-addressed append from the retired source's own data:
+    # idempotent, blobs already in the successor skip
+    contract = M._payload_contract(spark, src, "promote_payload_compaction")[1]
+    blobs = (
+        spark.read.parquet(src)
+        .where(F.col("wave").isin(sorted({w for _s, w in stranded})))
+        .select(F.col(contract["ref_col"]), F.col(contract["payload_col"]))
+    )
+    M.append_payload_store(blobs, dst, marker_store=store)
+
+
+_PLANES = {
+    "token": _Plane(
+        name="token",
+        publish_verb="publish_generation",
+        promote_verb="promote_compaction",
+        contract=_token_sidecar,
+        verify=lambda spark, path: P.verify_token_shards(spark, path),
+        content=lambda spark, path, contract, _totals: (
+            P.shard_set_content_fp(spark, path, contract=contract)
+        ),
+        contract_keys=(
+            "format", "budget", "vocab_size", "vocab_fp_a", "vocab_fp_b",
+        ),
+        total_keys=("n_shards", "n_windows", "n_tokens"),
+        fp_keys=("n_windows", "n_tokens"),
+        compact=_token_compact,
+        unit_cols=("shard",),
+        rescue=_token_rescue,
+    ),
+    "payload": _Plane(
+        name="payload",
+        publish_verb="publish_payload_generation",
+        promote_verb="promote_payload_compaction",
+        contract=_payload_sidecar,
+        verify=lambda spark, path: M.verify_payload_store(spark, path),
+        content=lambda _spark, _path, _contract, totals: totals,
+        contract_keys=("format", "n_shards", "ref_col", "payload_col"),
+        total_keys=("n_payloads", "n_refs", "n_bytes"),
+        fp_keys=("n_payloads", "n_refs", "n_bytes"),
+        compact=_payload_compact,
+        unit_cols=("shard", "wave"),
+        rescue=_payload_rescue,
+    ),
+}
+
+
+def _commit_marker(root: str, gen: int) -> str:
+    return os.path.join(_catalog_dir(root), f"commit-{int(gen):08d}.json")
+
+
+def _marker_fields(
+    plane: _Plane, contract: dict, totals: dict, fp: dict
+) -> dict:
+    """What a commit marker records about a generation's data: its
+    contract, its totals and its content fingerprint.  A total the
+    fingerprint carries is taken from the fingerprint (for tokens, a
+    data scan) rather than from the sidecar."""
+    seen = {**totals, **fp}
+    return {
+        **{k: contract[k] for k in plane.contract_keys},
+        **{k: seen[k] for k in plane.total_keys},
+        "content_fp_a": fp["fp_a"],
+        "content_fp_b": fp["fp_b"],
+    }
+
+
+def _publish(
+    plane: _Plane, spark, root: str, gen: int, store,
+    vocab_ids: DataFrame | None = None, content_fp: dict | None = None,
+) -> dict:
+    verb = plane.publish_verb
+    store = _store(store)
+    gen = int(gen)
+    path = generation_path(root, gen)
+    if is_retired(path, store):
+        raise ValueError(
+            f"{verb}: gen {gen} at {path!r} is RETIRED — republishing "
+            f"a retired generation would resurrect data the catalog "
+            f"already moved past; promote a fresh one"
+        )
+    marker = _commit_marker(root, gen)
+    if store.exists(marker):
+        raise ValueError(
+            f"{verb}: gen {gen} is already published ({marker!r}) — "
+            f"commit markers are write-once"
+        )
+    _, contract, totals = plane.contract(spark, path, verb)
+    if vocab_ids is not None:
+        P._check_vocab(contract, vocab_ids, path, verb)
+    if content_fp is not None:
+        # The caller-supplied fingerprint goes into a WRITE-ONCE marker
+        # that makes the generation content-addressable forever — a
+        # stale or foreign fp would make the audit trail permanently
+        # lie.  Every field the sidecar totals can vouch for must agree
+        # with them: the cheap, manifest-sized tripwire that catches a
+        # fingerprint minted over a different (or since-grown) set,
+        # checked BEFORE the full verify scan is paid.
+        wanted = ("fp_a", "fp_b", *plane.fp_keys)
+        missing = [k for k in wanted if k not in content_fp]
+        if missing:
+            raise ValueError(
+                f"{verb}: content_fp is missing {missing} — pass the "
+                f"full fingerprint dict ({', '.join(wanted)}), or omit "
+                f"content_fp to have publish recompute it"
+            )
+        for k in wanted:
+            if k in totals and int(content_fp[k]) != int(totals[k]):
+                raise ValueError(
+                    f"{verb}: supplied content_fp claims "
+                    f"{k}={content_fp[k]} but gen {gen}'s sidecar "
+                    f"totals {totals[k]} — the fingerprint was minted "
+                    f"over a different set; omit content_fp to have "
+                    f"publish recompute it"
+                )
+    bad = plane.verify(spark, path).filter("NOT ok").count()
+    if bad:
+        raise ValueError(
+            f"{verb}: gen {gen} at {path!r} has {bad} shard(s) failing "
+            f"verification — a generation publishes only after every "
+            f"shard matches its sidecar promise"
+        )
+    if content_fp is None:
+        content_fp = plane.content(spark, path, contract, totals)
+    doc = {
+        "generation": gen,
+        "plane": plane.name,
+        **_marker_fields(plane, contract, totals, content_fp),
+    }
+    # ONE atomic-exclusive put — the commit point of the whole swap
+    # (conditional-PUT shape; the POSIX backend hardlinks from temp)
+    if not store.put_if_absent(
+        marker, json.dumps(doc, sort_keys=True) + "\n"
+    ):
+        raise ValueError(
+            f"{verb}: gen {gen} was published concurrently "
+            f"({marker!r}) — commit markers are write-once"
+        )
+    return doc
+
+
+def _promote(
+    plane: _Plane, spark, root: str, store,
+    vocab_ids: DataFrame | None = None, **opts,
+) -> tuple[int, DataFrame]:
+    verb = plane.promote_verb
+    old_gen, old_path = current_generation(root, store)
+    new_gen, new_path = next_generation(root, store)
+
+    def units() -> set:
+        # sidecar-sized: the producer appends the source holds now
+        return {
+            tuple(r)
+            for r in P._manifest_frame(spark, old_path, verb)
+            .select(*plane.unit_cols).collect()
+        }
+
+    pinned = units()  # the unit set the proof is about to pin
+    src_fp, manifest, dst_fp = plane.compact(
+        spark, old_path, new_path, **opts
+    )
+    if dst_fp != src_fp:
+        raise ValueError(
+            f"{verb}: gen {new_gen} at {new_path!r} does NOT carry gen "
+            f"{old_gen}'s content (src {src_fp} vs dst {dst_fp}) — "
+            f"refusing to publish; the directory stays unpublished "
+            f"(invisible to readers) and gen {old_gen} stays current.  "
+            f"A producer wave landing mid-compaction causes this too "
+            f"— re-run after quiescing producers."
+        )
+    # pre-publish fence: a wave that landed AFTER the proof's pin is
+    # invisible to both fingerprints — refuse while the successor is
+    # still unpublished
+    if units() != pinned:
+        raise ValueError(
+            f"{verb}: a producer wave landed in gen {old_gen} during "
+            f"the compaction — the successor at {new_path!r} stays "
+            f"unpublished and gen {old_gen} stays current; re-run (the "
+            f"next promotion will carry the wave), or quiesce "
+            f"producers first"
+        )
+    _publish(
+        plane, spark, root, new_gen, store,
+        vocab_ids=vocab_ids, content_fp=dst_fp,
+    )
+    retire_generation(root, old_gen, store)
+    # post-retire fence: a wave that landed between the publish and the
+    # retirement passed its own retire probe legitimately but is absent
+    # from the successor — rescue it.  Producers refuse a retired
+    # generation, so this recheck is final.
+    stranded = units() - pinned
+    if stranded:
+        plane.rescue(spark, old_path, new_path, stranded, store)
+    return new_gen, manifest
+
+
+def _audit(spark, root: str, gen: int, store) -> dict:
+    store = _store(store)
+    gen = int(gen)
+    marker = _commit_marker(root, gen)
+    if not store.exists(marker):
+        raise ValueError(
+            f"audit_generation: gen {gen} of {root!r} was never "
+            f"published — only committed generations carry a marker "
+            f"to audit against"
+        )
+    doc = json.loads(store.read(marker))
+    plane = _PLANES[doc.get("plane", "token")]
+    path = generation_path(root, gen)
+    out: dict = {
+        "generation": gen,
+        "plane": plane.name,
+        "retired": is_retired(path, store),
+        "dropped": False,
+    }
+    try:
+        _, contract, totals = plane.contract(spark, path, "audit_generation")
+    except (ValueError, AnalysisException) as exc:
+        # Only ABSENCE of a retired generation's sidecar is a benign
+        # drop (the retention sweep's legal end state).  A PRESENT but
+        # unreadable sidecar (truncated write, empty directory, mixed
+        # contract rows, a foreign format) is an integrity incident
+        # even on a retired generation: retirement starts a read-grace
+        # window in which pinned readers still resolve this data, so
+        # "retired" cannot launder corruption into ok=None.  Absence is
+        # classified from _manifest_frame's TYPED error taxonomy
+        # (ManifestAbsent = PATH_NOT_FOUND), which keeps this function
+        # free of direct filesystem probes.
+        absent = isinstance(exc, P.ManifestAbsent)
+        if out["retired"] and absent:
+            out.update({"dropped": True, "ok": None})
+            return out
+        out.update({
+            "ok": False,
+            "problem": (
+                f"data unreadable for a committed, UNRETIRED "
+                f"generation ({exc}) — pinned readers may still "
+                f"resolve it"
+                if absent
+                else f"manifest sidecar present but unreadable "
+                     f"({exc}) — corruption or a truncated write, "
+                     f"not a retention drop"
+            ),
+        })
+        return out
+    try:
+        # verify FIRST, against the per-shard sidecar promise: a
+        # totals-only check would classify "grew by 20 windows, lost a
+        # shard of 4" as benign growth, masking storage loss in any
+        # generation that legally grew.  Appends extend the sidecar, so
+        # verify detects loss and corruption past the publish floor too.
+        bad = [
+            r["shard"]
+            for r in plane.verify(spark, path).where("NOT ok")
+            .select("shard").collect()
+        ]
+        fp = plane.content(spark, path, contract, totals)
+    except (ValueError, AnalysisException) as exc:
+        # the sidecar is readable but the data scan is not: the
+        # sidecar promises content the storage no longer serves
+        out.update({"ok": False, "problem": f"content scan failed ({exc})"})
+        return out
+    actual = _marker_fields(plane, contract, totals, fp)
+    mismatches = {
+        k: [doc[k], v]
+        for k, v in actual.items()
+        if k in doc and doc[k] != v
+    }
+    out["fp_checked"] = "content_fp_a" in doc
+    # The marker froze the set AS OF publish, and appending to a
+    # published generation is legal until its retire marker lands
+    # (the marker cannot date the growth, so this holds for retired
+    # generations too) — totals at-or-above the recorded floor mean
+    # GROWTH, and the frozen XOR fp is inconclusive over a grown set.
+    total_keys = [k for k in plane.total_keys if k in doc]
+    grown = total_keys and all(
+        int(actual[k]) >= int(doc[k]) for k in total_keys
+    ) and any(int(actual[k]) > int(doc[k]) for k in total_keys)
+    # the contract can never legally change after publish
+    contract_drift = any(k in mismatches for k in plane.contract_keys)
+    if bad:
+        out.update({
+            "ok": False,
+            "problem": (
+                f"shard(s) {sorted(bad)[:5]} fail verification against "
+                f"the sidecar — content loss or corruption, growth "
+                f"notwithstanding"
+            ),
+        })
+        if mismatches:
+            out["mismatches"] = mismatches
+    elif not mismatches:
+        out["ok"] = True
+    elif grown and not contract_drift:
+        out.update({
+            "ok": None,
+            "grown": True,
+            # the fp comparison RAN but attested nothing over the grown
+            # set — report it un-checked so monitoring never records
+            # this generation as fingerprint-verified
+            "fp_checked": False,
+            "recorded_totals": {k: doc[k] for k in total_keys},
+            "actual_totals": {k: actual[k] for k in total_keys},
+            "note": (
+                "generation grew past its publish-time floor (legal "
+                "until retirement; the marker cannot date the "
+                "growth) — every shard verified against its sidecar, "
+                "but the frozen marker cannot attest the grown "
+                "content; a promotion pins a fresh fingerprint"
+            ),
+        })
+    else:
+        out["ok"] = False
+        out["mismatches"] = mismatches
+    return out
+
+
 def publish_generation(
     spark,
     root: str,
@@ -490,11 +958,11 @@ def publish_generation(
     content_fp: dict | None = None,
     store: MarkerStore | None = None,
 ) -> dict:
-    """Make generation ``gen`` the catalog's newest COMMITTED set:
-    verify every shard against its sidecar (one partition-discovered
-    scan — a torn or tampered set refuses here, before any reader can
-    resolve it), then atomically create the single-file commit marker.
-    Returns the marker's contents.
+    """Make token generation ``gen`` the catalog's newest COMMITTED
+    set: verify every shard against its sidecar (one
+    partition-discovered scan — a torn or tampered set refuses here,
+    before any reader can resolve it), then atomically create the
+    single-file commit marker.  Returns the marker's contents.
 
     Refusals: an unverifiable or failing set; a retired generation
     (retire-then-republish would resurrect data producers already
@@ -510,10 +978,7 @@ def publish_generation(
     renumbering), making every committed generation
     content-addressable — an auditor can re-fingerprint any
     generation's data and compare against its marker years later.
-    :func:`promote_compaction` proves the successor carries the
-    current generation's content (fresh src/dst scans, robust to a
-    marker predating this field) before anything is retired.  Pass
-    ``content_fp`` to reuse a fingerprint the caller already
+    Pass ``content_fp`` to reuse a fingerprint the caller already
     computed; omitted, publish computes it (one extra scan beside
     the verify scan).  A supplied fingerprint's window/token totals
     are cross-checked against the sidecar totals before the marker
@@ -521,103 +986,10 @@ def publish_generation(
     forever); the fp hashes themselves are trusted from the caller,
     so only pass a fingerprint computed over THIS generation's
     path (as :func:`promote_compaction` does)."""
-    from streaming_parquet_spark.operators.pipeline import (
-        _check_vocab,
-        _read_shard_contract,
-        shard_set_content_fp,
-        verify_token_shards,
+    return _publish(
+        _PLANES["token"], spark, root, gen, store,
+        vocab_ids=vocab_ids, content_fp=content_fp,
     )
-
-    store = _store(store)
-    gen = int(gen)
-    path = generation_path(root, gen)
-    if is_retired(path, store):
-        raise ValueError(
-            f"publish_generation: gen {gen} at {path!r} is RETIRED — "
-            f"republishing a retired generation would resurrect data "
-            f"the catalog already moved past; promote a fresh one"
-        )
-    marker = os.path.join(_catalog_dir(root), f"commit-{gen:08d}.json")
-    if store.exists(marker):
-        raise ValueError(
-            f"publish_generation: gen {gen} is already published "
-            f"({marker!r}) — commit markers are write-once"
-        )
-    _, contract = _read_shard_contract(spark, path, "publish_generation")
-    if vocab_ids is not None:
-        _check_vocab(contract, vocab_ids, path, "publish_generation")
-    totals = (
-        spark.read.parquet(os.path.join(path, "_manifest"))
-        .groupBy()
-        .agg({"n_windows": "sum", "n_tokens": "sum", "shard": "count"})
-        .first()
-    )
-    if content_fp is not None:
-        # The caller-supplied fingerprint goes into a WRITE-ONCE marker
-        # that makes the generation content-addressable forever — a
-        # stale or foreign fp would make the audit trail permanently
-        # lie.  The fp hashes themselves are trusted (recomputing them
-        # would erase the reuse saving), but the dict carries the set's
-        # window/token totals, and those must agree with the sidecar
-        # totals — the cheap, manifest-sized tripwire that catches a
-        # fingerprint minted over a different (or since-grown) set,
-        # checked BEFORE the full verify scan is paid.
-        missing = [
-            k for k in ("fp_a", "fp_b", "n_windows", "n_tokens")
-            if k not in content_fp
-        ]
-        if missing:
-            raise ValueError(
-                f"publish_generation: content_fp is missing "
-                f"{missing} — pass the full dict "
-                f"shard_set_content_fp returns (fp_a, fp_b, "
-                f"n_windows, n_tokens), or omit content_fp to have "
-                f"publish recompute it"
-            )
-        for fp_key, tot_key in (
-            ("n_windows", "sum(n_windows)"),
-            ("n_tokens", "sum(n_tokens)"),
-        ):
-            if int(content_fp[fp_key]) != int(totals[tot_key]):
-                raise ValueError(
-                    f"publish_generation: supplied content_fp claims "
-                    f"{fp_key}={content_fp[fp_key]} but gen {gen}'s "
-                    f"sidecar totals {totals[tot_key]} — the "
-                    f"fingerprint was minted over a different set; "
-                    f"omit content_fp to have publish recompute it"
-                )
-    bad = verify_token_shards(spark, path).filter("NOT ok").count()
-    if bad:
-        raise ValueError(
-            f"publish_generation: gen {gen} at {path!r} has {bad} "
-            f"shard(s) failing verification — a generation publishes "
-            f"only after every shard matches its sidecar promise"
-        )
-    if content_fp is None:
-        content_fp = shard_set_content_fp(spark, path)
-    doc = {
-        "generation": gen,
-        "n_shards": totals["count(shard)"],
-        "n_windows": totals["sum(n_windows)"],
-        "n_tokens": totals["sum(n_tokens)"],
-        "format": contract["format"],
-        "budget": contract["budget"],
-        "vocab_size": contract["vocab_size"],
-        "vocab_fp_a": contract["vocab_fp_a"],
-        "vocab_fp_b": contract["vocab_fp_b"],
-        "content_fp_a": content_fp["fp_a"],
-        "content_fp_b": content_fp["fp_b"],
-    }
-    # ONE atomic-exclusive put — the commit point of the whole swap
-    # (conditional-PUT shape; the POSIX backend hardlinks from temp)
-    if not store.put_if_absent(
-        marker, json.dumps(doc, sort_keys=True) + "\n"
-    ):
-        raise ValueError(
-            f"publish_generation: gen {gen} was published concurrently "
-            f"({marker!r}) — commit markers are write-once"
-        )
-    return doc
 
 
 def current_generation(
@@ -835,45 +1207,37 @@ def promote_compaction(
     A reader racing this sees exactly one complete generation at
     every instant: before the marker lands it resolves the old
     generation (whose data is untouched — compaction never writes
-    into its source); after, the new one.  The old generation's data
-    survives until an explicit :func:`drop_generation` after the
-    read-grace window.  A crash mid-promotion leaves either a
-    data-only next-gen directory (unpublished — invisible to readers;
-    the next promotion allocates a fresh number) or a published
-    successor with the old generation not yet retired (re-run
-    :func:`retire_generation` — idempotent)."""
-    old_gen, old_path = current_generation(root, store)
-    new_gen, new_path = next_generation(root, store)
-    from streaming_parquet_spark.operators.pipeline import (
-        compact_token_shards,
-        shard_set_content_fp,
-    )
+    into its source); after, the new one.  A producer racing this
+    cannot lose a wave into the swap.  Three fences, in order:
 
-    # the source's content expectation, pinned BEFORE compaction (a
-    # wave landing after this but before compact's own pin makes the
-    # two fingerprints disagree — a conservative refusal, same stance
-    # as compact's grown-source recheck)
-    src_fp = shard_set_content_fp(spark, old_path)
-    manifest = compact_token_shards(
-        spark, old_path, new_path,
+    * a wave landing during the compaction refuses inside it
+      (``compact_token_shards``' grown-source recheck) or flips the
+      preservation proof — clean refusal, source stays current;
+    * a wave landing between the proof and the publish trips the
+      pre-publish recheck of the source's shard-key set
+      (sidecar-sized) — same clean refusal, the successor stays
+      unpublished;
+    * a wave landing between the publish and the retirement is
+      RESCUED after the retire marker lands: its shards (data files
+      and sidecar rows, unchanged) are appended into the successor,
+      so the wave survives the eventual drop.  An append still IN
+      FLIGHT when retirement lands fails loudly on its own retire
+      probe — never silent.  For a zero-rescue guarantee, quiesce
+      producers first.
+
+    The old generation's data survives until an explicit
+    :func:`drop_generation` after the read-grace window.  A crash
+    mid-promotion leaves either a data-only next-gen directory
+    (unpublished — invisible to readers; the next promotion
+    allocates a fresh number) or a published successor with the old
+    generation not yet retired (re-run :func:`retire_generation` —
+    idempotent, though the rescue fence then does not run:
+    re-promote instead when producers were live)."""
+    return _promote(
+        _PLANES["token"], spark, root, store, vocab_ids=vocab_ids,
         n_shards=n_shards, shard_tokens=shard_tokens,
         shard_prefix=shard_prefix,
     )
-    dst_fp = shard_set_content_fp(spark, new_path)
-    if dst_fp != src_fp:
-        raise ValueError(
-            f"promote_compaction: gen {new_gen} at {new_path!r} does "
-            f"NOT carry gen {old_gen}'s content (src {src_fp} vs dst "
-            f"{dst_fp}) — refusing to publish; the directory stays "
-            f"unpublished (invisible to readers) and gen {old_gen} "
-            f"stays current"
-        )
-    publish_generation(
-        spark, root, new_gen, vocab_ids=vocab_ids, content_fp=dst_fp,
-        store=store,
-    )
-    retire_generation(root, old_gen, store)
-    return new_gen, manifest
 
 
 def read_mixture_current(
@@ -1058,334 +1422,45 @@ def audit_generation(
     for: the marker recorded the identity-free content fingerprint
     and the contract at publish time, so years later (or after a
     storage migration, a restore from backup, a suspected bit-flip)
-    one scan proves the generation still carries exactly the content
-    it committed.
+    a fresh scan proves the generation still carries exactly the
+    content it committed.  Token and payload generations audit alike
+    (dispatch on the marker's ``plane``; a marker without one is a
+    token marker).
 
-    Returns ``{"generation", "retired", "dropped", "ok", ...}``:
+    Every shard is verified against its sidecar promise FIRST
+    (``verify_token_shards`` / ``verify_payload_store``), then the
+    marker fields are compared.  Returns ``{"generation", "plane",
+    "retired", "dropped", "ok", ...}``:
 
-    * ``ok=True`` — every recorded field (window/token totals, the
-      content fingerprint when the marker carries one, format/
-      budget/vocab contract) matches a FRESH scan; ``fp_checked``
-      says whether the fingerprint was actually ATTESTED (False on
-      markers predating the fp field — totals+contract fallback —
-      and on the grown path below, where the comparison ran but
-      proved nothing).
-    * ``ok=False`` — ``mismatches`` maps each disagreeing field to
+    * ``ok=True`` — every shard verifies and every recorded field
+      (totals, the content fingerprint when the marker carries one,
+      the contract) matches; ``fp_checked`` says whether the
+      fingerprint was actually ATTESTED (False on markers predating
+      the fp field — totals+contract fallback — and on the grown
+      path below, where the comparison ran but proved nothing).
+    * ``ok=False`` — a shard fails verification (``problem`` names
+      it; ``mismatches`` rides along when marker fields disagree
+      too), or ``mismatches`` maps each disagreeing field to
       (recorded, actual): content loss, same-size corruption, or
       contract drift.  A committed-but-unretired generation whose
       data is unreadable also reports False (``problem`` explains) —
       readers may be pinned to data that no longer exists.
-    * ``ok=None, grown=True`` — the generation grew past its
-      publish-time floor: producers may append until the retire
-      marker lands, the marker froze the set AS OF publish, and the
-      XOR fingerprint is not subset-checkable (nor can the marker
-      date the growth, so this applies to retired generations too).
-      The grown set's integrity tool is ``verify_token_shards``
-      (per-shard digests); a promotion pins a fresh fingerprint.
+    * ``ok=None, grown=True`` — every shard verifies, and the
+      generation grew past its publish-time floor: producers may
+      append until the retire marker lands, the marker froze the set
+      AS OF publish, and the XOR fingerprint is not subset-checkable
+      (nor can the marker date the growth, so this applies to
+      retired generations too).  Growth only relaxes the MARKER
+      comparison, never the per-shard check: loss in a grown
+      generation is ``ok=False``.  A promotion pins a fresh
+      fingerprint.
     * ``ok=None, dropped=True`` — a retired generation whose data was
       reclaimed; nothing to audit, by design.
 
-    Cost: one manifest collect + one content-fp scan per audited
-    generation — the same scan price publish paid, on demand."""
-    store = _store(store)
-    gen = int(gen)
-    marker = os.path.join(_catalog_dir(root), f"commit-{gen:08d}.json")
-    if not store.exists(marker):
-        raise ValueError(
-            f"audit_generation: gen {gen} of {root!r} was never "
-            f"published — only committed generations carry a marker "
-            f"to audit against"
-        )
-    doc = json.loads(store.read(marker))
-    path = generation_path(root, gen)
-    if doc.get("plane") == "payload":
-        # payload generations audit against their own marker fields
-        # (blob/ref/byte totals + the sharding-invariant fp) — the
-        # dispatch keeps audit_catalog working on payload roots
-        # unchanged
-        return _audit_payload_generation(spark, root, gen, doc, store)
-    out: dict = {
-        "generation": gen,
-        "retired": is_retired(path, store),
-        "dropped": False,
-    }
-    from streaming_parquet_spark.operators.pipeline import (
-        _sidecar_snapshot,
-        shard_set_content_fp,
-    )
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        # ONE manifest collect carries shard count + contract
-        _sidecar, srows, contract = _sidecar_snapshot(
-            spark, path, "audit_generation"
-        )
-    except (ValueError, AnalysisException) as exc:
-        # Distinguish RECLAIMED data (generation dir / sidecar gone —
-        # the retention sweep's legal end state) from a PRESENT but
-        # unreadable sidecar (truncated write, empty directory, mixed
-        # contract rows, a foreign format version — _sidecar_snapshot
-        # raises ValueError for all of them). Only absence is a benign
-        # drop; a readable directory with a broken sidecar is an
-        # integrity incident even on a retired generation —
-        # retirement starts a read-grace window in which pinned
-        # readers still resolve this data, so "retired" cannot
-        # launder corruption into ok=None (ADVICE r12). Absence is
-        # classified from _manifest_frame's TYPED error taxonomy
-        # (ManifestAbsent = PATH_NOT_FOUND; everything else —
-        # present-but-empty, mixed contracts, foreign format — is an
-        # incident), which keeps this function free of direct
-        # filesystem probes — the marker-plane portability gate
-        # covers the audit verbs too.
-        from streaming_parquet_spark.operators.pipeline import (
-            ManifestAbsent,
-        )
-
-        absent = isinstance(exc, ManifestAbsent)
-        if out["retired"] and absent:
-            out.update({"dropped": True, "ok": None})
-            return out
-        if absent:
-            problem = (
-                f"data unreadable for a committed, UNRETIRED "
-                f"generation ({exc}) — pinned readers may still "
-                f"resolve it"
-            )
-        else:
-            problem = (
-                f"manifest sidecar present but unreadable ({exc}) — "
-                f"corruption or a truncated write, not a retention "
-                f"drop"
-            )
-        out.update({"ok": False, "problem": problem})
-        return out
-    try:
-        fp = shard_set_content_fp(spark, path, contract=contract)
-    except AnalysisException as exc:
-        # sidecar readable but the data scan is not (e.g. every data
-        # file of a shard gone) — an incident whether retired or not:
-        # the sidecar promises content the storage no longer serves
-        out.update({
-            "ok": False,
-            "problem": f"content scan failed ({exc})",
-        })
-        return out
-    actual = {
-        "n_shards": len(srows),
-        "n_windows": fp["n_windows"],
-        "n_tokens": fp["n_tokens"],
-        "content_fp_a": fp["fp_a"],
-        "content_fp_b": fp["fp_b"],
-        "format": contract["format"],
-        "budget": contract["budget"],
-        "vocab_size": contract["vocab_size"],
-        "vocab_fp_a": contract["vocab_fp_a"],
-        "vocab_fp_b": contract["vocab_fp_b"],
-    }
-    mismatches = {
-        k: [doc[k], v]
-        for k, v in actual.items()
-        if k in doc and doc[k] != v
-    }
-    out["fp_checked"] = "content_fp_a" in doc
-    # The marker froze the set AS OF publish, and appending to a
-    # published generation is legal until its retire marker lands —
-    # so totals at-or-above the recorded floor mean GROWTH, not
-    # corruption, and the frozen fp is inconclusive by construction
-    # (XOR fps are not subset-checkable).  This holds for RETIRED
-    # generations too: the normal factory history is publish early,
-    # append waves, promote+retire later, and the marker cannot
-    # date-stamp when the growth happened — the per-shard sidecar
-    # digests (verify_token_shards) are the integrity tool for
-    # anything beyond the published floor.
-    total_keys = [
-        k for k in ("n_shards", "n_windows", "n_tokens") if k in doc
-    ]
-    grown = total_keys and all(
-        int(actual[k]) >= int(doc[k]) for k in total_keys
-    ) and any(int(actual[k]) > int(doc[k]) for k in total_keys)
-    contract_drift = any(
-        k in mismatches
-        for k in ("format", "budget", "vocab_size", "vocab_fp_a",
-                  "vocab_fp_b")
-    )
-    if not mismatches:
-        out["ok"] = True
-    elif grown and not contract_drift:
-        out.update({
-            "ok": None,
-            "grown": True,
-            # the fp comparison RAN but attested nothing (the frozen
-            # fp is inconclusive over a grown set) — report it
-            # un-checked so monitoring never records this generation
-            # as fingerprint-verified
-            "fp_checked": False,
-            "recorded_totals": {k: doc[k] for k in total_keys},
-            "actual_totals": {k: actual[k] for k in total_keys},
-            "note": (
-                "generation grew past its publish-time floor (legal "
-                "until retirement; the marker cannot date the "
-                "growth) — the frozen marker cannot attest the grown "
-                "content; verify_token_shards checks the set "
-                "per-shard, and a promotion pins a fresh fingerprint"
-            ),
-        })
-    else:
-        out["ok"] = False
-        out["mismatches"] = mismatches
-    return out
-
-
-def _audit_payload_generation(
-    spark, root: str, gen: int, doc: dict, store: MarkerStore
-) -> dict:
-    """:func:`audit_generation`'s payload-plane half (dispatched on
-    the marker's ``plane`` stamp): re-digest the store's DATA and
-    compare against the write-once marker's blob/ref/byte totals and
-    sharding-invariant content fingerprint — the same
-    ok=True / ok=False(+mismatches) / ok=None(grown|dropped)
-    classification as the token plane, because the same protocol
-    facts hold: appending to the CURRENT generation is legal until
-    retirement (r15 review: post-publish waves falsify the frozen
-    totals/fp, and without this verb every audit would misreport
-    legitimate growth as tamper), the XOR fp is not subset-checkable
-    over a grown set, and a reclaimed retired generation has nothing
-    to attest.  One improvement over the token audit: the data scan
-    IS ``verify_payload_store`` (per-(shard, wave) digests against
-    the append-only sidecar), so content loss is detected ok=False
-    even in a generation that legally grew — growth only relaxes the
-    MARKER comparison, never the storage check.  Cost: one data
-    re-digest scan — the price publish paid, on demand."""
-    from pyspark.errors import AnalysisException
-
-    from streaming_parquet_spark.operators.multimodal import (
-        _payload_contract,
-        payload_set_content_fp,
-        verify_payload_store,
-    )
-    from streaming_parquet_spark.operators.pipeline import ManifestAbsent
-
-    path = generation_path(root, gen)
-    out: dict = {
-        "generation": gen,
-        "plane": "payload",
-        "retired": is_retired(path, store),
-        "dropped": False,
-    }
-    try:
-        manifest, contract = _payload_contract(
-            spark, path, "audit_payload_generation"
-        )
-    except (ValueError, AnalysisException) as exc:
-        # same taxonomy as the token audit: only ABSENCE of a retired
-        # generation's sidecar is a benign drop; present-but-broken is
-        # an incident regardless of retirement (pinned readers still
-        # resolve retired data through the grace window)
-        absent = isinstance(exc, ManifestAbsent)
-        if out["retired"] and absent:
-            out.update({"dropped": True, "ok": None})
-            return out
-        out.update({
-            "ok": False,
-            "problem": (
-                f"data unreadable for a committed, UNRETIRED "
-                f"generation ({exc}) — pinned readers may still "
-                f"resolve it"
-                if absent
-                else f"manifest sidecar present but unreadable "
-                     f"({exc}) — corruption or a truncated write, "
-                     f"not a retention drop"
-            ),
-        })
-        return out
-    rc, pc = contract["ref_col"], contract["payload_col"]
-    n = int(contract["n_shards"])
-    try:
-        # ONE data re-digest scan, against the per-(shard, wave)
-        # sidecar promise — NOT a bare store fold: a totals-only check
-        # would classify "grew by 4 blobs, lost 3" as benign growth
-        # (actual >= floor), silently masking storage loss in any
-        # generation that legally grew (r15 review pass 2).  The
-        # append-only sidecar pins every wave's digests, so verify
-        # detects loss/corruption even past the publish floor.
-        bad = [
-            int(r["shard"])
-            for r in verify_payload_store(spark, path).collect()
-            if not r["ok"]
-        ]
-    except (ValueError, AnalysisException) as exc:
-        out.update({
-            "ok": False,
-            "problem": f"content scan failed ({exc})",
-        })
-        return out
-    if bad:
-        out.update({
-            "ok": False,
-            "problem": (
-                f"shard(s) {sorted(bad)[:5]} fail verification "
-                f"against the sidecar (verify_payload_store) — "
-                f"content loss or corruption, growth notwithstanding"
-            ),
-        })
-        return out
-    # data == sidecar exactly (verify is a full-outer per-shard digest
-    # compare incl. stray shards), so the marker comparison can fold
-    # the SIDECAR — manifest-sized, no second data scan
-    fp = payload_set_content_fp(manifest)
-    actual = {
-        "format": contract["format"],
-        "n_shards": n,
-        "ref_col": rc,
-        "payload_col": pc,
-        "n_payloads": fp["n_payloads"],
-        "n_refs": fp["n_refs"],
-        "n_bytes": fp["n_bytes"],
-        "content_fp_a": fp["fp_a"],
-        "content_fp_b": fp["fp_b"],
-    }
-    mismatches = {
-        k: [doc[k], v]
-        for k, v in actual.items()
-        if k in doc and doc[k] != v
-    }
-    out["fp_checked"] = "content_fp_a" in doc
-    total_keys = [
-        k for k in ("n_payloads", "n_refs", "n_bytes") if k in doc
-    ]
-    grown = total_keys and all(
-        int(actual[k]) >= int(doc[k]) for k in total_keys
-    ) and any(int(actual[k]) > int(doc[k]) for k in total_keys)
-    # the contract (incl. n_shards — blobs land by the pinned shard
-    # key) can never legally change after publish; drift is always
-    # an incident, growth or not
-    contract_drift = any(
-        k in mismatches
-        for k in ("format", "n_shards", "ref_col", "payload_col")
-    )
-    if not mismatches:
-        out["ok"] = True
-    elif grown and not contract_drift:
-        out.update({
-            "ok": None,
-            "grown": True,
-            "fp_checked": False,
-            "recorded_totals": {k: doc[k] for k in total_keys},
-            "actual_totals": {k: actual[k] for k in total_keys},
-            "note": (
-                "generation grew past its publish-time floor (legal "
-                "until retirement; the marker cannot date the "
-                "growth) — the frozen marker cannot attest the grown "
-                "content; verify_payload_store checks the store "
-                "per-(shard, wave), and a promotion pins a fresh "
-                "fingerprint"
-            ),
-        })
-    else:
-        out["ok"] = False
-        out["mismatches"] = mismatches
-    return out
+    Cost: one manifest collect, the verify scan and the
+    content-fingerprint scan (payloads fold theirs from the verified
+    sidecar) — the price publish pays, on demand."""
+    return _audit(spark, root, gen, store)
 
 
 def audit_catalog(
@@ -1408,26 +1483,17 @@ def audit_catalog(
     ]
 
 
-# --- Payload-plane generations (VERDICT r14 item 1) -------------------
+# --- Payload-plane generations ----------------------------------------
 #
-# The binary payload store (operators.multimodal) gets the SAME
-# generation discipline the token plane has — the marker plane above is
-# storage-agnostic and plane-agnostic by construction (allocation,
-# commit, retire, tombstoned drop, sweep all operate on markers and
-# paths, never on row schemas), so the payload verbs below only supply
-# the plane-specific halves: what "verified" means (verify_payload_store
-# all-ok) and what "same content" means (payload_set_content_fp, the
-# sharding-invariant XOR fold).  Everything else — next_generation,
-# current_generation, retire_generation, drop_generation,
-# sweep_generations, list_retired — is shared verbatim, which is the
-# point: one swap protocol, two data planes, zero drifting copies.
-#
-# Cross-plane misuse refuses at the contract layer: a payload verb
-# pointed at a token generation hits the sidecar's format pin
-# (payload-store-v2 vs token-shards-v*) and refuses by name, and
-# current_payload_store additionally checks the commit marker's
-# ``plane`` stamp so a reader cannot even RESOLVE a token generation as
-# a payload store.
+# The binary payload store (operators.multimodal) runs the same
+# generation protocol as the token plane: ``_PLANES["payload"]`` (see
+# the plane table above) supplies verify_payload_store as the
+# verification, the payload_set_content_fp sidecar fold as the content
+# fingerprint, compact_payload_store (orphans swept) as the compaction
+# and (shard, wave) pairs as the producer units.  Everything else —
+# next_generation, current_generation, retire_generation,
+# drop_generation, sweep_generations, list_retired, audit_generation —
+# is shared.
 
 
 def publish_payload_generation(
@@ -1437,81 +1503,21 @@ def publish_payload_generation(
     store: verify every shard's blobs against the ``_manifest``
     sidecar (``verify_payload_store`` — the absence/corruption/tamper
     trichotomy runs BEFORE any reader can resolve the store), then
-    atomically create the single-file commit marker.  Returns the
-    marker's contents.
+    atomically create the single-file commit marker, stamped
+    ``plane: "payload"``.  Returns the marker's contents.
 
-    Same refusals as the token plane's :func:`publish_generation`:
-    a retired generation (republish would resurrect data producers
-    already moved past), an already-published one (markers are
-    write-once — racing publishers lose loudly), a failing or absent
-    store.  The marker records the store's sharding-invariant CONTENT
-    fingerprint (``payload_set_content_fp`` — XOR over every blob's
-    digest, so an auditor can re-fingerprint the data against the
-    marker years later, and :func:`promote_payload_compaction` can
-    prove content preservation across a re-shard).
+    Same protocol and refusals as :func:`publish_generation`.  The
+    marker records the store's sharding-invariant CONTENT fingerprint
+    (``payload_set_content_fp`` — XOR over every blob's digest), so an
+    auditor can re-fingerprint the data against the marker years
+    later, and :func:`promote_payload_compaction` can prove content
+    preservation across a re-shard.
 
     Bootstrap flow for the FIRST generation: ``gen, path =
     next_generation(root)``; ``write_payload_store(blobs, path,
     n_shards=...)``; ``publish_payload_generation(spark, root, gen)``.
-    Cost: one data scan (the verify) + manifest-sized folds — the same
-    once-per-publish price the token plane pays."""
-    from streaming_parquet_spark.operators.multimodal import (
-        _payload_contract,
-        payload_set_content_fp,
-        verify_payload_store,
-    )
-
-    store = _store(store)
-    gen = int(gen)
-    path = generation_path(root, gen)
-    if is_retired(path, store):
-        raise ValueError(
-            f"publish_payload_generation: gen {gen} at {path!r} is "
-            f"RETIRED — republishing a retired generation would "
-            f"resurrect data the catalog already moved past; promote "
-            f"a fresh one"
-        )
-    marker = os.path.join(_catalog_dir(root), f"commit-{gen:08d}.json")
-    if store.exists(marker):
-        raise ValueError(
-            f"publish_payload_generation: gen {gen} is already "
-            f"published ({marker!r}) — commit markers are write-once"
-        )
-    manifest, contract = _payload_contract(
-        spark, path, "publish_payload_generation"
-    )
-    bad = verify_payload_store(spark, path).filter("NOT ok").count()
-    if bad:
-        raise ValueError(
-            f"publish_payload_generation: gen {gen} at {path!r} has "
-            f"{bad} shard(s) failing verification — a generation "
-            f"publishes only after every blob matches its sidecar "
-            f"promise"
-        )
-    fp = payload_set_content_fp(manifest)
-    doc = {
-        "generation": gen,
-        "plane": "payload",
-        "format": contract["format"],
-        "n_shards": int(contract["n_shards"]),
-        "ref_col": contract["ref_col"],
-        "payload_col": contract["payload_col"],
-        "n_payloads": fp["n_payloads"],
-        "n_refs": fp["n_refs"],
-        "n_bytes": fp["n_bytes"],
-        "content_fp_a": fp["fp_a"],
-        "content_fp_b": fp["fp_b"],
-    }
-    # ONE atomic-exclusive put — the commit point of the whole swap
-    if not store.put_if_absent(
-        marker, json.dumps(doc, sort_keys=True) + "\n"
-    ):
-        raise ValueError(
-            f"publish_payload_generation: gen {gen} was published "
-            f"concurrently ({marker!r}) — commit markers are "
-            f"write-once"
-        )
-    return doc
+    Cost: one data scan (the verify) + manifest-sized folds."""
+    return _publish(_PLANES["payload"], spark, root, gen, store)
 
 
 def current_payload_store(
@@ -1536,10 +1542,6 @@ def current_payload_store(
     sidecar's (they were written by the same publish; disagreement
     means out-of-protocol surgery).  Marker-sized + one manifest read;
     never a data scan."""
-    from streaming_parquet_spark.operators.multimodal import (
-        _payload_contract,
-    )
-
     store = _store(store)
     if gen is None:
         gen, path = current_generation(root, store)
@@ -1548,8 +1550,7 @@ def current_payload_store(
             root, gen, store, "current_payload_store"
         )
         path = generation_path(root, gen)
-    marker = os.path.join(_catalog_dir(root), f"commit-{gen:08d}.json")
-    doc = json.loads(store.read(marker))
+    doc = json.loads(store.read(_commit_marker(root, gen)))
     if doc.get("plane") != "payload":
         raise ValueError(
             f"current_payload_store: gen {gen} of {root!r} is not a "
@@ -1558,12 +1559,9 @@ def current_payload_store(
             f"the token plane; payload stores live under their own "
             f"catalog root"
         )
-    contract = _payload_contract(spark, path, "current_payload_store")[1]
-    if (
-        contract["format"] != doc["format"]
-        or int(contract["n_shards"]) != int(doc["n_shards"])
-        or contract["ref_col"] != doc["ref_col"]
-        or contract["payload_col"] != doc["payload_col"]
+    contract = M._payload_contract(spark, path, "current_payload_store")[1]
+    if any(
+        contract[k] != doc[k] for k in _PLANES["payload"].contract_keys
     ):
         raise ValueError(
             f"current_payload_store: gen {gen}'s sidecar contract "
@@ -1582,141 +1580,26 @@ def promote_payload_compaction(
     n_shards: int | None = None,
     store: MarkerStore | None = None,
 ) -> tuple[int, DataFrame]:
-    """The payload plane's full swap, in the only safe order: compact
-    the CURRENT generation's REFERENCED blobs into the next one
-    (``compact_payload_store`` — orphans swept, kept blobs
-    byte-identical), PROVE the preservation, then verify + publish the
-    successor and retire the source.  Returns (new_generation, written
-    manifest).
+    """The payload plane's full swap, with :func:`promote_compaction`'s
+    order and fences: compact the CURRENT generation's REFERENCED
+    blobs into the next one (``compact_payload_store`` — orphans
+    swept, kept blobs byte-identical), PROVE the preservation, then
+    verify + publish the successor and retire the source.  Returns
+    (new_generation, written manifest).
 
     The proof: the kept subset's content fingerprint is pinned from a
     src scan BEFORE the compaction (``_kept_payloads`` is the same
-    definition of "kept" the compaction writes, so the two sides can
-    never disagree about which blobs count), and the successor's
-    sidecar fold must equal it — ``payload_set_content_fp`` is
+    definition of "kept" the compaction writes), and the successor's
+    manifest fold must equal it — ``payload_set_content_fp`` is
     invariant under the re-sharding a new ``n_shards`` performs, so
-    inequality means blobs were lost, duplicated, or altered (or an
-    append landed between the pin and the compaction's own scan — the
-    same conservative refusal stance as the token plane's grown-source
-    recheck).  The proof runs BEFORE the publish: a content-corrupting
-    compaction leaves an unpublished (invisible) directory and the
-    source untouched, never a committed wrong store.  The publish then
-    re-proves the DATA against that sidecar (``verify_payload_store``
-    inside :func:`publish_payload_generation`), closing the chain:
-    src kept content == dst sidecar == dst data.
-
-    A resolver racing this sees exactly one complete store at every
-    instant: before the marker lands, :func:`current_payload_store`
-    resolves the old generation (untouched — compaction never writes
-    into its source); after, the new one.  A producer racing this
-    cannot LOSE a wave into the swap (the r14 gap: manual
-    compact-verify-drop had no fence at all; r15 review pass 2: the
-    proof alone left the publish-to-retire window open).  Three
-    fences, in order:
-
-    * a wave landing during the compaction flips the preservation
-      proof (kept-subset fps disagree) — clean refusal, source stays
-      current, wave safe;
-    * a wave landing between the proof and the publish trips the
-      PRE-PUBLISH wave-set recheck (sidecar-sized) — same clean
-      refusal, the successor stays unpublished;
-    * a wave landing between the publish and the retirement is
-      RESCUED after the retire marker lands: the source's sidecar is
-      re-read, waves not in the pinned set are appended into the
-      successor from the retired source's own data
-      (content-addressed, idempotent), so the wave survives the
-      eventual drop.  An append still IN FLIGHT when retirement lands
-      fails loudly on its own replay (the retire probe) — never
-      silent.  For a zero-rescue guarantee, quiesce producers first.
-
-    A crash mid-promotion leaves either a data-only next-gen
-    directory (unpublished — invisible; the next promotion allocates
-    a fresh number) or a published successor with the source not yet
-    retired (re-run :func:`retire_generation` — idempotent, though
-    the rescue fence then does not run: re-promote instead when
-    producers were live)."""
-    from streaming_parquet_spark.operators.multimodal import (
-        _kept_payloads,
-        _payload_contract,
-        append_payload_store,
-        compact_payload_store,
-        payload_set_content_fp,
-        payload_store_manifest,
+    inequality means blobs were lost, duplicated, or altered.  The
+    publish then re-proves the DATA against the sidecar, closing the
+    chain: src kept content == dst sidecar == dst data.  The producer
+    fences compare the source's (shard, wave) set: a wave landing
+    before the publish refuses cleanly; one landing between the
+    publish and the retirement is rescued into the successor from the
+    retired source's own data (a content-addressed append)."""
+    return _promote(
+        _PLANES["payload"], spark, root, store,
+        windows=windows, spans_col=spans_col, n_shards=n_shards,
     )
-
-    old_gen, old_path = current_generation(root, store)
-    new_gen, new_path = next_generation(root, store)
-
-    def src_waves() -> set:
-        man, _c = _payload_contract(
-            spark, old_path, "promote_payload_compaction"
-        )
-        return {
-            (int(r["shard"]), r["wave"])
-            for r in man.select("shard", "wave").collect()
-        }
-
-    waves0 = src_waves()  # the wave set the proof is about to pin
-    kept, contract = _kept_payloads(spark, old_path, windows, spans_col)
-    rc, pc = contract["ref_col"], contract["payload_col"]
-    n_dst = int(contract["n_shards"]) if n_shards is None else int(n_shards)
-    # the kept set's content expectation, pinned BEFORE compaction
-    try:
-        src_fp = payload_set_content_fp(
-            payload_store_manifest(kept, n_dst, rc, pc)
-        )
-    except ValueError as exc:
-        if "empty manifest" not in str(exc):
-            raise
-        raise ValueError(
-            f"promote_payload_compaction: the windows reference no "
-            f"blob in gen {old_gen} at {old_path!r} — refusing to "
-            f"promote an empty successor (wrong store/windows pairing, "
-            f"or every blob is an orphan; retire + drop instead)"
-        ) from None
-    manifest = compact_payload_store(
-        spark, old_path, new_path, windows, spans_col, n_shards=n_dst
-    )
-    dst_fp = payload_set_content_fp(manifest)
-    if dst_fp != src_fp:
-        raise ValueError(
-            f"promote_payload_compaction: gen {new_gen} at "
-            f"{new_path!r} does NOT carry gen {old_gen}'s referenced "
-            f"content (src {src_fp} vs dst {dst_fp}) — refusing to "
-            f"publish; the directory stays unpublished (invisible to "
-            f"resolvers) and gen {old_gen} stays current.  An ingest "
-            f"wave landing mid-promotion causes this too — re-run "
-            f"after quiescing producers."
-        )
-    # pre-publish fence: a wave that landed AFTER the proof's pin
-    # would be invisible to the fps above — refuse cleanly while the
-    # successor is still unpublished (sidecar-sized recheck)
-    if src_waves() != waves0:
-        raise ValueError(
-            f"promote_payload_compaction: a producer wave landed in "
-            f"gen {old_gen} during the compaction — the successor at "
-            f"{new_path!r} stays unpublished and gen {old_gen} stays "
-            f"current; re-run (the next promotion will carry the "
-            f"wave), or quiesce producers first"
-        )
-    publish_payload_generation(spark, root, new_gen, store=store)
-    retire_generation(root, old_gen, store)
-    # post-retire fence: a wave that landed between the publish and
-    # the retirement passed its own retire probe legitimately but is
-    # absent from the successor — rescue it from the retired source's
-    # data (content-addressed append: idempotent, duplicates skip).
-    # After retirement no further wave can land (producers refuse),
-    # so this recheck is final.
-    stranded = src_waves() - waves0
-    if stranded:
-        from pyspark.sql import functions as F
-
-        rc, pc = contract["ref_col"], contract["payload_col"]
-        wave_ids = sorted({w for _s, w in stranded})
-        blobs = (
-            spark.read.parquet(old_path)
-            .where(F.col("wave").isin(wave_ids))
-            .select(F.col(rc), F.col(pc))
-        )
-        append_payload_store(blobs, new_path, marker_store=store)
-    return new_gen, manifest

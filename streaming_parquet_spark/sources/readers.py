@@ -17,8 +17,9 @@ Column at a time it cost ~39 Py4J round trips per column, paid once per
 read group on the driver. It stays a projection of its own, not part of
 the alignment, because the exact CSV inference
 (``infer_csv_schemas_per_file``) reads through ``read_input`` and must
-see the mapped strings. Names and sentinels reach the SQL text only
-through ``plans.typesys.quote_ident`` and ``sql_string``.
+see the mapped strings. That inference's per-column aggregates are one
+SQL expression the same way. Names and sentinels reach the SQL text
+only through ``plans.typesys.quote_ident`` and ``sql_string``.
 """
 
 from __future__ import annotations
@@ -205,20 +206,20 @@ def infer_csv_schemas_per_file(
     # parses as i64 also parses as f64 -> mask 3. bit_and skips nulls and
     # returns NULL for an all-null column (-> NullType). This replaces a
     # 4-aggregates-per-column design whose redundant try_casts made the
-    # probe ~20x slower than the plain data scan.
-    checks = []
-    for col in map(quote_ident, raw.columns):
-        mask = (
-            f"CASE WHEN {col} IS NULL THEN CAST(NULL AS INT)"
-            f" WHEN try_cast({col} AS BIGINT) IS NOT NULL THEN 3"
-            f" WHEN try_cast({col} AS DOUBLE) IS NOT NULL THEN 2"
-            f" WHEN lower({col}) IN ('true', 'false') THEN 4"
-            f" ELSE 0 END"
-        )
-        checks.append(F.expr(f"bit_and({mask})"))
+    # probe ~20x slower than the plain data scan. The aggregates are one
+    # SQL struct expression: built as a Column per column they cost ~16
+    # Py4J round trips each.
+    checks = ", ".join(
+        f"bit_and(CASE WHEN {col} IS NULL THEN CAST(NULL AS INT)"
+        f" WHEN try_cast({col} AS BIGINT) IS NOT NULL THEN 3"
+        f" WHEN try_cast({col} AS DOUBLE) IS NOT NULL THEN 2"
+        f" WHEN lower({col}) IN ('true', 'false') THEN 4"
+        f" ELSE 0 END) AS c{i}"
+        for i, col in enumerate(map(quote_ident, raw.columns))
+    )
     rows = (
         raw.groupBy(F.input_file_name().alias("__file"))
-        .agg(checks[0].alias("c0"), *[e.alias(f"c{i}") for i, e in enumerate(checks[1:], 1)])
+        .agg(F.expr(f"struct({checks})").alias("masks"))
         .collect()
     )
 
@@ -230,8 +231,7 @@ def infer_csv_schemas_per_file(
 
     by_uri = {}
     for r in rows:
-        vals = [r[f"c{i}"] for i in range(len(raw.columns))]
-        by_uri[_norm_file_uri(r["__file"])] = _schema_from_masks(vals)
+        by_uri[_norm_file_uri(r["__file"])] = _schema_from_masks(list(r["masks"]))
 
     all_null = T.StructType([T.StructField(n, T.NullType(), True) for n in names])
     out: dict[str, T.StructType] = {}

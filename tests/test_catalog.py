@@ -1319,3 +1319,225 @@ def test_s3_conformance_exists_get_and_pagination():
         assert cli.get("blob") == "hello\n"
         assert cli.list_keys("p/") == ["p/a", "p/b", "p/c"]
         stub.assert_no_pending_responses()
+
+
+# --- One generation protocol, two planes -------------------------------
+
+
+def _plane_kit(spark, plane):
+    """The per-plane verbs the shared-protocol test drives: bootstrap
+    write, producer wave (distinct content per wave key), publish,
+    promote, the compaction seam, and verify's failing-shard count."""
+    import streaming_parquet_spark.operators.multimodal as M
+    import streaming_parquet_spark.operators.pipeline as P
+    from streaming_parquet_spark.operators.catalog import (
+        promote_payload_compaction,
+        publish_payload_generation,
+    )
+    from streaming_parquet_spark.operators.multimodal import (
+        append_payload_store,
+        verify_payload_store,
+        write_payload_store,
+    )
+    from test_payload_catalog import _blobs, _windows_over
+
+    lo = {"raced": 300, "late": 400, "grow": 500}
+    if plane == "token":
+        vocab = _vocab(spark)
+        return dict(
+            write=lambda path: write_token_shards(
+                _wave(spark, 0, 8, "w0"), path, vocab, budget=16,
+                shard_col="src",
+            ),
+            wave=lambda path, key, n=4: append_token_shards(
+                _wave(spark, lo[key], n, key), path, vocab
+            ),
+            publish=lambda root, g: publish_generation(
+                spark, root, g, vocab_ids=vocab
+            ),
+            promote=lambda root: promote_compaction(
+                spark, root, n_shards=1, vocab_ids=vocab
+            ),
+            seam=(P, "compact_token_shards"),
+            failing=lambda path: verify_token_shards(spark, path)
+            .where("NOT ok").count(),
+            original_shard="src=w0",
+        )
+    # the windows reference the bootstrap blobs AND the raced wave's,
+    # so a successor keeps everything the source holds at promotion
+    windows, _ = _windows_over(
+        spark, _blobs(spark, 0, 8).unionByName(_blobs(spark, lo["raced"], 4))
+    )
+    return dict(
+        write=lambda path: write_payload_store(
+            _blobs(spark, 0, 8), path, n_shards=2
+        ),
+        wave=lambda path, key, n=4: append_payload_store(
+            _blobs(spark, lo[key], n), path
+        ),
+        publish=lambda root, g: publish_payload_generation(spark, root, g),
+        promote=lambda root: promote_payload_compaction(
+            spark, root, windows
+        ),
+        seam=(M, "compact_payload_store"),
+        failing=lambda path: verify_payload_store(spark, path)
+        .where("NOT ok").count(),
+        original_shard="shard=0",
+    )
+
+
+@pytest.mark.parametrize("plane", ["token", "payload"])
+def test_planes_share_the_protocol(spark, tmp_path, monkeypatch, plane):
+    """Both planes run one publish/promote/audit protocol, so both get
+    the same producer fences and the same audit: a wave landing
+    mid-compaction refuses BEFORE publish; a wave landing between
+    publish and retire is rescued into the successor (never destroyed
+    at drop); a generation that grew and then lost a shard audits
+    ok=False (verify runs before the marker comparison)."""
+    import shutil
+
+    import streaming_parquet_spark.operators.catalog as C
+    from streaming_parquet_spark.operators.catalog import audit_generation
+
+    kit = _plane_kit(spark, plane)
+
+    def count(path):
+        spark.catalog.refreshByPath(path)
+        return spark.read.parquet(path).count()
+
+    root = str(tmp_path / "cat")
+    g1, p1 = next_generation(root)
+    kit["write"](p1)
+    kit["publish"](root, g1)
+
+    # (a) a wave lands after the compaction, before the publish
+    module, name = kit["seam"]
+    real_compact = getattr(module, name)
+
+    def racing_compact(spark_, src, dst, *a, **kw):
+        man = real_compact(spark_, src, dst, *a, **kw)
+        kit["wave"](src, "raced")
+        return man
+
+    n0 = count(p1)
+    monkeypatch.setattr(module, name, racing_compact)
+    with pytest.raises(ValueError, match="wave landed"):
+        kit["promote"](root)
+    monkeypatch.undo()
+    assert current_generation(root)[0] == g1  # unswapped
+    assert count(p1) > n0  # the raced wave is safe in the source
+
+    # (b) a wave lands between the publish and the retirement
+    real_retire = C.retire_generation
+
+    def racing_retire(root_, gen_, store_=None):
+        kit["wave"](generation_path(root_, gen_), "late")
+        return real_retire(root_, gen_, store_)
+
+    monkeypatch.setattr(C, "retire_generation", racing_retire)
+    g2, _man = kit["promote"](root)
+    monkeypatch.undo()
+    p2 = generation_path(root, g2)
+    assert current_generation(root)[0] == g2 and is_retired(p1)
+    assert count(p2) == count(p1)  # the late wave was rescued
+    assert kit["failing"](p2) == 0
+    row = audit_generation(spark, root, g2)
+    assert row["ok"] is None and row["grown"] is True
+
+    # (c) grown past the publish floor, then one original shard lost
+    root3 = str(tmp_path / "cat3")
+    h1, q1 = next_generation(root3)
+    kit["write"](q1)
+    kit["publish"](root3, h1)
+    kit["wave"](q1, "grow", 20)
+    shutil.rmtree(os.path.join(q1, kit["original_shard"]))
+    spark.catalog.refreshByPath(q1)
+    assert kit["failing"](q1) == 1
+    row = audit_generation(spark, root3, h1)
+    assert row["ok"] is False and "fail verification" in row["problem"]
+
+
+def test_token_rescue_refuses_key_clash(spark, tmp_path, monkeypatch):
+    """A stranded wave whose shard key the successor already uses is
+    not merged into it (two writes under one key): the promote raises,
+    the wave stays in the retired source and the successor verifies."""
+    import streaming_parquet_spark.operators.catalog as C
+
+    root = str(tmp_path / "cat")
+    vocab = _vocab(spark)
+    g1, p1 = next_generation(root)
+    write_token_shards(
+        _wave(spark, 0, 8, "w0"), p1, vocab, budget=16, shard_col="src"
+    )
+    publish_generation(spark, root, g1, vocab_ids=vocab)
+    real_retire = C.retire_generation
+
+    def racing_retire(root_, gen_, store_=None):
+        append_token_shards(
+            _wave(spark, 400, 4, "compact-0000"),
+            generation_path(root_, gen_), vocab,
+        )
+        return real_retire(root_, gen_, store_)
+
+    monkeypatch.setattr(C, "retire_generation", racing_retire)
+    with pytest.raises(ValueError, match="share keys"):
+        promote_compaction(spark, root, n_shards=1, vocab_ids=vocab)
+    monkeypatch.undo()
+    g2, p2 = current_generation(root)
+    assert g2 > g1 and is_retired(p1)
+    assert os.path.isdir(os.path.join(p1, "src=compact-0000"))
+    assert verify_token_shards(spark, p2).where("NOT ok").count() == 0
+
+
+def test_token_markers_without_plane_stay_token(spark, tmp_path):
+    """Token markers written before markers carried a ``plane`` field
+    still publish-refuse, audit (tamper -> ok=False with mismatches)
+    and resolve as token; payload verbs still refuse a token root."""
+    import glob
+
+    from streaming_parquet_spark.operators.catalog import (
+        audit_generation,
+        current_payload_store,
+        publish_payload_generation,
+    )
+
+    root = str(tmp_path / "cat")
+    vocab = _vocab(spark)
+    g1, p1 = next_generation(root)
+    write_token_shards(
+        _wave(spark, 0, 8, "w0"), p1, vocab, budget=16, shard_col="src"
+    )
+    append_token_shards(_wave(spark, 100, 8, "w1"), p1, vocab)
+    doc = publish_generation(spark, root, g1, vocab_ids=vocab)
+    assert doc["plane"] == "token"
+    mpath = os.path.join(root, "_catalog", f"commit-{g1:08d}.json")
+    legacy = {k: v for k, v in doc.items() if k != "plane"}
+    with open(mpath, "w") as f:
+        json.dump(legacy, f)
+
+    with pytest.raises(ValueError, match="write-once"):
+        publish_generation(spark, root, g1)
+    got, _contract, g = read_current_shards(spark, root, vocab_ids=vocab)
+    assert g == g1 and got.count() == legacy["n_windows"]
+    with pytest.raises(ValueError, match="not a payload generation"):
+        current_payload_store(spark, root)
+    g2, p2 = next_generation(root)
+    write_token_shards(
+        _wave(spark, 0, 8, "w0"), p2, vocab, budget=16, shard_col="src"
+    )
+    with pytest.raises(ValueError, match="format"):
+        publish_payload_generation(spark, root, g2)
+
+    clean = audit_generation(spark, root, g1)
+    assert clean["ok"] is True and clean["fp_checked"] is True
+    victim = sorted(glob.glob(os.path.join(p1, "src=w1", "*.parquet")))[0]
+    stash = str(tmp_path / "stash.parquet")
+    os.rename(victim, stash)
+    try:
+        spark.catalog.refreshByPath(p1)
+        bad = audit_generation(spark, root, g1)
+        assert bad["ok"] is False
+        assert {"content_fp_a", "n_windows"} <= set(bad["mismatches"])
+    finally:
+        os.rename(stash, victim)
+        spark.catalog.refreshByPath(p1)

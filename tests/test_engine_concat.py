@@ -815,22 +815,32 @@ def test_awkward_column_names(spark, engine, tmp_path, name):
     assert got(spark.read.parquet(stream_out)) == want
 
 
-def test_group_projection_round_trips_flat_per_column(spark, monkeypatch):
-    """Building a read group's alignment or NA-sentinel projection
-    crosses the Py4J gateway about once per column (one SQL select
-    list), not once per Column-API call (~35 per column)."""
+def test_group_projection_round_trips_flat_per_column(spark, monkeypatch, tmp_path):
+    """Building a read group's alignment or NA-sentinel projection, or
+    its exact CSV inference aggregate, crosses the Py4J gateway about
+    once per column (one SQL list), not once per Column-API call (~35
+    per column for a projection, ~16 for an inference aggregate)."""
+    import threading
+
     import py4j.clientserver as cs
     from pyspark.sql import types as T
 
     from streaming_parquet_spark.plans.align import align_dataframe
     from streaming_parquet_spark.plans.unify import unify_schemas
-    from streaming_parquet_spark.sources.readers import _apply_na_sentinels
+    from streaming_parquet_spark.sources.readers import (
+        _apply_na_sentinels,
+        infer_csv_schemas_per_file,
+    )
 
     calls = [0]
     send = cs.ClientServerConnection.send_command
+    builder = threading.get_ident()
 
     def counted(self, *args, **kwargs):
-        calls[0] += 1
+        # only the building thread's calls: py4j's finalizer thread
+        # frees earlier tests' Java objects at any time, one call each
+        if threading.get_ident() == builder:
+            calls[0] += 1
         return send(self, *args, **kwargs)
 
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
@@ -848,12 +858,21 @@ def test_group_projection_round_trips_flat_per_column(spark, monkeypatch):
         df, sdf = spark.createDataFrame([], ints), spark.createDataFrame([], strs)
         unified = unify_schemas([ints, wide])
         df.schema, sdf.schema  # resolve the schemas outside the count
+        csvs = []
+        for k in range(2):
+            path = tmp_path / f"w{width}_{k}.csv"
+            path.write_text(",".join(f"h{i}" for i in range(width)) + "\n"
+                            + ",".join(["1", "2.5", "true", "x", ""][i % 5] for i in range(width)) + "\n")
+            csvs.append(str(path))
+        spec = RunSpec(inputs=csvs, out=str(tmp_path / "unused.csv"))
         return (cost(lambda: align_dataframe(df, unified)),
-                cost(lambda: _apply_na_sentinels(sdf, ("null", "\\N"))))
+                cost(lambda: _apply_na_sentinels(sdf, ("null", "\\N"))),
+                cost(lambda: infer_csv_schemas_per_file(spark, csvs, spec)))
 
-    (align5, na5), (align50, na50) = costs(5), costs(50)
+    (align5, na5, infer5), (align50, na50, infer50) = costs(5), costs(50)
     assert align50 <= align5 + 2 * 45, (align5, align50)
     assert na50 <= na5 + 2 * 45, (na5, na50)
+    assert infer50 <= infer5 + 2 * 45, (infer5, infer50)
 
 
 def test_partitioned_parquet_honours_compression_none(engine, tmp_path):
